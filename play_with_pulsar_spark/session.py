@@ -9,9 +9,11 @@ Centralizes the configuration the whole engine assumes:
   survive a 1000-executor / 100 TB deployment without hand-tuning.
 - Arrow on for every Python<->JVM boundary (Pandas UDFs,
   toPandas/createDataFrame).
-- Shuffle partitions sized to the local core count; on a real
-  cluster this is overridden by AQE's coalescing + the operator
-  wrappers' explicit `repartition` calls on big keys.
+- Shuffle partitions default to the local core count (one task wave;
+  each stateful streaming query commits one state store per
+  partition per batch); on a real cluster this is overridden by
+  AQE's coalescing + the operator wrappers' explicit `repartition`
+  calls on big keys.
 
 Scale note (100 TB): nothing here is local-mode-specific except the
 master URL; every other conf is what we would ship on a 1000-executor
@@ -68,7 +70,7 @@ def get_spark(
     the master comes from spark-submit and this arg is ignored.
     """
     cpus = cpus or _cpus()
-    shuffle_partitions = shuffle_partitions or max(cpus, 8)
+    shuffle_partitions = shuffle_partitions or cpus
     # SPARK_GRAFT_MASTER lets a deployment point at a real cluster; the
     # local-single-JVM tunings below are gated on the master being local.
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -113,7 +115,15 @@ def get_spark(
         # - single-JVM local mode: driver heap IS executor memory. A
         #   large heap + periodic reference GC keeps long sessions from
         #   accumulating pause-inducing garbage between queries
-        #   (measured: dedup self-join 18s → 3s steady-state).
+        #   (measured: dedup self-join 18s → 3s steady-state);
+        # - file listing stays on the driver. Above 32 paths Spark
+        #   lists them with a distributed job; in local mode that job's
+        #   tasks run in this same JVM, so it only adds scheduling. The
+        #   streaming file source indexes every file of a micro-batch,
+        #   so each >32-file batch paid a listing job per query
+        #   (measured on a 4-core VM: getBatch 0.5-1.4 s of a 64-file
+        #   batch, 0.04-0.07 s without the job); opening a
+        #   room-partitioned log with more than 32 rooms paid one too.
         builder = (
             builder.config(
                 "spark.sql.files.maxPartitionBytes",
@@ -122,6 +132,7 @@ def get_spark(
             .config(
                 "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "56g")
             )
+            .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
             # periodic reference-GC keeps shuffle dirs from piling up
             # over a long session, but a forced FULL GC on a 56g heap
             # pauses seconds — at 1min it lands mid-query and makes

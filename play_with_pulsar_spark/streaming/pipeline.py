@@ -135,121 +135,18 @@ def streaming_fold(events: DataFrame) -> DataFrame:
     Scale: state size is bounded per room (≤750 cells); rooms shard
     across the state store exactly like the batch fold shards across
     tasks. Timers (T1) need no replication — the log is self-contained
-    (explode/undo events were emitted into it by clients)."""
+    (explode/undo events were emitted into it by clients).
+
+    The state store has one partition per shuffle partition, and a
+    checkpoint fixes that count when it is first started: a restarted
+    query keeps it whatever ``spark.sql.shuffle.partitions`` says now.
+    Checkpoints created while the session default was 8 keep 8."""
     return events.groupBy("room").applyInPandasWithState(
         _fold_with_state,
         outputStructType=STATE_SCHEMA,
         stateStructType=_FOLD_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# --- the fold on the Spark 4 transformWithState API ---
-
-
-def streaming_fold_tws(events: DataFrame, explode_after_ms: int | None = None) -> DataFrame:
-    """The fold as a ``transformWithStateInPandas`` StatefulProcessor —
-    the full Pulsar-Function analog on Spark 4's successor API
-    (SURVEY §2.11: per-record transform + keyed state + timers in ONE
-    operator, like ScoreboardFunction's context). Same transition code
-    as ``streaming_fold``/batch replay; identical results (asserted).
-
-    With ``explode_after_ms`` set, the processor ALSO plays the T1
-    client-timer role inline: it registers a processing-time timer per
-    micro-batch and, on expiry or on the next batch, applies
-    synthesized ExplodeEvents for bombs whose deadline passed without
-    a client ExplodeEvent — the combined fold+timer topology the
-    reference runs as client goroutines (event.go:100-107).
-
-    NOTE: transformWithState's Python worker speaks protobuf to the
-    JVM state server; the ``protobuf`` package is not in this
-    container, so this operator cannot RUN here (the parity test
-    skips when protobuf is absent). ``streaming_fold``
-    (applyInPandasWithState) is the tested streaming fold; this is
-    the drop-in successor for environments with protobuf."""
-    import time as _time
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    timed = explode_after_ms is not None
-
-    class FoldProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.state = handle.getValueState("gs", "blob binary, pending binary")
-
-        def _load(self):
-            row = self.state.get()
-            if row is None:
-                return GameState(), {}
-            gs = pickle.loads(row[0])
-            pending = pickle.loads(row[1]) if row[1] is not None else {}
-            return gs, pending
-
-        def _save(self, gs, pending) -> None:
-            self.state.update((pickle.dumps(gs), pickle.dumps(pending)))
-
-        def _fire_due(self, room, gs, pending, now):
-            """Apply synthesized explodes for overdue orphan bombs."""
-            for bomb in [b for b, (d, _, _) in pending.items() if d <= now]:
-                _, x, y = pending.pop(bomb)
-                gs.apply({"type": "ExplodeEvent", "name": bomb, "x": x, "y": y})
-
-        def handleInputRows(self, key, rows, timer_values):
-            room = key[0]
-            gs, pending = self._load()
-            batches = [pdf for pdf in rows if not pdf.empty]
-            now = _time.time()
-            if batches:
-                events_pdf = pd.concat(batches).sort_values("offset", kind="mergesort")
-                for ev in events_pdf.to_dict("records"):
-                    gs.apply(ev)
-                    if timed:
-                        if ev["type"] == "SetBombEvent":
-                            pending[ev["name"]] = (
-                                now + explode_after_ms / 1000.0,
-                                int(ev["x"]), int(ev["y"]),
-                            )
-                        elif ev["type"] == "ExplodeEvent":
-                            pending.pop(ev["name"], None)
-            if timed:
-                self._fire_due(room, gs, pending, now)
-                if pending:
-                    earliest_ms = int(min(d for d, _, _ in pending.values()) * 1000)
-                    self.handle.registerTimer(max(earliest_ms, int(now * 1000) + 1))
-            self._save(gs, pending)
-            out = gs.to_rows(room)
-            if out:
-                yield pd.DataFrame(out)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            room = key[0]
-            gs, pending = self._load()
-            now = _time.time()
-            self._fire_due(room, gs, pending, now)
-            # re-arm for the earliest REMAINING deadline — without
-            # this, a later-deadline bomb in a quiet room would never
-            # explode (no data batch to re-register the timer)
-            if pending:
-                earliest_ms = int(min(d for d, _, _ in pending.values()) * 1000)
-                self.handle.registerTimer(max(earliest_ms, int(now * 1000) + 1))
-            self._save(gs, pending)
-            out = gs.to_rows(room)
-            if out:
-                yield pd.DataFrame(out)
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("room").transformWithStateInPandas(
-        FoldProcessor(),
-        outputStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeMode="processingTime" if timed else "none",
     )
 
 

@@ -1,9 +1,10 @@
-"""Round-13 optimization profiling: for each target query, dump
-explain('formatted') to plans/r12/<name>_<tag>.txt and time N reps
+"""Optimization profiling: for each target query, dump
+explain('formatted') to plans/<round>/<name>_<tag>.txt and time N reps
 with the noop sink (the bench methodology, single pass).
 
-Usage: python scripts/profile_r12.py [tag] [query ...]
-  tag defaults to 'before'; with no query names, runs the TOP list.
+Usage: python scripts/profile_queries.py <round> [tag] [query ...]
+  round names the plans/ subdirectory (e.g. r13); tag defaults to
+  'before'; with no query names, runs the TOP list.
 """
 import os
 import sys
@@ -42,13 +43,16 @@ REPS = int(os.environ.get("PROFILE_REPS", "3"))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or TOP
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    rnd = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or TOP
     outdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(outdir, exist_ok=True)
-    spark = get_spark(app_name="pwp-profile-r13")
+    spark = get_spark(app_name=f"pwp-profile-{rnd}")
     results = {}
     for name in names:
         fn = REGISTRY[name].fn

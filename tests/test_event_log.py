@@ -90,6 +90,25 @@ def test_partitioned_log_roundtrip(spark, log, tmp_path):
     assert "room-0000" in plans.formatted_plan(one) or one.count() == 400
 
 
+def test_opening_many_room_log_runs_no_listing_job(spark, tmp_path):
+    """Opening a log with more than 32 room directories lists them on
+    the driver: local mode must not pay a parallel-listing job (its
+    tasks would run in the same JVM anyway)."""
+    path = str(tmp_path / "log")
+    el.write_event_log(
+        game_event_log(spark, n_rooms=40, events_per_room=10, seed=7), path
+    )
+    sc = spark.sparkContext
+    group = "pwp-test-open-many-room-log"
+    sc.setJobGroup(group, "open a 40-room event log")
+    try:
+        el.read_event_log(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_paced_replay_order(spark, log):
     offsets = [r.offset for r in paced_replay(log, "room-0001", pace_ms=0)]
     assert offsets == sorted(offsets) and len(offsets) == 400

@@ -4,8 +4,6 @@ boundaries."""
 
 from __future__ import annotations
 
-import importlib.util
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,6 +106,31 @@ def test_streaming_fold_matches_batch_replay(spark, log_dir):
     assert got == want
 
 
+def test_streaming_fold_one_trigger_over_many_files(spark, log_dir, tmp_path):
+    """One micro-batch over 36 files (above the 32-path listing
+    threshold): the many-file batch path must fold to exactly the
+    batch ``replay_state`` table, every entity included."""
+    import glob
+    from collections import Counter
+
+    d = str(tmp_path / "many")
+    log_dir["batch_df"].repartition(36).write.parquet(d)
+    assert len(glob.glob(d + "/part-*")) == 36
+    stream = sp.stream_game_events(spark, d, max_files_per_trigger=1000)
+    q = (
+        sp.streaming_fold(stream).writeStream.outputMode("update")
+        .format("memory").queryName("stream_fold_many_files")
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 1
+    assert batches[0]["numInputRows"] == log_dir["batch_df"].count()
+    got = Counter(map(tuple, spark.table("stream_fold_many_files").collect()))
+    want = Counter(map(tuple, replay_state(log_dir["batch_df"]).collect()))
+    assert got == want
+
+
 def test_streaming_dedup_within_watermark(spark, log_dir, tmp_path):
     # duplicate a file's rows → dropDuplicatesWithinWatermark removes
     # the redelivery; count matches the batch distinct count
@@ -119,34 +142,6 @@ def test_streaming_dedup_within_watermark(spark, log_dir, tmp_path):
         for r in log_dir["batch_df"].groupBy("room").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     got = {r.room: r.n for r in out.collect()}
-    assert got == want
-
-
-def _has_protobuf() -> bool:
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState needs protobuf (not in this container)",
-)
-def test_tws_fold_matches_batch_replay(spark, log_dir):
-    """transformWithStateInPandas fold == applyInPandasWithState fold
-    == batch replay (the Spark 4 API carries the same transitions)."""
-    stream = sp.stream_game_events(spark, _glob(log_dir["dir"]), max_files_per_trigger=4)
-    out = sp.run_to_completion(sp.streaming_fold_tws(stream), "tws_fold", "update")
-    pdf = out.filter(F.col("entity") == "player").toPandas()
-    got = {
-        (r.room, r.name): (r.x, r.y, r.alive)
-        for r in pdf.drop_duplicates(subset=["room", "name"], keep="last").itertuples()
-    }
-    want = {
-        (r.room, r.name): (r.x, r.y, r.alive)
-        for r in players_state(replay_state(log_dir["batch_df"])).collect()
-    }
     assert got == want
 
 
