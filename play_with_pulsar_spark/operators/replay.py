@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -159,7 +160,7 @@ class GameState:
     def _obstacles_from_list(self, codes) -> None:
         """X3 genObstacleMapFromList (event.go:227-251): sign encodes
         destructibility (negative = destructible, X2)."""
-        if codes is None or isinstance(codes, float):  # None / NaN
+        if codes is None:
             codes = ()
         m: dict[tuple[int, int], int] = {}
         for code in codes:
@@ -351,19 +352,37 @@ def fold_events(events, state: GameState | None = None) -> GameState:
     return state
 
 
-# Columns the transitions actually read. Iterating ONLY these (via
-# per-column tolist) instead of pdf.to_dict("records") skips the
-# expensive per-cell conversion of ts/comment/offset — measured 33ms →
-# ~13ms per 3000-event room, which at millions of rooms is the
-# difference between the fold and the Arrow transfer being the
-# bottleneck.
+# Columns the transitions read. ``fold_pdf`` hands the transitions
+# plain Python values whatever dtypes the frame holds: ints for
+# coordinates and obstacle codes, None for nulls. State built from a
+# worker's Arrow-converted frame then equals state built from dicts,
+# pickles as Python ints, and indexes the ray templates.
 _EVENT_COLS = ("type", "name", "avatar", "x", "y", "alive", "list")
+
+
+def _plain_coords(col: pd.Series) -> list:
+    """A coordinate column as Python ints, None where null. One null
+    makes pandas hold the column as float64 with NaN."""
+    if col.dtype.kind in "iu":
+        return col.tolist()
+    return [None if null else int(v) for v, null in zip(col.tolist(), col.isna().tolist())]
+
+
+def _plain_codes(cell):
+    """An obstacle-list cell as a Python list of ints, or None. Arrow
+    hands the worker a numpy array per cell, and pandas fills a cell
+    missing from a frame built from dicts with NaN."""
+    if isinstance(cell, np.ndarray):
+        return cell.tolist()
+    if isinstance(cell, float):
+        return None
+    return cell
 
 
 def fold_pdf(pdf: pd.DataFrame, state: GameState | None = None) -> GameState:
     """Fold a SORTED single-room pandas frame into state via the
     authoritative transitions, converting only the columns the
-    transitions read."""
+    transitions read, to plain Python values."""
     state = state or GameState()
     n = len(pdf)
     # a frame LACKING a column folds as if every event omitted that
@@ -371,7 +390,7 @@ def fold_pdf(pdf: pd.DataFrame, state: GameState | None = None) -> GameState:
     # to True (event.go:31-43's zero-value semantics), so the columnar
     # default must be True too, not None (None folds players as dead)
     cols = [
-        pdf[c].tolist()
+        (_plain_coords(pdf[c]) if c in ("x", "y") else pdf[c].tolist())
         if c in pdf.columns
         else ([True] * n if c == "alive" else [None] * n)
         for c in _EVENT_COLS
@@ -407,9 +426,9 @@ def fold_pdf(pdf: pd.DataFrame, state: GameState | None = None) -> GameState:
         elif t == "UserReviveEvent":
             user_revive(names[i], xs[i], ys[i], avatars[i])
         elif t == "UserJoinEvent":
-            user_join(names[i], xs[i], ys[i], avatars[i], alives[i], lists[i])
+            user_join(names[i], xs[i], ys[i], avatars[i], alives[i], _plain_codes(lists[i]))
         elif t == "UpdateMapEvent":
-            update_map(lists[i])
+            update_map(_plain_codes(lists[i]))
     return state
 
 

@@ -30,6 +30,9 @@ event_strategy = st.one_of(
               st.lists(st.integers(-749, 749), max_size=30)),
     st.builds(lambda n, k: _ev("UserDeadEvent", n, 0, 0, comment=k),
               st.sampled_from(NAMES), st.sampled_from(NAMES)),
+    # coordinate-less: nulls in the nullable x/y columns
+    st.builds(lambda n, k: _ev("UserDeadEvent", n, None, None, comment=k),
+              st.sampled_from(NAMES), st.sampled_from(NAMES)),
     st.builds(lambda n, x, y: _ev("UserReviveEvent", n, x, y),
               st.sampled_from(NAMES), st.integers(0, 29), st.integers(0, 24)),
     st.builds(lambda b, x, y: _ev("SetBombEvent", b, x, y),
@@ -80,21 +83,43 @@ def test_fold_is_deterministic(events):
     assert fold_events(events) == fold_events(list(events))
 
 
+def _positions(s: GameState):
+    """Every coordinate pair the state holds, as keys or as values."""
+    for m in (s.pos_players, s.pos_bombs, s.exploding, s.obstacles, s.flames):
+        yield from m
+    yield from (p.pos for p in s.players.values())
+    yield from (b.pos for m in (s.bombs, s.exploding, s.flames) for b in m.values())
+
+
 @settings(max_examples=150, deadline=None)
 @given(st.lists(event_strategy, max_size=120))
 def test_fold_pdf_equals_fold_events_on_adversarial_sequences(events):
     """The columnar kernel (fold_pdf) is the SAME fold as the
     dict-based reference on arbitrary event sequences — including
     hostile dead/revive interleavings, out-of-grid moves, duplicate
-    bombs, and empty/None obstacle lists the generator never emits."""
+    bombs, null coordinates, and empty/None obstacle lists the
+    generator never emits. It gets two frames: one built from the
+    dicts, and one built the way a Python worker receives it from
+    Arrow (a numpy array per obstacle list, float64 for a coordinate
+    column holding a null). Both must fold to state holding Python
+    ints only."""
     import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from play_with_pulsar_spark.operators.replay import fold_pdf
+    from play_with_pulsar_spark.schema import GAME_EVENT_SCHEMA
 
     expected = fold_events(events)
     if events:
-        got = fold_pdf(pd.DataFrame(events))
+        from_dicts = pd.DataFrame(events)
     else:
-        got = fold_pdf(pd.DataFrame(columns=["type", "name", "avatar",
-                                             "x", "y", "alive", "list"]))
-    assert got == expected
+        from_dicts = pd.DataFrame(columns=["type", "name", "avatar",
+                                           "x", "y", "alive", "list"])
+    from_arrow = pa.Table.from_pylist(
+        events, schema=to_arrow_schema(GAME_EVENT_SCHEMA)
+    ).to_pandas()
+    for frame in (from_dicts, from_arrow):
+        got = fold_pdf(frame)
+        assert got == expected
+        assert all(type(v) is int for pos in _positions(got) for v in pos)

@@ -245,6 +245,44 @@ def test_snapshot_state_at_equals_full_replay(spark, upto):
     log.unpersist()
 
 
+def test_state_at_resumes_from_a_blob_with_numpy_obstacle_keys(spark):
+    """Snapshot tables and stream checkpoints written before fold_pdf
+    handed the transitions plain Python values hold GameState pickles
+    whose obstacle keys are numpy integers, decoded from the worker's
+    Arrow→pandas obstacle arrays. Such a blob must still resume:
+    state_at from it plus the tail equals a full replay on every
+    state entity."""
+    import collections
+    import pickle
+
+    import numpy as np
+
+    from play_with_pulsar_spark.operators.replay import (
+        SNAPSHOT_SCHEMA,
+        replay_state,
+        state_at,
+    )
+    from play_with_pulsar_spark.sources.fixtures import game_event_log
+
+    rooms, n, snap, upto = ["room-0000", "room-0001"], 1200, 599, 900
+    log = game_event_log(spark, n_rooms=2, events_per_room=n, seed=42).cache()
+    blobs = []
+    for room in rooms:
+        evs = [
+            dict(e, list=None if e["list"] is None else np.asarray(e["list"], np.int32))
+            for e in generate_room_events(room, n, seed=42)
+            if e["offset"] <= snap
+        ]
+        old = fold_events(evs)
+        assert all(isinstance(x, np.integer) for x, _ in old.obstacles)
+        blobs.append((room, snap, pickle.dumps(old)))
+    snaps = spark.createDataFrame(blobs, SNAPSHOT_SCHEMA)
+    got = collections.Counter(map(tuple, state_at(log, snaps, upto).collect()))
+    want = collections.Counter(map(tuple, replay_state(log, upto_offset=upto).collect()))
+    assert got == want
+    log.unpersist()
+
+
 def test_pos_to_players_lww_collision():
     # posToPlayers (game.go:62; writes event.go:47,80): two players on
     # one cell — last writer wins.
@@ -339,6 +377,28 @@ def test_fold_pdf_matches_fold_events():
     expected = fold_events(evs)
     got = fold_pdf(pd.DataFrame(evs))
     assert got == expected
+
+
+def test_fold_pdf_folds_a_null_coordinate_like_fold_events():
+    """x/y are nullable: one null makes pandas hold the column as
+    float64, which must not turn a bomb position into floats (the
+    explode's ray lookup indexes by position)."""
+    import pandas as pd
+
+    from play_with_pulsar_spark.operators.replay import fold_pdf
+
+    evs = [
+        ev("UserJoinEvent", name="a", x=1, y=1, lst=[-encode_xy(4, 4)]),
+        ev("SetBombEvent", name="a-b1", x=3, y=4),
+        ev("UserDeadEvent", name="a", x=None, y=None),
+        ev("ExplodeEvent", name="a-b1"),
+    ]
+    frame = pd.DataFrame(evs)
+    assert frame["x"].dtype == "float64"
+    got = fold_pdf(frame)
+    assert got == fold_events(evs)
+    assert (4, 4) not in got.obstacles  # the flame destroyed it
+    assert all(type(v) is int for pos in got.flames for v in pos)
 
 
 def test_every_event_type_dispatches_identically_in_both_chains():
