@@ -288,26 +288,29 @@ class GameState:
         """Dict-event dispatch (the wire/dict API; the columnar kernel
         ``fold_pdf`` calls the transitions positionally). Branch order
         follows observed event frequency. Missing-key defaults match
-        event.go's zero-value semantics: ``alive`` defaults True when
+        event.go's zero-value semantics: a missing or null ``x``/``y``
+        folds as 0, as in ``fold_pdf``; ``alive`` defaults True when
         ABSENT (an explicit None folds falsy, same as the historical
         ``bool(ev.get('alive', True))``)."""
         t = ev["type"]
+        x = ev.get("x") or 0
+        y = ev.get("y") or 0
         if t == "UserMoveEvent":
-            self.user_move(ev["name"], ev["x"], ev["y"], ev.get("avatar"), ev.get("alive", True))
+            self.user_move(ev["name"], x, y, ev.get("avatar"), ev.get("alive", True))
         elif t == "BombMoveEvent":
-            self.bomb_move(ev["name"], ev["x"], ev["y"])
+            self.bomb_move(ev["name"], x, y)
         elif t == "SetBombEvent":
-            self.set_bomb(ev["name"], ev["x"], ev["y"])
+            self.set_bomb(ev["name"], x, y)
         elif t == "ExplodeEvent":
             self.explode(ev["name"])
         elif t == "UndoExplodeEvent":
-            self.undo_explode(ev["x"], ev["y"])
+            self.undo_explode(x, y)
         elif t == "UserDeadEvent":
             self.user_dead(ev["name"])
         elif t == "UserReviveEvent":
-            self.user_revive(ev["name"], ev["x"], ev["y"], ev.get("avatar"))
+            self.user_revive(ev["name"], x, y, ev.get("avatar"))
         elif t == "UserJoinEvent":
-            self.user_join(ev["name"], ev["x"], ev["y"], ev.get("avatar"),
+            self.user_join(ev["name"], x, y, ev.get("avatar"),
                            ev.get("alive", True), ev.get("list"))
         elif t == "UpdateMapEvent":
             self.update_map(ev.get("list"))
@@ -354,18 +357,23 @@ def fold_events(events, state: GameState | None = None) -> GameState:
 
 # Columns the transitions read. ``fold_pdf`` hands the transitions
 # plain Python values whatever dtypes the frame holds: ints for
-# coordinates and obstacle codes, None for nulls. State built from a
-# worker's Arrow-converted frame then equals state built from dicts,
-# pickles as Python ints, and indexes the ray templates.
+# coordinates (0 for a null, Go's zero value, as in
+# ``GameState.apply``) and obstacle codes, None for a null list. State
+# built from a worker's Arrow-converted frame then equals state built
+# from dicts, pickles as Python ints, and indexes the ray templates.
 _EVENT_COLS = ("type", "name", "avatar", "x", "y", "alive", "list")
+# A frame LACKING a column folds as if every event omitted that key:
+# coordinates as 0, and ``alive`` as True, not None (None folds players
+# as dead), the dict fold's event.go:31-43 zero-value semantics.
+_MISSING_COL_VALUE = {"x": 0, "y": 0, "alive": True}
 
 
 def _plain_coords(col: pd.Series) -> list:
-    """A coordinate column as Python ints, None where null. One null
+    """A coordinate column as Python ints, 0 where null. One null
     makes pandas hold the column as float64 with NaN."""
     if col.dtype.kind in "iu":
         return col.tolist()
-    return [None if null else int(v) for v, null in zip(col.tolist(), col.isna().tolist())]
+    return [0 if null else int(v) for v, null in zip(col.tolist(), col.isna().tolist())]
 
 
 def _plain_codes(cell):
@@ -385,14 +393,10 @@ def fold_pdf(pdf: pd.DataFrame, state: GameState | None = None) -> GameState:
     transitions read, to plain Python values."""
     state = state or GameState()
     n = len(pdf)
-    # a frame LACKING a column folds as if every event omitted that
-    # key — for ``alive`` the dict-based fold defaults a missing key
-    # to True (event.go:31-43's zero-value semantics), so the columnar
-    # default must be True too, not None (None folds players as dead)
     cols = [
         (_plain_coords(pdf[c]) if c in ("x", "y") else pdf[c].tolist())
         if c in pdf.columns
-        else ([True] * n if c == "alive" else [None] * n)
+        else [_MISSING_COL_VALUE.get(c)] * n
         for c in _EVENT_COLS
     ]
     types, names, avatars, xs, ys, alives, lists = cols

@@ -64,9 +64,19 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def _half_of_ram() -> str:
+    """Half of this machine's RAM, capped at ``get_spark``'s 56g local
+    default. A heap sized past the machine lets the test JVM grow until
+    the kernel kills it, and every later test then fails to connect."""
+    with open("/proc/meminfo") as f:
+        mem_kb = int(next(line for line in f if line.startswith("MemTotal")).split()[1])
+    return f"{min(56 * 1024, mem_kb // 1024 // 2)}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
     _scrub_stale_test_tables()
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _half_of_ram())
     s = get_spark(app_name="pwp-tests", cpus=8, shuffle_partitions=8)
     yield s
 

@@ -401,6 +401,38 @@ def test_fold_pdf_folds_a_null_coordinate_like_fold_events():
     assert all(type(v) is int for pos in got.flames for v in pos)
 
 
+def test_null_coordinates_fold_as_zero_in_both_folds():
+    """x/y are nullable in the schema and ``parse_envelope`` yields
+    null for a missing key. Both folds read a null coordinate as Go's
+    zero value, 0, for a move, and for a bomb that is set or moved and
+    then explodes."""
+    import pandas as pd
+
+    from play_with_pulsar_spark.operators.replay import fold_pdf
+
+    evs = [
+        ev("UserJoinEvent", name="a", x=3, y=3, lst=[-encode_xy(2, 3)]),
+        ev("UserMoveEvent", name="a", x=None, y=2),
+        ev("SetBombEvent", name="a-b1", x=None, y=None),
+        ev("ExplodeEvent", name="a-b1"),
+        ev("SetBombEvent", name="a-b2", x=5, y=5),
+        ev("BombMoveEvent", name="a-b2", x=2, y=None),
+        ev("UndoExplodeEvent", x=None, y=None),
+        ev("ExplodeEvent", name="a-b2"),
+    ]
+    want = fold_events([{**e, "x": e["x"] or 0, "y": e["y"] or 0} for e in evs])
+    assert want.players["a"].pos == (0, 2)
+    assert set(want.exploding) == {(2, 0)}
+    assert (2, 3) not in want.obstacles  # only the moved bomb reaches it
+    assert fold_events(evs) == want
+    assert fold_pdf(pd.DataFrame(evs)) == want
+    missing = [{k: v for k, v in e.items() if v is not None or k not in ("x", "y")}
+               for e in evs]
+    assert fold_events(missing) == want
+    assert fold_pdf(pd.DataFrame(evs).drop(columns=["x", "y"])) == fold_events(
+        [{**e, "x": 0, "y": 0} for e in evs])
+
+
 def test_every_event_type_dispatches_identically_in_both_chains():
     """apply() (dict chain) and fold_pdf (positional chain) are
     hand-duplicated branch lists — this pins that EVERY event type

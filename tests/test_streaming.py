@@ -7,7 +7,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from play_with_pulsar_spark.operators.replay import players_state, replay_state
+from play_with_pulsar_spark.operators.replay import (
+    STATE_SCHEMA,
+    players_state,
+    replay_state,
+)
 from play_with_pulsar_spark.operators.scoreboard import kill_counts
 from play_with_pulsar_spark.sources.fixtures import game_event_log
 from play_with_pulsar_spark.streaming import pipeline as sp
@@ -200,3 +204,76 @@ def test_checkpoint_restart_recovers_offsets_and_state(spark, tmp_path):
     # state recovery: final counts cover both files
     got = {(r.room, r.killer): r["count"] for r in spark.read.parquet(out).collect()}
     assert got == {("R", "killer"): 12}
+
+
+def test_local_session_checkpoints_through_the_filesystem_manager(spark, tmp_path):
+    """The engine's local session writes stream checkpoints through
+    the FileSystem manager. Its atomic create must still refuse, when
+    it closes, to replace a file that exists: that refusal is how an
+    offset log detects a second writer."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "offsets" / "0"))
+    fm = checkpointing.CheckpointFileManager.create(
+        path.getParent(), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    assert fm.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    fm.mkdirs(path.getParent())
+    first = fm.createAtomic(path, False)
+    first.write(1)
+    first.close()
+    second = fm.createAtomic(path, False)
+    second.write(2)
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExistsException"):
+        second.close()
+    kept = fm.open(path)
+    assert kept.read() == 1  # the first writer's file is untouched
+    kept.close()
+
+
+def test_streaming_fold_resumes_from_its_checkpoint(spark, log_dir, tmp_path):
+    """A checkpointed ``streaming_fold`` is stopped, more files arrive,
+    and a new query resumes from the checkpoint. The restart must read
+    only the new files, and each room's last emission must equal batch
+    ``replay_state`` on every row: the state carried over is the
+    rooms' pickled ``GameState`` blobs in the state store."""
+    import shutil
+    from collections import Counter
+
+    in_dir, ckpt, out = tmp_path / "in", str(tmp_path / "ckpt"), str(tmp_path / "out")
+    in_dir.mkdir()
+
+    def sink(bdf, epoch_id):
+        bdf.write.mode("overwrite").parquet(f"{out}/batch_id={epoch_id}")
+
+    def run_once():
+        stream = sp.stream_game_events(spark, _glob(str(in_dir)))
+        q = (
+            sp.streaming_fold(stream).writeStream.outputMode("update")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
+    def copy_parts(*parts):
+        for i in parts:
+            shutil.copytree(f"{log_dir['dir']}/part{i}", in_dir / f"part{i}")
+        return spark.read.parquet(*(str(in_dir / f"part{i}") for i in parts)).count()
+
+    n_old = copy_parts(0, 1)
+    assert run_once() == n_old
+    n_new = copy_parts(2, 3)
+    assert run_once() == n_new  # offsets resumed: only the new files
+
+    emitted = spark.read.parquet(out)
+    last = emitted.groupBy("room").agg(F.max("batch_id").alias("batch_id"))
+    final = emitted.join(last, ["room", "batch_id"]).select(*STATE_SCHEMA.fieldNames())
+    got = Counter(map(tuple, final.collect()))
+    want = Counter(map(tuple, replay_state(log_dir["batch_df"]).collect()))
+    assert got == want
