@@ -27,6 +27,7 @@ ordering is by explicit ``offset`` (the broker order made a column).
 
 from __future__ import annotations
 
+import pickle
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -62,6 +63,7 @@ STATE_SCHEMA = StructType(
         StructField("destructible", BooleanType(), True),  # obstacles only
     ]
 )
+STATE_COLS = [f.name for f in STATE_SCHEMA.fields]
 
 
 def valid_coordinate(x: int, y: int) -> bool:
@@ -436,14 +438,47 @@ def fold_pdf(pdf: pd.DataFrame, state: GameState | None = None) -> GameState:
     return state
 
 
-def _fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
+def encode_state(state: GameState) -> bytes:
+    """A state as a blob: the snapshot tables, the maintained view's
+    carry heads and the stream's state store all hold these. This pair
+    is the only code that knows the blob format (a pickle)."""
+    return pickle.dumps(state)
+
+
+def decode_state(blob: bytes) -> GameState:
+    """Inverse of :func:`encode_state`."""
+    return pickle.loads(blob)
+
+
+def fold_room(
+    pdf: pd.DataFrame, state: GameState | None = None, after: int = -1, every_k: int = 0
+) -> tuple[GameState, list[tuple[int, bytes]]]:
+    """The one per-room fold every entry point runs: drop the events
+    at ``offset <= after`` (already in ``state``), fold the rest in
+    offset order through :func:`fold_pdf`, and, when ``every_k`` is
+    set, encode the state at each offset ``o`` with
+    ``(o + 1) % every_k == 0``. Returns the state and the
+    ``(offset, blob)`` snapshots."""
+    state = GameState() if state is None else state
     pdf = pdf.sort_values("offset", kind="mergesort")
-    room = pdf["room"].iloc[0]
-    state = fold_pdf(pdf)
-    rows = state.to_rows(room)
-    if not rows:
-        return pd.DataFrame(columns=[f.name for f in STATE_SCHEMA.fields])
-    return pd.DataFrame(rows)
+    # sorted first, so dropping the resumed prefix is a slice, not a copy
+    pdf = pdf.iloc[pdf["offset"].searchsorted(after, side="right") :]
+    snaps = []
+    if every_k:
+        seg = 0
+        for i, off in enumerate(pdf["offset"].tolist()):
+            if (off + 1) % every_k == 0:
+                fold_pdf(pdf.iloc[seg : i + 1], state)
+                seg = i + 1
+                snaps.append((off, encode_state(state)))
+        pdf = pdf.iloc[seg:]
+    fold_pdf(pdf, state)
+    return state, snaps
+
+
+def _fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    state, _ = fold_room(pdf)
+    return pd.DataFrame(state.to_rows(pdf["room"].iloc[0]), columns=STATE_COLS)
 
 
 def _project_fold_columns(events: DataFrame) -> DataFrame:
@@ -500,7 +535,7 @@ def assert_rooms_not_split(events: DataFrame) -> None:
         )
 
 
-def replay_state_grouped(events: DataFrame, verify_layout: bool = False) -> DataFrame:
+def replay_state_grouped(events: DataFrame) -> DataFrame:
     """Shuffle-free fold for sources PHYSICALLY partitioned by room.
 
     The reference's log is topic-per-room (docs/en/game2-use-mq.md:
@@ -514,18 +549,12 @@ def replay_state_grouped(events: DataFrame, verify_layout: bool = False) -> Data
     PRECONDITION: every room's events live in exactly one partition
     (topic-per-room scan, or an upstream ``repartition("room")``).
     Rooms split across partitions would each fold a partial log —
-    use ``replay_state`` when the layout is unknown. Memory: a
+    use ``replay_state`` when the layout is unknown, and check a new
+    source layout once with :func:`assert_rooms_not_split`. Memory: a
     partition's events are buffered (same bound as one applyInPandas
     group holding one room; here it is one task's share of the log,
     i.e. one topic partition — bounded by the source layout).
-
-    ``verify_layout=True`` runs :func:`assert_rooms_not_split` first
-    (one extra narrow pass) — use when adopting a new source layout;
-    leave False on layouts already proven (the generator's, a
-    topic-per-room scan) to keep the zero-extra-pass plan.
     """
-    if verify_layout:
-        assert_rooms_not_split(events)
     events = _project_fold_columns(events)
 
     def fold_partition(batches):
@@ -542,14 +571,13 @@ def replay_state_grouped(events: DataFrame, verify_layout: bool = False) -> Data
         # would dominate the fold itself)
         buf: list[dict] = []
         for room, parts in per_room.items():
-            pdf = pd.concat(parts) if len(parts) > 1 else parts[0]
-            pdf = pdf.sort_values("offset", kind="mergesort")
-            buf.extend(fold_pdf(pdf).to_rows(room))
+            state, _ = fold_room(pd.concat(parts) if len(parts) > 1 else parts[0])
+            buf.extend(state.to_rows(room))
             if len(buf) >= 8192:
-                yield pd.DataFrame(buf)
+                yield pd.DataFrame(buf, columns=STATE_COLS)
                 buf = []
         if buf:
-            yield pd.DataFrame(buf)
+            yield pd.DataFrame(buf, columns=STATE_COLS)
 
     return events.mapInPandas(fold_partition, schema=STATE_SCHEMA)
 
@@ -589,36 +617,32 @@ SNAPSHOT_SCHEMA = StructType(
 
 
 def snapshot_states(events: DataFrame, every_k: int = 1000) -> DataFrame:
-    """Time-travel checkpoints: fold each room ONCE, emitting a
-    pickled GameState every ``every_k`` offsets. At 100 TB this is
+    """Time-travel checkpoints: fold each room ONCE, emitting an
+    encoded GameState every ``every_k`` offsets (a room with no such
+    offset gets one empty state at ``snap_offset`` -1). At 100 TB this is
     the structure that makes ``state_at(room, k)`` O(tail) instead of
     O(history): store this table partitioned by room, then any replay
     starts from the nearest snapshot ≤ k (``state_at``)."""
-    import pickle
-
+    if every_k < 1:
+        raise ValueError(f"every_k must be >= 1, got {every_k}")
     events = _project_fold_columns(events)
 
     def snap(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("offset", kind="mergesort")
+        _, snaps = fold_room(pdf, every_k=every_k)
         room = pdf["room"].iloc[0]
-        state = GameState()
-        out = []
-        offsets = pdf["offset"].tolist()
-        # columnar segment fold between snapshot points (same kernel
-        # as the batch fold; avoids per-row dict materialization)
-        seg_start = 0
-        for i, off in enumerate(offsets):
-            if (off + 1) % every_k == 0:
-                fold_pdf(pdf.iloc[seg_start : i + 1], state)
-                seg_start = i + 1
-                out.append(
-                    {"room": room, "snap_offset": off, "blob": pickle.dumps(state)}
-                )
-        if not out:
-            out.append({"room": room, "snap_offset": -1, "blob": pickle.dumps(GameState())})
-        return pd.DataFrame(out)
+        rows = [(room, off, blob) for off, blob in snaps] or [(room, -1, encode_state(GameState()))]
+        return pd.DataFrame(rows, columns=["room", "snap_offset", "blob"])
 
     return events.groupBy("room").applyInPandas(snap, schema=SNAPSHOT_SCHEMA)
+
+
+def _resume_point(side: pd.DataFrame, offset_col: str) -> tuple[GameState | None, int]:
+    """The ``(state, after)`` a room's fold resumes from: the one
+    encoded state on a cogroup's snapshot side, or no state before
+    offset 0 when the room has none."""
+    if not len(side):
+        return None, -1
+    return decode_state(side["blob"].iloc[0]), int(side[offset_col].iloc[0])
 
 
 def state_at(events: DataFrame, snapshots: DataFrame, upto_offset: int) -> DataFrame:
@@ -628,8 +652,6 @@ def state_at(events: DataFrame, snapshots: DataFrame, upto_offset: int) -> DataF
     starting GameState, the event side contributes only offsets in
     (snap_offset, k] — the work is proportional to the tail, not the
     log. Returns the tagged state table (``STATE_SCHEMA``)."""
-    import pickle
-
     best = (
         snapshots.filter(F.col("snap_offset") <= upto_offset)
         .groupBy("room")
@@ -639,16 +661,8 @@ def state_at(events: DataFrame, snapshots: DataFrame, upto_offset: int) -> DataF
     tail = _project_fold_columns(events.filter(F.col("offset") <= upto_offset))
 
     def fold_tail(key, evs: pd.DataFrame, snaps: pd.DataFrame):
-        room = key[0]
-        if len(snaps):
-            state = pickle.loads(snaps["blob"].iloc[0])
-            start = int(snaps["snap_offset"].iloc[0])
-        else:
-            state, start = GameState(), -1
-        evs = evs[evs["offset"] > start].sort_values("offset", kind="mergesort")
-        fold_pdf(evs, state)
-        rows = state.to_rows(room)
-        return pd.DataFrame(rows if rows else [], columns=[f.name for f in STATE_SCHEMA.fields])
+        state, _ = fold_room(evs, *_resume_point(snaps, "snap_offset"))
+        return pd.DataFrame(state.to_rows(key[0]), columns=STATE_COLS)
 
     return (
         tail.groupBy("room")
@@ -664,14 +678,15 @@ class FoldSnapshotView:
     table by folding the WHOLE log; nothing maintained it as the log
     grew, so a crawl-loop deployment would re-fold history per
     refresh. This view folds each appended batch ONCE: per-batch cost
-    is O(batch events), and ``state_at`` stays O(tail ≤ every_k) from
-    the latest materialized snapshot forever.
+    is O(batch events), and :func:`state_at` over :meth:`snapshots`
+    stays O(tail ≤ every_k) from the latest materialized snapshot
+    forever.
 
     State layout under ``path`` (the curator's idempotent-batch-dir
     protocol, local/POSIX ``_SUCCESS`` markers):
 
     - ``snaps/batch=<id>/`` — public checkpoint rows (room,
-      snap_offset, blob), one pickled GameState per crossed
+      snap_offset, blob), one encoded GameState per crossed
       ``every_k`` boundary, append-only across batches.
     - ``heads/batch=<id>/`` — per-room CARRY state: the fold result
       at the last offset each batch processed. The latest head per
@@ -684,7 +699,7 @@ class FoldSnapshotView:
     ``batch_id`` is a no-op; a replay after a partial commit excludes
     this batch's own partitions from the resume read (the curator's
     exclude-own-batch rule) and rewrites both partitions
-    deterministically (pickle of the same fold from the same resume
+    deterministically (encoding the same fold from the same resume
     state is byte-identical).
 
     PRECONDITION (append-only log tail): each batch carries, per
@@ -704,6 +719,8 @@ class FoldSnapshotView:
         self.spark = spark
         self.path = path
         self.every_k = int(every_k)
+        if self.every_k < 1:
+            raise ValueError(f"every_k must be >= 1, got {every_k}")
         self.snaps_dir = os.path.join(path, "snaps")
         self.heads_dir = os.path.join(path, "heads")
 
@@ -758,11 +775,13 @@ class FoldSnapshotView:
             self.snaps_dir, "room string, snap_offset long, blob binary"
         )
 
-    def heads(self) -> DataFrame:
+    def heads(self, exclude: int | None = None) -> DataFrame:
         """(room, upto_offset, blob): the latest carry state per room
-        — the resume point, also useful as a cheap latest-state view."""
+        — the resume point, also useful as a cheap latest-state view.
+        ``exclude`` leaves out one batch's own heads (``update``'s
+        replay-safe resume read)."""
         raw = self._read(
-            self.heads_dir, "room string, upto_offset long, blob binary"
+            self.heads_dir, "room string, upto_offset long, blob binary", exclude
         )
         return (
             raw.groupBy("room")
@@ -774,13 +793,6 @@ class FoldSnapshotView:
             )
         )
 
-    def state_at(self, events: DataFrame, upto_offset: int) -> DataFrame:
-        """Time travel through the MAINTAINED snapshots: O(tail) —
-        the event scan below the chosen snapshot is pruned by
-        :func:`state_at`'s filter, and the tail is < ``every_k``
-        events per room once the view has caught up past ``upto``."""
-        return state_at(events, self.snapshots(), upto_offset)
-
     # ---------------------------------------------------------- update
 
     def update(self, events: DataFrame, batch_id: int) -> None:
@@ -789,26 +801,10 @@ class FoldSnapshotView:
         excluded — replay safety), emit a snapshot row at every
         crossed ``every_k`` boundary plus the new head, and commit
         both tables into idempotent ``batch=<id>`` partitions."""
-        import pickle
-
         snaps_done = self._committed(self.snaps_dir, batch_id)
         heads_done = self._committed(self.heads_dir, batch_id)
         if snaps_done and heads_done:
             return
-        resume = self._read(
-            self.heads_dir, "room string, upto_offset long, blob binary",
-            exclude=batch_id,
-        )
-        resume = (
-            resume.groupBy("room")
-            .agg(F.max_by(F.struct("upto_offset", "blob"), "upto_offset").alias("h"))
-            .select(
-                "room",
-                F.col("h.upto_offset").alias("upto_offset"),
-                F.col("h.blob").alias("blob"),
-            )
-        )
-        ev = _project_fold_columns(events)
         every_k = self.every_k
 
         def fold_batch(key, evs: pd.DataFrame, hd: pd.DataFrame) -> pd.DataFrame:
@@ -816,34 +812,16 @@ class FoldSnapshotView:
             if not len(evs):  # head-only group: old head stays latest
                 return pd.DataFrame([], columns=cols)
             room = key[0]
-            if len(hd):
-                state = pickle.loads(hd["blob"].iloc[0])
-                start = int(hd["upto_offset"].iloc[0])
-            else:
-                state, start = GameState(), -1
-            evs = evs[evs["offset"] > start].sort_values("offset", kind="mergesort")
-            offsets = evs["offset"].tolist()
-            out = []
-            seg = 0
-            for i, off in enumerate(offsets):
-                if (off + 1) % every_k == 0:
-                    fold_pdf(evs.iloc[seg : i + 1], state)
-                    seg = i + 1
-                    out.append(
-                        {"room": room, "snap_offset": int(off),
-                         "blob": pickle.dumps(state), "is_head": False}
-                    )
-            fold_pdf(evs.iloc[seg:], state)
-            upto = int(offsets[-1]) if offsets else start
-            out.append(
-                {"room": room, "snap_offset": upto,
-                 "blob": pickle.dumps(state), "is_head": True}
-            )
+            state, after = _resume_point(hd, "upto_offset")
+            state, snaps = fold_room(evs, state, after, every_k)
+            upto = max(after, int(evs["offset"].max()))
+            out = [(room, off, blob, False) for off, blob in snaps]
+            out.append((room, upto, encode_state(state), True))
             return pd.DataFrame(out, columns=cols)
 
         rows = (
-            ev.groupBy("room")
-            .cogroup(resume.groupBy("room"))
+            _project_fold_columns(events).groupBy("room")
+            .cogroup(self.heads(exclude=batch_id).groupBy("room"))
             .applyInPandas(
                 fold_batch,
                 schema="room string, snap_offset long, blob binary, is_head boolean",
@@ -861,15 +839,6 @@ class FoldSnapshotView:
                 "blob",
             ).write.mode("overwrite").parquet(self._batch_dir(self.heads_dir, batch_id))
         rows.unpersist()
-
-    def foreach_batch(self):
-        """Adapter for ``writeStream.foreachBatch`` — maintain the
-        snapshot view directly off the event stream."""
-
-        def fn(batch_df: DataFrame, epoch_id: int) -> None:
-            self.update(batch_df, int(epoch_id))
-
-        return fn
 
 
 def paced_replay(events: DataFrame, room: str, pace_ms: int = 200):

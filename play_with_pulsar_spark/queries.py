@@ -1245,7 +1245,7 @@ def fold_snapshot_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dir is deleted — a lazy frame over it would dangle
         rows = [
             (r.room, r.name, r.x, r.y, r.alive)
-            for r in replay.players_state(view.state_at(log, 1500)).collect()
+            for r in replay.players_state(replay.state_at(log, view.snapshots(), 1500)).collect()
         ]
     finally:
         shutil.rmtree(base, ignore_errors=True)

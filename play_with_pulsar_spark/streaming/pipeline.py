@@ -42,7 +42,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.replay import STATE_SCHEMA, GameState, fold_pdf
+from ..operators.replay import (
+    STATE_COLS,
+    STATE_SCHEMA,
+    GameState,
+    decode_state,
+    encode_state,
+    fold_room,
+)
 from ..schema import GAME_EVENT_SCHEMA
 
 
@@ -108,23 +115,18 @@ _FOLD_STATE_SCHEMA = StructType([StructField("blob", BinaryType(), True)])
 
 
 def _fold_with_state(key, pdf_iter, state: GroupState):
-    """applyInPandasWithState kernel: unpickle the room's GameState,
-    apply this micro-batch's events in offset order, persist, and emit
-    the room's current state table (update-mode changelog of the
-    materialized state)."""
-    room = key[0]
-    if state.exists:
-        gs = pickle.loads(state.get[0])
-    else:
-        gs = GameState()
+    """applyInPandasWithState kernel: decode the room's GameState,
+    apply this micro-batch's events in offset order (``fold_room``,
+    the batch fold), persist, and emit the room's current state table
+    (update-mode changelog of the materialized state)."""
+    gs = decode_state(state.get[0]) if state.exists else GameState()
     batches = [pdf for pdf in pdf_iter if not pdf.empty]
     if batches:
-        events = pd.concat(batches).sort_values("offset", kind="mergesort")
-        fold_pdf(events, gs)  # columnar kernel — same fold as batch
-    state.update((pickle.dumps(gs),))
-    rows = gs.to_rows(room)
+        gs, _ = fold_room(pd.concat(batches), gs)
+    state.update((encode_state(gs),))
+    rows = gs.to_rows(key[0])
     if rows:
-        yield pd.DataFrame(rows)
+        yield pd.DataFrame(rows, columns=STATE_COLS)
 
 
 def streaming_fold(events: DataFrame) -> DataFrame:

@@ -123,3 +123,33 @@ def test_fold_pdf_equals_fold_events_on_adversarial_sequences(events):
         got = fold_pdf(frame)
         assert got == expected
         assert all(type(v) is int for pos in _positions(got) for v in pos)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(event_strategy, max_size=100), st.integers(1, 40))
+def test_fold_room_snapshots_and_resume_equal_fold_events(events, every_k):
+    """The contract of fold_room, the per-room fold every entry point
+    runs. Given offsets 0..n-1 in reverse order, it folds them in
+    offset order; each snapshot decodes to the fold of the prefix up to
+    its offset; and resuming from any snapshot past its offset folds
+    to the same state as the whole sequence."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from play_with_pulsar_spark.operators.replay import decode_state, fold_room
+    from play_with_pulsar_spark.schema import GAME_EVENT_SCHEMA
+
+    events = [dict(ev, offset=o) for o, ev in enumerate(events)]
+    frame = pa.Table.from_pylist(
+        events[::-1], schema=to_arrow_schema(GAME_EVENT_SCHEMA)
+    ).to_pandas()
+    whole = fold_events(events)
+
+    state, snaps = fold_room(frame, every_k=every_k)
+    assert state == whole
+    assert [o for o, _ in snaps] == [o for o in range(len(events)) if (o + 1) % every_k == 0]
+    for o, blob in snaps:
+        assert decode_state(blob) == fold_events(events[: o + 1])
+        resumed, _ = fold_room(frame, decode_state(blob), after=o)
+        assert resumed == whole
+    assert fold_room(frame) == (whole, [])
