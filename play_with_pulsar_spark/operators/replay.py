@@ -45,6 +45,7 @@ from pyspark.sql.types import (
 )
 
 from ..schema import BOMB_LENGTH, GRID_H, GRID_W
+from ..streaming.batch_dirs import BatchDirs
 
 DESTRUCTIBLE = 1
 INDESTRUCTIBLE = 2
@@ -671,7 +672,7 @@ def state_at(events: DataFrame, snapshots: DataFrame, upto_offset: int) -> DataF
     )
 
 
-class FoldSnapshotView:
+class FoldSnapshotView(BatchDirs):
     """Incrementally-maintained snapshot table for the fold — the
     matview pattern (``operators.matview``) applied to GameState time
     travel (round 7). :func:`snapshot_states` builds the checkpoint
@@ -682,8 +683,8 @@ class FoldSnapshotView:
     stays O(tail ≤ every_k) from the latest materialized snapshot
     forever.
 
-    State layout under ``path`` (the curator's idempotent-batch-dir
-    protocol, local/POSIX ``_SUCCESS`` markers):
+    State layout under ``path`` (the batch-directory commit protocol
+    of ``streaming/batch_dirs.py``, with no compaction):
 
     - ``snaps/batch=<id>/`` — public checkpoint rows (room,
       snap_offset, blob), one encoded GameState per crossed
@@ -697,10 +698,9 @@ class FoldSnapshotView:
 
     Replay semantics: ``update`` with an already-committed
     ``batch_id`` is a no-op; a replay after a partial commit excludes
-    this batch's own partitions from the resume read (the curator's
-    exclude-own-batch rule) and rewrites both partitions
-    deterministically (encoding the same fold from the same resume
-    state is byte-identical).
+    this batch's own partitions from the resume read and rewrites
+    both partitions deterministically (encoding the same fold from
+    the same resume state is byte-identical).
 
     PRECONDITION (append-only log tail): each batch carries, per
     room, only offsets strictly greater than every offset a previous
@@ -711,7 +711,12 @@ class FoldSnapshotView:
     At 100 TB: rooms shard the kernel (one group = one room, state ≤
     a few KB), snapshots partition by room for the ``state_at`` point
     read, and per-batch work never touches history — the same
-    O(batch)-not-O(log) contract as ``LatestStateView``."""
+    O(batch)-not-O(log) contract as ``LatestStateView``.
+
+    ``attach(stream, checkpoint_dir)`` maintains the view from a
+    streaming event log, one ``update`` per micro-batch."""
+
+    partition = "batch"
 
     def __init__(self, spark, path: str, every_k: int = 1000) -> None:
         import os
@@ -724,54 +729,12 @@ class FoldSnapshotView:
         self.snaps_dir = os.path.join(path, "snaps")
         self.heads_dir = os.path.join(path, "heads")
 
-    # ---------------------------------------------------------- layout
-
-    def _batch_dir(self, base: str, batch_id: int) -> str:
-        import os
-
-        return os.path.join(base, f"batch={batch_id}")
-
-    def _committed(self, base: str, batch_id: int) -> bool:
-        import os
-
-        return os.path.exists(
-            os.path.join(self._batch_dir(base, batch_id), "_SUCCESS")
-        )
-
-    def _committed_dirs(self, base: str, exclude: int | None = None) -> list[str]:
-        import os
-
-        if not os.path.isdir(base):
-            return []
-        out = []
-        for d in os.listdir(base):
-            if not d.startswith("batch="):
-                continue
-            bid = int(d.split("=", 1)[1])
-            if exclude is not None and bid == exclude:
-                continue
-            full = os.path.join(base, d)
-            if os.path.exists(os.path.join(full, "_SUCCESS")):
-                out.append(full)
-        return out
-
-    def _read(self, base: str, schema: str, exclude: int | None = None) -> DataFrame:
-        dirs = self._committed_dirs(base, exclude)
-        if not dirs:
-            return self.spark.createDataFrame([], schema)
-        return (
-            self.spark.read.schema(schema)
-            .option("basePath", base)
-            .parquet(*dirs)
-            .select(*[c.split()[0] for c in schema.split(",")])
-        )
-
     # ----------------------------------------------------------- reads
 
     def snapshots(self) -> DataFrame:
         """The maintained checkpoint table (SNAPSHOT_SCHEMA shape) —
         drop-in for :func:`state_at`'s ``snapshots`` argument."""
-        return self._read(
+        return self._read_committed(
             self.snaps_dir, "room string, snap_offset long, blob binary"
         )
 
@@ -780,8 +743,10 @@ class FoldSnapshotView:
         — the resume point, also useful as a cheap latest-state view.
         ``exclude`` leaves out one batch's own heads (``update``'s
         replay-safe resume read)."""
-        raw = self._read(
-            self.heads_dir, "room string, upto_offset long, blob binary", exclude
+        raw = self._read_committed(
+            self.heads_dir,
+            "room string, upto_offset long, blob binary",
+            exclude=exclude,
         )
         return (
             raw.groupBy("room")
@@ -839,6 +804,8 @@ class FoldSnapshotView:
                 "blob",
             ).write.mode("overwrite").parquet(self._batch_dir(self.heads_dir, batch_id))
         rows.unpersist()
+
+    process_batch = update
 
 
 def paced_replay(events: DataFrame, room: str, pace_ms: int = 200):

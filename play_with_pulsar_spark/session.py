@@ -139,10 +139,7 @@ def get_spark(
         #   managers check-then-rename over the same LocalFileSystem,
         #   which still writes the .crc files.
         builder = (
-            builder.config(
-                "spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"),
-            )
+            builder.config("spark.sql.files.maxPartitionBytes", "32m")
             .config(
                 "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "56g")
             )
@@ -157,10 +154,7 @@ def get_spark(
             # pauses seconds — at 1min it lands mid-query and makes
             # bench timings bimodal. 10min amortizes it between
             # bench/test phases instead of inside them.
-            .config(
-                "spark.cleaner.periodicGC.interval",
-                os.environ.get("SPARK_GRAFT_PERIODIC_GC", "10min"),
-            )
+            .config("spark.cleaner.periodicGC.interval", "10min")
         )
         # Preload pandas/numpy/pyarrow in the worker daemon so forked
         # Python workers inherit them (~300 ms import per fresh worker

@@ -62,7 +62,10 @@ remembers ``covered_upto``) is skipped outright. Duplicated appends
 would not just double rows: replayed doc_ids violate
 ``incremental_jaccard_pairs``'s disjoint-id precondition (doubled
 shingle rows skew sizes and Jaccard), so idempotence here is a
-correctness requirement, not bookkeeping.
+correctness requirement, not bookkeeping. The commit protocol itself
+(batch dirs, markers, watermark, manifest, replay-safe reads) is
+``streaming/batch_dirs.py``, shared with the incremental dedupers and
+``FoldSnapshotView``.
 
 Batch ids are assumed monotone per checkpoint (structured streaming's
 epoch ids; sequential micro-batches). Restarting against a FRESH
@@ -76,7 +79,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,6 +94,7 @@ from ..operators.dedup import (
     minhash_signatures,
     release_intermediates,
 )
+from .batch_dirs import BatchDirs, write_json_atomic
 
 # Frozen geometry of the vocabulary-HLL monitor tier (text screens):
 # a module constant, NOT a constructor arg, so two attachments to the
@@ -110,7 +113,7 @@ LEN_HDR_SUB_BITS = 6
 # from the declared id type (self.grams_schema / self.banded_schema)
 
 
-class StreamingCorpusCurator:
+class StreamingCorpusCurator(BatchDirs):
     def __init__(
         self,
         spark: SparkSession,
@@ -764,28 +767,6 @@ class StreamingCorpusCurator:
     def _manifest_path(self) -> str:
         return os.path.join(self.base_dir, "COMPACTED.json")
 
-    def _manifest(self) -> dict | None:
-        """None = never compacted (no manifest file). A PRESENT but
-        unparseable manifest raises instead: treating it as 'never
-        compacted' would silently drop the whole compacted tier from
-        every read (the folded source dirs are already deleted) and
-        re-accept duplicates with no error anywhere."""
-        try:
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-        except json.JSONDecodeError as e:
-            raise RuntimeError(
-                f"corrupt compaction manifest {self._manifest_path}: {e}; "
-                "restore it (a versioned compacted tier still exists under "
-                f"{self.compacted_dir}) before reading this curator"
-            ) from e
-
-    def _covered_upto(self) -> int:
-        man = self._manifest()
-        return man["covered_upto"] if man else -1
-
     @staticmethod
     def _vec_schema_for(fmt: str | None, id_type: str) -> str:
         if fmt == "int8":
@@ -860,11 +841,7 @@ class StreamingCorpusCurator:
             id_col=self.id_col,
             vec_col=self.vec_col,
         )
-        os.makedirs(self.base_dir, exist_ok=True)
-        tmp = self._pq_books_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(books_to_jsonable(books), f)
-        os.replace(tmp, self._pq_books_path)
+        write_json_atomic(self._pq_books_path, books_to_jsonable(books))
         self._pq_books = books
 
     def _policy_record(self) -> dict:
@@ -910,66 +887,10 @@ class StreamingCorpusCurator:
                     return
         except (FileNotFoundError, json.JSONDecodeError):
             pass
-        os.makedirs(self.base_dir, exist_ok=True)
-        tmp = geo_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(want, f)
-        os.replace(tmp, geo_path)
+        write_json_atomic(geo_path, want)
 
     # ------------------------------------------------------------------
     # state reads
-
-    def _statically_empty(self, schema: str) -> DataFrame:
-        """An empty DataFrame the OPTIMIZER can see is empty (round
-        12): ``createDataFrame([], schema)`` builds a LogicalRDD,
-        which ``PropagateEmptyRelation`` cannot prune — so the
-        ``compacted ∪ live`` union survives with Unknown partitioning
-        and the probe join re-EXCHANGES the bucketed index side even
-        when the live tier has no directories. A constant-folded
-        ``WHERE 1=0`` over NULL casts collapses to an empty
-        LocalRelation, the union prunes to the bucketed scan alone,
-        and the scan's HashPartitioning reaches the join."""
-        from pyspark.sql.types import StructType
-
-        sel = ", ".join(
-            f"CAST(NULL AS {f.dataType.simpleString()}) AS {f.name}"
-            for f in StructType.fromDDL(schema).fields
-        )
-        return self.spark.sql(f"SELECT {sel} WHERE 1=0")
-
-    def _read_state(
-        self, path: str, schema: str, exclude_batch: int | None = None
-    ) -> DataFrame:
-        """Live-tier state read with the schema ENFORCED (a stray or
-        corrupt file fails at the read boundary, not as a mid-join cast
-        error), compaction-covered partitions EXCLUDED (their rows
-        moved to the compacted tier; the directories only still exist
-        in the crash window between manifest flip and cleanup), and —
-        inside ``process_batch`` — this batch's own partition EXCLUDED:
-        a replay after a partial commit must screen against exactly
-        the pre-batch state — rows this same batch already wrote would
-        violate the incremental screen's disjoint-id precondition and
-        skew every Jaccard (doubled gram rows score a true-0.5 pair
-        as 1.0+)."""
-        from pyspark.errors import AnalysisException
-
-        full_schema = schema + ", ingest_batch int"
-        # DDL-parse for the names — a naive comma split breaks on
-        # parameterized types like decimal(28,6) (the doremi tier)
-        from pyspark.sql.types import StructType
-
-        cols = StructType.fromDDL(schema).fieldNames()
-        try:
-            df = self.spark.read.schema(full_schema).parquet(path)
-        except AnalysisException:  # PATH_NOT_FOUND: first batch yet
-            return self._statically_empty(schema)
-        upto = self._covered_upto()
-        if upto >= 0:
-            # partition column ⇒ covered dirs are PRUNED, not scanned
-            df = df.filter(F.col("ingest_batch") > upto)
-        if exclude_batch is not None:
-            df = df.filter(F.col("ingest_batch") != exclude_batch)
-        return df.select(*cols)
 
     def _state_schema(self, kind: str) -> str:
         return {
@@ -1323,9 +1244,6 @@ class StreamingCorpusCurator:
             out = comp if live is None else comp.unionByName(live)
         return self._minus_tombstones(out, self.id_col)
 
-    # ------------------------------------------------------------------
-    # batch-commit bookkeeping
-
     def _tc(self):
         """Doc length in tokens with NULL text read as '' (round-12
         edge fix): a crawl batch can carry NULL content, and both the
@@ -1338,31 +1256,6 @@ class StreamingCorpusCurator:
         return token_count(
             F.coalesce(F.col(self.text_col), F.lit(""))
         ).cast("long")
-
-    def _batch_dir(self, base: str, batch_id: int) -> str:
-        return os.path.join(base, f"ingest_batch={batch_id}")
-
-    @staticmethod
-    def _batch_id_of(path: str) -> int:
-        return int(path.rstrip("/").rsplit("ingest_batch=", 1)[1])
-
-    def _committed(self, base: str, batch_id: int) -> bool:
-        """True iff this batch's partition already committed — its
-        ``_SUCCESS`` marker exists, or compaction folded (and deleted)
-        it. Checked through the Hadoop FS API so object-store
-        deployments behave like local runs."""
-        if batch_id <= self._covered_upto():
-            return True
-        path = os.path.join(self._batch_dir(base, batch_id), "_SUCCESS")
-        try:
-            jvm = self.spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(
-                self.spark._jsc.hadoopConfiguration()
-            )
-            return bool(fs.exists(hpath))
-        except Exception:
-            return os.path.exists(path)
 
     def _apply_length_screen(self, docs: DataFrame, batch_id: int) -> DataFrame:
         """Adaptive length-band pre-screen (``length_band``): keep
@@ -2680,81 +2573,6 @@ class StreamingCorpusCurator:
         release_intermediates(pairs)
         self.maybe_compact()
 
-    def _committed_batch_dirs(self, base: str) -> list[str]:
-        """Partition directories of ``base`` whose ``_SUCCESS`` marker
-        exists — the committed subset a concurrent reader may trust
-        (a live micro-batch's partial partition is excluded). The
-        listing itself is ``_batch_dirs`` — one implementation of the
-        Hadoop-FS/local-FS walk, filtered here by the marker."""
-        return [d for d in self._batch_dirs(base) if self._success_exists(d)]
-
-    def _success_exists(self, batch_dir: str) -> bool:
-        path = os.path.join(batch_dir, "_SUCCESS")
-        try:
-            jvm = self.spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            return bool(fs.exists(hpath))
-        except Exception:
-            return os.path.exists(path)
-
-    def _batch_dirs(self, base: str) -> list[str]:
-        """ALL ``ingest_batch=`` directories of ``base`` (committed or
-        not) — compaction safety checks need to see partial ones."""
-        try:
-            jvm = self.spark._jvm
-            hbase = jvm.org.apache.hadoop.fs.Path(base)
-            fs = hbase.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            if not fs.exists(hbase):
-                return []
-            return [
-                s.getPath().toString()
-                for s in fs.listStatus(hbase)
-                if s.isDirectory()
-                and s.getPath().getName().startswith("ingest_batch=")
-            ]
-        except Exception:
-            if not os.path.isdir(base):
-                return []
-            return [
-                os.path.join(base, d)
-                for d in os.listdir(base)
-                if d.startswith("ingest_batch=")
-                and os.path.isdir(os.path.join(base, d))
-            ]
-
-    def _delete_dir(self, path: str) -> None:
-        try:
-            jvm = self.spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            if fs.exists(hpath):
-                fs.delete(hpath, True)
-        except Exception:
-            shutil.rmtree(path, ignore_errors=True)
-
-    def _read_committed(
-        self, base: str, schema: str, lo: int = -1, hi: int | None = None
-    ) -> DataFrame:
-        """Committed live-tier rows with ``lo < ingest_batch <= hi``."""
-        dirs = [
-            d
-            for d in self._committed_batch_dirs(base)
-            if self._batch_id_of(d) > lo
-            and (hi is None or self._batch_id_of(d) <= hi)
-        ]
-        from pyspark.sql.types import StructType
-
-        cols = StructType.fromDDL(schema).fieldNames()  # decimal(p,s)-safe
-        if not dirs:
-            return self.spark.createDataFrame([], schema)
-        return (
-            self.spark.read.schema(schema + ", ingest_batch int")
-            .option("basePath", base)
-            .parquet(*dirs)
-            .select(*cols)
-        )
-
     # ------------------------------------------------------------------
     # compaction
 
@@ -3006,12 +2824,7 @@ class StreamingCorpusCurator:
                 "path": os.path.join(vdir, "idx_sig"),
                 "keys": ["tbl", "bucket"],
             }
-            tmp = self._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._manifest_path)
+            self._flip_manifest(manifest)
             self._cleanup_covered(old_upto)
             self._drop_old_versions(version)
             return True
@@ -3052,12 +2865,7 @@ class StreamingCorpusCurator:
                 fw_path = os.path.join(vdir, "fineweb")
                 fw_full.write.mode("overwrite").parquet(fw_path)
                 manifest["fineweb"] = {"path": fw_path}
-            tmp = self._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._manifest_path)
+            self._flip_manifest(manifest)
             self._cleanup_covered(old_upto)
             self._drop_old_versions(version)
             return True
@@ -3119,12 +2927,7 @@ class StreamingCorpusCurator:
                 fw_path = os.path.join(vdir, "fineweb")
                 fw_full.write.mode("overwrite").parquet(fw_path)
                 manifest["fineweb"] = {"path": fw_path}
-            tmp = self._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self._manifest_path)
+            self._flip_manifest(manifest)
             self._cleanup_covered(old_upto)
             self._drop_old_versions(version)
             return True
@@ -3274,16 +3077,7 @@ class StreamingCorpusCurator:
             fw_full.write.mode("overwrite").parquet(fw_path)
             manifest["fineweb"] = {"path": fw_path}
 
-        # commit: write-temp + fsync + os.replace = atomic AND durable
-        # pointer flip (without the fsync, a power loss after the
-        # rename can leave an empty manifest while the folded source
-        # dirs below are already gone)
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path)
+        self._flip_manifest(manifest)
 
         # delete only dirs covered by the PREVIOUS watermark: the ones
         # folded by THIS compaction survive one generation as reader
@@ -3432,12 +3226,7 @@ class StreamingCorpusCurator:
                 "keys": ["tbl", "bucket"],
             },
         }
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path)
+        self._flip_manifest(manifest)
 
         self.num_planes, self.num_tables = new_p, new_t
         self._write_geometry_sidecar()
@@ -3549,10 +3338,7 @@ class StreamingCorpusCurator:
             # between refits identical books from the same compacted
             # state (deterministic fit), and an attach still resolves
             # the old manifest's vec_format until the flip lands
-            tmpb = self._pq_books_path + ".tmp"
-            with open(tmpb, "w") as f:
-                json.dump(books_to_jsonable(books), f)
-            os.replace(tmpb, self._pq_books_path)
+            write_json_atomic(self._pq_books_path, books_to_jsonable(books))
             self._pq_books = books
             q = with_pq_codes(old_vecs, books, "v", pc="_pc", vhat="_vhat")
             new_vecs = q.select("vec_id", F.col("_pc").alias("pc"))
@@ -3607,12 +3393,7 @@ class StreamingCorpusCurator:
                 "keys": ["tbl", "bucket"],
             },
         }
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._manifest_path)
+        self._flip_manifest(manifest)
         self.vec_format = new_format
         id_type = self.vec_schema.split(",")[0].split()[1]
         self.vec_schema = self._vec_schema_for(new_format, id_type)
@@ -3754,15 +3535,3 @@ class StreamingCorpusCurator:
             )
         else:
             write_ngram_index(grams, f"{prefix}_grams_by_g", n_buckets=n_buckets)
-
-    def attach(self, stream: DataFrame, checkpoint_dir: str, **trigger):
-        """Wire the curator into a streaming DataFrame; the returned
-        query appends exactly-once per micro-batch. ``trigger`` kwargs
-        pass through (default drain-and-stop ``availableNow``; use
-        ``processingTime='30 seconds'`` for a continuous curator)."""
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(**(trigger or {"availableNow": True}))
-            .start()
-        )

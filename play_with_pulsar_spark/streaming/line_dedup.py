@@ -5,12 +5,10 @@ Production pipelines (RefinedWeb, Dolma) run line dedup over a crawl
 that ARRIVES IN SHARDS: a line is kept at its first-ever occurrence
 across the whole stream and removed everywhere later, without ever
 re-reading the accepted corpus. This module maintains exactly that
-contract with the state conventions the corpus curator established
-(``streaming/curator.py``): one ``ingest_batch=<id>`` partition
-directory per micro-batch, ``mode=overwrite`` + ``_SUCCESS`` markers
-for at-least-once ``foreachBatch`` replays, and every index read
-EXCLUDING the in-flight batch so a replay screens against exactly the
-pre-batch state.
+contract; its state (the ``lines/`` index with its
+``lines_compacted/`` tier, and the ``deduped/`` output) follows the
+batch-directory commit protocol of ``streaming/batch_dirs.py``, so a
+replayed ``foreachBatch`` screens against exactly the pre-batch state.
 
 Semantics (greedy, first-writer-wins — acceptance TIME beats id
 order, the same rule the curator's doc-level screens follow):
@@ -39,9 +37,7 @@ left-anti hash join batch-side against the index, one batch-local
 min-aggregate, and one doc-keyed reassembly — index-side work is a
 scan of the hash column only. Long-running streams accumulate one
 index directory per batch; fold them periodically with
-:meth:`IncrementalLineDeduper.compact` (coarse-grained: rewrite all
-committed hashes into one ``compacted`` dir — same idempotent
-overwrite contract, crash leaves the batch dirs intact).
+:meth:`IncrementalLineDeduper.compact`.
 
 Reference semantics anchor: the reference's compacted-topic
 keep-one-per-key retention (TableView over a key-compacted topic,
@@ -50,15 +46,14 @@ keep-one-per-key retention (TableView over a key-compacted topic,
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.textops import split_lines, _LINE_POS_LIM
+from .batch_dirs import IndexedBatchDirs
 
 
-class IncrementalLineDeduper:
+class IncrementalLineDeduper(IndexedBatchDirs):
     def __init__(
         self,
         spark: SparkSession,
@@ -70,91 +65,17 @@ class IncrementalLineDeduper:
         segment_tokens: int = 10,
         id_type: str = "long",
     ) -> None:
-        self.spark = spark
-        self.base_dir = base_dir
-        self.lines_dir = os.path.join(base_dir, "lines")
-        self.compacted_dir = os.path.join(base_dir, "lines_compacted")
-        self.out_dir = os.path.join(base_dir, "deduped")
+        super().__init__(
+            spark,
+            base_dir,
+            "lines",
+            "lh long",
+            f"{id_col} {id_type}, text_dedup string, n_lines bigint, "
+            "n_kept bigint, n_removed bigint",
+        )
+        self.lines_dir = self.index_dir
         self.text_col, self.id_col = text_col, id_col
         self.delimiter, self.segment_tokens = delimiter, segment_tokens
-        self.lines_schema = "lh long"
-        self.out_schema = (
-            f"{id_col} {id_type}, text_dedup string, n_lines bigint, "
-            "n_kept bigint, n_removed bigint"
-        )
-
-    # ------------------------------------------------------------------
-    # state
-
-    def _batch_dir(self, base: str, batch_id: int) -> str:
-        return os.path.join(base, f"ingest_batch={batch_id}")
-
-    def _committed(self, base: str, batch_id: int) -> bool:
-        return os.path.exists(
-            os.path.join(self._batch_dir(base, batch_id), "_SUCCESS")
-        )
-
-    def _read_partitioned(
-        self, path: str, schema: str, exclude_batch: int | None
-    ) -> DataFrame:
-        """Schema-enforced read of the live batch-partition tier, the
-        in-flight batch excluded (replay contract — see module doc)."""
-        from pyspark.errors import AnalysisException
-
-        cols = [c.split()[0] for c in schema.split(",")]
-        try:
-            df = self.spark.read.schema(schema + ", ingest_batch int").parquet(path)
-        except AnalysisException:  # first batch: no directory yet
-            return self.spark.createDataFrame([], schema)
-        if exclude_batch is not None:
-            df = df.filter(F.col("ingest_batch") != exclude_batch)
-        return df.select(*cols)
-
-    def _index(self, exclude_batch: int | None = None) -> DataFrame:
-        """All kept-line hashes: compacted tier (if any) ∪ the live
-        batch dirs above the compaction watermark. The ``COMPACTED``
-        marker (JSON, atomic flip) carries ``covered_upto`` AND the
-        live data-dir version, so a crash mid-fold can never point a
-        reader at a half-written or deleted directory — the curator's
-        manifest discipline in miniature."""
-        from pyspark.errors import AnalysisException
-
-        man = self._compact_manifest()
-        upto = man["covered_upto"] if man else -1
-        try:
-            df = self.spark.read.schema(
-                self.lines_schema + ", ingest_batch int"
-            ).parquet(self.lines_dir)
-            if upto >= 0:  # partition column ⇒ covered dirs are pruned
-                df = df.filter(F.col("ingest_batch") > upto)
-            if exclude_batch is not None:
-                df = df.filter(F.col("ingest_batch") != exclude_batch)
-            live = df.select("lh")
-        except AnalysisException:  # first batch: no directory yet
-            live = self.spark.createDataFrame([], self.lines_schema)
-        if man is None:
-            return live
-        comp = self.spark.read.schema(self.lines_schema).parquet(
-            os.path.join(self.compacted_dir, f"data_v{man['version']}")
-        )
-        return comp.unionByName(live)
-
-    @property
-    def _compact_marker(self) -> str:
-        return os.path.join(self.compacted_dir, "COMPACTED.json")
-
-    def _compact_manifest(self) -> dict | None:
-        import json
-
-        try:
-            with open(self._compact_marker) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
-    def _covered_upto(self) -> int:
-        man = self._compact_manifest()
-        return man["covered_upto"] if man else -1
 
     # ------------------------------------------------------------------
     # the per-batch fold
@@ -196,9 +117,7 @@ class IncrementalLineDeduper:
         into ``deduped/ingest_batch=<id>`` and its surviving line
         hashes into ``lines/ingest_batch=<id>`` — both idempotent
         overwrites; a fully-committed batch is skipped outright."""
-        if self._committed(self.out_dir, batch_id) and self._committed(
-            self.lines_dir, batch_id
-        ):
+        if self._batch_done(batch_id):
             return
         occ = self._occurrences(batch)
         index = self._index(exclude_batch=batch_id)
@@ -239,99 +158,3 @@ class IncrementalLineDeduper:
             self._batch_dir(self.lines_dir, batch_id)
         )
         kept.unpersist()
-
-    # ------------------------------------------------------------------
-    # reads + maintenance
-
-    def deduped(self) -> DataFrame:
-        """All committed rewritten documents, earliest batch first has
-        no meaning here — one row per input doc across the stream."""
-        return self._read_partitioned(self.out_dir, self.out_schema, None)
-
-    def compact(self) -> bool:
-        """Fold the CONTIGUOUS prefix of ``_SUCCESS``-committed index
-        batch dirs above the watermark, plus the current compacted
-        tier, into a NEW versioned data dir (``data_v<k+1>``), flip
-        the JSON marker atomically, and only then delete the folded
-        batch dirs and the predecessor version. Steady state: one
-        live version + the post-fold batch dirs, whatever the stream
-        age. Crash anywhere before the flip leaves the old marker and
-        every source dir intact (a re-run rewrites the same version
-        dir — idempotent overwrite); crash after the flip only leaks
-        directories the next compact() deletes.
-
-        Two correctness constraints on the fold input (a crash-window
-        compact used to violate both — permanent silent line loss,
-        reproduced in test_line_dedup_stream):
-
-        - ONLY committed dirs may be folded: an uncommitted batch's
-          partial hashes baked into the compacted tier cannot be
-          excluded by the replay's ``exclude_batch`` filter, so the
-          replayed batch would anti-join against its own lines and
-          delete every one of them.
-        - ``covered_upto`` must stop at the first gap (an uncommitted
-          or missing batch id): folding a LATER committed batch and
-          advancing the watermark past the gap would prune the gap
-          batch's replayed dir from every future index read — its
-          surviving lines would vanish from the index.
-        """
-        import json
-        import shutil
-
-        man = self._compact_manifest()
-        upto = man["covered_upto"] if man else -1
-        present: dict[int, bool] = {}
-        try:
-            for name in os.listdir(self.lines_dir):
-                if not name.startswith("ingest_batch="):
-                    continue
-                bid = int(name.split("=", 1)[1])
-                if bid > upto:
-                    present[bid] = self._committed(self.lines_dir, bid)
-        except FileNotFoundError:
-            return False
-        # contiguous committed prefix above the watermark; stop at the
-        # first uncommitted dir OR missing id (both are replay targets)
-        fold: list[int] = []
-        nxt = upto + 1
-        while present.get(nxt, False):
-            fold.append(nxt)
-            nxt += 1
-        if not fold:
-            return False
-        new_version = (man["version"] + 1) if man else 0
-        live = self.spark.read.schema(self.lines_schema).parquet(
-            *[self._batch_dir(self.lines_dir, b) for b in fold]
-        ).select("lh")
-        if man is not None:
-            prev = self.spark.read.schema(self.lines_schema).parquet(
-                os.path.join(self.compacted_dir, f"data_v{man['version']}")
-            )
-            live = prev.unionByName(live)
-        live.distinct().write.mode("overwrite").parquet(
-            os.path.join(self.compacted_dir, f"data_v{new_version}")
-        )
-        tmp = self._compact_marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"covered_upto": max(fold), "version": new_version}, f)
-        os.replace(tmp, self._compact_marker)
-        for bid in fold:
-            shutil.rmtree(self._batch_dir(self.lines_dir, bid), ignore_errors=True)
-        if man is not None:
-            shutil.rmtree(
-                os.path.join(self.compacted_dir, f"data_v{man['version']}"),
-                ignore_errors=True,
-            )
-        return True
-
-    def attach(self, stream: DataFrame, checkpoint_dir: str, **trigger):
-        """Run the deduper as a Structured Streaming sink (default
-        drain-and-stop ``availableNow`` — the curator convention; an
-        empty ``.trigger()`` call raises in pyspark, so a bare
-        ``attach(stream, ckpt)`` used to be unusable)."""
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(**(trigger or {"availableNow": True}))
-            .start()
-        )

@@ -39,39 +39,22 @@ oracle's 2⁴³: the plant's copied doc ids reach 10⁷ + 10⁴, and
 Anchors are claimed by STRING: the portable 31-bit Horner hash only
 drives winnowing selection and join keying, so a hash collision can
 never excise a non-duplicate span (and the DuckDB oracle — which
-reproduces the same hash arithmetic — agrees bitwise). State
-conventions are the house ones: ``ingest_batch=<id>`` partitions,
-overwrite + ``_SUCCESS`` for at-least-once replays, index reads
-excluding the in-flight batch, contiguous-prefix compaction with an
-atomic marker flip.
+reproduces the same hash arithmetic — agrees bitwise). The state
+(the ``anchors/`` index with its ``anchors_compacted/`` tier, and the
+``deduped/`` output) follows the batch-directory commit protocol of
+``streaming/batch_dirs.py``.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.textops import _winnowed_anchor_occurrences, tokens
+from .batch_dirs import IndexedBatchDirs
 
 
-def _statically_empty(spark: SparkSession, schema: str) -> DataFrame:
-    """Empty DataFrame as a constant-folded LocalRelation (the
-    curator's round-12 convention): ``createDataFrame([], schema)``
-    is a LogicalRDD the optimizer cannot prune, so a
-    ``compacted ∪ live`` union over it would hide the compacted
-    side's partitioning from the probe join."""
-    from pyspark.sql.types import StructType
-
-    sel = ", ".join(
-        f"CAST(NULL AS {f.dataType.simpleString()}) AS {f.name}"
-        for f in StructType.fromDDL(schema).fields
-    )
-    return spark.sql(f"SELECT {sel} WHERE 1=0")
-
-
-class IncrementalSubstrDeduper:
+class IncrementalSubstrDeduper(IndexedBatchDirs):
     def __init__(
         self,
         spark: SparkSession,
@@ -83,81 +66,17 @@ class IncrementalSubstrDeduper:
         w: int = 8,
         id_type: str = "long",
     ) -> None:
-        self.spark = spark
-        self.base_dir = base_dir
-        self.anchors_dir = os.path.join(base_dir, "anchors")
-        self.compacted_dir = os.path.join(base_dir, "anchors_compacted")
-        self.out_dir = os.path.join(base_dir, "deduped")
+        super().__init__(
+            spark,
+            base_dir,
+            "anchors",
+            "gh long, g string",
+            f"{id_col} {id_type}, n_tokens bigint, clean_text string, "
+            "n_tokens_kept bigint, n_tokens_dropped bigint",
+        )
+        self.anchors_dir = self.index_dir
         self.text_col, self.id_col = text_col, id_col
         self.n, self.w = n, w
-        self.anchors_schema = "gh long, g string"
-        self.out_schema = (
-            f"{id_col} {id_type}, n_tokens bigint, clean_text string, "
-            "n_tokens_kept bigint, n_tokens_dropped bigint"
-        )
-
-    # ------------------------------------------------------------------
-    # state (the line_dedup conventions)
-
-    def _batch_dir(self, base: str, batch_id: int) -> str:
-        return os.path.join(base, f"ingest_batch={batch_id}")
-
-    def _committed(self, base: str, batch_id: int) -> bool:
-        return os.path.exists(
-            os.path.join(self._batch_dir(base, batch_id), "_SUCCESS")
-        )
-
-    def _read_partitioned(
-        self, path: str, schema: str, exclude_batch: int | None
-    ) -> DataFrame:
-        from pyspark.errors import AnalysisException
-
-        cols = [c.split()[0] for c in schema.split(",")]
-        try:
-            df = self.spark.read.schema(schema + ", ingest_batch int").parquet(path)
-        except AnalysisException:  # first batch: no directory yet
-            return _statically_empty(self.spark, schema)
-        if exclude_batch is not None:
-            df = df.filter(F.col("ingest_batch") != exclude_batch)
-        return df.select(*cols)
-
-    def _index(self, exclude_batch: int | None = None) -> DataFrame:
-        """All claimed anchors: compacted tier (if any) ∪ live batch
-        dirs above the compaction watermark."""
-        from pyspark.errors import AnalysisException
-
-        man = self._compact_manifest()
-        upto = man["covered_upto"] if man else -1
-        try:
-            df = self.spark.read.schema(
-                self.anchors_schema + ", ingest_batch int"
-            ).parquet(self.anchors_dir)
-            if upto >= 0:
-                df = df.filter(F.col("ingest_batch") > upto)
-            if exclude_batch is not None:
-                df = df.filter(F.col("ingest_batch") != exclude_batch)
-            live = df.select("gh", "g")
-        except AnalysisException:
-            live = _statically_empty(self.spark, self.anchors_schema)
-        if man is None:
-            return live
-        comp = self.spark.read.schema(self.anchors_schema).parquet(
-            os.path.join(self.compacted_dir, f"data_v{man['version']}")
-        )
-        return comp.unionByName(live)
-
-    @property
-    def _compact_marker(self) -> str:
-        return os.path.join(self.compacted_dir, "COMPACTED.json")
-
-    def _compact_manifest(self) -> dict | None:
-        import json
-
-        try:
-            with open(self._compact_marker) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
 
     # ------------------------------------------------------------------
     # the per-batch fold
@@ -173,9 +92,7 @@ class IncrementalSubstrDeduper:
         work is a scan of two columns), one batch-local min-aggregate
         for within-batch firsts, and one doc-keyed reassembly —
         O(batch) everywhere, never O(corpus)."""
-        if self._committed(self.out_dir, batch_id) and self._committed(
-            self.anchors_dir, batch_id
-        ):
+        if self._batch_done(batch_id):
             return
         occ = _winnowed_anchor_occurrences(
             batch, self.text_col, self.id_col, self.n, self.w
@@ -222,103 +139,3 @@ class IncrementalSubstrDeduper:
             self._batch_dir(self.anchors_dir, batch_id)
         )
         occ.unpersist()
-
-    # ------------------------------------------------------------------
-    # reads + maintenance
-
-    def deduped(self) -> DataFrame:
-        """All COMMITTED rewritten documents — one row per input doc
-        across the stream. Partitions are filtered through the
-        ``_SUCCESS`` marker (the curator's ``_read_committed``
-        convention), so a crash window that left a partial
-        ``ingest_batch=`` dir never leaks uncommitted rows to
-        readers; the replay of that batch overwrites it."""
-        from pyspark.errors import AnalysisException
-
-        cols = [c.split()[0] for c in self.out_schema.split(",")]
-        committed = []
-        try:
-            for name in os.listdir(self.out_dir):
-                if not name.startswith("ingest_batch="):
-                    continue
-                bid = int(name.split("=", 1)[1])
-                if self._committed(self.out_dir, bid):
-                    committed.append(bid)
-        except FileNotFoundError:
-            pass
-        if not committed:
-            return self.spark.createDataFrame([], self.out_schema)
-        try:
-            df = self.spark.read.schema(
-                self.out_schema + ", ingest_batch int"
-            ).parquet(self.out_dir)
-        except AnalysisException:
-            return self.spark.createDataFrame([], self.out_schema)
-        return df.filter(F.col("ingest_batch").isin(committed)).select(*cols)
-
-    def compact(self) -> bool:
-        """Fold the CONTIGUOUS prefix of ``_SUCCESS``-committed anchor
-        batch dirs above the watermark, plus the current compacted
-        tier, into a new versioned data dir; flip the JSON marker
-        atomically; only then delete the folded sources. Same two
-        crash-window constraints as ``line_dedup.compact`` (only
-        committed dirs fold; the watermark stops at the first gap)."""
-        import json
-        import shutil
-
-        man = self._compact_manifest()
-        upto = man["covered_upto"] if man else -1
-        present: dict[int, bool] = {}
-        try:
-            for name in os.listdir(self.anchors_dir):
-                if not name.startswith("ingest_batch="):
-                    continue
-                bid = int(name.split("=", 1)[1])
-                if bid > upto:
-                    present[bid] = self._committed(self.anchors_dir, bid)
-        except FileNotFoundError:
-            return False
-        fold: list[int] = []
-        nxt = upto + 1
-        while present.get(nxt, False):
-            fold.append(nxt)
-            nxt += 1
-        if not fold:
-            return False
-        new_version = (man["version"] + 1) if man else 0
-        live = self.spark.read.schema(self.anchors_schema).parquet(
-            *[self._batch_dir(self.anchors_dir, b) for b in fold]
-        ).select("gh", "g")
-        if man is not None:
-            prev = self.spark.read.schema(self.anchors_schema).parquet(
-                os.path.join(self.compacted_dir, f"data_v{man['version']}")
-            )
-            live = prev.unionByName(live)
-        live.distinct().write.mode("overwrite").parquet(
-            os.path.join(self.compacted_dir, f"data_v{new_version}")
-        )
-        tmp = self._compact_marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"covered_upto": max(fold), "version": new_version}, f)
-        os.replace(tmp, self._compact_marker)
-        for bid in fold:
-            shutil.rmtree(
-                self._batch_dir(self.anchors_dir, bid), ignore_errors=True
-            )
-        if man is not None:
-            shutil.rmtree(
-                os.path.join(self.compacted_dir, f"data_v{man['version']}"),
-                ignore_errors=True,
-            )
-        return True
-
-    def attach(self, stream: DataFrame, checkpoint_dir: str, **trigger):
-        """Run the deduper as a Structured Streaming sink (default
-        drain-and-stop ``availableNow`` — the curator convention; an
-        empty ``.trigger()`` call raises in pyspark)."""
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(**(trigger or {"availableNow": True}))
-            .start()
-        )

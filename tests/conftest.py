@@ -39,10 +39,12 @@ def _scrub_stale_test_tables() -> None:
 # nonvacuity probes — each a multi-batch curator run) is enabled with
 # PWP_SLOW_TESTS=1; it re-verifies lifecycle machinery that the fast
 # tier's per-screen tests and the driver's own 50-query CORRECTNESS
-# sample cover at operator grain. Run it after touching
-# streaming/curator.py or compaction.
+# sample cover at operator grain. Any change under streaming/
+# (batch_dirs.py included) must pass it:
+#   PWP_SLOW_TESTS=1 python -m pytest tests/test_streaming_curator.py \
+#       tests/test_integration_crawl_loop.py
 _SLOW_NODE_PATTERNS = (
-    "test_streaming_curator.py::",          # curator lifecycles (~12 min)
+    "test_streaming_curator.py::",          # curator lifecycles (~30 min, 4 cores)
     "test_integration_crawl_loop.py::",     # end-to-end crawl loop
     "test_all_queries_run_with_scalar_schemas",  # all-231-query smoke (~7 min)
     "test_oracle_parity[pipeline_curation_compacted]",  # compaction loop

@@ -230,3 +230,39 @@ def test_line_deduper_via_real_stream(spark, tmp_path):
     got = {r.doc_id: r.n_removed for r in d.deduped().collect()}
     assert set(got) == {1, 2}
     assert sorted(got.values()) == [0, 1]  # one copy kept, one removed
+
+
+def test_replay_of_a_compacted_batch_changes_nothing(spark, tmp_path):
+    """A batch that compact() already folded counts as committed: its
+    replay is skipped. Screening it again would anti-join its lines
+    against the compacted tier, which holds them and which the
+    replay's exclude_batch filter cannot reach, and rewrite its output
+    with every kept line removed."""
+    b0 = _docs(spark, [(0, "c0 c1 c2 a0 a1 a2")])
+    b1 = _docs(spark, [(1, "c0 c1 c2 b0 b1 b2"), (2, "u0 u1 u2")])
+    d = _run(spark, tmp_path, [b0, b1], segment_tokens=3)
+    before = sorted(map(tuple, d.deduped().collect()))
+    assert d.compact() is True
+    assert d._covered_upto() == 1
+    d.process_batch(b1, 1)  # replay after the fold
+    after = {r.doc_id: r.text_dedup for r in d.deduped().collect()}
+    assert after[1] == "b0 b1 b2" and after[2] == "u0 u1 u2"
+    assert sorted(map(tuple, d.deduped().collect())) == before
+
+
+def test_deduped_excludes_uncommitted_partitions(spark, tmp_path):
+    """An ``ingest_batch=`` output dir without its ``_SUCCESS`` marker
+    (the state a mid-write crash leaves) is invisible to ``deduped()``
+    until the batch replays."""
+    b0 = _docs(spark, [(0, "c0 c1 c2 a0 a1")])
+    b1 = _docs(spark, [(1, "u0 u1 u2")])
+    d = _run(spark, tmp_path, [b0], segment_tokens=3)
+    before = sorted(map(tuple, d.deduped().collect()))
+    # simulate a crashed batch-1 write: rows on disk, no marker
+    spark.createDataFrame(
+        [(1, "u0 u1 u2", 1, 1, 0)], d.out_schema
+    ).write.mode("overwrite").parquet(d._batch_dir(d.out_dir, 1))
+    os.remove(os.path.join(d._batch_dir(d.out_dir, 1), "_SUCCESS"))
+    assert sorted(map(tuple, d.deduped().collect())) == before
+    d.process_batch(b1, 1)  # the replay commits it and the row appears
+    assert {r.doc_id for r in d.deduped().collect()} == {0, 1}

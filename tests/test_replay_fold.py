@@ -611,3 +611,37 @@ def test_fold_snapshot_view_incremental_maintenance(spark, tmp_path):
             head_states[(r.room, name)] = (p.pos[0], p.pos[1], p.alive)
     assert head_states == tip
     log.unpersist()
+
+
+def test_fold_snapshot_view_via_real_stream(spark, tmp_path):
+    """attach() maintains the view as a Structured Streaming sink: one
+    update per micro-batch over a streamed log, and the maintained
+    snapshot table equals the one-shot snapshot_states build."""
+    from pyspark.sql import functions as F
+
+    from play_with_pulsar_spark.operators.replay import (
+        FoldSnapshotView,
+        decode_state,
+        snapshot_states,
+    )
+    from play_with_pulsar_spark.sources.fixtures import game_event_log
+
+    log = game_event_log(spark, n_rooms=2, events_per_room=300, seed=7).cache()
+    src = str(tmp_path / "src")
+    for k, (lo, hi) in enumerate([(0, 149), (150, 299)]):
+        log.filter(F.col("offset").between(lo, hi)).write.parquet(f"{src}/f{k}")
+    stream = (
+        spark.readStream.schema(log.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/f*")
+    )
+    view = FoldSnapshotView(spark, str(tmp_path / "sv"), every_k=100)
+    view.attach(stream, str(tmp_path / "ckpt")).awaitTermination(120)
+    got = {(r.room, r.snap_offset): decode_state(r.blob)
+           for r in view.snapshots().collect()}
+    want = {(r.room, r.snap_offset): decode_state(r.blob)
+            for r in snapshot_states(log, every_k=100).collect()
+            if r.snap_offset >= 0}
+    assert len(got) == 6  # 3 per room
+    assert got == want
+    log.unpersist()

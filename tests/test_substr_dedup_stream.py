@@ -110,13 +110,13 @@ def test_compact_preserves_screen_and_output(spark):
         d.process_batch(docs.filter(F.col("doc_id") <= 2), 0)
         d.process_batch(docs.filter(F.col("doc_id").isin(3, 4)), 1)
         assert d.compact()
-        man = d._compact_manifest()
+        man = d._manifest()
         assert man == {"covered_upto": 1, "version": 0}
         assert not os.path.exists(d._batch_dir(d.anchors_dir, 0))
         d.process_batch(docs.filter(F.col("doc_id") == 5), 2)
         assert _rows(d.deduped()) == want
         assert d.compact()  # folds compacted tier + batch 2
-        assert d._compact_manifest()["covered_upto"] == 2
+        assert d._manifest()["covered_upto"] == 2
         assert _rows(d.deduped()) == want
         assert not d.compact()  # nothing left to fold
     finally:
@@ -390,3 +390,21 @@ def test_substr_deduper_via_real_stream(spark, tmp_path):
     dropped = {i for i in (1, 2) if got[i][3] > 0}
     assert len(dropped) == 1          # exactly one copy lost the run
     assert got[3][3] == 0             # unique doc untouched
+
+
+def test_replay_of_a_compacted_batch_changes_nothing(spark, tmp_path):
+    """A batch that compact() already folded counts as committed: its
+    replay is skipped. Screening it again would probe its anchors
+    against the compacted tier, which holds them and which the
+    replay's exclude_batch filter cannot reach, and excise the batch's
+    own first copies."""
+    docs = _corpus(spark)
+    d = IncrementalSubstrDeduper(spark, str(tmp_path / "state"), n=5, w=8)
+    d.process_batch(docs.filter(F.col("doc_id") <= 2), 0)
+    d.process_batch(docs.filter(F.col("doc_id").isin(3, 4)), 1)
+    before = _rows(d.deduped())
+    assert d.compact()  # folds batches 0 and 1
+    d.process_batch(docs.filter(F.col("doc_id").isin(3, 4)), 1)  # replay
+    after = _rows(d.deduped())
+    assert after[4][3] == 0  # the unique doc keeps every token
+    assert after == before
