@@ -192,12 +192,9 @@ class BatchDirs:
         a replay after a partial commit must screen against exactly
         the pre-batch state, not against rows this same batch already
         wrote."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            df = self.spark.read.schema(f"{schema}, {self.partition} int").parquet(path)
-        except AnalysisException:  # PATH_NOT_FOUND: first batch yet
+        if not self._batch_dirs(path):  # no batch written yet
             return self._statically_empty(schema)
+        df = self.spark.read.schema(f"{schema}, {self.partition} int").parquet(path)
         upto = self._covered_upto()
         if upto >= 0:
             # partition column ⇒ covered dirs are PRUNED, not scanned

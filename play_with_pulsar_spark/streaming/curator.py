@@ -21,8 +21,16 @@ batch):
   greedy rule every sequential deduper (e.g. a Bloom/LSH gate in a
   crawler) exhibits.
 
-State layout — two (three with the minhash screen) parquet tables
-(``accepted/``, ``grams/``, ``banded/``), each one
+Every screen runs one per-batch pipeline, ``process_batch``: commit
+check, pre-screens, the screen's decision, then the tier writes in a
+fixed order (its docstring lists the steps). What differs by screen
+is the decision and the tier table set in the constructor: the
+commit-gated index tiers (``grams/`` for jaccard, ``grams/`` +
+``banded/`` for minhash, ``shsig/`` for simhash, ``anchors/`` for
+substr, ``vec/`` + ``sig/`` for embedding) and the best-effort
+monitor tiers.
+
+State layout — ``accepted/`` and the screen's tiers, each one
 ``ingest_batch=<id>`` partition directory per micro-batch, PLUS — for
 the jaccard screen — a best-effort ``df/`` tier (round 7): each
 batch's kept-gram (g, df) aggregate, whose SUM replaces the
@@ -95,6 +103,7 @@ from ..operators.dedup import (
     release_intermediates,
 )
 from .batch_dirs import BatchDirs, write_json_atomic
+from .substr_dedup import claim_anchors
 
 # Frozen geometry of the vocabulary-HLL monitor tier (text screens):
 # a module constant, NOT a constructor arg, so two attachments to the
@@ -241,8 +250,9 @@ class StreamingCorpusCurator(BatchDirs):
         re-scored under the NEW weights — version the sidecar per
         batch if bit-identical replay across model updates matters
         (same class of caveat as a fresh checkpoint resetting batch
-        ids). Applies to the text screens (jaccard/minhash), whose
-        batches carry ``text_col``; the embedding screen ignores it.
+        ids). Applies to the text screens, whose batches carry
+        ``text_col``; the embedding screen refuses it, like every
+        pre-screen, ``track_funnel`` and the DoReMi tier.
 
         ``contamination_bloom_path`` (round 7): path to a
         ``sketch.write_bloom`` artifact built from the benchmark/eval
@@ -379,6 +389,24 @@ class StreamingCorpusCurator(BatchDirs):
             raise ValueError(f"unknown screen {screen!r}")
         if screen == "embedding" and emb_dim is None:
             raise ValueError("screen='embedding' requires emb_dim")
+        if screen == "embedding":
+            # the pre-screens, the funnel and the DoReMi tier read
+            # text_col (or url_col), which an embedding batch need
+            # not carry; refuse them rather than skip them silently
+            for name, on in (
+                ("url_col", url_col is not None),
+                ("repetition_rules", repetition_rules),
+                ("length_band", length_band is not None),
+                ("quality_model_path", quality_model_path is not None),
+                ("perplexity_lm_path", perplexity_lm_path is not None),
+                ("contamination_bloom_path", contamination_bloom_path is not None),
+                ("track_funnel", track_funnel),
+                ("doremi_lm_path", doremi_lm_path is not None),
+            ):
+                if on:
+                    raise ValueError(
+                        f"{name} applies to the text screens, not screen='embedding'"
+                    )
         if retention is not None and retention not in ("first", "best"):
             raise ValueError(f"unknown retention {retention!r}")
         if vec_format is not None:
@@ -406,6 +434,19 @@ class StreamingCorpusCurator(BatchDirs):
         self.anchors_dir = os.path.join(base_dir, "anchors")
         self.compacted_dir = os.path.join(base_dir, "compacted")
         self.screen = screen
+        # the per-screen tier table. Index tiers are commit-gated (a
+        # batch folds only once every one holds it; the first one's
+        # batch-dir count drives maybe_compact). Monitor tiers are
+        # best-effort: a reader that finds one incomplete derives it
+        # from the gram or accepted tier, and compaction heals it.
+        # process_batch rewrites a missing tier of either kind.
+        self.index_tiers, self.monitor_tiers = {
+            "jaccard": ([self.grams_dir], [self.df_dir, self.hll_dir, self.hdr_dir]),
+            "minhash": ([self.grams_dir, self.banded_dir], [self.hll_dir, self.hdr_dir]),
+            "simhash": ([self.shsig_dir], [self.hdr_dir]),
+            "substr": ([self.anchors_dir], [self.hdr_dir]),
+            "embedding": ([self.vec_dir, self.sig_dir], []),
+        }[screen]
         # resolved (and possibly frozen) in the fineweb_recipe block
         # below; initialized here because _policy_record runs from the
         # embedding-geometry freeze before that block
@@ -457,8 +498,6 @@ class StreamingCorpusCurator(BatchDirs):
             doremi_domain_col,
             "source" if doremi_lm_path else None,
         )
-        if doremi_lm_path is not None and screen == "embedding":
-            raise ValueError("the DoReMi tier applies to the text screens")
         # legacy guard: a pre-round-9 dir carries no retention record,
         # but committed tombstone batches are themselves proof of
         # retention='best' history — attaching it as 'first' would
@@ -748,8 +787,6 @@ class StreamingCorpusCurator(BatchDirs):
             qlo, qhi = length_band
             if not (0.0 <= qlo < qhi <= 1.0):
                 raise ValueError(f"length_band must be 0 <= q_lo < q_hi <= 1, got {length_band}")
-            if screen == "embedding":
-                raise ValueError("length_band applies to the text screens")
         self.length_band = length_band
         self.length_band_min_docs = length_band_min_docs
         self.catalog_prefix = catalog_prefix or (
@@ -1349,11 +1386,10 @@ class StreamingCorpusCurator(BatchDirs):
         plus the batch's final accepted count (post-dedup). Same
         overwrite-into-batch-dir replay discipline as every tier."""
         rows = counts + [("accepted", keep.count())]
-        self.spark.createDataFrame(
+        ledger = self.spark.createDataFrame(
             [(batch_id, s, int(n)) for s, n in rows], self.funnel_schema
-        ).coalesce(1).write.mode("overwrite").parquet(
-            self._batch_dir(self.funnel_dir, batch_id)
         )
+        self._write_batch(ledger.coalesce(1), self.funnel_dir, batch_id)
 
     def funnel(self) -> DataFrame:
         """The accumulated per-batch screen funnel
@@ -1391,7 +1427,7 @@ class StreamingCorpusCurator(BatchDirs):
         if self.fineweb_mode == "full":
             from ..operators.textops import fineweb_full_stack
 
-            fineweb_full_stack(
+            verdicts = fineweb_full_stack(
                 batch,
                 page_col=self.text_col,
                 url_col=self.url_col or "url",
@@ -1399,17 +1435,14 @@ class StreamingCorpusCurator(BatchDirs):
                 blocked_domains=self.url_blocked_domains,
                 blocked_tlds=self.url_blocked_tlds,
                 max_path_depth=self.url_max_path_depth,
-            ).drop("redacted").write.mode("overwrite").parquet(
-                self._batch_dir(self.fineweb_dir, batch_id)
-            )
-            return
-        from ..operators.textops import fineweb_signal_stack
+            ).drop("redacted")
+        else:
+            from ..operators.textops import fineweb_signal_stack
 
-        fineweb_signal_stack(
-            batch, page_col=self.text_col, id_col=self.id_col
-        ).write.mode("overwrite").parquet(
-            self._batch_dir(self.fineweb_dir, batch_id)
-        )
+            verdicts = fineweb_signal_stack(
+                batch, page_col=self.text_col, id_col=self.id_col
+            )
+        self._write_batch(verdicts, self.fineweb_dir, batch_id)
 
     def _compacted_fineweb(self, man: dict | None = None) -> DataFrame | None:
         """Compacted fineweb verdict rows under ``man`` (the caller's
@@ -1686,22 +1719,12 @@ class StreamingCorpusCurator(BatchDirs):
         exactly. Replay-safe by the overwrite-into-batch-dir
         discipline; compaction folds the committed prefix."""
         rows = self._doremi_batch_rows(self._doremi_excess(keep))
-        if evicted is not None:
-            acc_prev = self._accepted_excluding(batch_id)
-            if acc_prev is not None:
-                ev_docs = acc_prev.join(
-                    evicted.withColumnRenamed("doc_id", self.id_col),
-                    self.id_col,
-                    "semi",
-                )
-                rows = rows.unionByName(
-                    self._doremi_batch_rows(
-                        self._doremi_excess(ev_docs), negate=True
-                    )
-                )
-        rows.write.mode("overwrite").parquet(
-            self._batch_dir(self.doremi_dir, batch_id)
-        )
+        ev_docs = self._evicted_docs(evicted, batch_id)
+        if ev_docs is not None:
+            rows = rows.unionByName(
+                self._doremi_batch_rows(self._doremi_excess(ev_docs), negate=True)
+            )
+        self._write_batch(rows, self.doremi_dir, batch_id)
 
     def _compacted_doremi(self) -> DataFrame | None:
         man = self._manifest()
@@ -1931,92 +1954,229 @@ class StreamingCorpusCurator(BatchDirs):
         return rejected, evicted
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        """foreachBatch hook: screen, reject, write survivors into this
-        batch's partition (idempotent on ``batch_id`` — see module
-        docstring), then fold state if the compaction threshold is
-        crossed."""
-        minhash = self.screen == "minhash"
-        if self.screen == "embedding":
-            self._process_batch_embedding(batch, batch_id)
+        """foreachBatch hook: the one per-batch pipeline of every
+        screen, in this order:
+
+        1. skip the batch if every tier it writes (``_batch_tiers``)
+           has committed it;
+        2. embedding screen only: quantize the batch (``vec_format``);
+        3. the text pre-screens (``_apply_pre_screens``), then
+           ``localCheckpoint`` (after a model screen) or ``persist``
+           of the survivors;
+        4. the screen's decision against the PRE-batch state: the
+           near-duplicate pairs (``_pairs``) through the retention rule
+           and an anti-join, or, for the substr screen, span excision
+           (``_excise_spans``);
+        5. the accepted, funnel, FineWeb and tombstone writes;
+        6. the screen's own index tiers (``_write_index_tiers``);
+        7. the hdr length tier, then the DoReMi tier;
+        8. release the batch's cached frames, then ``maybe_compact``.
+
+        Each write overwrites this batch's ``ingest_batch=<id>`` dir
+        and runs only for a tier that has not committed the batch, so
+        a replay after a partial commit writes exactly the missing
+        tiers, from the same decision (see the module docstring)."""
+        pending = [d for d in self._batch_tiers() if not self._committed(d, batch_id)]
+        if not pending:  # committed replay
             return
-        if self.screen == "simhash":
-            self._process_batch_simhash(batch, batch_id)
-            return
-        if self.screen == "substr":
-            self._process_batch_substr(batch, batch_id)
-            return
-        acc_done = self._committed(self.accepted_dir, batch_id)
-        grams_done = self._committed(self.grams_dir, batch_id)
-        banded_done = not minhash or self._committed(self.banded_dir, batch_id)
-        # df is best-effort derived state (jaccard screen only): its
-        # absence never blocks a replay-skip — _index_df detects the
-        # gap and falls back, and the next compaction heals it
-        df_done = minhash or self._committed(self.df_dir, batch_id)
-        # hll is the (best-effort, both text screens) vocabulary
-        # monitor tier — same convention: vocab_estimate falls back to
-        # deriving from the gram table when a partition is missing,
-        # and compaction heals pre-feature state
-        hll_done = self._committed(self.hll_dir, batch_id)
-        # hdr is the (best-effort, both text screens) doc-length
-        # distribution monitor tier — length_quantiles falls back to
-        # deriving from the accepted corpus when a partition is
-        # missing, and compaction heals pre-feature state
-        hdr_done = self._committed(self.hdr_dir, batch_id)
-        # doremi is the (best-effort) per-domain excess tier (round
-        # 10): doremi_lam falls back to deriving from the accepted
-        # corpus when a partition is missing; compaction heals
-        doremi_done = self.doremi_lm_path is None or self._committed(
-            self.doremi_dir, batch_id
-        )
-        # tombstones are DECISION state (retention='best'): an
-        # eviction that never commits would leave the replaced doc
-        # visible forever, so the tier is part of the commit contract
-        tomb_done = self.retention != "best" or self._committed(
-            self.tomb_dir, batch_id
-        )
-        funnel_done = not self.track_funnel or self._committed(
-            self.funnel_dir, batch_id
-        )
-        # fineweb verdicts are COMMIT-GATED like tombstones: the rows
-        # are underivable after the batch (ingress docs aren't stored),
-        # so a missing partition must force a replay, never a heal
-        fineweb_done = not self.fineweb_recipe or self._committed(
-            self.fineweb_dir, batch_id
-        )
-        if (
-            acc_done and grams_done and banded_done and df_done and hll_done
-            and hdr_done and doremi_done and tomb_done and funnel_done
-            and fineweb_done
-        ):  # committed replay
-            return
-        # pre-screens BEFORE the persist (quality first — a cheap
-        # projection — then LM perplexity, then the bloom
-        # decontamination): the dedup screen, the survivor write, and
-        # the index appends all see only the docs that cleared every
-        # filter
+        batch = self._quantized(batch)
         screened, funnel_counts = self._apply_pre_screens(batch, batch_id)
-        screen_checkpointed = (
+        checkpointed = (
             self.contamination_bloom_path is not None
             or self.perplexity_lm_path is not None
             or self.quality_model_path is not None
             or self.repetition_rules
         )
-        if screen_checkpointed:
+        if checkpointed:
             # truncate the screen's lineage: every later reference to
-            # `docs` (pairs uses it twice, new_ids/keep again, and —
-            # round 7 — the hdr tier write one more time) would INLINE
-            # the screen subtree (bloom k-join + per-doc count, or the
-            # z-score + logreg feature chain) into the plan text —
-            # multiplicative growth that OOMs the DRIVER's AQE explain
-            # on a plain 1g session (measured: the quality screen
-            # crossed that edge when the hdr write added a consumer).
-            # The checkpoint materialization is batch-sized by
-            # construction.
+            # `docs` (pairs uses it twice, new_ids/keep again, and the
+            # hdr tier write one more time) would INLINE the screen
+            # subtree (bloom k-join + per-doc count, or the z-score +
+            # logreg feature chain) into the plan text — multiplicative
+            # growth that OOMs the DRIVER's AQE explain on a plain 1g
+            # session (measured: the quality screen crossed that edge
+            # when the hdr write added a consumer). The checkpoint
+            # materialization is batch-sized by construction.
             docs = screened.localCheckpoint(eager=True)
         else:
             docs = screened.persist()
-        if minhash:
-            pairs = incremental_minhash_pairs(
+        held: list[DataFrame] = []  # batch-scoped caches, freed in step 8
+        pairs = evicted = None
+        if self.screen == "substr":
+            keep, index_rows = self._excise_spans(docs, batch_id, held)
+        else:
+            pairs, index_rows = self._pairs(docs, batch_id, held)
+            if self.retention == "best":
+                rejected, evicted = self._retention_decisions(pairs, docs, batch_id)
+                evicted = evicted.persist()  # tombstones + df/hdr/DoReMi deltas
+                held.append(evicted)
+            else:
+                new_ids = docs.select(F.col(self.id_col).alias("nid"))
+                rejected = self._rejected_ids(pairs, new_ids)
+            keep = docs.join(
+                rejected.withColumnRenamed("doc_id", self.id_col), self.id_col, "anti"
+            )
+        keep = keep.persist()
+        held.append(keep)
+        if self.accepted_dir in pending:
+            accepted = keep
+            if self.screen == "embedding":  # step 2's scratch columns
+                accepted = keep.drop("_qc", "_qs", "_pc", "_vhat")
+            self._write_batch(accepted, self.accepted_dir, batch_id)
+        if self.funnel_dir in pending:
+            self._write_funnel_tier(funnel_counts, keep, batch_id)
+        if self.fineweb_dir in pending:
+            self._write_fineweb_tier(batch, batch_id)
+        if self.tomb_dir in pending:
+            # accepted first, tombstones second: the crash window
+            # between the two shows a reader a transient DUPLICATE
+            # (replacement + incumbent), never a hole — the replay
+            # heals it. An empty eviction set still writes the dir:
+            # its _SUCCESS is the tier's replay-skip marker.
+            self._write_batch(evicted, self.tomb_dir, batch_id)
+        self._write_index_tiers(keep, evicted, index_rows, batch_id, pending)
+        if self.hdr_dir in pending:
+            # doc-length HDR buckets of the accepted docs (for substr,
+            # the rewritten ones), plus negative buckets for evicted
+            # docs so the length_band quantiles track the surviving
+            # corpus; additive, like the df tier
+            from ..operators.sketch import hdr_build
+
+            def lengths(df: DataFrame) -> DataFrame:
+                v = df.select(self._tc().alias("v"))
+                return hdr_build(v, "v", sub_bits=LEN_HDR_SUB_BITS)
+
+            hdr_rows = lengths(keep)
+            ev_docs = self._evicted_docs(evicted, batch_id)
+            if ev_docs is not None:
+                hdr_rows = hdr_rows.unionByName(
+                    lengths(ev_docs).withColumn("cnt", (-F.col("cnt")).cast("long"))
+                )
+            self._write_batch(hdr_rows, self.hdr_dir, batch_id)
+        if self.doremi_dir in pending:
+            self._write_doremi_tier(keep, evicted, batch_id)
+        for df in held:
+            df.unpersist()
+        # unpersist() is a NO-OP on localCheckpoint blocks, so the
+        # release must mirror the checkpoint gate above (an un-mirrored
+        # gate once leaked one checkpoint per batch)
+        if checkpointed:
+            from ..operators.dedup import _free_local_checkpoint
+
+            _free_local_checkpoint(docs)  # single-use after this point
+        else:
+            docs.unpersist()
+        if pairs is not None:
+            release_intermediates(pairs)  # the screen's cached intermediates
+        self.maybe_compact()
+
+    def _write_batch(self, df: DataFrame, base: str, batch_id: int) -> None:
+        df.write.mode("overwrite").parquet(self._batch_dir(base, batch_id))
+
+    def _evicted_docs(
+        self, evicted: DataFrame | None, batch_id: int
+    ) -> DataFrame | None:
+        """The accepted rows of this batch's evicted incumbents (the
+        source of the hdr and DoReMi negative deltas), or None."""
+        if evicted is None:
+            return None
+        acc_prev = self._accepted_excluding(batch_id)
+        if acc_prev is None:
+            return None
+        return acc_prev.join(
+            evicted.withColumnRenamed("doc_id", self.id_col), self.id_col, "semi"
+        )
+
+    def _quantized(self, batch: DataFrame) -> DataFrame:
+        """Step 2 of ``process_batch`` (embedding screen): quantize
+        FIRST and derive everything — the screen's batch side, the
+        signatures and the stored state — from the reconstructed
+        ``_vhat``, so quantization is the single approximation
+        boundary and a state row stays byte-reproducible from itself
+        (replay, rollover re-signing). int8 adds ``_qc``/``_qs``; pq
+        fits or loads the frozen codebooks and adds ``_pc``. Identity
+        for float64 state and for the text screens."""
+        if self.vec_format == "int8":
+            from ..operators.similarity import with_int8_codes
+
+            return with_int8_codes(
+                batch, self.vec_col, self.emb_dim, qc="_qc", qs="_qs",
+                vhat="_vhat",
+            )
+        if self.vec_format == "pq":
+            from ..operators.pq import with_pq_codes
+
+            self._ensure_pq_books(batch)
+            return with_pq_codes(
+                batch, self._pq_books, self.vec_col, pc="_pc", vhat="_vhat",
+                strategy="numpy",
+            )
+        return batch
+
+    def _pairs(
+        self, docs: DataFrame, batch_id: int, held: list[DataFrame]
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """Step 4 of ``process_batch`` for the doc-grain screens: the
+        near-duplicate pairs (``id_a < id_b``) that touch the batch,
+        against the pre-batch index, plus the simhash screen's batch
+        signatures (its index rows; None for the other screens).
+
+        - jaccard: exact capped Jaccard against the gram tier, with
+          the stop-shingle cap read from the maintained df tier;
+        - minhash: band-bucket candidates against ``banded/``, exact
+          Jaccard verify on uncapped grams;
+        - simhash: Manku rotation keys DERIVED from the 8-byte/doc
+          signature tier, exact popcount verify, so the pair set
+          equals brute force at ``max_hamming``;
+        - embedding: hyperplane-bucket candidates against the
+          (vec, sig) tiers, exact cosine verify on ``_vhat`` (or the
+          raw vector under float64 state)."""
+        if self.screen == "embedding":
+            quantized = self.vec_format in ("int8", "pq")
+            return incremental_embedding_pairs(
+                self._index_vec(exclude_batch=batch_id),
+                self._index_sig(exclude_batch=batch_id),
+                docs,
+                dim=self.emb_dim,
+                threshold=self.threshold,
+                num_planes=self.num_planes,
+                num_tables=self.num_tables,
+                seed=self.seed,
+                id_col=self.id_col,
+                vec_col="_vhat" if quantized else self.vec_col,
+                max_bucket_size=self.max_bucket_size,
+            ), None
+        if self.screen == "simhash":
+            from ..operators.dedup import (
+                incremental_simhash_pairs_rotated,
+                simhash64,
+                simhash_rotation_keys,
+            )
+
+            index_keys = simhash_rotation_keys(
+                self._index_shsig(exclude_batch=batch_id),
+                blocks=self.sh_blocks,
+                radius=self.max_hamming,
+            )
+            # ONE signature kernel pass per batch, persisted: the probe
+            # reads it on both join sides, and the signature tier
+            # stores its keep-restricted subset
+            bsigs = simhash64(
+                docs, self.text_col, self.id_col, hash_fn=self.sh_hash_fn
+            ).persist()
+            held.append(bsigs)
+            return incremental_simhash_pairs_rotated(
+                index_keys,
+                None,
+                text_col=self.text_col,
+                id_col=self.id_col,
+                blocks=self.sh_blocks,
+                radius=self.max_hamming,
+                hash_fn=self.sh_hash_fn,
+                batch_sigs=bsigs,
+            ).select("id_a", "id_b"), bsigs
+        if self.screen == "minhash":
+            return incremental_minhash_pairs(
                 self._index(exclude_batch=batch_id),
                 None,
                 docs,
@@ -2028,377 +2188,44 @@ class StreamingCorpusCurator(BatchDirs):
                 threshold=self.threshold,
                 seed=self.seed,
                 index_banded=self._index_banded(exclude_batch=batch_id),
-            )
-        else:
-            pairs = incremental_jaccard_pairs(
-                self._index(exclude_batch=batch_id),
-                docs,
-                text_col=self.text_col,
-                id_col=self.id_col,
-                n=self.n,
-                threshold=self.threshold,
-                max_shingle_freq=self.max_shingle_freq,
-                index_df=(
-                    None
-                    if self.max_shingle_freq is None
-                    else self._index_df(exclude_batch=batch_id)
-                ),
-            )
-        new_ids = docs.select(F.col(self.id_col).alias("nid"))
-        evicted = None
-        if self.retention == "best":
-            rejected, evicted = self._retention_decisions(pairs, docs, batch_id)
-            evicted = evicted.persist()  # tombstone write + df/hdr deltas
-        else:
-            rejected = self._rejected_ids(pairs, new_ids)
-        keep = docs.join(
-            rejected.withColumnRenamed("doc_id", self.id_col), self.id_col, "anti"
-        ).persist()
-        # overwrite (not append) into the batch partition: a replay
-        # after a PARTIAL commit rewrites that directory cleanly
-        if not acc_done:
-            keep.write.mode("overwrite").parquet(
-                self._batch_dir(self.accepted_dir, batch_id)
-            )
-        if self.track_funnel and not funnel_done:
-            self._write_funnel_tier(funnel_counts, keep, batch_id)
-        if self.fineweb_recipe and not fineweb_done:
-            self._write_fineweb_tier(batch, batch_id)
-        if evicted is not None and not tomb_done:
-            # accepted first, tombstones second: the crash window
-            # between the two shows a reader a transient DUPLICATE
-            # (replacement + incumbent), never a hole — the replay
-            # heals it. An empty eviction set still writes the dir:
-            # its _SUCCESS is the tier's replay-skip marker.
-            evicted.write.mode("overwrite").parquet(
-                self._batch_dir(self.tomb_dir, batch_id)
-            )
-        # one shingling of the kept docs feeds ALL index writes;
-        # persist only when ≥2 consumers will actually run (a
-        # partial-commit replay may have one write left)
-        keep_grams = build_ngram_index(keep, self.text_col, self.id_col, self.n)
-        pending = (
-            (not grams_done)
-            + (minhash and not banded_done)
-            + (not minhash and not df_done)
-            + (not hll_done)
-        )
-        multi_consumers = pending >= 2
-        if multi_consumers:
-            keep_grams = keep_grams.persist()
-        if not grams_done:
-            keep_grams.write.mode("overwrite").parquet(
-                self._batch_dir(self.grams_dir, batch_id)
-            )
-        if minhash and not banded_done:
-            keep_sigs = minhash_signatures(
-                None, num_hashes=self.num_hashes, seed=self.seed, grams=keep_grams
-            )
-            _banded(
-                keep_sigs, self.num_bands, self.num_hashes // self.num_bands
-            ).write.mode("overwrite").parquet(self._batch_dir(self.banded_dir, batch_id))
-        if not minhash and not df_done:
-            # maintained per-batch df rows (round 7): the jaccard
-            # screen's stop-shingle cap reads the SUM of these instead
-            # of recounting the corpus gram table every batch. Under
-            # retention='best' the batch ALSO writes NEGATIVE rows for
-            # the evicted docs' grams (round 8) — the tier is additive,
-            # so the decrement keeps its sum equal to the df of the
-            # SURVIVING corpus exactly, replay-safe by the same
-            # overwrite-into-batch-dir discipline.
-            df_rows = build_df_index(keep_grams)
-            if evicted is not None:
-                ev_grams = self._index(exclude_batch=batch_id).join(
-                    evicted, "doc_id", "semi"
-                )
-                df_rows = df_rows.unionByName(
-                    build_df_index(ev_grams).withColumn(
-                        "df", (-F.col("df")).cast("long")
-                    )
-                )
-            df_rows.write.mode("overwrite").parquet(
-                self._batch_dir(self.df_dir, batch_id)
-            )
-        if not hll_done:
-            # per-batch vocabulary registers (round 7): <= VOCAB_HLL_M
-            # rows from a map-side-combined max-agg over the same
-            # kept-gram scan; the idempotent register-max merge makes
-            # this tier trivially replay-safe
-            from ..operators.sketch import hll_build
-
-            hll_build(keep_grams.select("g"), key="g", m=VOCAB_HLL_M).write.mode(
-                "overwrite"
-            ).parquet(self._batch_dir(self.hll_dir, batch_id))
-        if multi_consumers:
-            keep_grams.unpersist()
-        if not hdr_done:
-            # per-batch doc-length HDR buckets (round 7): ≤ sketch-
-            # width rows from a map-side-combined agg over the kept
-            # docs; replay-safe by the same overwrite-into-batch-dir
-            # discipline as the (also additive) df tier. retention=
-            # 'best' adds negative buckets for the evicted docs'
-            # lengths (round 8) so the length_band screen's quantiles
-            # track the surviving corpus.
-            from ..operators.sketch import hdr_build
-
-            hdr_rows = hdr_build(
-                keep.select(self._tc().alias("v")),
-                "v",
-                sub_bits=LEN_HDR_SUB_BITS,
-            )
-            if evicted is not None:
-                acc_prev = self._accepted_excluding(batch_id)
-                if acc_prev is not None:
-                    ev_docs = acc_prev.join(
-                        evicted.withColumnRenamed("doc_id", self.id_col),
-                        self.id_col,
-                        "semi",
-                    )
-                    hdr_rows = hdr_rows.unionByName(
-                        hdr_build(
-                            ev_docs.select(
-                                self._tc().alias("v")
-                            ),
-                            "v",
-                            sub_bits=LEN_HDR_SUB_BITS,
-                        ).withColumn("cnt", (-F.col("cnt")).cast("long"))
-                    )
-            hdr_rows.write.mode("overwrite").parquet(
-                self._batch_dir(self.hdr_dir, batch_id)
-            )
-        if self.doremi_lm_path is not None and not doremi_done:
-            self._write_doremi_tier(keep, evicted, batch_id)
-        keep.unpersist()
-        if evicted is not None:
-            evicted.unpersist()
-        # mirror of the creation gate above: unpersist() is a NO-OP on
-        # localCheckpoint blocks, so an un-mirrored gate (the pre-fix
-        # state: bloom only) silently leaked one checkpoint per batch
-        # under the perplexity/quality screens
-        if screen_checkpointed:
-            from ..operators.dedup import _free_local_checkpoint
-
-            _free_local_checkpoint(docs)  # single-use after this point
-        else:
-            docs.unpersist()
-        release_intermediates(pairs)  # the screen's cached intermediates
-        self.maybe_compact()
-
-    def _process_batch_simhash(self, batch: DataFrame, batch_id: int) -> None:
-        """The simhash screen's half of ``process_batch`` (round 8):
-        same commit protocol, text pre-screens (length band / quality
-        / perplexity / Bloom) and retention semantics as the shingle
-        screens, with the state tier a single (doc_id, simhash) table
-        — 8 bytes/doc. Candidates come from Manku rotation keys
-        DERIVED from the stored signatures at probe time (pigeonhole-
-        exact coverage at ``max_hamming``), verified by the exact
-        popcount, so the screen's pair set equals brute force — the
-        cheapest per-batch screen in the family: one signature kernel
-        over the batch + one key join against an 8-byte/doc column.
-        No gram table exists, so the HLL vocabulary tier does not
-        apply; the HDR length tier (length_band's feed) is maintained
-        exactly like the shingle screens'."""
-        from ..operators.dedup import (
-            incremental_simhash_pairs_rotated,
-            simhash64,
-            simhash_rotation_keys,
-        )
-
-        acc_done = self._committed(self.accepted_dir, batch_id)
-        sig_done = self._committed(self.shsig_dir, batch_id)
-        hdr_done = self._committed(self.hdr_dir, batch_id)
-        doremi_done = self.doremi_lm_path is None or self._committed(
-            self.doremi_dir, batch_id
-        )
-        tomb_done = self.retention != "best" or self._committed(
-            self.tomb_dir, batch_id
-        )
-        funnel_done = not self.track_funnel or self._committed(
-            self.funnel_dir, batch_id
-        )
-        fineweb_done = not self.fineweb_recipe or self._committed(
-            self.fineweb_dir, batch_id
-        )
-        if (acc_done and sig_done and hdr_done and doremi_done and tomb_done
-                and funnel_done and fineweb_done):
-            return
-        screened, funnel_counts = self._apply_pre_screens(batch, batch_id)
-        screen_checkpointed = (
-            self.contamination_bloom_path is not None
-            or self.perplexity_lm_path is not None
-            or self.quality_model_path is not None
-            or self.repetition_rules
-        )
-        if screen_checkpointed:
-            docs = screened.localCheckpoint(eager=True)
-        else:
-            docs = screened.persist()
-        index_keys = simhash_rotation_keys(
-            self._index_shsig(exclude_batch=batch_id),
-            blocks=self.sh_blocks,
-            radius=self.max_hamming,
-        )
-        # round 13 (guide §2.4): ONE signature kernel pass per batch,
-        # persisted — the probe references it twice (both join sides)
-        # and the signature tier below writes the keep-restricted
-        # subset of the same per-doc values (signatures are per-doc,
-        # so filter-after-kernel is value-identical)
-        bsigs = simhash64(
-            docs, self.text_col, self.id_col, hash_fn=self.sh_hash_fn
-        ).persist()
-        pairs = incremental_simhash_pairs_rotated(
-            index_keys,
-            None,
+            ), None
+        return incremental_jaccard_pairs(
+            self._index(exclude_batch=batch_id),
+            docs,
             text_col=self.text_col,
             id_col=self.id_col,
-            blocks=self.sh_blocks,
-            radius=self.max_hamming,
-            hash_fn=self.sh_hash_fn,
-            batch_sigs=bsigs,
-        ).select("id_a", "id_b")
-        new_ids = docs.select(F.col(self.id_col).alias("nid"))
-        evicted = None
-        if self.retention == "best":
-            rejected, evicted = self._retention_decisions(pairs, docs, batch_id)
-            evicted = evicted.persist()
-        else:
-            rejected = self._rejected_ids(pairs, new_ids)
-        keep = docs.join(
-            rejected.withColumnRenamed("doc_id", self.id_col), self.id_col, "anti"
-        ).persist()
-        if not acc_done:
-            keep.write.mode("overwrite").parquet(
-                self._batch_dir(self.accepted_dir, batch_id)
-            )
-        if self.track_funnel and not funnel_done:
-            self._write_funnel_tier(funnel_counts, keep, batch_id)
-        if self.fineweb_recipe and not fineweb_done:
-            self._write_fineweb_tier(batch, batch_id)
-        if evicted is not None and not tomb_done:
-            evicted.write.mode("overwrite").parquet(
-                self._batch_dir(self.tomb_dir, batch_id)
-            )
-        if not sig_done:
-            bsigs.join(
-                keep.select(F.col(self.id_col).alias("doc_id")), "doc_id", "semi"
-            ).write.mode("overwrite").parquet(
-                self._batch_dir(self.shsig_dir, batch_id)
-            )
-        if not hdr_done:
-            from ..operators.sketch import hdr_build
+            n=self.n,
+            threshold=self.threshold,
+            max_shingle_freq=self.max_shingle_freq,
+            index_df=(
+                None
+                if self.max_shingle_freq is None
+                else self._index_df(exclude_batch=batch_id)
+            ),
+        ), None
 
-            hdr_rows = hdr_build(
-                keep.select(self._tc().alias("v")),
-                "v",
-                sub_bits=LEN_HDR_SUB_BITS,
-            )
-            if evicted is not None:
-                acc_prev = self._accepted_excluding(batch_id)
-                if acc_prev is not None:
-                    ev_docs = acc_prev.join(
-                        evicted.withColumnRenamed("doc_id", self.id_col),
-                        self.id_col,
-                        "semi",
-                    )
-                    hdr_rows = hdr_rows.unionByName(
-                        hdr_build(
-                            ev_docs.select(
-                                self._tc().alias("v")
-                            ),
-                            "v",
-                            sub_bits=LEN_HDR_SUB_BITS,
-                        ).withColumn("cnt", (-F.col("cnt")).cast("long"))
-                    )
-            hdr_rows.write.mode("overwrite").parquet(
-                self._batch_dir(self.hdr_dir, batch_id)
-            )
-        if self.doremi_lm_path is not None and not doremi_done:
-            self._write_doremi_tier(keep, evicted, batch_id)
-        keep.unpersist()
-        bsigs.unpersist()
-        if evicted is not None:
-            evicted.unpersist()
-        if screen_checkpointed:
-            from ..operators.dedup import _free_local_checkpoint
-
-            _free_local_checkpoint(docs)
-        else:
-            docs.unpersist()
-        self.maybe_compact()
-
-    def _process_batch_substr(self, batch: DataFrame, batch_id: int) -> None:
-        """The substr screen's half of ``process_batch`` (round 12):
-        same commit protocol and text pre-screens as the other text
-        screens, with the DEDUP DECISION at winnowed-anchor grain
-        instead of doc grain — pre-screen survivors screen against
-        the claimed-anchor index, spans of grams already claimed by
-        an earlier batch (or by this batch's own first occurrence)
-        are EXCISED, the rewritten doc is accepted (byte-exact when
-        nothing was excised), and the batch's fresh first occurrences
-        join the index so the next batch screens against them.
-        Pre-screen rejects are never anchored, so a rejected doc can
-        never excise a later clean doc (the never-indexed contract).
-
-        Per-batch data movement (the ``IncrementalSubstrDeduper``
-        fold under the curator's tiers): the batch's ~2·len/(w+1)
-        selected anchors through one (gh, g) anti-join against the
-        index (index-side work is a two-column scan), one batch-local
-        min-aggregate for within-batch firsts, one doc-keyed
-        reassembly join — O(batch) everywhere, never O(corpus)."""
+    def _excise_spans(
+        self, docs: DataFrame, batch_id: int, held: list[DataFrame]
+    ) -> tuple[DataFrame, DataFrame]:
+        """Step 4 of ``process_batch`` for the substr screen: the
+        ``IncrementalSubstrDeduper`` fold at winnowed-anchor grain.
+        Spans of grams already claimed by an earlier batch, or by an
+        earlier occurrence in this batch, are EXCISED and the
+        rewritten doc is accepted (byte-exact when nothing was
+        excised). Returns the accepted docs and the batch's first
+        claims, the anchors it adds to the index. O(batch) data
+        movement: one (gh, g) anti-join against the two-column index,
+        one batch-local min-aggregate, one doc-keyed reassembly."""
         from ..operators.textops import _winnowed_anchor_occurrences, tokens
 
-        acc_done = self._committed(self.accepted_dir, batch_id)
-        anch_done = self._committed(self.anchors_dir, batch_id)
-        hdr_done = self._committed(self.hdr_dir, batch_id)
-        doremi_done = self.doremi_lm_path is None or self._committed(
-            self.doremi_dir, batch_id
-        )
-        funnel_done = not self.track_funnel or self._committed(
-            self.funnel_dir, batch_id
-        )
-        fineweb_done = not self.fineweb_recipe or self._committed(
-            self.fineweb_dir, batch_id
-        )
-        if (acc_done and anch_done and hdr_done and doremi_done
-                and funnel_done and fineweb_done):
-            return
-        screened, funnel_counts = self._apply_pre_screens(batch, batch_id)
-        screen_checkpointed = (
-            self.contamination_bloom_path is not None
-            or self.perplexity_lm_path is not None
-            or self.quality_model_path is not None
-            or self.repetition_rules
-        )
-        if screen_checkpointed:
-            docs = screened.localCheckpoint(eager=True)
-        else:
-            docs = screened.persist()
-        n, w = self.substr_n, self.winnow_w
         occ = _winnowed_anchor_occurrences(
-            docs, self.text_col, self.id_col, n, w
+            docs, self.text_col, self.id_col, self.substr_n, self.winnow_w
         ).persist()  # feeds the hit probe, the fresh split, and firsts
-        index = self._index_anchors(exclude_batch=batch_id)
-        hit = occ.join(index, ["gh", "g"], "semi").select("doc_id", "pos")
-        fresh = occ.join(index, ["gh", "g"], "anti")
-        firsts = fresh.groupBy("gh", "g").agg(F.min("k").alias("fk"))
-        dup_fresh = (
-            fresh.join(firsts, ["gh", "g"])
-            .filter(F.col("k") != F.col("fk"))
-            .select("doc_id", "pos")
+        held.append(occ)
+        covered, firsts = claim_anchors(
+            occ, self._index_anchors(exclude_batch=batch_id), self.substr_n
         )
-        covered = (
-            hit.unionByName(dup_fresh)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.sequence(F.col("pos"), F.col("pos") + n - 1)
-                ).alias("p"),
-            )
-            .distinct()
-            .groupBy("doc_id")
-            .agg(F.collect_set("p").alias("_cov"))
-            .withColumnRenamed("doc_id", "_cov_id")
-        )
+        covered = covered.withColumnRenamed("doc_id", "_cov_id")
         kept_toks = F.filter(
             tokens(self.text_col),
             lambda x, i: ~F.array_contains(F.col("_cov"), i),
@@ -2412,208 +2239,155 @@ class StreamingCorpusCurator(BatchDirs):
                 ).otherwise(F.array_join(kept_toks, " ")),
             )
             .drop("_cov", "_cov_id")
-            .persist()
         )
-        if not acc_done:
-            keep.write.mode("overwrite").parquet(
-                self._batch_dir(self.accepted_dir, batch_id)
-            )
-        if self.track_funnel and not funnel_done:
-            self._write_funnel_tier(funnel_counts, keep, batch_id)
-        if self.fineweb_recipe and not fineweb_done:
-            self._write_fineweb_tier(batch, batch_id)
-        if not anch_done:
-            firsts.select("gh", "g").write.mode("overwrite").parquet(
-                self._batch_dir(self.anchors_dir, batch_id)
-            )
-        if not hdr_done:
-            # lengths of the REWRITTEN docs — the hdr tier tracks what
-            # the accepted corpus actually stores
-            from ..operators.sketch import hdr_build
+        return keep, firsts
 
-            hdr_build(
-                keep.select(self._tc().alias("v")),
-                "v",
-                sub_bits=LEN_HDR_SUB_BITS,
-            ).write.mode("overwrite").parquet(
-                self._batch_dir(self.hdr_dir, batch_id)
-            )
-        if self.doremi_lm_path is not None and not doremi_done:
-            self._write_doremi_tier(keep, None, batch_id)
-        keep.unpersist()
-        occ.unpersist()
-        if screen_checkpointed:
-            from ..operators.dedup import _free_local_checkpoint
-
-            _free_local_checkpoint(docs)
-        else:
-            docs.unpersist()
-        self.maybe_compact()
-
-    def _process_batch_embedding(self, batch: DataFrame, batch_id: int) -> None:
-        """The embedding screen's half of ``process_batch`` — same
-        commit protocol (idempotent batch partitions, pre-batch state
-        on replay), state tables (vec, sig) instead of (grams,
-        banded)."""
-        acc_done = self._committed(self.accepted_dir, batch_id)
-        vec_done = self._committed(self.vec_dir, batch_id)
-        sig_done = self._committed(self.sig_dir, batch_id)
-        tomb_done = self.retention != "best" or self._committed(
-            self.tomb_dir, batch_id
-        )
-        if acc_done and vec_done and sig_done and tomb_done:  # committed replay
+    def _write_index_tiers(
+        self,
+        keep: DataFrame,
+        evicted: DataFrame | None,
+        index_rows: DataFrame | None,
+        batch_id: int,
+        pending: list[str],
+    ) -> None:
+        """Step 6 of ``process_batch``: the screen's index tiers (and
+        the shingle screens' df and hll monitors), each written only
+        when ``pending``. Only accepted docs are indexed, so a
+        rejected doc never blocks a later one."""
+        if self.screen == "substr":
+            if self.anchors_dir in pending:
+                self._write_batch(index_rows.select("gh", "g"), self.anchors_dir, batch_id)
             return
-        screen_col = self.vec_col
-        if self.vec_format == "int8":
-            # quantize FIRST and derive everything — the screen's
-            # batch side, the signatures, and the stored state — from
-            # the dequantized v̂ (round 8): quantization is the single
-            # approximation boundary, and a state row stays byte-
-            # reproducible from itself (replay, rollover re-signing)
-            from ..operators.similarity import with_int8_codes
+        if self.screen == "simhash":
+            if self.shsig_dir in pending:
+                kept_ids = keep.select(F.col(self.id_col).alias("doc_id"))
+                self._write_batch(
+                    index_rows.join(kept_ids, "doc_id", "semi"), self.shsig_dir, batch_id
+                )
+            return
+        if self.screen == "embedding":
+            if self.vec_format in ("int8", "pq"):
+                from ..operators.similarity import hyperplane_signatures_multi
 
-            batch = with_int8_codes(
-                batch, self.vec_col, self.emb_dim, qc="_qc", qs="_qs",
-                vhat="_vhat",
-            )
-            screen_col = "_vhat"
-        elif self.vec_format == "pq":
-            # same single-approximation-boundary discipline at the PQ
-            # rung (round 9): codebooks frozen on first use, codes +
-            # decoded v̂ derived in-scan, everything downstream (screen
-            # cosines, signatures, stored state) from v̂
-            from ..operators.pq import with_pq_codes
-
-            self._ensure_pq_books(batch)
-            batch = with_pq_codes(
-                batch, self._pq_books, self.vec_col, pc="_pc", vhat="_vhat",
-                strategy="numpy",
-            )
-            screen_col = "_vhat"
-        docs = batch.persist()  # screened once, written once
-        pairs = incremental_embedding_pairs(
-            self._index_vec(exclude_batch=batch_id),
-            self._index_sig(exclude_batch=batch_id),
-            docs,
-            dim=self.emb_dim,
-            threshold=self.threshold,
-            num_planes=self.num_planes,
-            num_tables=self.num_tables,
-            seed=self.seed,
-            id_col=self.id_col,
-            vec_col=screen_col,
-            max_bucket_size=self.max_bucket_size,
-        )
-        new_ids = docs.select(F.col(self.id_col).alias("nid"))
-        evicted = None
-        if self.retention == "best":
-            # same value-aware pair rules as the text screens (the
-            # docstring's retention contract); incumbents' scores come
-            # from the accepted tier's stored score column
-            rejected, evicted = self._retention_decisions(pairs, docs, batch_id)
-            evicted = evicted.persist()
-        else:
-            rejected = self._rejected_ids(pairs, new_ids)
-        keep = docs.join(
-            rejected.withColumnRenamed("doc_id", self.id_col), self.id_col, "anti"
-        ).persist()
-        if not acc_done:
-            keep.drop("_qc", "_qs", "_pc", "_vhat").write.mode(
-                "overwrite"
-            ).parquet(self._batch_dir(self.accepted_dir, batch_id))
-        if evicted is not None and not tomb_done:
-            evicted.write.mode("overwrite").parquet(
-                self._batch_dir(self.tomb_dir, batch_id)
-            )
-        if self.vec_format in ("int8", "pq"):
-            from ..operators.similarity import hyperplane_signatures_multi
-
-            if self.vec_format == "int8":
-                keep_vecs = keep.select(
-                    F.col(self.id_col).alias("vec_id"),
-                    F.col("_qc").cast("array<tinyint>").alias("qc"),
-                    F.col("_qs").alias("qs"),
+                if self.vec_format == "int8":
+                    keep_vecs = keep.select(
+                        F.col(self.id_col).alias("vec_id"),
+                        F.col("_qc").cast("array<tinyint>").alias("qc"),
+                        F.col("_qs").alias("qs"),
+                    )
+                else:
+                    keep_vecs = keep.select(
+                        F.col(self.id_col).alias("vec_id"),
+                        F.col("_pc").alias("pc"),
+                    )
+                keep_sigs = hyperplane_signatures_multi(
+                    keep,
+                    dim=self.emb_dim,
+                    num_planes=self.num_planes,
+                    num_tables=self.num_tables,
+                    seed=self.seed,
+                    id_col=self.id_col,
+                    vec_col="_vhat",
                 )
             else:
-                keep_vecs = keep.select(
-                    F.col(self.id_col).alias("vec_id"),
-                    F.col("_pc").alias("pc"),
+                keep_vecs, keep_sigs = build_embedding_index(
+                    keep,
+                    dim=self.emb_dim,
+                    num_planes=self.num_planes,
+                    num_tables=self.num_tables,
+                    seed=self.seed,
+                    id_col=self.id_col,
+                    vec_col=self.vec_col,
                 )
-            keep_sigs = hyperplane_signatures_multi(
-                keep,
-                dim=self.emb_dim,
-                num_planes=self.num_planes,
-                num_tables=self.num_tables,
-                seed=self.seed,
-                id_col=self.id_col,
-                vec_col="_vhat",
+            if self.vec_dir in pending:
+                self._write_batch(keep_vecs, self.vec_dir, batch_id)
+            if self.sig_dir in pending:
+                self._write_batch(keep_sigs, self.sig_dir, batch_id)
+            return
+        # the shingle screens: one shingling of the kept docs feeds
+        # every gram-derived tier; persist it only when ≥2 of them
+        # will run (a partial-commit replay may have one write left)
+        keep_grams = build_ngram_index(keep, self.text_col, self.id_col, self.n)
+        gram_tiers = (self.grams_dir, self.banded_dir, self.df_dir, self.hll_dir)
+        multi_consumers = sum(d in pending for d in gram_tiers) >= 2
+        if multi_consumers:
+            keep_grams = keep_grams.persist()
+        if self.grams_dir in pending:
+            self._write_batch(keep_grams, self.grams_dir, batch_id)
+        if self.banded_dir in pending:
+            keep_sigs = minhash_signatures(
+                None, num_hashes=self.num_hashes, seed=self.seed, grams=keep_grams
             )
-        else:
-            keep_vecs, keep_sigs = build_embedding_index(
-                keep,
-                dim=self.emb_dim,
-                num_planes=self.num_planes,
-                num_tables=self.num_tables,
-                seed=self.seed,
-                id_col=self.id_col,
-                vec_col=self.vec_col,
+            self._write_batch(
+                _banded(keep_sigs, self.num_bands, self.num_hashes // self.num_bands),
+                self.banded_dir,
+                batch_id,
             )
-        if not vec_done:
-            keep_vecs.write.mode("overwrite").parquet(
-                self._batch_dir(self.vec_dir, batch_id)
+        if self.df_dir in pending:
+            # per-batch (g, df) rows, whose SUM the jaccard screen's
+            # stop-shingle cap reads instead of recounting the gram
+            # tier; evicted docs' grams enter NEGATIVE, so the sum is
+            # the df of the surviving corpus exactly
+            df_rows = build_df_index(keep_grams)
+            if evicted is not None:
+                ev_grams = self._index(exclude_batch=batch_id).join(
+                    evicted, "doc_id", "semi"
+                )
+                df_rows = df_rows.unionByName(
+                    build_df_index(ev_grams).withColumn(
+                        "df", (-F.col("df")).cast("long")
+                    )
+                )
+            self._write_batch(df_rows, self.df_dir, batch_id)
+        if self.hll_dir in pending:
+            # <= VOCAB_HLL_M vocabulary registers per batch; the
+            # register-max merge makes the tier trivially replay-safe
+            from ..operators.sketch import hll_build
+
+            self._write_batch(
+                hll_build(keep_grams.select("g"), key="g", m=VOCAB_HLL_M),
+                self.hll_dir,
+                batch_id,
             )
-        if not sig_done:
-            keep_sigs.write.mode("overwrite").parquet(
-                self._batch_dir(self.sig_dir, batch_id)
-            )
-        keep.unpersist()
-        if evicted is not None:
-            evicted.unpersist()
-        docs.unpersist()
-        release_intermediates(pairs)
-        self.maybe_compact()
+        if multi_consumers:
+            keep_grams.unpersist()
 
     # ------------------------------------------------------------------
     # compaction
 
     def _state_tables(self) -> list[str]:
-        if self.screen == "embedding":
-            tables = [self.accepted_dir, self.vec_dir, self.sig_dir]
-        elif self.screen == "simhash":
-            tables = [self.accepted_dir, self.shsig_dir]
-        elif self.screen == "substr":
-            tables = [self.accepted_dir, self.anchors_dir]
-        else:
-            tables = [self.accepted_dir, self.grams_dir]
-            if self.screen == "minhash":
-                tables.append(self.banded_dir)
+        """The commit-gated tiers: a batch folds into the compacted
+        tier only once each of them holds it. Tombstones are decision
+        state and FineWeb verdicts are underivable after the batch, so
+        both gate when enabled."""
+        tables = [self.accepted_dir, *self.index_tiers]
         if self.retention == "best":
-            tables.append(self.tomb_dir)  # decision state, commit-gated
+            tables.append(self.tomb_dir)
         if self.fineweb_recipe:
-            tables.append(self.fineweb_dir)  # underivable, commit-gated
+            tables.append(self.fineweb_dir)
         return tables
 
-    @property
-    def _primary_state_dir(self) -> str:
-        """The state table whose committed batch-dir count drives the
-        compaction threshold (every screen writes it each batch)."""
-        if self.screen == "embedding":
-            return self.vec_dir
-        if self.screen == "simhash":
-            return self.shsig_dir
-        if self.screen == "substr":
-            return self.anchors_dir
-        return self.grams_dir
+    def _batch_tiers(self) -> list[str]:
+        """Every tier ``process_batch`` writes for this configuration:
+        the commit-gated ones plus the best-effort monitor, DoReMi and
+        funnel tiers."""
+        tiers = self._state_tables() + self.monitor_tiers
+        if self.doremi_lm_path is not None:
+            tiers.append(self.doremi_dir)
+        if self.track_funnel:
+            tiers.append(self.funnel_dir)
+        return tiers
 
     def maybe_compact(self) -> bool:
         """Compact iff more than ``compact_after`` committed batch
-        directories have accumulated since the last compaction."""
+        directories of the screen's first index tier have accumulated
+        since the last compaction."""
         if self.compact_after is None:
             return False
         upto = self._covered_upto()
         residual = [
             d
-            for d in self._committed_batch_dirs(self._primary_state_dir)
+            for d in self._committed_batch_dirs(self.index_tiers[0])
             if self._batch_id_of(d) > upto
         ]
         if len(residual) <= self.compact_after:
@@ -3409,13 +3183,7 @@ class StreamingCorpusCurator(BatchDirs):
         with the current watermark on the nothing-to-fold resume path.
         Idempotent — also finishes a cleanup a crash interrupted (reads
         exclude covered partitions either way, via the watermark)."""
-        tables = list(self._state_tables())
-        if self.screen == "jaccard":
-            tables.append(self.df_dir)  # best-effort tier, swept too
-        if self.screen != "embedding":
-            tables.append(self.hll_dir)  # best-effort monitor tier
-            tables.append(self.hdr_dir)  # best-effort monitor tier
-            tables.append(self.doremi_dir)  # best-effort excess tier
+        tables = self._state_tables() + self.monitor_tiers + [self.doremi_dir]
         for base in tables:
             for d in self._batch_dirs(base):
                 if self._batch_id_of(d) <= upto:

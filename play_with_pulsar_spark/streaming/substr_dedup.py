@@ -54,6 +54,40 @@ from ..operators.textops import _winnowed_anchor_occurrences, tokens
 from .batch_dirs import IndexedBatchDirs
 
 
+def claim_anchors(
+    occ: DataFrame, index: DataFrame, n: int
+) -> tuple[DataFrame, DataFrame]:
+    """The keep-first claim plan shared by ``IncrementalSubstrDeduper``
+    and the curator's substr screen. ``occ`` holds a batch's selected
+    anchor occurrences (``gh``, ``g``, ``doc_id``, ``pos`` and the
+    packed order key ``k``) and ``index`` the (gh, g) anchors claimed
+    by earlier batches. An occurrence loses its n-token span when its
+    gram is already claimed, or when an earlier occurrence (smaller
+    ``k``) of a fresh gram is in this batch. Returns ``covered``
+    (``doc_id``, ``_cov``: the set of excised token positions, for
+    docs that lose any) and ``firsts`` (``gh``, ``g``, ``fk``: the
+    batch's new claims)."""
+    hit = occ.join(index, ["gh", "g"], "semi").select("doc_id", "pos")
+    fresh = occ.join(index, ["gh", "g"], "anti")
+    firsts = fresh.groupBy("gh", "g").agg(F.min("k").alias("fk"))
+    dup_fresh = (
+        fresh.join(firsts, ["gh", "g"])
+        .filter(F.col("k") != F.col("fk"))
+        .select("doc_id", "pos")
+    )
+    covered = (
+        hit.unionByName(dup_fresh)
+        .select(
+            "doc_id",
+            F.explode(F.sequence(F.col("pos"), F.col("pos") + n - 1)).alias("p"),
+        )
+        .distinct()
+        .groupBy("doc_id")
+        .agg(F.collect_set("p").alias("_cov"))
+    )
+    return covered, firsts
+
+
 class IncrementalSubstrDeduper(IndexedBatchDirs):
     def __init__(
         self,
@@ -97,26 +131,8 @@ class IncrementalSubstrDeduper(IndexedBatchDirs):
         occ = _winnowed_anchor_occurrences(
             batch, self.text_col, self.id_col, self.n, self.w
         ).persist()  # feeds the hit probe, the fresh split, and firsts
-        index = self._index(exclude_batch=batch_id)
-        hit = occ.join(index, ["gh", "g"], "semi").select("doc_id", "pos")
-        fresh = occ.join(index, ["gh", "g"], "anti")
-        firsts = fresh.groupBy("gh", "g").agg(F.min("k").alias("fk"))
-        dup_fresh = (
-            fresh.join(firsts, ["gh", "g"])
-            .filter(F.col("k") != F.col("fk"))
-            .select("doc_id", "pos")
-        )
-        covered = (
-            hit.unionByName(dup_fresh)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.sequence(F.col("pos"), F.col("pos") + self.n - 1)
-                ).alias("p"),
-            )
-            .distinct()
-            .groupBy("doc_id")
-            .agg(F.collect_set("p").alias("_cov"))
+        covered, firsts = claim_anchors(
+            occ, self._index(exclude_batch=batch_id), self.n
         )
         toks = batch.select(
             F.col(self.id_col).alias("doc_id"), tokens(self.text_col).alias("_t")

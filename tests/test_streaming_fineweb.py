@@ -318,6 +318,32 @@ def test_fineweb_tier_rejects_embedding_screen(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+@pytest.mark.parametrize(
+    "option",
+    [
+        {"url_col": "url"},
+        {"quality_model_path": "/nonexistent/model"},
+        {"perplexity_lm_path": "/nonexistent/lm"},
+        {"contamination_bloom_path": "/nonexistent/bloom"},
+        {"repetition_rules": True},
+        {"track_funnel": True},
+    ],
+    ids=lambda o: next(iter(o)),
+)
+def test_text_prescreens_reject_embedding_screen(spark, option):
+    """The pre-screens and the funnel read text_col; an embedding
+    curator refuses them instead of accepting and never applying
+    them."""
+    base = tempfile.mkdtemp(prefix="pwp_fwemb_")
+    try:
+        with pytest.raises(ValueError, match="text screens"):
+            StreamingCorpusCurator(
+                spark, base, screen="embedding", emb_dim=4, **option
+            )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_fineweb_tier_via_real_stream(spark, tmp_path, pages):
     """The tier through an actual Structured Streaming attach: one
     micro-batch per file, and the maintained funnel equals the batch
