@@ -40,6 +40,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming.batch_dirs import write_text_atomic
 from .compaction import latest_per_key
 
 
@@ -161,11 +162,9 @@ class LatestStateView:
             version = 0
         new_dir = f"{self.path}.v{version}"
         merged.write.mode("overwrite").parquet(new_dir)
-        # commit: write-temp + os.replace = atomic pointer flip (POSIX)
-        tmp_ptr = self._pointer + ".tmp"
-        with open(tmp_ptr, "w") as f:
-            f.write(new_dir)
-        os.replace(tmp_ptr, self._pointer)
+        # commit: write-temp + fsync + os.replace = atomic, durable
+        # pointer flip (POSIX)
+        write_text_atomic(self._pointer, new_dir)
         if old == self.path:
             # legacy layout migrated: its data is folded into v0
             shutil.rmtree(old, ignore_errors=True)

@@ -515,14 +515,11 @@ def _ivf_manifest(vdir: str) -> list[str]:
 
 
 def _ivf_flip_manifest(vdir: str, batch_ids: list[str]) -> None:
-    import json
     import os
 
-    mf = os.path.join(vdir, "appends.json")
-    tmp = mf + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(batch_ids, f)
-    os.replace(tmp, mf)
+    from ..streaming.batch_dirs import write_json_atomic
+
+    write_json_atomic(os.path.join(vdir, "appends.json"), batch_ids)
 
 
 def _ivf_data(spark: SparkSession, vdir: str) -> DataFrame:
@@ -575,10 +572,9 @@ def _ivf_write_version(
 def _ivf_flip_pointer(path: str, version: int) -> None:
     import os
 
-    tmp = os.path.join(path, "current.tmp")
-    with open(tmp, "w") as f:
-        f.write(f"v{version}")
-    os.replace(tmp, os.path.join(path, "current"))
+    from ..streaming.batch_dirs import write_text_atomic
+
+    write_text_atomic(os.path.join(path, "current"), f"v{version}")
 
 
 def ivf_build_index(

@@ -1359,16 +1359,14 @@ def write_bigram_lm(path: str, uc: DataFrame, ctx: DataFrame, bc: DataFrame, met
     """Persist the LM artifact: three parquet tables + ``lm.json``
     written LAST (the commit marker — a reader that finds the sidecar
     finds complete tables; the ``write_bloom`` protocol)."""
-    import json
     import os
+
+    from ..streaming.batch_dirs import write_json_atomic
 
     uc.write.mode("overwrite").parquet(os.path.join(path, "uc.parquet"))
     ctx.write.mode("overwrite").parquet(os.path.join(path, "ctx.parquet"))
     bc.write.mode("overwrite").parquet(os.path.join(path, "bc.parquet"))
-    tmp = os.path.join(path, "lm.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, "lm.json"))
+    write_json_atomic(os.path.join(path, "lm.json"), meta)
 
 
 def read_bigram_lm(spark, path: str) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
@@ -1945,14 +1943,12 @@ def write_trigram_lm(path: str, tc: DataFrame, meta: dict) -> None:
     ``write_bigram_lm`` protocol; the sidecar name also tags the
     artifact's ORDER, which is how the curator's perplexity screen
     auto-detects a KN3 model)."""
-    import json
     import os
 
+    from ..streaming.batch_dirs import write_json_atomic
+
     tc.write.mode("overwrite").parquet(os.path.join(path, "tc.parquet"))
-    tmp = os.path.join(path, "lm3.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, "lm3.json"))
+    write_json_atomic(os.path.join(path, "lm3.json"), meta)
 
 
 def read_trigram_lm(spark, path: str) -> tuple[DataFrame, dict]:

@@ -41,6 +41,7 @@ with a single compacted tier (``<index>_compacted/data_v<k>`` plus
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 
@@ -114,10 +115,19 @@ class BatchDirs:
                 if d.startswith(prefix) and os.path.isdir(os.path.join(base, d))
             ]
 
-    def _committed_batch_dirs(self, base: str) -> list[str]:
-        """The partition directories whose ``_SUCCESS`` marker exists:
-        the subset a concurrent reader may trust."""
-        return [d for d in self._batch_dirs(base) if self._success_exists(d)]
+    def _committed_batch_dirs(
+        self, base: str, lo: int = -1, hi: int | None = None, exclude: int | None = None
+    ) -> list[str]:
+        """The partition directories whose ``_SUCCESS`` marker exists
+        (the subset a concurrent reader may trust), with ``lo < batch
+        <= hi`` and batch ``exclude`` left out."""
+        return [
+            d
+            for d in self._batch_dirs(base)
+            if lo < self._batch_id_of(d) <= (math.inf if hi is None else hi)
+            and self._batch_id_of(d) != exclude
+            and self._success_exists(d)
+        ]
 
     def _delete_dir(self, path: str) -> None:
         try:
@@ -213,13 +223,7 @@ class BatchDirs:
     ) -> DataFrame:
         """Committed live-tier rows with ``lo < batch <= hi``, batch
         ``exclude`` left out."""
-        dirs = [
-            d
-            for d in self._committed_batch_dirs(base)
-            if lo < self._batch_id_of(d)
-            and (hi is None or self._batch_id_of(d) <= hi)
-            and self._batch_id_of(d) != exclude
-        ]
+        dirs = self._committed_batch_dirs(base, lo, hi, exclude)
         if not dirs:
             return self.spark.createDataFrame([], schema)
         return (
@@ -246,17 +250,24 @@ class BatchDirs:
         )
 
 
-def write_json_atomic(path: str, obj) -> None:
-    """Write ``obj`` as JSON to ``path`` via write-temp + fsync +
+def write_text_atomic(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` via write-temp + fsync +
     ``os.replace``: readers see the old file or the new one, never a
-    torn one."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    torn one, and a power loss after the rename cannot leave it
+    empty. Every pointer, manifest and sidecar flip goes through
+    here."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(obj, f)
+        f.write(text)
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """``write_text_atomic`` of ``obj`` as JSON."""
+    write_text_atomic(path, json.dumps(obj))
 
 
 class IndexedBatchDirs(BatchDirs):

@@ -24,39 +24,46 @@ batch):
 Every screen runs one per-batch pipeline, ``process_batch``: commit
 check, pre-screens, the screen's decision, then the tier writes in a
 fixed order (its docstring lists the steps). What differs by screen
-is the decision and the tier table set in the constructor: the
-commit-gated index tiers (``grams/`` for jaccard, ``grams/`` +
-``banded/`` for minhash, ``shsig/`` for simhash, ``anchors/`` for
-substr, ``vec/`` + ``sig/`` for embedding) and the best-effort
-monitor tiers.
+is the decision and its row of the tier table (``SCREEN_TIERS``, one
+``Tier`` per state tier): the commit-gated index tiers (``grams/`` for
+jaccard, ``grams/`` + ``banded/`` for minhash, ``shsig/`` for simhash,
+``anchors/`` for substr, ``vec/`` + ``sig/`` for embedding) and the
+best-effort monitor tiers (``df/``, ``hll/``, ``hdr/``; ``doremi/``
+and ``fineweb/`` ride along when configured).
 
 State layout — ``accepted/`` and the screen's tiers, each one
-``ingest_batch=<id>`` partition directory per micro-batch, PLUS — for
-the jaccard screen — a best-effort ``df/`` tier (round 7): each
-batch's kept-gram (g, df) aggregate, whose SUM replaces the
-per-batch O(corpus) stop-shingle recount (``incremental_jaccard_
-pairs(index_df=…)``). Best-effort means it is NOT part of the commit
-contract: a missing partition (pre-round-7 state, crash between the
-gram and df writes) makes ``_index_df`` return None and the screen
-falls back to the recount — identical decisions, just slower — and
-the next compaction derives the df tier from the full gram table, so
-a migrated curator converges back to the maintained path. PLUS a
-compacted tier: a long-running stream would otherwise accumulate one
+``ingest_batch=<id>`` partition directory per micro-batch. A monitor
+tier is a per-batch aggregate (the jaccard screen's kept-gram (g, df)
+rows, whose SUM replaces the per-batch O(corpus) stop-shingle recount
+of ``incremental_jaccard_pairs(index_df=…)``; vocabulary HLL
+registers; doc-length HDR buckets) and is NOT part of the commit
+contract: one rule, ``_covers``, decides for reads and compaction
+alike that a tier missing a batch its source tier has (pre-feature
+state, a crash between the two writes) is derived from the source
+instead — identical answers, just slower — and the next compaction
+heals it.
+
+Compaction: a long-running stream would otherwise accumulate one
 directory per micro-batch forever, and the per-batch file-listing
 cost of every state read grows with stream age — the one part of the
 per-batch design that does NOT scale with time. ``compact()``
-(threshold-triggered via ``compact_after``) folds all committed batch
-directories into versioned EXTERNAL bucketed tables in the canonical
-catalog layout (``dedup.write_ngram_index`` /
-``dedup.write_minhash_index`` — the same layout batch probes
-consume), commits by atomically flipping a manifest pointer
-(``COMPACTED.json``, write-temp + ``os.replace`` like
-``operators.matview``), and only then deletes the folded
-directories. Steady state: ≤ ``compact_after`` live batch dirs + one
-compacted version (plus one retained predecessor for reader grace),
-regardless of stream age. Crash anywhere mid-compaction leaves the
-previous manifest live and every batch directory intact; a re-run
-folds the same rows again (the write is idempotent per version
+(threshold-triggered via ``compact_after``) is the changelog
+compaction of the reference's TableView applied to each tier: one
+loop over the screen's tier table folds the previous compacted rows
+and the covered committed batch dirs by the tier's fold (concatenate,
+distinct, sum or register max) into a new version ``compacted/v<k>/``
+— bucketed EXTERNAL catalog tables in the layout batch probes consume
+(``dedup.write_ngram_index`` / ``dedup.write_minhash_index`` /
+``dedup.write_embedding_index``) or plain parquet dirs — and commits
+by atomically flipping one manifest (``COMPACTED.json``, write-temp +
+fsync + ``os.replace``). ``rollover_geometry`` and
+``migrate_vec_format`` cut over through the same version writer,
+``_write_version``. Folded directories are deleted one compaction
+later and one predecessor version is kept, both as reader grace.
+Steady state: the batch dirs above the watermark, one folded
+generation and two compacted versions, regardless of stream age. Crash anywhere mid-compaction
+leaves the previous manifest live and every batch directory intact; a
+re-run folds the same rows again (the write is idempotent per version
 directory) — screening decisions are identical before, during, and
 after, which the compaction tests pin.
 
@@ -87,9 +94,12 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.dedup import (
     _banded,
@@ -118,8 +128,63 @@ VOCAB_HLL_M = 256
 # anywhere. 2^-6 = 1.6% relative error on the length quantiles.
 LEN_HDR_SUB_BITS = 6
 
-# default (id_type="long") state schemas; instances derive their own
-# from the declared id type (self.grams_schema / self.banded_schema)
+
+@dataclass(frozen=True)
+class Tier:
+    """One compacted state tier. ``name`` is its live dir under the
+    state dir, its manifest key and the stem of its instance schema
+    (``<name>_schema``). ``fold`` merges the compacted rows with the
+    covered live rows: ``concat``, ``distinct``, ``sum`` (every value
+    column summed per first column; compaction drops rows whose last
+    column sums to 0) or ``max`` (register max). With ``table`` the
+    version is a bucketed catalog table ``<prefix>_v<k>_<table>`` at
+    ``v<k>/<path>``, bucketed by ``keys``; without it, a plain parquet
+    dir ``v<k>/<path>`` (``keys`` then only bucket the export).
+    ``doc_key`` marks a doc-keyed tier: covered tombstones leave it
+    physically at compaction, live ones filter its reads. ``covers``
+    marks a best-effort monitor tier and names its source tier: the
+    tier is read only while its committed batches equal the source's,
+    else it is derived from the source (``_maintained``/``_derive``)."""
+
+    name: str
+    fold: str = "concat"
+    table: str | None = None
+    path: str | None = None
+    keys: tuple[str, ...] = ()
+    doc_key: str | None = None
+    covers: str | None = None
+
+    @property
+    def vpath(self) -> str:
+        return self.path or self.table or self.name
+
+
+_GRAMS_BY_G = Tier("grams", table="grams_by_g", keys=("g",), doc_key="doc_id")
+_GRAMS = Tier("grams", table="grams", path="idx_grams", keys=("doc_id",), doc_key="doc_id")
+_BANDED = Tier(
+    "banded", table="banded", path="idx_banded", keys=("band", "bucket"), doc_key="doc_id"
+)
+_SHSIG = Tier("shsig", keys=("doc_id",), doc_key="doc_id")
+_ANCHORS = Tier("anchors", fold="distinct", table="anchors", keys=("gh", "g"))
+_VEC = Tier("vec", table="vec", path="idx_vec", keys=("vec_id",), doc_key="vec_id")
+_SIG = Tier("sig", table="sig", path="idx_sig", keys=("tbl", "bucket"), doc_key="vec_id")
+_DF = Tier("df", fold="sum", table="df_by_g", keys=("g",), covers="grams")
+_HLL = Tier("hll", fold="max", covers="grams")
+_HDR = Tier("hdr", fold="sum", covers="accepted")
+_DOREMI = Tier("doremi", fold="sum", covers="accepted")
+_FINEWEB = Tier("fineweb")
+
+# per screen: the commit-gated index tiers (a batch folds only once
+# every one holds it; the first one's batch-dir count drives
+# maybe_compact) and the best-effort monitor tiers. The optional DoReMi
+# and FineWeb tiers follow them when configured (_compacted_tiers).
+SCREEN_TIERS: dict[str, tuple[tuple[Tier, ...], tuple[Tier, ...]]] = {
+    "jaccard": ((_GRAMS_BY_G,), (_DF, _HLL, _HDR)),
+    "minhash": ((_GRAMS, _BANDED), (_HLL, _HDR)),
+    "simhash": ((_SHSIG,), (_HDR,)),
+    "substr": ((_ANCHORS,), (_HDR,)),
+    "embedding": ((_VEC, _SIG), ()),
+}
 
 
 class StreamingCorpusCurator(BatchDirs):
@@ -434,19 +499,12 @@ class StreamingCorpusCurator(BatchDirs):
         self.anchors_dir = os.path.join(base_dir, "anchors")
         self.compacted_dir = os.path.join(base_dir, "compacted")
         self.screen = screen
-        # the per-screen tier table. Index tiers are commit-gated (a
-        # batch folds only once every one holds it; the first one's
-        # batch-dir count drives maybe_compact). Monitor tiers are
-        # best-effort: a reader that finds one incomplete derives it
-        # from the gram or accepted tier, and compaction heals it.
-        # process_batch rewrites a missing tier of either kind.
-        self.index_tiers, self.monitor_tiers = {
-            "jaccard": ([self.grams_dir], [self.df_dir, self.hll_dir, self.hdr_dir]),
-            "minhash": ([self.grams_dir, self.banded_dir], [self.hll_dir, self.hdr_dir]),
-            "simhash": ([self.shsig_dir], [self.hdr_dir]),
-            "substr": ([self.anchors_dir], [self.hdr_dir]),
-            "embedding": ([self.vec_dir, self.sig_dir], []),
-        }[screen]
+        # the per-screen tier table (SCREEN_TIERS). A reader that finds
+        # a monitor tier incomplete derives it from its source tier,
+        # and compaction heals it; process_batch rewrites a missing
+        # tier of either kind.
+        self.index_tiers, self.monitor_tiers = SCREEN_TIERS[screen]
+        self.id_type = id_type
         # resolved (and possibly frozen) in the fineweb_recipe block
         # below; initialized here because _policy_record runs from the
         # embedding-geometry freeze before that block
@@ -929,31 +987,38 @@ class StreamingCorpusCurator(BatchDirs):
     # ------------------------------------------------------------------
     # state reads
 
-    def _state_schema(self, kind: str) -> str:
-        return {
-            "grams": self.grams_schema,
-            "banded": self.banded_schema,
-            "vec": self.vec_schema,
-            "sig": self.sig_schema,
-            "df": self.df_schema,
-            "shsig": self.shsig_schema,
-            "anchors": self.anchors_schema,
-        }[kind]
+    def _schema(self, name: str) -> str:
+        return getattr(self, f"{name}_schema")
 
-    def _compacted_state(self, kind: str) -> DataFrame | None:
-        """Compacted-tier DataFrame (``kind`` in ``grams``/``banded``/
-        ``vec``/``sig``), or None before the first compaction.
-        Resolution order: session catalog (bucketed — shuffle-free
-        probe joins), re-register the external table on a fresh
-        session, last-resort plain parquet read of the manifest path
-        (correct, loses bucket metadata)."""
-        man = self._manifest()
-        if man is None or man.get(kind) is None:
+    def _compacted_tiers(self) -> list[Tier]:
+        """The tiers a compaction folds, in write order: the screen's
+        index and monitor tiers, then DoReMi and FineWeb when on."""
+        tiers = [*self.index_tiers, *self.monitor_tiers]
+        if self.doremi_lm_path is not None:
+            tiers.append(_DOREMI)
+        if self.fineweb_recipe:
+            tiers.append(_FINEWEB)
+        return tiers
+
+    def _compacted_state(self, kind: str, man: dict | None = None) -> DataFrame | None:
+        """Compacted rows of tier ``kind`` (or of ``accepted``) in the
+        version ``man`` names (default: the live manifest), or None
+        when there is none. A bucketed tier resolves through the
+        session catalog (shuffle-free probe joins), then by
+        re-registering the external table on a fresh session, then by
+        a plain parquet read of its path (correct, loses the bucket
+        metadata). A plain tier is a parquet read."""
+        man = self._manifest() if man is None else man
+        if man is None:
             return None
-        ent = man[kind]
-        schema = self._state_schema(kind)
-        from pyspark.sql.types import StructType
-
+        if kind == "accepted":
+            return self.spark.read.parquet(man["accepted_path"])
+        ent = man.get(kind)
+        if ent is None:
+            return None
+        schema = self._schema(kind)
+        if "table" not in ent:
+            return self.spark.read.schema(schema).parquet(ent["path"])
         cols = StructType.fromDDL(schema).fieldNames()  # decimal(p,s)-safe
         try:
             return self.spark.table(ent["table"]).select(*cols)
@@ -988,19 +1053,8 @@ class StreamingCorpusCurator(BatchDirs):
         uncommitted batch's evictions must not hide docs from a
         concurrent reader) and excluding the in-flight batch (a
         replay decides against exactly the pre-batch state)."""
-        dirs = [
-            d
-            for d in self._committed_batch_dirs(self.tomb_dir)
-            if self._batch_id_of(d) > self._covered_upto()
-            and self._batch_id_of(d) != exclude_batch
-        ]
-        if not dirs:
-            return self.spark.createDataFrame([], self.tomb_schema)
-        return (
-            self.spark.read.schema(self.tomb_schema + ", ingest_batch int")
-            .option("basePath", self.tomb_dir)
-            .parquet(*dirs)
-            .select("doc_id")
+        return self._read_committed(
+            self.tomb_dir, self.tomb_schema, self._covered_upto(), exclude=exclude_batch
         )
 
     def _minus_tombstones(
@@ -1015,54 +1069,133 @@ class StreamingCorpusCurator(BatchDirs):
             t = t.withColumnRenamed("doc_id", key)
         return df.join(t, key, "anti")
 
+    def _tier_rows(
+        self,
+        tier: Tier,
+        exclude_batch: int | None = None,
+        committed: bool = False,
+    ) -> DataFrame:
+        """The whole of ``tier``: compacted rows ∪ live rows above the
+        watermark, minus the live tombstones when the tier is
+        doc-keyed. The live side is the replay-safe ``_read_state``
+        (batch ``exclude_batch`` left out) for the screens, or, with
+        ``committed``, only marker-committed dirs (the export: a
+        partial batch's rows must never ship)."""
+        base = os.path.join(self.base_dir, tier.name)
+        schema = self._schema(tier.name)
+        if committed:
+            live = self._read_committed(base, schema, lo=self._covered_upto())
+        else:
+            live = self._read_state(base, schema, exclude_batch)
+        rows = self._with_compacted(live, tier.name)
+        if tier.doc_key is None:
+            return rows
+        return self._minus_tombstones(rows, tier.doc_key, exclude_batch)
+
     def _index(self, exclude_batch: int | None = None) -> DataFrame:
-        live = self._read_state(self.grams_dir, self.grams_schema, exclude_batch)
-        return self._minus_tombstones(
-            self._with_compacted(live, "grams"), "doc_id", exclude_batch
-        )
+        return self._tier_rows(_GRAMS, exclude_batch)
 
     def _index_banded(self, exclude_batch: int | None = None) -> DataFrame:
-        live = self._read_state(self.banded_dir, self.banded_schema, exclude_batch)
-        return self._minus_tombstones(
-            self._with_compacted(live, "banded"), "doc_id", exclude_batch
-        )
+        return self._tier_rows(_BANDED, exclude_batch)
 
-    def _committed_ids_above(self, base: str, exclude: int | None) -> set[int]:
+    def _committed_ids(
+        self, base: str, lo: int, hi: int | None = None, exclude: int | None = None
+    ) -> set[int]:
+        return {self._batch_id_of(d) for d in self._committed_batch_dirs(base, lo, hi, exclude)}
+
+    def _covers(
+        self,
+        tier: Tier,
+        ids: set[int],
+        lo: int,
+        hi: int | None = None,
+        exclude: int | None = None,
+    ) -> bool:
+        """The covers-or-derive rule, for reads and compaction alike:
+        a monitor tier is used only when the compacted version carries
+        it and its committed batches in ``(lo, hi]`` are exactly
+        ``ids``, its source tier's. Otherwise the caller derives it
+        from the source, because a missing batch would silently skew
+        it (undercount the vocabulary, shift every quantile), and the
+        next compaction heals it. Tiers go missing in pre-feature
+        state or in a crash between the source write and the tier's."""
+        man = self._manifest()
+        if man is not None and man.get(tier.name) is None:
+            return False
+        base = os.path.join(self.base_dir, tier.name)
+        return self._committed_ids(base, lo, hi, exclude) == ids
+
+    def _fold(self, rows: DataFrame, tier: Tier, nonzero: bool = False) -> DataFrame:
+        """Merge a tier's rows by its ``fold``. ``nonzero`` (compaction)
+        drops sum rows that cancelled to 0: grams, length buckets and
+        domains whose docs were all evicted."""
+        if tier.fold == "concat":
+            return rows
+        if tier.fold == "distinct":
+            return rows.distinct()
+        key, *vals = StructType.fromDDL(self._schema(tier.name)).fields
+        agg = F.max if tier.fold == "max" else F.sum
+        out = rows.groupBy(key.name).agg(
+            *(agg(f.name).cast(f.dataType).alias(f.name) for f in vals)
+        )
+        if nonzero and tier.fold == "sum":
+            out = out.filter(F.col(vals[-1].name) != 0)
+        return out
+
+    def _derive(self, tier: Tier, src: DataFrame) -> DataFrame:
+        """A monitor tier's rows computed from its source rows (gram
+        rows for df and hll, accepted docs for hdr and DoReMi): the
+        derive half of the covers-or-derive rule."""
+        from ..operators.sketch import hdr_build, hll_build
+
+        if tier.name == "df":
+            return build_df_index(src)
+        if tier.name == "hll":
+            return hll_build(src.select("g"), key="g", m=VOCAB_HLL_M)
+        if tier.name == "hdr":
+            v = src.select(self._tc().alias("v"))
+            return hdr_build(v, "v", sub_bits=LEN_HDR_SUB_BITS)
+        return self._doremi_batch_rows(self._doremi_excess(src))
+
+    def _maintained(
+        self, tier: Tier, exclude_batch: int | None = None
+    ) -> DataFrame | None:
+        """The folded monitor tier when it covers its source tier
+        (``_covers``), else None. ``exclude_batch`` gives the
+        PRE-batch view a screen must consult, so a partial-commit
+        replay makes the identical decision."""
         upto = self._covered_upto()
-        return {
-            self._batch_id_of(d)
-            for d in self._committed_batch_dirs(base)
-            if self._batch_id_of(d) > upto and self._batch_id_of(d) != exclude
-        }
+        src = os.path.join(self.base_dir, tier.covers)
+        ids = self._committed_ids(src, upto, exclude=exclude_batch)
+        if not self._covers(tier, ids, upto, exclude=exclude_batch):
+            return None
+        base = os.path.join(self.base_dir, tier.name)
+        live = self._read_state(base, self._schema(tier.name), exclude_batch)
+        return self._fold(self._with_compacted(live, tier.name), tier)
+
+    def _monitor(self, tier: Tier, exclude_batch: int | None = None) -> DataFrame:
+        """The maintained tier, or ONE derive from its source rows when
+        it cannot prove it covers them."""
+        rows = self._maintained(tier, exclude_batch)
+        if rows is not None:
+            return rows
+        if tier.covers == "grams":
+            src = self._index(exclude_batch)
+        else:
+            src = self._accepted_excluding(exclude_batch)
+        if src is None:
+            return self.spark.createDataFrame([], self._schema(tier.name))
+        return self._derive(tier, src)
 
     def _index_df(self, exclude_batch: int | None = None) -> DataFrame | None:
         """Maintained (g, df) aggregate over the accepted corpus
         (round 7): the sum of per-batch kept-gram dfs — exact because
-        accepted doc-id sets are disjoint across batches. Returns
-        None (⇒ the screen falls back to the recount path) whenever
-        the df tier cannot prove it covers exactly the gram tier: a
-        live gram batch without its df partition (pre-round-7 state,
-        or a crash between the two writes), or a compacted tier whose
-        manifest predates df folding. The next compaction heals both
-        (it derives df from the full gram table when the fast fold is
-        not available), so a migrated curator converges back to the
-        maintained path instead of staying slow forever."""
-        man = self._manifest()
-        if man is not None and man.get("df") is None:
-            return None
-        if self._committed_ids_above(self.df_dir, exclude_batch) != (
-            self._committed_ids_above(self.grams_dir, exclude_batch)
-        ):
-            return None
-        live = self._read_state(self.df_dir, self.df_schema, exclude_batch)
-        full = self._with_compacted(live, "df")
-        return full.groupBy("g").agg(F.sum("df").cast("long").alias("df"))
-
-    def _compacted_hll(self) -> DataFrame | None:
-        man = self._manifest()
-        if man is None or man.get("hll") is None:
-            return None
-        return self.spark.read.schema(self.hll_schema).parquet(man["hll"]["path"])
+        accepted doc-id sets are disjoint across batches. None (⇒ the
+        screen falls back to the recount path) whenever the df tier
+        cannot prove it covers exactly the gram tier; the next
+        compaction heals it, so a migrated curator converges back to
+        the maintained path instead of staying slow forever."""
+        return self._maintained(_DF, exclude_batch)
 
     def vocab_estimate(self) -> float:
         """Approximate distinct-shingle count of the accepted corpus —
@@ -1072,105 +1205,55 @@ class StreamingCorpusCurator(BatchDirs):
         over <= VOCAB_HLL_M rows per committed batch + the compacted
         registers, never a corpus scan. Relative error ~1.04/sqrt(m)
         (~6.5% at 256). When the tier cannot prove it covers exactly
-        the gram tier (pre-feature state, or a crash between the gram
-        and hll writes), it falls back to ONE derive from the full
-        gram table — missing registers would silently UNDERcount, the
-        one direction a growth monitor must never err — and the next
-        compaction heals the tier. Text screens only."""
+        the gram tier, it falls back to ONE derive from the full gram
+        table — missing registers would silently UNDERcount, the one
+        direction a growth monitor must never err. Text screens
+        only."""
         if self.screen in ("embedding", "simhash"):
             raise ValueError(
                 "vocab_estimate applies to the shingle screens "
                 "(jaccard/minhash)"
             )
-        from ..operators.sketch import hll_build, hll_estimate
+        from ..operators.sketch import hll_estimate
 
-        man = self._manifest()
-        tier_ok = (man is None or man.get("hll") is not None) and (
-            self._committed_ids_above(self.hll_dir, None)
-            == self._committed_ids_above(self.grams_dir, None)
-        )
-        if tier_ok:
-            regs = self._read_state(self.hll_dir, self.hll_schema, None)
-            comp = self._compacted_hll()
-            if comp is not None:
-                regs = comp.unionByName(regs)
-            regs = regs.groupBy("bucket").agg(F.max("mreg").alias("mreg"))
-        else:
-            regs = hll_build(
-                self._index(None).select("g"), key="g", m=VOCAB_HLL_M
-            )
-        rows = hll_estimate(regs, m=VOCAB_HLL_M).collect()
+        rows = hll_estimate(self._monitor(_HLL), m=VOCAB_HLL_M).collect()
         return float(rows[0].est) if rows else 0.0
 
-    def _compacted_hdr(self) -> DataFrame | None:
-        man = self._manifest()
-        if man is None or man.get("hdr") is None:
-            return None
-        return self.spark.read.schema(self.hdr_schema).parquet(man["hdr"]["path"])
+    def _accepted_rows(
+        self, lo: int, hi: int | None = None, exclude: int | None = None
+    ) -> DataFrame | None:
+        """Compacted accepted rows ∪ the committed live accepted dirs
+        in ``(lo, hi]`` other than ``exclude``; None = no data. The
+        accepted tier has no fixed schema: it keeps the batches'
+        columns, with the ``ingest_batch`` layout column dropped."""
+        comp = self._compacted_state("accepted")
+        dirs = self._committed_batch_dirs(self.accepted_dir, lo, hi, exclude)
+        if not dirs:
+            return comp
+        live = (
+            self.spark.read.option("basePath", self.accepted_dir)
+            .parquet(*dirs)
+            .drop("ingest_batch")
+        )
+        return live if comp is None else comp.unionByName(live)
 
-    def _accepted_excluding(self, batch_id: int) -> DataFrame | None:
+    def _accepted_excluding(self, batch_id: int | None) -> DataFrame | None:
         """``accepted()`` minus one live batch partition — the derive-
         fallback source for pre-batch state reads. If compaction
         already folded ``batch_id`` into the compacted tier (replay of
         an old batch after compaction), the exclusion is best-effort:
         the compacted rows stay in (the model-refresh caveat — a late
         replay screens under the tier as of now). None = no data."""
-        man = self._manifest()
-        upto = man["covered_upto"] if man else -1
-        dirs = [
-            d
-            for d in self._committed_batch_dirs(self.accepted_dir)
-            if upto < self._batch_id_of(d) != batch_id
-        ]
-        parts = []
-        if dirs:
-            parts.append(
-                self.spark.read.option("basePath", self.accepted_dir)
-                .parquet(*dirs)
-                .drop("ingest_batch")
-            )
-        if man is not None:
-            parts.append(self.spark.read.parquet(man["accepted_path"]))
-        if not parts:
+        rows = self._accepted_rows(self._covered_upto(), exclude=batch_id)
+        if rows is None:
             return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return self._minus_tombstones(out, self.id_col, exclude_batch=batch_id)
+        return self._minus_tombstones(rows, self.id_col, exclude_batch=batch_id)
 
     def _length_sketch(self, exclude_batch: int | None = None) -> DataFrame:
         """Folded (idx, cnt) HDR buckets of the accepted corpus's
-        token counts: the maintained tier when it provably covers
-        exactly the accepted tier, else ONE derive from the accepted
-        corpus (missing buckets would silently shift every quantile;
-        the next compaction heals the tier). ``exclude_batch`` gives
-        the PRE-batch view — what a screen must consult so a partial-
-        commit replay makes the identical decision."""
-        from ..operators.sketch import hdr_build
-
-        man = self._manifest()
-        tier_ok = (man is None or man.get("hdr") is not None) and (
-            self._committed_ids_above(self.hdr_dir, exclude_batch)
-            == self._committed_ids_above(self.accepted_dir, exclude_batch)
-        )
-        if tier_ok:
-            sk = self._read_state(self.hdr_dir, self.hdr_schema, exclude_batch)
-            comp = self._compacted_hdr()
-            if comp is not None:
-                sk = comp.unionByName(sk)
-            return sk.groupBy("idx").agg(F.sum("cnt").alias("cnt"))
-        src = (
-            self.accepted()
-            if exclude_batch is None
-            else self._accepted_excluding(exclude_batch)
-        )
-        if src is None:
-            return self.spark.createDataFrame([], self.hdr_schema)
-        return hdr_build(
-            src.select(self._tc().alias("v")),
-            "v",
-            sub_bits=LEN_HDR_SUB_BITS,
-        )
+        token counts (``_monitor``: missing buckets would silently
+        shift every quantile)."""
+        return self._monitor(_HDR, exclude_batch)
 
     def length_quantiles(self, qs: list[float] | None = None) -> dict[float, int]:
         """Token-count quantiles of the ACCEPTED corpus from the
@@ -1194,54 +1277,40 @@ class StreamingCorpusCurator(BatchDirs):
         rows = hdr_quantiles(sk, qs, sub_bits=LEN_HDR_SUB_BITS).collect()
         return {float(r.q): int(r.est) for r in rows}
 
-    def _index_vec(self, exclude_batch: int | None = None) -> DataFrame:
-        """(vec_id, v, nv) view of the vec state whatever the storage
-        format — int8 state is dequantized on read (pure per-row
-        codegen), so the verify kernel downstream never changes."""
-        live = self._read_state(self.vec_dir, self.vec_schema, exclude_batch)
-        full = self._minus_tombstones(
-            self._with_compacted(live, "vec"), "vec_id", exclude_batch
-        )
+    def _decoded(self, vecs: DataFrame) -> DataFrame:
+        """(vec_id, v, nv) view of stored vec rows whatever the storage
+        format: int8 state is dequantized, pq state decoded (pure
+        per-row codegen), so the verify kernel, the re-signing and the
+        export never change."""
         if self.vec_format == "int8":
             from ..operators.similarity import dequantized_vecs
 
-            return dequantized_vecs(full)
+            return dequantized_vecs(vecs)
         if self.vec_format == "pq":
             from ..operators.pq import decoded_vecs
 
-            return decoded_vecs(full, self._require_pq_books())
-        return full
+            return decoded_vecs(vecs, self._require_pq_books())
+        return vecs
+
+    def _index_vec(self, exclude_batch: int | None = None) -> DataFrame:
+        return self._decoded(self._tier_rows(_VEC, exclude_batch))
 
     def _index_sig(self, exclude_batch: int | None = None) -> DataFrame:
-        live = self._read_state(self.sig_dir, self.sig_schema, exclude_batch)
-        return self._minus_tombstones(
-            self._with_compacted(live, "sig"), "vec_id", exclude_batch
-        )
+        return self._tier_rows(_SIG, exclude_batch)
 
     def _index_shsig(self, exclude_batch: int | None = None) -> DataFrame:
         """(doc_id, simhash) accepted-signature state of the simhash
         screen — 8 bytes/doc, the cheapest dedup index in the engine;
         rotation keys are DERIVED at probe time (a pure codegen
         projection over this table), so nothing else is stored."""
-        live = self._read_state(self.shsig_dir, self.shsig_schema, exclude_batch)
-        man = self._manifest()
-        if man is not None and man.get("shsig") is not None:
-            comp = self.spark.read.schema(self.shsig_schema).parquet(
-                man["shsig"]["path"]
-            )
-            live = comp.unionByName(live)
-        return self._minus_tombstones(live, "doc_id", exclude_batch)
+        return self._tier_rows(_SHSIG, exclude_batch)
 
     def _index_anchors(self, exclude_batch: int | None = None) -> DataFrame:
-        """(gh, g) claimed-anchor state of the substr screen —
-        compacted tier ∪ live committed batch dirs above the
-        watermark. No tombstone filter: the screen has no doc-grain
-        retention, and a claimed gram stays claimed (the keep-first
-        contract) for the stream's lifetime."""
-        live = self._read_state(
-            self.anchors_dir, self.anchors_schema, exclude_batch
-        )
-        return self._with_compacted(live, "anchors")
+        """(gh, g) claimed-anchor state of the substr screen. No
+        tombstone filter: the screen has no doc-grain retention, and a
+        claimed gram stays claimed (the keep-first contract) for the
+        stream's lifetime."""
+        return self._tier_rows(_ANCHORS, exclude_batch)
 
     def accepted(self) -> DataFrame:
         """Accepted corpus: compacted tier + COMMITTED live batch
@@ -1249,24 +1318,8 @@ class StreamingCorpusCurator(BatchDirs):
         with a live micro-batch, or after a crash before replay, never
         observes a partial batch's rows). The ``ingest_batch`` layout
         column is an implementation detail and is dropped."""
-        man = self._manifest()
-        upto = man["covered_upto"] if man else -1
-        dirs = [
-            d
-            for d in self._committed_batch_dirs(self.accepted_dir)
-            if self._batch_id_of(d) > upto
-        ]
-        live = None
-        if dirs:
-            live = (
-                self.spark.read.option("basePath", self.accepted_dir)
-                .parquet(*dirs)
-                .drop("ingest_batch")
-            )
-        comp = None
-        if man is not None:
-            comp = self.spark.read.parquet(man["accepted_path"])
-        if live is None and comp is None:
+        out = self._accepted_excluding(None)
+        if out is None:
             # preserves the pre-compaction error contract (reading an
             # empty curator raises PATH_NOT_FOUND, not silent-empty) —
             # but NEVER exposes a partial batch's rows: if uncommitted
@@ -1275,11 +1328,7 @@ class StreamingCorpusCurator(BatchDirs):
             if self._batch_dirs(self.accepted_dir):
                 raw = raw.where(F.lit(False))
             return raw.drop("ingest_batch")
-        if comp is None:
-            out = live
-        else:
-            out = comp if live is None else comp.unionByName(live)
-        return self._minus_tombstones(out, self.id_col)
+        return out
 
     def _tc(self):
         """Doc length in tokens with NULL text read as '' (round-12
@@ -1444,41 +1493,6 @@ class StreamingCorpusCurator(BatchDirs):
             )
         self._write_batch(verdicts, self.fineweb_dir, batch_id)
 
-    def _compacted_fineweb(self, man: dict | None = None) -> DataFrame | None:
-        """Compacted fineweb verdict rows under ``man`` (the caller's
-        already-read manifest — compaction passes its pre-flip
-        snapshot so the fold provably reads the tier it is folding;
-        read paths omit it and get the live manifest)."""
-        if man is None:
-            man = self._manifest()
-        if man is None or man.get("fineweb") is None:
-            return None
-        return self.spark.read.schema(self.fineweb_schema).parquet(
-            man["fineweb"]["path"]
-        )
-
-    def _fineweb_fold_for_compact(
-        self, man, old_upto: int, new_upto: int
-    ) -> DataFrame | None:
-        """Folded verdict rows for a compaction: previous compacted
-        rows + covered per-batch partitions, by CONCATENATION (the
-        rows are immutable per-doc facts — no aggregation; canonical
-        selection derives at read). Coverage is guaranteed by the
-        commit gate (the tier is in ``_state_tables`` when enabled,
-        so a batch only counts as fully committed WITH its verdict
-        partition); there is no healing derive — the ingress docs a
-        missing partition would need are gone, which is why the
-        constructor refuses mid-stream enablement."""
-        if not self.fineweb_recipe:
-            return None
-        full = self._read_committed(
-            self.fineweb_dir, self.fineweb_schema, old_upto, new_upto
-        )
-        comp = self._compacted_fineweb(man)
-        if comp is not None:
-            full = comp.unionByName(full)
-        return full
-
     def fineweb_funnel(self) -> DataFrame:
         """The maintained FineWeb funnel over every ingress doc
         processed so far: (doc_id, c4_kept, quality_kept, rep_kept,
@@ -1496,10 +1510,7 @@ class StreamingCorpusCurator(BatchDirs):
         aggregate + join at read, never at ingest."""
         if not self.fineweb_recipe:
             raise ValueError("fineweb_recipe is not enabled")
-        rows = self._read_state(self.fineweb_dir, self.fineweb_schema)
-        comp = self._compacted_fineweb()
-        if comp is not None:
-            rows = comp.unionByName(rows)
+        rows = self._tier_rows(_FINEWEB)
         cm = rows.groupBy("h").agg(
             F.min(F.when(F.col("pass"), F.col("doc_id"))).alias("cmin")
         )
@@ -1726,45 +1737,13 @@ class StreamingCorpusCurator(BatchDirs):
             )
         self._write_batch(rows, self.doremi_dir, batch_id)
 
-    def _compacted_doremi(self) -> DataFrame | None:
-        man = self._manifest()
-        if man is None or man.get("doremi") is None:
-            return None
-        return self.spark.read.schema(self.doremi_schema).parquet(
-            man["doremi"]["path"]
-        )
-
     def _doremi_tier(self, exclude_batch: int | None = None) -> DataFrame:
-        """Folded (dom, ex, n) excess tier of the accepted corpus: the
-        maintained tier when it provably covers exactly the accepted
-        tier, else ONE derive from the accepted corpus against the
-        stored LM (healing — the ``_length_sketch`` convention)."""
+        """Folded (dom, ex, n) excess tier of the accepted corpus
+        (``_monitor``: derived against the stored LM when the tier
+        cannot prove it covers the accepted tier)."""
         if self.doremi_lm_path is None:
             raise ValueError("doremi_lm_path is not configured")
-        man = self._manifest()
-        tier_ok = (man is None or man.get("doremi") is not None) and (
-            self._committed_ids_above(self.doremi_dir, exclude_batch)
-            == self._committed_ids_above(self.accepted_dir, exclude_batch)
-        )
-        if tier_ok:
-            t = self._read_state(
-                self.doremi_dir, self.doremi_schema, exclude_batch
-            )
-            comp = self._compacted_doremi()
-            if comp is not None:
-                t = comp.unionByName(t)
-            return t.groupBy("dom").agg(
-                F.sum("ex").cast("decimal(28,6)").alias("ex"),
-                F.sum("n").cast("long").alias("n"),
-            )
-        src = (
-            self.accepted()
-            if exclude_batch is None
-            else self._accepted_excluding(exclude_batch)
-        )
-        if src is None:
-            return self.spark.createDataFrame([], self.doremi_schema)
-        return self._doremi_batch_rows(self._doremi_excess(src))
+        return self._monitor(_DOREMI, exclude_batch)
 
     def doremi_lam(self) -> DataFrame:
         """(dom, excess) per-domain mean excess of the ACCEPTED corpus
@@ -2040,17 +2019,13 @@ class StreamingCorpusCurator(BatchDirs):
             # the rewritten ones), plus negative buckets for evicted
             # docs so the length_band quantiles track the surviving
             # corpus; additive, like the df tier
-            from ..operators.sketch import hdr_build
-
-            def lengths(df: DataFrame) -> DataFrame:
-                v = df.select(self._tc().alias("v"))
-                return hdr_build(v, "v", sub_bits=LEN_HDR_SUB_BITS)
-
-            hdr_rows = lengths(keep)
+            hdr_rows = self._derive(_HDR, keep)
             ev_docs = self._evicted_docs(evicted, batch_id)
             if ev_docs is not None:
                 hdr_rows = hdr_rows.unionByName(
-                    lengths(ev_docs).withColumn("cnt", (-F.col("cnt")).cast("long"))
+                    self._derive(_HDR, ev_docs).withColumn(
+                        "cnt", (-F.col("cnt")).cast("long")
+                    )
                 )
             self._write_batch(hdr_rows, self.hdr_dir, batch_id)
         if self.doremi_dir in pending:
@@ -2342,13 +2317,7 @@ class StreamingCorpusCurator(BatchDirs):
         if self.hll_dir in pending:
             # <= VOCAB_HLL_M vocabulary registers per batch; the
             # register-max merge makes the tier trivially replay-safe
-            from ..operators.sketch import hll_build
-
-            self._write_batch(
-                hll_build(keep_grams.select("g"), key="g", m=VOCAB_HLL_M),
-                self.hll_dir,
-                batch_id,
-            )
+            self._write_batch(self._derive(_HLL, keep_grams), self.hll_dir, batch_id)
         if multi_consumers:
             keep_grams.unpersist()
 
@@ -2360,18 +2329,22 @@ class StreamingCorpusCurator(BatchDirs):
         tier only once each of them holds it. Tombstones are decision
         state and FineWeb verdicts are underivable after the batch, so
         both gate when enabled."""
-        tables = [self.accepted_dir, *self.index_tiers]
+        tables = [self.accepted_dir]
+        tables += [os.path.join(self.base_dir, t.name) for t in self.index_tiers]
         if self.retention == "best":
             tables.append(self.tomb_dir)
         if self.fineweb_recipe:
             tables.append(self.fineweb_dir)
         return tables
 
+    def _monitor_dirs(self) -> list[str]:
+        return [os.path.join(self.base_dir, t.name) for t in self.monitor_tiers]
+
     def _batch_tiers(self) -> list[str]:
         """Every tier ``process_batch`` writes for this configuration:
         the commit-gated ones plus the best-effort monitor, DoReMi and
         funnel tiers."""
-        tiers = self._state_tables() + self.monitor_tiers
+        tiers = self._state_tables() + self._monitor_dirs()
         if self.doremi_lm_path is not None:
             tiers.append(self.doremi_dir)
         if self.track_funnel:
@@ -2384,117 +2357,51 @@ class StreamingCorpusCurator(BatchDirs):
         since the last compaction."""
         if self.compact_after is None:
             return False
-        upto = self._covered_upto()
-        residual = [
-            d
-            for d in self._committed_batch_dirs(self.index_tiers[0])
-            if self._batch_id_of(d) > upto
-        ]
-        if len(residual) <= self.compact_after:
+        first = os.path.join(self.base_dir, self.index_tiers[0].name)
+        if len(self._committed_batch_dirs(first, self._covered_upto())) <= self.compact_after:
             return False
         return self.compact()
 
-    def _hdr_fold_for_compact(
-        self, man, old_upto: int, new_upto: int, fully: set, acc_path: str
-    ):
-        """Folded (idx, cnt) HDR rows for a compaction: the additive
-        fast fold over previous compacted buckets + covered per-batch
-        buckets (negative eviction deltas cancel exactly), or — when
-        any covered batch lacks its hdr partition — ONE derive from
-        the just-written tombstone-filtered accepted corpus (healing,
-        like the df/hll tiers)."""
-        covered_hdr = {
-            self._batch_id_of(d)
-            for d in self._committed_batch_dirs(self.hdr_dir)
-            if old_upto < self._batch_id_of(d) <= new_upto
-        }
-        if fully <= covered_hdr and (man is None or man.get("hdr") is not None):
-            hdr_full = self._read_committed(
-                self.hdr_dir, self.hdr_schema, old_upto, new_upto
-            )
-            comp_hdr = self._compacted_hdr()
-            if comp_hdr is not None:
-                hdr_full = comp_hdr.unionByName(hdr_full)
-            return hdr_full.groupBy("idx").agg(
-                F.sum("cnt").cast("long").alias("cnt")
-            ).filter(F.col("cnt") != 0)  # fully-evicted length buckets
-        from ..operators.sketch import hdr_build
-
-        return hdr_build(
-            self.spark.read.parquet(acc_path).select(
-                self._tc().alias("v")
-            ),
-            "v",
-            sub_bits=LEN_HDR_SUB_BITS,
-        )
-
-    def _doremi_fold_for_compact(
-        self, man, old_upto: int, new_upto: int, fully: set, acc_path: str
-    ):
-        """Folded (dom, ex, n) DoReMi excess rows for a compaction —
-        the additive fast fold over previous compacted rows + covered
-        per-batch partials (negative eviction deltas cancel exactly),
-        or ONE healing derive from the just-written accepted corpus
-        against the stored LM when any covered batch lacks its
-        partition (the hdr convention). None when the tier is not
-        configured."""
-        if self.doremi_lm_path is None:
-            return None
-        covered = {
-            self._batch_id_of(d)
-            for d in self._committed_batch_dirs(self.doremi_dir)
-            if old_upto < self._batch_id_of(d) <= new_upto
-        }
-        if fully <= covered and (man is None or man.get("doremi") is not None):
-            full = self._read_committed(
-                self.doremi_dir, self.doremi_schema, old_upto, new_upto
-            )
-            comp = self._compacted_doremi()
-            if comp is not None:
-                full = comp.unionByName(full)
-            return (
-                full.groupBy("dom")
-                .agg(
-                    F.sum("ex").cast("decimal(28,6)").alias("ex"),
-                    F.sum("n").cast("long").alias("n"),
-                )
-                .filter(F.col("n") != 0)  # fully-evicted domains drop
-            )
-        return self._doremi_batch_rows(
-            self._doremi_excess(self.spark.read.parquet(acc_path))
-        )
-
     def compact(self) -> bool:
-        """Fold every FULLY-committed batch directory into the
-        compacted tier: versioned external bucketed tables in the
-        canonical ``write_ngram_index`` / ``write_minhash_index``
-        layout, committed by an atomic manifest flip; folded
-        directories are deleted ONE COMPACTION LATER (reader grace —
-        see ``_cleanup_covered``).
+        """Fold every FULLY-committed batch directory into a new
+        compacted version and commit it by one atomic manifest flip.
+
+        One loop over the screen's tier table (``_compacted_tiers``):
+        each tier's previous compacted rows plus its covered committed
+        live rows, minus the covered tombstones for doc-keyed tiers
+        (evicted rows never reach a folded table), merged by the
+        tier's fold — concatenation (grams, banded, vec, sig, shsig,
+        FineWeb verdicts), distinct union (substr anchors), sum with
+        cancelled rows dropped (df, hdr, DoReMi) or register max (hll).
+        A monitor tier that does not cover every folded batch is
+        derived from the version's own source tier instead
+        (``_covers``: the written grams for df/hll, the written
+        accepted corpus for hdr/DoReMi), which heals pre-feature state.
+        ``_write_version`` then writes each tier as its bucketed
+        catalog table (the ``write_ngram_index`` /
+        ``write_minhash_index`` layout batch probes consume) or plain
+        parquet dir under ``v<k>/``, flips the manifest and cleans up.
 
         Crash-safe at every step: before the flip the previous
         manifest (or none) stays live and all directories remain — a
         replayed ``process_batch`` or a re-run ``compact()`` sees
         unchanged state; after the flip, reads exclude covered
         partitions (watermark filter) whether or not their directories
-        were cleaned up yet. One predecessor version is retained for
-        lazy-DataFrame reader grace, older versions are dropped.
+        were cleaned up yet. Folded directories are deleted ONE
+        COMPACTION LATER and one predecessor version is retained, both
+        as reader grace for lazy DataFrames. A batch committed in some
+        state tables but not all, below the new watermark, refuses the
+        compaction until it is replayed.
 
         Returns False when there is nothing new to fold."""
-        from ..operators.dedup import write_minhash_index, write_ngram_index
-
         man = self._manifest()
         old_upto = man["covered_upto"] if man else -1
-        version = man["version"] + 1 if man else 0
         # a batch counts only when committed in EVERY state table —
         # a partially-committed batch (crash mid-process_batch, not
         # yet replayed) must neither fold nor sit below the watermark
-        per_table = [
-            {self._batch_id_of(d) for d in self._committed_batch_dirs(b)}
-            for b in self._state_tables()
-        ]
-        fully = set.intersection(*per_table) if per_table else set()
-        fully = {i for i in fully if i > old_upto}
+        fully = set.intersection(
+            *(self._committed_ids(b, old_upto) for b in self._state_tables())
+        )
         if not fully:
             self._cleanup_covered(old_upto)  # resume an interrupted cleanup
             return False
@@ -2512,46 +2419,66 @@ class StreamingCorpusCurator(BatchDirs):
                 f"the compaction watermark {new_upto}; replay them (restart "
                 "the stream) before compacting"
             )
+        tombs = None
+        if self.retention == "best":
+            tombs = self._read_committed(
+                self.tomb_dir, self.tomb_schema, old_upto, new_upto
+            )
 
+        def minus_tombs(rows: DataFrame, key: str | None) -> DataFrame:
+            if tombs is None or key is None:
+                return rows
+            return rows.join(tombs.withColumnRenamed("doc_id", key), key, "anti")
+
+        def fold(tier: Tier, building: dict) -> DataFrame:
+            if tier.covers and not self._covers(tier, fully, old_upto, new_upto):
+                return self._derive(
+                    tier, self._compacted_state(tier.covers, building)
+                )
+            base = os.path.join(self.base_dir, tier.name)
+            live = self._read_committed(
+                base, self._schema(tier.name), old_upto, new_upto
+            )
+            rows = minus_tombs(self._with_compacted(live, tier.name), tier.doc_key)
+            return self._fold(rows, tier, nonzero=True)
+
+        accepted = self._accepted_rows(old_upto, new_upto)
+        self._write_version(
+            man, new_upto, minus_tombs(accepted, self.id_col), fold
+        )
+        return True
+
+    def _write_version(
+        self,
+        man: dict | None,
+        covered_upto: int,
+        accepted: DataFrame,
+        rows: Callable[[Tier, dict], DataFrame],
+        record: dict | None = None,
+    ) -> None:
+        """The one version cutover of ``compact``,
+        ``rollover_geometry`` and ``migrate_vec_format``: create
+        ``v<k>/`` (clearing a crashed attempt's leftovers), write the
+        accepted tier, then every compacted tier — ``rows(tier,
+        manifest_so_far)`` gives its rows — and record each in the
+        manifest, over the base record (watermark, policy, and for the
+        embedding screen the geometry and vec-format records, which
+        ``record`` overrides). Then flip the manifest, adopt its
+        records, delete the batch dirs the PREVIOUS watermark covered
+        (the ones folded now survive one generation as reader grace;
+        reads already skip them via the watermark) and drop versions
+        older than the predecessor."""
+        from ..operators.bucketing import write_bucketed
+
+        version = man["version"] + 1 if man else 0
         vdir = os.path.join(self.compacted_dir, f"v{version}")
         self._delete_dir(vdir)  # leftovers of a crashed attempt at v<k>
         pfx = f"{self.catalog_prefix}_v{version}"
-
-        # accepted corpus: previous compacted + newly covered batches
         acc_path = os.path.join(vdir, "accepted")
-        acc_dirs = [
-            d
-            for d in self._committed_batch_dirs(self.accepted_dir)
-            if old_upto < self._batch_id_of(d) <= new_upto
-        ]
-        acc_new = (
-            self.spark.read.option("basePath", self.accepted_dir)
-            .parquet(*acc_dirs)
-            .drop("ingest_batch")
-        )
-        if man is not None:
-            acc_new = self.spark.read.parquet(man["accepted_path"]).unionByName(
-                acc_new
-            )
-        # retention='best': apply the COVERED tombstones physically —
-        # the folded tables never contain evicted rows, so their dirs
-        # can be swept with the other folded dirs; tombstones above
-        # the new watermark stay live and keep filtering reads
-        covered_tombs = None
-        if self.retention == "best":
-            covered_tombs = self._read_committed(
-                self.tomb_dir, self.tomb_schema, old_upto, new_upto
-            )
-            acc_new = acc_new.join(
-                covered_tombs.withColumnRenamed("doc_id", self.id_col),
-                self.id_col,
-                "anti",
-            )
-        acc_new.write.mode("overwrite").parquet(acc_path)
-
-        manifest = {
+        accepted.write.mode("overwrite").parquet(acc_path)
+        new = {
             "version": version,
-            "covered_upto": new_upto,
+            "covered_upto": covered_upto,
             "n_buckets": self.n_buckets,
             "accepted_path": acc_path,
             "banded": None,
@@ -2559,310 +2486,77 @@ class StreamingCorpusCurator(BatchDirs):
         }
         if self.screen == "embedding":
             # geometry travels IN the manifest (round 7): the sig
-            # tables this version holds were signed under it, and
-            # rollover_geometry's atomic flip replaces record and
-            # tables together — attach resolves geometry manifest-first
-            manifest["geometry"] = {
+            # tables a version holds were signed under it, so a
+            # cutover replaces record and tables in one flip — attach
+            # resolves geometry and vec format manifest-first
+            new["geometry"] = {
                 "num_planes": self.num_planes,
                 "num_tables": self.num_tables,
             }
-            manifest.update(self._vec_format_record())
-            from ..operators.dedup import write_embedding_index
-
-            def _full(kind, base, schema):
-                cur = self._read_committed(base, schema, old_upto, new_upto)
-                comp = self._compacted_state(kind)
-                out = cur if comp is None else comp.unionByName(cur)
-                if covered_tombs is not None:
-                    out = out.join(
-                        covered_tombs.withColumnRenamed("doc_id", "vec_id"),
-                        "vec_id",
-                        "anti",
-                    )
-                return out
-
-            write_embedding_index(
-                _full("vec", self.vec_dir, self.vec_schema),
-                _full("sig", self.sig_dir, self.sig_schema),
-                pfx,
-                n_buckets=self.n_buckets,
-                path_prefix=os.path.join(vdir, "idx"),
-            )
-            manifest["vec"] = {
-                "table": f"{pfx}_vec",
-                "path": os.path.join(vdir, "idx_vec"),
-                "keys": ["vec_id"],
-            }
-            manifest["sig"] = {
-                "table": f"{pfx}_sig",
-                "path": os.path.join(vdir, "idx_sig"),
-                "keys": ["tbl", "bucket"],
-            }
-            self._flip_manifest(manifest)
-            self._cleanup_covered(old_upto)
-            self._drop_old_versions(version)
-            return True
-
-        if self.screen == "simhash":
-            # the whole dedup state is one (doc_id, simhash) table —
-            # fold live committed rows onto the compacted tier, apply
-            # covered tombstones physically, flip, clean up. No
-            # bucketing: the probe derives rotation keys in-scan over
-            # the 8-byte signature column.
-            sh_full = self._read_committed(
-                self.shsig_dir, self.shsig_schema, old_upto, new_upto
-            )
-            if man is not None and man.get("shsig") is not None:
-                sh_full = self.spark.read.schema(self.shsig_schema).parquet(
-                    man["shsig"]["path"]
-                ).unionByName(sh_full)
-            if covered_tombs is not None:
-                sh_full = sh_full.join(covered_tombs, "doc_id", "anti")
-            sh_path = os.path.join(vdir, "shsig")
-            sh_full.write.mode("overwrite").parquet(sh_path)
-            manifest["shsig"] = {"path": sh_path}
-            hdr_full = self._hdr_fold_for_compact(
-                man, old_upto, new_upto, fully, acc_path
-            )
-            hdr_path = os.path.join(vdir, "hdr")
-            hdr_full.write.mode("overwrite").parquet(hdr_path)
-            manifest["hdr"] = {"path": hdr_path}
-            dr_full = self._doremi_fold_for_compact(
-                man, old_upto, new_upto, fully, acc_path
-            )
-            if dr_full is not None:
-                dr_path = os.path.join(vdir, "doremi")
-                dr_full.write.mode("overwrite").parquet(dr_path)
-                manifest["doremi"] = {"path": dr_path}
-            fw_full = self._fineweb_fold_for_compact(man, old_upto, new_upto)
-            if fw_full is not None:
-                fw_path = os.path.join(vdir, "fineweb")
-                fw_full.write.mode("overwrite").parquet(fw_path)
-                manifest["fineweb"] = {"path": fw_path}
-            self._flip_manifest(manifest)
-            self._cleanup_covered(old_upto)
-            self._drop_old_versions(version)
-            return True
-
-        if self.screen == "substr":
-            # the dedup state is one (gh, g) claimed-anchor table —
-            # fold live committed rows onto the compacted tier with a
-            # DISTINCT union (batches claim disjoint fresh anchors by
-            # construction; distinct makes a crash-window double-fold
-            # harmless), flip, clean up. No tombstones: the screen
-            # has no doc-grain retention.
-            an_full = self._read_committed(
-                self.anchors_dir, self.anchors_schema, old_upto, new_upto
-            )
-            comp_an = self._compacted_state("anchors")
-            if comp_an is not None:
-                an_full = comp_an.unionByName(an_full)
-            # bucketed+sorted by the EXACT probe-join key set (gh, g)
-            # — the write_ngram_index discipline: the index side of
-            # the per-batch anti-join then feeds the SMJ straight
-            # from the bucketed scan with no Exchange and no Sort
-            # (co-partitioning needs the exact key set — a gh-only
-            # bucket satisfies the join's ClusteredDistribution but
-            # is not compatible with the batch side's (gh, g)
-            # partitioning, so Spark would re-shuffle the index
-            # anyway; plan-asserted in test_curator_substr). At
-            # 100 TB this is the difference between shuffling the
-            # stored index every crawl batch and never moving it.
-            from ..operators.bucketing import write_bucketed
-
-            an_path = os.path.join(vdir, "anchors")
-            write_bucketed(
-                an_full.distinct(),
-                f"{pfx}_anchors",
-                ["gh", "g"],
-                n_buckets=self.n_buckets,
-                path=an_path,
-            )
-            manifest["anchors"] = {
-                "table": f"{pfx}_anchors",
-                "path": an_path,
-                "keys": ["gh", "g"],
-            }
-            hdr_full = self._hdr_fold_for_compact(
-                man, old_upto, new_upto, fully, acc_path
-            )
-            hdr_path = os.path.join(vdir, "hdr")
-            hdr_full.write.mode("overwrite").parquet(hdr_path)
-            manifest["hdr"] = {"path": hdr_path}
-            dr_full = self._doremi_fold_for_compact(
-                man, old_upto, new_upto, fully, acc_path
-            )
-            if dr_full is not None:
-                dr_path = os.path.join(vdir, "doremi")
-                dr_full.write.mode("overwrite").parquet(dr_path)
-                manifest["doremi"] = {"path": dr_path}
-            fw_full = self._fineweb_fold_for_compact(man, old_upto, new_upto)
-            if fw_full is not None:
-                fw_path = os.path.join(vdir, "fineweb")
-                fw_full.write.mode("overwrite").parquet(fw_path)
-                manifest["fineweb"] = {"path": fw_path}
-            self._flip_manifest(manifest)
-            self._cleanup_covered(old_upto)
-            self._drop_old_versions(version)
-            return True
-
-        # shingle index (+ banded) in the canonical bucketed layout
-        grams_full = self._read_committed(
-            self.grams_dir, self.grams_schema, old_upto, new_upto
-        )
-        comp_grams = self._compacted_state("grams")
-        if comp_grams is not None:
-            grams_full = comp_grams.unionByName(grams_full)
-        if covered_tombs is not None:
-            grams_full = grams_full.join(covered_tombs, "doc_id", "anti")
-        if self.screen == "minhash":
-            banded_full = self._read_committed(
-                self.banded_dir, self.banded_schema, old_upto, new_upto
-            )
-            comp_banded = self._compacted_state("banded")
-            if comp_banded is not None:
-                banded_full = comp_banded.unionByName(banded_full)
-            if covered_tombs is not None:
-                banded_full = banded_full.join(covered_tombs, "doc_id", "anti")
-            write_minhash_index(
-                grams_full,
-                None,
-                pfx,
-                num_bands=self.num_bands,
-                rows_per_band=self.num_hashes // self.num_bands,
-                n_buckets=self.n_buckets,
-                banded=banded_full,
-                path_prefix=os.path.join(vdir, "idx"),
-            )
-            manifest["grams"] = {
-                "table": f"{pfx}_grams",
-                "path": os.path.join(vdir, "idx_grams"),
-                "keys": ["doc_id"],
-            }
-            manifest["banded"] = {
-                "table": f"{pfx}_banded",
-                "path": os.path.join(vdir, "idx_banded"),
-                "keys": ["band", "bucket"],
-            }
-        else:
-            write_ngram_index(
-                grams_full,
-                f"{pfx}_grams_by_g",
-                n_buckets=self.n_buckets,
-                path=os.path.join(vdir, "grams_by_g"),
-            )
-            manifest["grams"] = {
-                "table": f"{pfx}_grams_by_g",
-                "path": os.path.join(vdir, "grams_by_g"),
-                "keys": ["g"],
-            }
-            # maintained df tier (round 7): fast fold (sum of previous
-            # compacted df + covered per-batch dfs) when every covered
-            # batch carries its df partition and the predecessor tier
-            # has df; otherwise DERIVE from the full gram table — one
-            # O(corpus) aggregate inside an already-O(corpus)
-            # compaction, which heals pre-df state so the per-batch
-            # screen converges back to the maintained path
-            covered_df = {
-                self._batch_id_of(d)
-                for d in self._committed_batch_dirs(self.df_dir)
-                if old_upto < self._batch_id_of(d) <= new_upto
-            }
-            if fully <= covered_df and (man is None or man.get("df") is not None):
-                df_full = self._read_committed(
-                    self.df_dir, self.df_schema, old_upto, new_upto
-                )
-                comp_df = self._compacted_state("df")
-                if comp_df is not None:
-                    df_full = comp_df.unionByName(df_full)
-                df_full = df_full.groupBy("g").agg(
-                    F.sum("df").cast("long").alias("df")
-                ).filter(F.col("df") != 0)  # fully-evicted grams
-            else:
-                df_full = build_df_index(grams_full)
-            from ..operators.bucketing import write_bucketed
-
-            write_bucketed(
-                df_full,
-                f"{pfx}_df_by_g",
-                ["g"],
-                n_buckets=self.n_buckets,
-                path=os.path.join(vdir, "df_by_g"),
-            )
-            manifest["df"] = {
-                "table": f"{pfx}_df_by_g",
-                "path": os.path.join(vdir, "df_by_g"),
-                "keys": ["g"],
-            }
-
-        # vocabulary-HLL monitor tier (round 7, both text screens):
-        # fast fold = register-max over previous compacted registers +
-        # covered per-batch registers; when any covered batch lacks
-        # its hll partition (pre-feature state / crash window) DERIVE
-        # from the full gram table — healing, like the df tier. The
-        # result is <= VOCAB_HLL_M rows: plain parquet, no bucketing.
-        covered_hll = {
-            self._batch_id_of(d)
-            for d in self._committed_batch_dirs(self.hll_dir)
-            if old_upto < self._batch_id_of(d) <= new_upto
-        }
-        if fully <= covered_hll and (man is None or man.get("hll") is not None):
-            hll_full = self._read_committed(
-                self.hll_dir, self.hll_schema, old_upto, new_upto
-            )
-            comp_hll = self._compacted_hll()
-            if comp_hll is not None:
-                hll_full = comp_hll.unionByName(hll_full)
-            hll_full = hll_full.groupBy("bucket").agg(
-                F.max("mreg").alias("mreg")
-            )
-        else:
-            from ..operators.sketch import hll_build
-
-            hll_full = hll_build(
-                grams_full.select("g"), key="g", m=VOCAB_HLL_M
-            )
-        hll_path = os.path.join(vdir, "hll")
-        hll_full.write.mode("overwrite").parquet(hll_path)
-        manifest["hll"] = {"path": hll_path}
-
-        # doc-length HDR monitor tier (round 7): additive fast fold
-        # or healing derive — shared with the simhash branch
-        hdr_full = self._hdr_fold_for_compact(man, old_upto, new_upto, fully, acc_path)
-        hdr_path = os.path.join(vdir, "hdr")
-        hdr_full.write.mode("overwrite").parquet(hdr_path)
-        manifest["hdr"] = {"path": hdr_path}
-
-        # DoReMi per-domain excess tier (round 10): additive fast fold
-        # or healing derive — shared with the simhash branch
-        dr_full = self._doremi_fold_for_compact(
-            man, old_upto, new_upto, fully, acc_path
-        )
-        if dr_full is not None:
-            dr_path = os.path.join(vdir, "doremi")
-            dr_full.write.mode("overwrite").parquet(dr_path)
-            manifest["doremi"] = {"path": dr_path}
-
-        # FineWeb verdict tier (round 11): concatenation fold —
-        # shared with the simhash branch
-        fw_full = self._fineweb_fold_for_compact(man, old_upto, new_upto)
-        if fw_full is not None:
-            fw_path = os.path.join(vdir, "fineweb")
-            fw_full.write.mode("overwrite").parquet(fw_path)
-            manifest["fineweb"] = {"path": fw_path}
-
-        self._flip_manifest(manifest)
-
-        # delete only dirs covered by the PREVIOUS watermark: the ones
-        # folded by THIS compaction survive one generation as reader
-        # grace (a lazy DataFrame resolved against committed live dirs
-        # pre-flip stays readable until the next compaction), mirroring
-        # _drop_old_versions' one-predecessor retention. Reads already
-        # exclude covered partitions via the watermark filter, so the
-        # retained dirs are never double-counted.
-        self._cleanup_covered(old_upto)
+            new.update(self._vec_format_record())
+        new.update(record or {})
+        for tier in self._compacted_tiers():
+            df = rows(tier, new)
+            path = os.path.join(vdir, tier.vpath)
+            if tier.table is None:
+                df.write.mode("overwrite").parquet(path)
+                new[tier.name] = {"path": path}
+                continue
+            table = f"{pfx}_{tier.table}"
+            write_bucketed(df, table, tier.keys, n_buckets=self.n_buckets, path=path)
+            new[tier.name] = {"table": table, "path": path, "keys": list(tier.keys)}
+        self._flip_manifest(new)
+        self._adopt(new)
+        self._cleanup_covered(man["covered_upto"] if man else -1)
         self._drop_old_versions(version)
-        return True
+
+    def _adopt(self, rec: dict) -> None:
+        """Take a cutover's frozen embedding records (geometry, vec
+        format) into this instance and heal the sidecar: after a
+        manifest flip, or as the whole cutover when nothing is stored
+        yet."""
+        if "geometry" in rec:
+            g = rec["geometry"]
+            self.num_planes, self.num_tables = g["num_planes"], g["num_tables"]
+        if "vec_format" in rec:
+            self.vec_format = rec["vec_format"]
+            self.vec_schema = self._vec_schema_for(self.vec_format, self.id_type)
+        self._write_geometry_sidecar()
+
+    def _compact_for_cutover(self, what: str) -> dict | None:
+        """``compact()``, then refuse a cutover over committed vec/sig
+        state above the watermark: compaction folds every full batch,
+        so that can only be a partial batch a crash left behind, and
+        its already-committed table would NOT be rewritten on replay —
+        it would smuggle old-format rows past the cutover. Returns the
+        manifest to cut over from (None = nothing stored yet)."""
+        self.compact()
+        man = self._manifest()
+        upto = self._covered_upto()
+        leftovers = self._committed_ids(self.vec_dir, upto) | self._committed_ids(
+            self.sig_dir, upto
+        )
+        if leftovers:
+            raise RuntimeError(
+                f"batches {sorted(leftovers)} are partially committed; "
+                f"replay them (restart the stream) before a {what}"
+            )
+        return man
+
+    def _signed(self, vecs: DataFrame, num_planes: int, num_tables: int) -> DataFrame:
+        """(vec_id, tbl, bucket) signatures of canonical (vec_id, v)
+        rows under the given geometry."""
+        from ..operators.similarity import hyperplane_signatures_multi
+
+        return hyperplane_signatures_multi(
+            vecs,
+            dim=self.emb_dim,
+            num_planes=num_planes,
+            num_tables=num_tables,
+            seed=self.seed,
+            id_col="vec_id",
+            vec_col="v",
+        )
 
     def rollover_geometry(
         self,
@@ -2888,11 +2582,12 @@ class StreamingCorpusCurator(BatchDirs):
            state precisely so signatures are derivable) under the new
            geometry with one ``hyperplane_signatures_multi`` pass.
         3. Write a NEW compacted version (vec unchanged, sig re-signed,
-           accepted rewritten) and flip the manifest atomically — the
-           manifest carries the geometry record, so sig tables and
-           their geometry change together; readers see the old version
-           or the new, never a mix. The sidecar heals after the flip
-           (and on any later attach, where the manifest record wins).
+           accepted rewritten) through ``_write_version``, compaction's
+           own cutover — the manifest carries the geometry record, so
+           sig tables and their geometry change together; readers see
+           the old version or the new, never a mix. The sidecar heals
+           after the flip (and on any later attach, where the manifest
+           record wins).
 
         New geometry: explicit ``num_planes``/``num_tables``, or
         ``lsh_auto_geometry(expected_corpus)``, or — with no args —
@@ -2904,10 +2599,7 @@ class StreamingCorpusCurator(BatchDirs):
         like every state mutation on this directory."""
         if self.screen != "embedding":
             raise ValueError("rollover_geometry applies to screen='embedding'")
-        from ..operators.similarity import (
-            hyperplane_signatures_multi,
-            lsh_auto_geometry,
-        )
+        from ..operators.similarity import lsh_auto_geometry
 
         if num_planes is not None or num_tables is not None:
             new_p = self.num_planes if num_planes is None else num_planes
@@ -2919,98 +2611,26 @@ class StreamingCorpusCurator(BatchDirs):
             new_p, new_t = lsh_auto_geometry(max(n, 2), threshold=self.threshold)
         if (new_p, new_t) == (self.num_planes, self.num_tables):
             return False
-
-        self.compact()  # folds everything fully-committed (or no-ops)
-        man = self._manifest()
-        # committed state above the watermark can only be a partial
-        # batch a crash left behind (compact folds full ones): its
-        # already-committed table would NOT be rewritten on replay, so
-        # it would smuggle old-geometry rows past the cutover — refuse,
-        # same protocol as compact()'s partial check
-        leftovers = self._committed_ids_above(
-            self.vec_dir, None
-        ) | self._committed_ids_above(self.sig_dir, None)
-        if leftovers:
-            raise RuntimeError(
-                f"batches {sorted(leftovers)} are partially committed; "
-                "replay them (restart the stream) before a geometry rollover"
-            )
+        geometry = {"geometry": {"num_planes": new_p, "num_tables": new_t}}
+        man = self._compact_for_cutover("geometry rollover")
         if man is None:
             # nothing signed yet: re-freezing the sidecar IS the cutover
-            self.num_planes, self.num_tables = new_p, new_t
-            self._write_geometry_sidecar()
+            self._adopt(geometry)
             return True
-
-        from ..operators.dedup import write_embedding_index
-
-        version = man["version"] + 1
-        vdir = os.path.join(self.compacted_dir, f"v{version}")
-        self._delete_dir(vdir)  # leftovers of a crashed attempt
-        pfx = f"{self.catalog_prefix}_v{version}"
-
-        acc_path = os.path.join(vdir, "accepted")
-        self.spark.read.parquet(man["accepted_path"]).write.mode(
-            "overwrite"
-        ).parquet(acc_path)
         vecs = self._compacted_state("vec")
-        sign_src = vecs
-        if self.vec_format == "int8":
-            # the stored codes ARE the canonical vectors: re-sign from
-            # the same dequantized v̂ the original signatures used
-            from ..operators.similarity import dequantized_vecs
-
-            sign_src = dequantized_vecs(vecs)
-        elif self.vec_format == "pq":
-            from ..operators.pq import decoded_vecs
-
-            sign_src = decoded_vecs(vecs, self._require_pq_books())
-        sigs_new = hyperplane_signatures_multi(
-            sign_src,
-            dim=self.emb_dim,
-            num_planes=new_p,
-            num_tables=new_t,
-            seed=self.seed,
-            id_col="vec_id",
-            vec_col="v",
+        tiers = {"vec": vecs, "sig": self._signed(self._decoded(vecs), new_p, new_t)}
+        self._write_version(
+            man,
+            man["covered_upto"],
+            self._compacted_state("accepted"),
+            lambda tier, _: tiers[tier.name],
+            record=geometry,
         )
-        write_embedding_index(
-            vecs,
-            sigs_new,
-            pfx,
-            n_buckets=self.n_buckets,
-            path_prefix=os.path.join(vdir, "idx"),
-        )
-        manifest = {
-            "version": version,
-            "covered_upto": man["covered_upto"],
-            "n_buckets": self.n_buckets,
-            "accepted_path": acc_path,
-            "banded": None,
-            **self._policy_record(),
-            "geometry": {"num_planes": new_p, "num_tables": new_t},
-            **self._vec_format_record(),
-            "vec": {
-                "table": f"{pfx}_vec",
-                "path": os.path.join(vdir, "idx_vec"),
-                "keys": ["vec_id"],
-            },
-            "sig": {
-                "table": f"{pfx}_sig",
-                "path": os.path.join(vdir, "idx_sig"),
-                "keys": ["tbl", "bucket"],
-            },
-        }
-        self._flip_manifest(manifest)
-
-        self.num_planes, self.num_tables = new_p, new_t
-        self._write_geometry_sidecar()
-        self._cleanup_covered(man["covered_upto"])
-        self._drop_old_versions(version)
         return True
 
     def migrate_vec_format(self, new_format: str = "int8") -> bool:
         """Versioned migration of the stored vec state to a new
-        format (round 8 — r7 verdict #2): the same cutover protocol as
+        format (round 8 — r7 verdict #2): the same cutover as
         ``rollover_geometry``, because it is the same hazard class — a
         format change swaps the CANONICAL vector (float64 v → int8
         v̂), so signatures must be re-derived from the new canon in
@@ -3020,11 +2640,11 @@ class StreamingCorpusCurator(BatchDirs):
         1. ``compact()``; partially-committed leftovers refuse.
         2. Quantize the full compacted vec state; re-sign from the
            dequantized v̂ under the UNCHANGED geometry.
-        3. Write a new compacted version, flip the manifest with the
-           ``vec_format`` record inside it, heal the sidecar after
-           (attach resolves manifest-first, so the crash window
-           between the two flips is safe — the round-7 rollover
-           argument verbatim).
+        3. Write a new compacted version through ``_write_version``,
+           with the ``vec_format`` record inside the manifest, and heal
+           the sidecar after the flip (attach resolves manifest-first,
+           so the crash window between the two flips is safe — the
+           round-7 rollover argument verbatim).
 
         float64 → int8 cuts vec-state bytes ~4× (measured row in
         ROADMAP); round 9 adds the PQ rung — float64/int8 → pq stores
@@ -3054,51 +2674,17 @@ class StreamingCorpusCurator(BatchDirs):
         # (no int8->int8 / int8->non-pq guards needed here: equal
         # formats returned above and new_format is validated to
         # {int8, pq}, so int8 state can only be migrating to pq)
-        from ..operators.dedup import write_embedding_index
-        from ..operators.similarity import (
-            dequantized_vecs,
-            hyperplane_signatures_multi,
-            with_int8_codes,
-        )
-
-        self.compact()
-        man = self._manifest()
-        leftovers = self._committed_ids_above(
-            self.vec_dir, None
-        ) | self._committed_ids_above(self.sig_dir, None)
-        if leftovers:
-            raise RuntimeError(
-                f"batches {sorted(leftovers)} are partially committed; "
-                "replay them (restart the stream) before a vec-format "
-                "migration"
-            )
+        record = {"vec_format": new_format}
+        man = self._compact_for_cutover("vec-format migration")
         if man is None:
             # nothing stored yet: re-freezing the sidecar IS the cutover
-            id_type = self.vec_schema.split(",")[0].split()[1]
-            self.vec_format = new_format
-            self.vec_schema = self._vec_schema_for(new_format, id_type)
             self._pq_books = None  # pq target: fit on the first batch
-            self._write_geometry_sidecar()
+            self._adopt(record)
             return True
-
-        version = man["version"] + 1
-        vdir = os.path.join(self.compacted_dir, f"v{version}")
-        self._delete_dir(vdir)
-        pfx = f"{self.catalog_prefix}_v{version}"
-        acc_path = os.path.join(vdir, "accepted")
-        self.spark.read.parquet(man["accepted_path"]).write.mode(
-            "overwrite"
-        ).parquet(acc_path)
-        old_vecs = self._compacted_state("vec")  # current vec_schema cols
-        if cur_fmt == "int8":
-            # the canonical corpus an int8 state represents is v̂
-            old_vecs = dequantized_vecs(old_vecs)
+        # the canonical corpus an int8 state represents is v̂
+        old_vecs = self._decoded(self._compacted_state("vec"))
         if new_format == "pq":
-            from ..operators.pq import (
-                books_to_jsonable,
-                pq_fit,
-                with_pq_codes,
-            )
+            from ..operators.pq import books_to_jsonable, pq_fit, with_pq_codes
 
             books = pq_fit(
                 old_vecs,
@@ -3114,66 +2700,27 @@ class StreamingCorpusCurator(BatchDirs):
             # the old manifest's vec_format until the flip lands
             write_json_atomic(self._pq_books_path, books_to_jsonable(books))
             self._pq_books = books
+            record.update(pq_m=self.pq_m, pq_ksub=self.pq_ksub)
             q = with_pq_codes(old_vecs, books, "v", pc="_pc", vhat="_vhat")
             new_vecs = q.select("vec_id", F.col("_pc").alias("pc"))
         else:
+            from ..operators.similarity import with_int8_codes
+
             q = with_int8_codes(old_vecs, "v", self.emb_dim)
             new_vecs = q.select(
                 "vec_id",
                 F.col("qc").cast("array<tinyint>").alias("qc"),
                 F.col("qs"),
             )
-        sigs_new = hyperplane_signatures_multi(
-            q.select("vec_id", F.col("_vhat").alias("v")),
-            dim=self.emb_dim,
-            num_planes=self.num_planes,
-            num_tables=self.num_tables,
-            seed=self.seed,
-            id_col="vec_id",
-            vec_col="v",
+        vhat = q.select("vec_id", F.col("_vhat").alias("v"))
+        tiers = {"vec": new_vecs, "sig": self._signed(vhat, self.num_planes, self.num_tables)}
+        self._write_version(
+            man,
+            man["covered_upto"],
+            self._compacted_state("accepted"),
+            lambda tier, _: tiers[tier.name],
+            record=record,
         )
-        write_embedding_index(
-            new_vecs,
-            sigs_new,
-            pfx,
-            n_buckets=self.n_buckets,
-            path_prefix=os.path.join(vdir, "idx"),
-        )
-        manifest = {
-            "version": version,
-            "covered_upto": man["covered_upto"],
-            "n_buckets": self.n_buckets,
-            "accepted_path": acc_path,
-            "banded": None,
-            **self._policy_record(),
-            "geometry": {
-                "num_planes": self.num_planes,
-                "num_tables": self.num_tables,
-            },
-            "vec_format": new_format,
-            **(
-                {"pq_m": self.pq_m, "pq_ksub": self.pq_ksub}
-                if new_format == "pq"
-                else {}
-            ),
-            "vec": {
-                "table": f"{pfx}_vec",
-                "path": os.path.join(vdir, "idx_vec"),
-                "keys": ["vec_id"],
-            },
-            "sig": {
-                "table": f"{pfx}_sig",
-                "path": os.path.join(vdir, "idx_sig"),
-                "keys": ["tbl", "bucket"],
-            },
-        }
-        self._flip_manifest(manifest)
-        self.vec_format = new_format
-        id_type = self.vec_schema.split(",")[0].split()[1]
-        self.vec_schema = self._vec_schema_for(new_format, id_type)
-        self._write_geometry_sidecar()
-        self._cleanup_covered(man["covered_upto"])
-        self._drop_old_versions(version)
         return True
 
     def _cleanup_covered(self, upto: int) -> None:
@@ -3183,7 +2730,7 @@ class StreamingCorpusCurator(BatchDirs):
         with the current watermark on the nothing-to-fold resume path.
         Idempotent — also finishes a cleanup a crash interrupted (reads
         exclude covered partitions either way, via the watermark)."""
-        tables = self._state_tables() + self.monitor_tiers + [self.doremi_dir]
+        tables = self._state_tables() + self._monitor_dirs() + [self.doremi_dir]
         for base in tables:
             for d in self._batch_dirs(base):
                 if self._batch_id_of(d) <= upto:
@@ -3192,8 +2739,8 @@ class StreamingCorpusCurator(BatchDirs):
     def _drop_old_versions(self, current: int) -> None:
         """Retain the current compacted version plus ONE predecessor
         (reader grace for lazy DataFrames resolved pre-flip, mirroring
-        ``matview``); drop catalog entries and files of anything
-        older."""
+        ``matview``); drop the catalog tables (named by the tier
+        table) and files of anything older."""
         if not os.path.isdir(self.compacted_dir):
             return
         for d in os.listdir(self.compacted_dir):
@@ -3204,10 +2751,12 @@ class StreamingCorpusCurator(BatchDirs):
             except ValueError:
                 continue
             if v <= current - 2:
-                old_pfx = f"{self.catalog_prefix}_v{v}"
-                for suffix in ("_grams", "_banded", "_grams_by_g", "_df_by_g", "_vec", "_sig"):
+                for tier in self._compacted_tiers():
+                    if tier.table is None:
+                        continue
+                    table = f"{self.catalog_prefix}_v{v}_{tier.table}"
                     try:
-                        self.spark.sql(f"DROP TABLE IF EXISTS {old_pfx}{suffix}")
+                        self.spark.sql(f"DROP TABLE IF EXISTS {table}")
                     except Exception:
                         pass
                 self._delete_dir(os.path.join(self.compacted_dir, d))
@@ -3217,19 +2766,26 @@ class StreamingCorpusCurator(BatchDirs):
 
     def export_bucketed_index(self, prefix: str, n_buckets: int = 32) -> None:
         """One-way export of the accumulated dedup state into the
-        bucketed catalog layout batch probes consume, matching the
-        canonical writers exactly: the jaccard screen exports
-        ``{prefix}_grams_by_g`` via ``dedup.write_ngram_index``
-        (bucketed by ``g`` — the jaccard probe's join key); the
-        minhash screen exports the ``dedup.write_minhash_index``
-        pair — ``{prefix}_grams`` bucketed by ``doc_id`` (the verify
-        side's join key) and ``{prefix}_banded`` bucketed by
-        ``(band, bucket)`` — readable with ``dedup.read_minhash_index``.
+        bucketed catalog layout batch probes consume: each index tier
+        of the screen becomes ``{prefix}_<table>``, bucketed and
+        sorted by the tier's keys, matching the canonical writers
+        exactly. The jaccard screen exports ``{prefix}_grams_by_g``
+        (``dedup.write_ngram_index``: bucketed by ``g``, the jaccard
+        probe's join key); the minhash screen the
+        ``dedup.write_minhash_index`` pair, readable with
+        ``dedup.read_minhash_index`` — ``{prefix}_grams`` bucketed by
+        ``doc_id`` (the verify side's join key) and ``{prefix}_banded``
+        bucketed by ``(band, bucket)``; the embedding screen the
+        ``dedup.write_embedding_index`` pair (``_vec`` in the canonical
+        (v, nv) layout whatever the stored format, and ``_sig``); the
+        simhash screen ``{prefix}_shsig`` by ``doc_id``; the substr
+        screen ``{prefix}_anchors`` by ``(gh, g)``.
 
         Only COMMITTED state is read — the compacted tier plus live
-        batch partitions whose ``_SUCCESS`` marker exists — so a
-        scheduled export racing a live micro-batch can never ship a
-        partial batch's rows.
+        batch partitions whose ``_SUCCESS`` marker exists, minus the
+        committed tombstones — so a scheduled export racing a live
+        micro-batch can never ship a partial batch's rows, nor an
+        evicted doc.
 
         NOTE: ``mode=overwrite`` + ``saveAsTable`` is
         drop-then-recreate, NOT an atomic swap — a reader mid-scan
@@ -3239,67 +2795,11 @@ class StreamingCorpusCurator(BatchDirs):
         exactly that — versioned prefixes + manifest flip — so with
         ``compact_after`` set, consumers can read the compacted tables
         directly instead of exporting.)"""
-        from ..operators.dedup import (
-            write_embedding_index,
-            write_minhash_index,
-            write_ngram_index,
-        )
+        from ..operators.bucketing import write_bucketed
 
-        upto = self._covered_upto()
-        if self.screen == "embedding":
-            vecs = self._read_committed(self.vec_dir, self.vec_schema, lo=upto)
-            comp_v = self._compacted_state("vec")
-            if comp_v is not None:
-                vecs = comp_v.unionByName(vecs)
-            if self.vec_format == "int8":
-                # the export contract is the canonical (v, nv) probe
-                # layout — dequantize so batch consumers stay unchanged
-                from ..operators.similarity import dequantized_vecs
-
-                vecs = dequantized_vecs(vecs)
-            elif self.vec_format == "pq":
-                from ..operators.pq import decoded_vecs
-
-                vecs = decoded_vecs(vecs, self._require_pq_books())
-            sigs = self._read_committed(self.sig_dir, self.sig_schema, lo=upto)
-            comp_s = self._compacted_state("sig")
-            if comp_s is not None:
-                sigs = comp_s.unionByName(sigs)
-            write_embedding_index(vecs, sigs, prefix, n_buckets=n_buckets)
-            return
-        if self.screen == "simhash":
-            from ..operators.bucketing import write_bucketed
-
-            sh = self._read_committed(self.shsig_dir, self.shsig_schema, lo=upto)
-            man2 = self._manifest()
-            if man2 is not None and man2.get("shsig") is not None:
-                sh = self.spark.read.schema(self.shsig_schema).parquet(
-                    man2["shsig"]["path"]
-                ).unionByName(sh)
-            sh = self._minus_tombstones(sh, "doc_id")
-            write_bucketed(sh, f"{prefix}_shsig", ["doc_id"], n_buckets=n_buckets)
-            return
-        grams = self._read_committed(self.grams_dir, self.grams_schema, lo=upto)
-        comp = self._compacted_state("grams")
-        if comp is not None:
-            grams = comp.unionByName(grams)
-        grams = self._minus_tombstones(grams, "doc_id")
-        if self.screen == "minhash":
-            banded = self._read_committed(
-                self.banded_dir, self.banded_schema, lo=upto
-            )
-            comp_b = self._compacted_state("banded")
-            if comp_b is not None:
-                banded = comp_b.unionByName(banded)
-            banded = self._minus_tombstones(banded, "doc_id")
-            write_minhash_index(
-                grams,
-                None,
-                prefix,
-                num_bands=self.num_bands,
-                rows_per_band=self.num_hashes // self.num_bands,
-                n_buckets=n_buckets,
-                banded=banded,
-            )
-        else:
-            write_ngram_index(grams, f"{prefix}_grams_by_g", n_buckets=n_buckets)
+        for tier in self.index_tiers:
+            rows = self._tier_rows(tier, committed=True)
+            if tier.name == "vec":
+                rows = self._decoded(rows)
+            table = f"{prefix}_{tier.table or tier.name}"
+            write_bucketed(rows, table, tier.keys, n_buckets=n_buckets)
