@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming.batch_dirs import write_json_atomic
 from .textops import STOPWORDS, tokens
 
 # feature names in weight order; w[0] is the bias
@@ -154,17 +155,10 @@ def save_model(
 ) -> None:
     """Persist the fitted filter (weights + TRAINING standardization
     stats — both required to score a future batch) as a JSON sidecar,
-    committed with the same write-temp + ``os.replace`` flip as every
-    manifest in this engine: readers see the old model or the new
-    one, never a torn file."""
-    import json
-    import os
-
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"features": FEATURES, "weights": weights, "stats": stats}, f)
-    os.replace(tmp, path)
+    committed with the same write-temp + fsync + ``os.replace`` flip
+    as every manifest in this engine: readers see the old model or
+    the new one, never a torn file."""
+    write_json_atomic(path, {"features": FEATURES, "weights": weights, "stats": stats})
 
 
 def load_model(path: str) -> tuple[list[float], dict[str, tuple[float, float]]]:

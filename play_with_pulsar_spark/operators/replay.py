@@ -45,7 +45,6 @@ from pyspark.sql.types import (
 )
 
 from ..schema import BOMB_LENGTH, GRID_H, GRID_W
-from ..streaming.batch_dirs import BatchDirs
 
 DESTRUCTIBLE = 1
 INDESTRUCTIBLE = 2
@@ -440,9 +439,9 @@ def fold_pdf(pdf: pd.DataFrame, state: GameState | None = None) -> GameState:
 
 
 def encode_state(state: GameState) -> bytes:
-    """A state as a blob: the snapshot tables, the maintained view's
-    carry heads and the stream's state store all hold these. This pair
-    is the only code that knows the blob format (a pickle)."""
+    """A state as a blob: the snapshot tables and the streaming folds'
+    state store hold these. This pair is the only code that knows the
+    blob format (a pickle)."""
     return pickle.dumps(state)
 
 
@@ -623,7 +622,9 @@ def snapshot_states(events: DataFrame, every_k: int = 1000) -> DataFrame:
     offset gets one empty state at ``snap_offset`` -1). At 100 TB this is
     the structure that makes ``state_at(room, k)`` O(tail) instead of
     O(history): store this table partitioned by room, then any replay
-    starts from the nearest snapshot ≤ k (``state_at``)."""
+    starts from the nearest snapshot ≤ k (``state_at``).
+    ``streaming.pipeline.streaming_snapshots`` maintains the same table
+    from a stream."""
     if every_k < 1:
         raise ValueError(f"every_k must be >= 1, got {every_k}")
     events = _project_fold_columns(events)
@@ -637,13 +638,13 @@ def snapshot_states(events: DataFrame, every_k: int = 1000) -> DataFrame:
     return events.groupBy("room").applyInPandas(snap, schema=SNAPSHOT_SCHEMA)
 
 
-def _resume_point(side: pd.DataFrame, offset_col: str) -> tuple[GameState | None, int]:
+def _resume_point(side: pd.DataFrame) -> tuple[GameState | None, int]:
     """The ``(state, after)`` a room's fold resumes from: the one
     encoded state on a cogroup's snapshot side, or no state before
     offset 0 when the room has none."""
     if not len(side):
         return None, -1
-    return decode_state(side["blob"].iloc[0]), int(side[offset_col].iloc[0])
+    return decode_state(side["blob"].iloc[0]), int(side["snap_offset"].iloc[0])
 
 
 def state_at(events: DataFrame, snapshots: DataFrame, upto_offset: int) -> DataFrame:
@@ -662,7 +663,7 @@ def state_at(events: DataFrame, snapshots: DataFrame, upto_offset: int) -> DataF
     tail = _project_fold_columns(events.filter(F.col("offset") <= upto_offset))
 
     def fold_tail(key, evs: pd.DataFrame, snaps: pd.DataFrame):
-        state, _ = fold_room(evs, *_resume_point(snaps, "snap_offset"))
+        state, _ = fold_room(evs, *_resume_point(snaps))
         return pd.DataFrame(state.to_rows(key[0]), columns=STATE_COLS)
 
     return (
@@ -670,142 +671,6 @@ def state_at(events: DataFrame, snapshots: DataFrame, upto_offset: int) -> DataF
         .cogroup(best.groupBy("room"))
         .applyInPandas(fold_tail, schema=STATE_SCHEMA)
     )
-
-
-class FoldSnapshotView(BatchDirs):
-    """Incrementally-maintained snapshot table for the fold — the
-    matview pattern (``operators.matview``) applied to GameState time
-    travel (round 7). :func:`snapshot_states` builds the checkpoint
-    table by folding the WHOLE log; nothing maintained it as the log
-    grew, so a crawl-loop deployment would re-fold history per
-    refresh. This view folds each appended batch ONCE: per-batch cost
-    is O(batch events), and :func:`state_at` over :meth:`snapshots`
-    stays O(tail ≤ every_k) from the latest materialized snapshot
-    forever.
-
-    State layout under ``path`` (the batch-directory commit protocol
-    of ``streaming/batch_dirs.py``, with no compaction):
-
-    - ``snaps/batch=<id>/`` — public checkpoint rows (room,
-      snap_offset, blob), one encoded GameState per crossed
-      ``every_k`` boundary, append-only across batches.
-    - ``heads/batch=<id>/`` — per-room CARRY state: the fold result
-      at the last offset each batch processed. The latest head per
-      room is the next batch's resume point, so a batch ending
-      mid-interval costs the next batch nothing extra; the reader
-      takes max-by-offset, so superseded heads are dead weight until
-      a cleanup (bounded: one row per room per batch).
-
-    Replay semantics: ``update`` with an already-committed
-    ``batch_id`` is a no-op; a replay after a partial commit excludes
-    this batch's own partitions from the resume read and rewrites
-    both partitions deterministically (encoding the same fold from
-    the same resume state is byte-identical).
-
-    PRECONDITION (append-only log tail): each batch carries, per
-    room, only offsets strictly greater than every offset a previous
-    batch carried for that room — exactly what a monotone
-    micro-batched log reader delivers. Out-of-order delivery must be
-    repaired upstream (the fold is order-sensitive by definition).
-
-    At 100 TB: rooms shard the kernel (one group = one room, state ≤
-    a few KB), snapshots partition by room for the ``state_at`` point
-    read, and per-batch work never touches history — the same
-    O(batch)-not-O(log) contract as ``LatestStateView``.
-
-    ``attach(stream, checkpoint_dir)`` maintains the view from a
-    streaming event log, one ``update`` per micro-batch."""
-
-    partition = "batch"
-
-    def __init__(self, spark, path: str, every_k: int = 1000) -> None:
-        import os
-
-        self.spark = spark
-        self.path = path
-        self.every_k = int(every_k)
-        if self.every_k < 1:
-            raise ValueError(f"every_k must be >= 1, got {every_k}")
-        self.snaps_dir = os.path.join(path, "snaps")
-        self.heads_dir = os.path.join(path, "heads")
-
-    # ----------------------------------------------------------- reads
-
-    def snapshots(self) -> DataFrame:
-        """The maintained checkpoint table (SNAPSHOT_SCHEMA shape) —
-        drop-in for :func:`state_at`'s ``snapshots`` argument."""
-        return self._read_committed(
-            self.snaps_dir, "room string, snap_offset long, blob binary"
-        )
-
-    def heads(self, exclude: int | None = None) -> DataFrame:
-        """(room, upto_offset, blob): the latest carry state per room
-        — the resume point, also useful as a cheap latest-state view.
-        ``exclude`` leaves out one batch's own heads (``update``'s
-        replay-safe resume read)."""
-        raw = self._read_committed(
-            self.heads_dir,
-            "room string, upto_offset long, blob binary",
-            exclude=exclude,
-        )
-        return (
-            raw.groupBy("room")
-            .agg(F.max_by(F.struct("upto_offset", "blob"), "upto_offset").alias("h"))
-            .select(
-                "room",
-                F.col("h.upto_offset").alias("upto_offset"),
-                F.col("h.blob").alias("blob"),
-            )
-        )
-
-    # ---------------------------------------------------------- update
-
-    def update(self, events: DataFrame, batch_id: int) -> None:
-        """Fold one appended batch into the view: resume each room
-        from its latest committed head (this batch's own partitions
-        excluded — replay safety), emit a snapshot row at every
-        crossed ``every_k`` boundary plus the new head, and commit
-        both tables into idempotent ``batch=<id>`` partitions."""
-        snaps_done = self._committed(self.snaps_dir, batch_id)
-        heads_done = self._committed(self.heads_dir, batch_id)
-        if snaps_done and heads_done:
-            return
-        every_k = self.every_k
-
-        def fold_batch(key, evs: pd.DataFrame, hd: pd.DataFrame) -> pd.DataFrame:
-            cols = ["room", "snap_offset", "blob", "is_head"]
-            if not len(evs):  # head-only group: old head stays latest
-                return pd.DataFrame([], columns=cols)
-            room = key[0]
-            state, after = _resume_point(hd, "upto_offset")
-            state, snaps = fold_room(evs, state, after, every_k)
-            upto = max(after, int(evs["offset"].max()))
-            out = [(room, off, blob, False) for off, blob in snaps]
-            out.append((room, upto, encode_state(state), True))
-            return pd.DataFrame(out, columns=cols)
-
-        rows = (
-            _project_fold_columns(events).groupBy("room")
-            .cogroup(self.heads(exclude=batch_id).groupBy("room"))
-            .applyInPandas(
-                fold_batch,
-                schema="room string, snap_offset long, blob binary, is_head boolean",
-            )
-            .persist()
-        )
-        if not snaps_done:
-            rows.filter(~F.col("is_head")).select(
-                "room", "snap_offset", "blob"
-            ).write.mode("overwrite").parquet(self._batch_dir(self.snaps_dir, batch_id))
-        if not heads_done:
-            rows.filter(F.col("is_head")).select(
-                "room",
-                F.col("snap_offset").alias("upto_offset"),
-                "blob",
-            ).write.mode("overwrite").parquet(self._batch_dir(self.heads_dir, batch_id))
-        rows.unpersist()
-
-    process_batch = update
 
 
 def paced_replay(events: DataFrame, room: str, pace_ms: int = 200):

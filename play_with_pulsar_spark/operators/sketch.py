@@ -60,6 +60,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..streaming.batch_dirs import write_json_atomic
+
 
 def _cms_bucket(key: F.Column, width: int, i: int, salt: str) -> F.Column:
     """Row-``i`` bucket: integer prefix of md5(key ':cms<salt>:' i),
@@ -505,13 +507,7 @@ def write_bloom(
     bloom_build(items, key=key, m_bits=m_bits, k=k, salt=salt).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "positions"))
-    sidecar = os.path.join(path, "bloom.json")
-    tmp = sidecar + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"m_bits": m_bits, "k": k, "salt": salt}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, sidecar)
+    write_json_atomic(os.path.join(path, "bloom.json"), {"m_bits": m_bits, "k": k, "salt": salt})
 
 
 def read_bloom(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:

@@ -1222,30 +1222,64 @@ def fold_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"SELECT room, name, x, y, alive FROM read_parquet('{FOLD_PLAYERS_1500_GOLDEN}')",
 )
 def fold_snapshot_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time travel through the INCREMENTALLY-MAINTAINED snapshot view
-    (round 7, r6 verdict #6): the fixture log arrives as three
-    offset-range batches through ``replay.FoldSnapshotView`` (per-batch
-    fold cost O(batch) — history is never re-folded; batch boundaries
-    deliberately mid-interval so the carry-head path is exercised),
-    then ``state_at(1500)`` resumes from the latest materialized
-    snapshot ≤1500 and folds only the ≤500-event tail. Must equal the
-    SAME committed pure-python golden as ``fold_time_travel`` — the
-    maintained view and the from-scratch replay are
-    indistinguishable, under the driver's hash gate."""
+    """Time travel through the snapshot table a STREAM maintains: the
+    fixture log arrives as three offset-range files, one micro-batch
+    each (``maxFilesPerTrigger=1`` under ``availableNow``), through
+    ``pipeline.streaming_snapshots`` into a checkpointed parquet file
+    sink (per-batch fold cost O(batch) — history is never re-folded;
+    file boundaries deliberately mid-interval so the state store
+    carries each room across batches), then ``state_at(1500)``
+    resumes from the latest materialized snapshot ≤1500 and folds
+    only the ≤500-event tail. Must equal the SAME committed
+    pure-python golden as ``fold_time_travel`` — the stream-maintained
+    table and the from-scratch replay are indistinguishable, under the
+    driver's hash gate."""
+    import os
     import shutil
     import tempfile
+
+    from .streaming.pipeline import streaming_snapshots
 
     log = _game_log(spark)
     base = tempfile.mkdtemp(prefix="pwp_snapview_")
     try:
-        view = replay.FoldSnapshotView(spark, base, every_k=500)
-        for bid, (lo, hi) in enumerate([(0, 799), (800, 1399), (1400, 10**9)]):
-            view.update(log.filter(F.col("offset").between(lo, hi)), bid)
-        # materialize (small: one row per live player) before the state
-        # dir is deleted — a lazy frame over it would dangle
+        src, sink = os.path.join(base, "src"), os.path.join(base, "snaps")
+        for k, (lo, hi) in enumerate([(0, 799), (800, 1399), (1400, 10**9)]):
+            # one file per slice, so one slice per micro-batch
+            log.filter(F.col("offset").between(lo, hi)).coalesce(1).write.parquet(
+                f"{src}/f{k}"
+            )
+        stream = (
+            spark.readStream.schema(log.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{src}/f*")
+        )
+        # The stateful stage runs one task and one state-store commit
+        # per shuffle partition every micro-batch: at a plain session's
+        # 200 a batch took 22-30 s on a 4-core VM, at one per core
+        # under a second. A query fixes the count when it starts, so
+        # the session's own setting is restored right after.
+        conf = "spark.sql.shuffle.partitions"
+        prev = spark.conf.get(conf)
+        spark.conf.set(conf, str(spark.sparkContext.defaultParallelism))
+        try:
+            q = (
+                streaming_snapshots(stream, every_k=500)
+                .writeStream.format("parquet")
+                .option("checkpointLocation", os.path.join(base, "ckpt"))
+                .trigger(availableNow=True)
+                .start(sink)
+            )
+        finally:
+            spark.conf.set(conf, prev)
+        q.awaitTermination()
+        # materialize (small: one row per live player) before the sink
+        # is deleted — a lazy frame over it would dangle
         rows = [
             (r.room, r.name, r.x, r.y, r.alive)
-            for r in replay.players_state(replay.state_at(log, view.snapshots(), 1500)).collect()
+            for r in replay.players_state(
+                replay.state_at(log, spark.read.parquet(sink), 1500)
+            ).collect()
         ]
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -1,18 +1,16 @@
 """The batch-directory commit protocol of every incremental operator.
 
 ``foreachBatch`` is AT-LEAST-once: a retry after a partial commit
-re-delivers the same ``batch_id``. The corpus curator, the
-incremental line and substring dedupers and ``FoldSnapshotView`` get
-effectively-once state from replayable input plus batch-keyed
-idempotent commits (Structured Streaming's sink contract), and this
-module is the one implementation of those commits:
+re-delivers the same ``batch_id``. The corpus curator and the
+incremental line and substring dedupers get effectively-once state
+from replayable input plus batch-keyed idempotent commits (Structured
+Streaming's sink contract), and this module is the one implementation
+of those commits:
 
 - **Layout.** Each state table is a directory holding one
-  ``<partition>=<batch_id>/`` directory per micro-batch (``partition``
-  is a class attribute: ``ingest_batch`` for the curator and the
-  dedupers, ``batch`` for the snapshot view). A batch writes it with
-  ``mode=overwrite``, so a replay rewrites the same directory instead
-  of appending duplicate rows.
+  ``ingest_batch=<batch_id>/`` directory per micro-batch. A batch
+  writes it with ``mode=overwrite``, so a replay rewrites the same
+  directory instead of appending duplicate rows.
 - **Commit.** The ``_SUCCESS`` marker the parquet writer leaves last
   is the commit record. A batch whose marker exists is skipped.
 - **Watermark.** Compaction folds committed batch dirs into a
@@ -50,6 +48,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
+# the layout column of every batch directory: ``ingest_batch=<batch_id>``
+PARTITION = "ingest_batch"
+
+
 def _field_names(schema: str) -> list[str]:
     # DDL-parse for the names: a naive comma split breaks on
     # parameterized types like decimal(28,6) (the curator's doremi tier)
@@ -60,7 +62,6 @@ class BatchDirs:
     """Mixin: subclasses set ``self.spark`` and, if they compact,
     ``_manifest_path``; foreachBatch operators define ``process_batch``."""
 
-    partition = "ingest_batch"
     _manifest_path: str | None = None
     spark: SparkSession
 
@@ -68,10 +69,10 @@ class BatchDirs:
     # naming and markers
 
     def _batch_dir(self, base: str, batch_id: int) -> str:
-        return os.path.join(base, f"{self.partition}={batch_id}")
+        return os.path.join(base, f"{PARTITION}={batch_id}")
 
     def _batch_id_of(self, path: str) -> int:
-        return int(path.rstrip("/").rsplit(f"{self.partition}=", 1)[1])
+        return int(path.rstrip("/").rsplit(f"{PARTITION}=", 1)[1])
 
     def _hadoop_fs(self, path: str):
         hpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
@@ -96,7 +97,7 @@ class BatchDirs:
     def _batch_dirs(self, base: str) -> list[str]:
         """ALL partition directories of ``base``, committed or not:
         compaction safety checks need to see partial ones."""
-        prefix = f"{self.partition}="
+        prefix = f"{PARTITION}="
         try:
             fs, hbase = self._hadoop_fs(base)
             if not fs.exists(hbase):
@@ -204,13 +205,13 @@ class BatchDirs:
         wrote."""
         if not self._batch_dirs(path):  # no batch written yet
             return self._statically_empty(schema)
-        df = self.spark.read.schema(f"{schema}, {self.partition} int").parquet(path)
+        df = self.spark.read.schema(f"{schema}, {PARTITION} int").parquet(path)
         upto = self._covered_upto()
         if upto >= 0:
             # partition column ⇒ covered dirs are PRUNED, not scanned
-            df = df.filter(F.col(self.partition) > upto)
+            df = df.filter(F.col(PARTITION) > upto)
         if exclude_batch is not None:
-            df = df.filter(F.col(self.partition) != exclude_batch)
+            df = df.filter(F.col(PARTITION) != exclude_batch)
         return df.select(*_field_names(schema))
 
     def _read_committed(
@@ -227,7 +228,7 @@ class BatchDirs:
         if not dirs:
             return self.spark.createDataFrame([], schema)
         return (
-            self.spark.read.schema(f"{schema}, {self.partition} int")
+            self.spark.read.schema(f"{schema}, {PARTITION} int")
             .option("basePath", base)
             .parquet(*dirs)
             .select(*_field_names(schema))

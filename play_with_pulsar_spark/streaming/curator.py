@@ -79,8 +79,7 @@ would not just double rows: replayed doc_ids violate
 shingle rows skew sizes and Jaccard), so idempotence here is a
 correctness requirement, not bookkeeping. The commit protocol itself
 (batch dirs, markers, watermark, manifest, replay-safe reads) is
-``streaming/batch_dirs.py``, shared with the incremental dedupers and
-``FoldSnapshotView``.
+``streaming/batch_dirs.py``, shared with the incremental dedupers.
 
 Batch ids are assumed monotone per checkpoint (structured streaming's
 epoch ids; sequential micro-batches). Restarting against a FRESH
@@ -112,7 +111,7 @@ from ..operators.dedup import (
     minhash_signatures,
     release_intermediates,
 )
-from .batch_dirs import BatchDirs, write_json_atomic
+from .batch_dirs import PARTITION, BatchDirs, write_json_atomic
 from .substr_dedup import claim_anchors
 
 # Frozen geometry of the vocabulary-HLL monitor tier (text screens):
@@ -1233,7 +1232,7 @@ class StreamingCorpusCurator(BatchDirs):
         live = (
             self.spark.read.option("basePath", self.accepted_dir)
             .parquet(*dirs)
-            .drop("ingest_batch")
+            .drop(PARTITION)
         )
         return live if comp is None else comp.unionByName(live)
 
@@ -1327,7 +1326,7 @@ class StreamingCorpusCurator(BatchDirs):
             raw = self.spark.read.parquet(self.accepted_dir)
             if self._batch_dirs(self.accepted_dir):
                 raw = raw.where(F.lit(False))
-            return raw.drop("ingest_batch")
+            return raw.drop(PARTITION)
         return out
 
     def _tc(self):

@@ -43,14 +43,16 @@ from pyspark.sql.types import (
 )
 
 from ..operators.replay import (
+    SNAPSHOT_SCHEMA,
     STATE_COLS,
     STATE_SCHEMA,
     GameState,
+    _plain_coords,
+    _project_fold_columns,
     decode_state,
     encode_state,
     fold_room,
 )
-from ..schema import GAME_EVENT_SCHEMA
 
 
 def stream_game_events(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
@@ -114,16 +116,25 @@ def deduped_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFram
 _FOLD_STATE_SCHEMA = StructType([StructField("blob", BinaryType(), True)])
 
 
-def _fold_with_state(key, pdf_iter, state: GroupState):
-    """applyInPandasWithState kernel: decode the room's GameState,
-    apply this micro-batch's events in offset order (``fold_room``,
-    the batch fold), persist, and emit the room's current state table
-    (update-mode changelog of the materialized state)."""
+def _fold_step(pdf_iter, state: GroupState, every_k: int = 0):
+    """The one state-store step of every stateful fold: decode the
+    room's GameState, apply this micro-batch's events in offset order
+    (``fold_room``, the batch fold), and write the state back. Returns
+    the state and the ``(offset, blob)`` snapshots at each crossed
+    ``every_k`` boundary."""
     gs = decode_state(state.get[0]) if state.exists else GameState()
     batches = [pdf for pdf in pdf_iter if not pdf.empty]
+    snaps = []
     if batches:
-        gs, _ = fold_room(pd.concat(batches), gs)
+        gs, snaps = fold_room(pd.concat(batches), gs, every_k=every_k)
     state.update((encode_state(gs),))
+    return gs, snaps
+
+
+def _fold_with_state(key, pdf_iter, state: GroupState):
+    """streaming_fold's kernel: fold, then emit the room's current
+    state table (update-mode changelog of the materialized state)."""
+    gs, _ = _fold_step(pdf_iter, state)
     rows = gs.to_rows(key[0])
     if rows:
         yield pd.DataFrame(rows, columns=STATE_COLS)
@@ -148,6 +159,44 @@ def streaming_fold(events: DataFrame) -> DataFrame:
         outputStructType=STATE_SCHEMA,
         stateStructType=_FOLD_STATE_SCHEMA,
         outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def streaming_snapshots(events: DataFrame, every_k: int = 1000) -> DataFrame:
+    """The time-travel checkpoint table of ``snapshot_states``,
+    maintained from a stream: the same per-room state store as
+    ``streaming_fold``, emitting one ``SNAPSHOT_SCHEMA`` row at each
+    offset ``o`` with ``(o + 1) % every_k == 0`` (append mode). Each
+    micro-batch folds only its own events, so per-batch cost is
+    O(batch), never O(history).
+
+    Written through a checkpointed parquet file sink
+    (``writeStream.format("parquet")``), the table is exactly-once:
+    a batch re-run after a restart is skipped by the sink's
+    ``_spark_metadata`` log, and ``spark.read.parquet`` lists only
+    the files that log records. ``state_at(log, table, k)`` then works
+    over a live log (the reference's watch mode, watch.go:43-85).
+    Unlike ``snapshot_states``, a room with no crossed boundary has no
+    row; ``state_at`` folds it from the start.
+
+    PRECONDITION (append-only log tail): each micro-batch carries, per
+    room, only offsets above every offset an earlier batch carried."""
+    if every_k < 1:
+        raise ValueError(f"every_k must be >= 1, got {every_k}")
+
+    def kernel(key, pdf_iter, state: GroupState):
+        _, snaps = _fold_step(pdf_iter, state, every_k)
+        if snaps:
+            yield pd.DataFrame(
+                [(key[0], off, blob) for off, blob in snaps], columns=SNAPSHOT_SCHEMA.names
+            )
+
+    return _project_fold_columns(events).groupBy("room").applyInPandasWithState(
+        kernel,
+        outputStructType=SNAPSHOT_SCHEMA,
+        stateStructType=_FOLD_STATE_SCHEMA,
+        outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
@@ -190,12 +239,13 @@ def timer_service(events: DataFrame, explode_after_ms: int = 2000) -> DataFrame:
             batches = [p for p in pdf_iter if not p.empty]
             if batches:
                 evs = pd.concat(batches).sort_values("offset", kind="mergesort")
-                for ev in evs.to_dict("records"):
-                    if ev["type"] == "SetBombEvent":
-                        pending[ev["name"]] = (now + explode_after_ms / 1000.0,
-                                               int(ev["x"]), int(ev["y"]))
-                    elif ev["type"] == "ExplodeEvent":
-                        pending.pop(ev["name"], None)  # client already emitted
+                # coordinates as the fold reads them: ints, 0 for a null
+                xs, ys = _plain_coords(evs["x"]), _plain_coords(evs["y"])
+                for t, name, x, y in zip(evs["type"].tolist(), evs["name"].tolist(), xs, ys):
+                    if t == "SetBombEvent":
+                        pending[name] = (now + explode_after_ms / 1000.0, x, y)
+                    elif t == "ExplodeEvent":
+                        pending.pop(name, None)  # client already emitted
         # Fire due bombs in BOTH branches: a busy room re-invokes this
         # kernel on every micro-batch, which re-arms the processing-time
         # timeout — if only the hasTimedOut branch fired, a room with a

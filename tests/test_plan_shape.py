@@ -379,7 +379,7 @@ def test_containment_same_shuffle_count_as_jaccard(q):
 # violation, an eager emb.count() in dedup_embedding_lsh_auto).
 EAGER_BUILD_ALLOWLIST = {
     # state-replay loops: the REAL incremental machinery (curator /
-    # line deduper / snapshot view) processes micro-batches at build
+    # line deduper / snapshot stream) processes micro-batches at build
     "fold_snapshot_maintained": "per-batch snapshot materialization",
     # bounded collects by documented contract
     "dedup_embedding_cosine": "broadcast normalized corpus (matmul contract)",

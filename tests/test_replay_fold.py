@@ -245,18 +245,19 @@ def test_snapshot_state_at_equals_full_replay(spark, upto):
     log.unpersist()
 
 
-def test_snapshot_interval_below_one_is_rejected_when_called(spark, tmp_path):
+def test_snapshot_interval_below_one_is_rejected_when_called(spark):
     """every_k < 1 has no snapshot points: both snapshot producers
     raise when called, not at the first action inside a worker."""
-    from play_with_pulsar_spark.operators.replay import FoldSnapshotView, snapshot_states
+    from play_with_pulsar_spark.operators.replay import snapshot_states
     from play_with_pulsar_spark.sources.fixtures import game_event_log
+    from play_with_pulsar_spark.streaming.pipeline import streaming_snapshots
 
     log = game_event_log(spark, n_rooms=1, events_per_room=10, seed=1)
     for every_k in (0, -5):
         with pytest.raises(ValueError, match="every_k"):
             snapshot_states(log, every_k=every_k)
         with pytest.raises(ValueError, match="every_k"):
-            FoldSnapshotView(spark, str(tmp_path / "sv"), every_k=every_k)
+            streaming_snapshots(log, every_k=every_k)
 
 
 def test_state_at_resumes_from_a_blob_with_numpy_obstacle_keys(spark):
@@ -529,22 +530,76 @@ def test_fold_goldens_in_sync_with_generator():
         assert committed == rows, f"{fname} drifted from generator output"
 
 
-def test_fold_snapshot_view_incremental_maintenance(spark, tmp_path):
-    """Round-7 (r6 verdict #6): FoldSnapshotView maintains the k-offset
-    snapshot table INCREMENTALLY — per-batch cost O(batch), never a
-    re-fold of history — and time travel through the maintained table
-    equals both the one-shot snapshot_states build and the full
-    replay, at boundaries and mid-interval, including batches that end
-    mid-interval (the carry-head case). Replays of committed batches
-    are no-ops; a partial commit replays to identical bytes."""
+def _stream_snapshots(spark, log, files, every_k, base):
+    """Write each ``(lo, hi)`` offset range of ``log`` as one parquet
+    file under ``base/src`` (files already there are kept), then drain
+    the source through ``streaming_snapshots`` into the parquet file
+    sink ``base/snaps``, checkpointed at ``base/ckpt``, one file per
+    micro-batch. Returns the ids of the batches the run executed."""
     import os
-    import shutil
+
+    from pyspark.sql import functions as F
+
+    from play_with_pulsar_spark.streaming.pipeline import streaming_snapshots
+
+    src = os.path.join(base, "src")
+    done = len(os.listdir(src)) if os.path.isdir(src) else 0
+    for k, (lo, hi) in enumerate(files, start=done):
+        log.filter(F.col("offset").between(lo, hi)).coalesce(1).write.parquet(
+            os.path.join(src, f"f{k:03d}")
+        )
+    stream = (
+        spark.readStream.schema(log.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(src, "f*"))
+    )
+    q = (
+        streaming_snapshots(stream, every_k=every_k)
+        .writeStream.format("parquet")
+        .option("checkpointLocation", os.path.join(base, "ckpt"))
+        .trigger(availableNow=True)
+        .start(os.path.join(base, "snaps"))
+    )
+    q.awaitTermination(300)
+    return [p["batchId"] for p in q.recentProgress]
+
+
+def _decoded_snapshots(rows):
+    """``{(room, snap_offset): GameState}`` over the rows with
+    ``snap_offset >= 0``, failing on a duplicate key. States are
+    compared decoded: a fold resumed from a decoded state can encode
+    the same state to other bytes than an unbroken fold."""
+    from play_with_pulsar_spark.operators.replay import decode_state
+
+    out = {}
+    for r in rows:
+        if r.snap_offset >= 0:
+            key = (r.room, r.snap_offset)
+            assert key not in out, f"duplicate snapshot row {key}"
+            out[key] = decode_state(r.blob)
+    return out
+
+
+@pytest.mark.parametrize(
+    "files",
+    [
+        [(0, 1199)],
+        [(0, 499), (500, 999), (1000, 1199)],
+        [(lo, lo + 99) for lo in range(0, 1200, 100)],
+    ],
+    ids=["one_trigger", "three_mid_interval_files", "file_every_100"],
+)
+def test_streaming_snapshots_equal_snapshot_states(spark, tmp_path, files):
+    """The stream-maintained snapshot table equals the one-shot
+    snapshot_states build at every (room, snap_offset), whatever the
+    micro-batch split (batches ending mid-interval need the state
+    store's carried state), and time travel through it equals the
+    full replay from the nearest snapshot within every_k."""
+    import os
 
     from pyspark.sql import functions as F
 
     from play_with_pulsar_spark.operators.replay import (
-        FoldSnapshotView,
-        decode_state,
         players_state,
         replay_state,
         snapshot_states,
@@ -553,21 +608,11 @@ def test_fold_snapshot_view_incremental_maintenance(spark, tmp_path):
     from play_with_pulsar_spark.sources.fixtures import game_event_log
 
     log = game_event_log(spark, n_rooms=2, events_per_room=1200, seed=42).cache()
-    view = FoldSnapshotView(spark, str(tmp_path / "sv"), every_k=400)
-    # batch boundaries deliberately NOT aligned to every_k: batch 1
-    # ends mid-interval at 999, so snapshot 1199 needs the carry head
-    batches = [(0, 499), (500, 999), (1000, 1199)]
-    for bid, (lo, hi) in enumerate(batches):
-        view.update(log.filter(F.col("offset").between(lo, hi)), bid)
-
-    # maintained table == one-shot build, snapshot for snapshot. The
-    # states are compared decoded: a fold resumed from a decoded head
-    # can encode the same state to other bytes than an unbroken fold.
-    ref = snapshot_states(log, every_k=400)
-    got = {(r.room, r.snap_offset): decode_state(r.blob)
-           for r in view.snapshots().collect()}
-    want = {(r.room, r.snap_offset): decode_state(r.blob)
-            for r in ref.collect() if r.snap_offset >= 0}
+    batches = _stream_snapshots(spark, log, files, 400, str(tmp_path))
+    assert len(batches) == len(files)
+    sink = spark.read.parquet(os.path.join(str(tmp_path), "snaps"))
+    got = _decoded_snapshots(sink.collect())
+    want = _decoded_snapshots(snapshot_states(log, every_k=400).collect())
     assert len(got) == 6  # 3 per room
     assert got == want
 
@@ -576,72 +621,54 @@ def test_fold_snapshot_view_incremental_maintenance(spark, tmp_path):
                 for r in players_state(df).collect()}
 
     for upto in (350, 799, 1199):
-        got = states(state_at(log, view.snapshots(), upto))
-        want = states(replay_state(log, upto_offset=upto))
-        assert got == want, upto
+        assert states(state_at(log, sink, upto)) == states(
+            replay_state(log, upto_offset=upto)
+        ), upto
         # O(tail) really holds: the chosen snapshot is within every_k
         best = (
-            view.snapshots().filter(F.col("snap_offset") <= upto)
+            sink.filter(F.col("snap_offset") <= upto)
             .groupBy("room").agg(F.max("snap_offset").alias("s")).collect()
         )
         for r in best:
             assert upto - r.s < 400, (upto, r.s)
-
-    # committed replay: byte-identical state, no duplicate rows
-    n_snaps = view.snapshots().count()
-    view.update(log.filter(F.col("offset").between(500, 999)), 1)
-    assert view.snapshots().count() == n_snaps
-
-    # partial commit: lose batch 2's snaps partition, replay heals it
-    before = {(r.room, r.snap_offset, bytes(r.blob))
-              for r in view.snapshots().collect()}
-    shutil.rmtree(view._batch_dir(view.snaps_dir, 2))
-    view.update(log.filter(F.col("offset").between(1000, 1199)), 2)
-    after = {(r.room, r.snap_offset, bytes(r.blob))
-             for r in view.snapshots().collect()}
-    assert after == before
-
-    # heads() is the latest-state fast path: equals full replay at tip
-    tip = states(replay_state(log))
-    head_states = {}
-    for r in view.heads().collect():
-        assert r.upto_offset == 1199
-        st = decode_state(r.blob)
-        for name, p in st.players.items():
-            head_states[(r.room, name)] = (p.pos[0], p.pos[1], p.alive)
-    assert head_states == tip
     log.unpersist()
 
 
-def test_fold_snapshot_view_via_real_stream(spark, tmp_path):
-    """attach() maintains the view as a Structured Streaming sink: one
-    update per micro-batch over a streamed log, and the maintained
-    snapshot table equals the one-shot snapshot_states build."""
+def test_streaming_snapshots_exactly_once_across_restart(spark, tmp_path):
+    """The snapshot stream is exactly-once across a stop, a restart
+    from its checkpoint and a re-executed batch: after each step the
+    file sink holds no duplicate (room, snap_offset), and its states
+    equal snapshot_states' over the log delivered so far."""
+    import os
+
     from pyspark.sql import functions as F
 
-    from play_with_pulsar_spark.operators.replay import (
-        FoldSnapshotView,
-        decode_state,
-        snapshot_states,
-    )
+    from play_with_pulsar_spark.operators.replay import snapshot_states
     from play_with_pulsar_spark.sources.fixtures import game_event_log
 
-    log = game_event_log(spark, n_rooms=2, events_per_room=300, seed=7).cache()
-    src = str(tmp_path / "src")
-    for k, (lo, hi) in enumerate([(0, 149), (150, 299)]):
-        log.filter(F.col("offset").between(lo, hi)).write.parquet(f"{src}/f{k}")
-    stream = (
-        spark.readStream.schema(log.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/f*")
-    )
-    view = FoldSnapshotView(spark, str(tmp_path / "sv"), every_k=100)
-    view.attach(stream, str(tmp_path / "ckpt")).awaitTermination(120)
-    got = {(r.room, r.snap_offset): decode_state(r.blob)
-           for r in view.snapshots().collect()}
-    want = {(r.room, r.snap_offset): decode_state(r.blob)
-            for r in snapshot_states(log, every_k=100).collect()
-            if r.snap_offset >= 0}
-    assert len(got) == 6  # 3 per room
-    assert got == want
+    log = game_event_log(spark, n_rooms=2, events_per_room=1200, seed=42).cache()
+    base = str(tmp_path)
+
+    def check(upto, n_snaps):
+        got = _decoded_snapshots(spark.read.parquet(os.path.join(base, "snaps")).collect())
+        want = _decoded_snapshots(
+            snapshot_states(log.filter(F.col("offset") <= upto), every_k=400).collect()
+        )
+        assert len(got) == n_snaps
+        assert got == want
+
+    # the first file, then the query stops
+    assert _stream_snapshots(spark, log, [(0, 499)], 400, base) == [0]
+    check(499, 2)
+    # restart from the checkpoint with the next files
+    assert _stream_snapshots(spark, log, [(500, 999), (1000, 1099)], 400, base) == [1, 2]
+    check(1099, 4)
+    # lose the last batch's commit: the restart re-executes batch 2,
+    # and the sink's metadata log keeps its rows from landing twice
+    os.remove(os.path.join(base, "ckpt", "commits", "2"))
+    assert _stream_snapshots(spark, log, [], 400, base) == [2]
+    check(1099, 4)
+    # the state the re-executed batch left folds on correctly
+    assert _stream_snapshots(spark, log, [(1100, 1199)], 400, base) == [3]
+    check(1199, 6)
     log.unpersist()

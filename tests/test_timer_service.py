@@ -34,10 +34,12 @@ def _mk_events():
     return rows
 
 
-def test_timer_service_emits_orphan_explodes(spark, tmp_path):
+def _timer_output(spark, rows, tmp_path, query_name, n_rows):
+    """Run ``timer_service`` over ``rows`` until it has emitted
+    ``n_rows`` explodes (or 60 s pass) and return them."""
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    df = spark.createDataFrame(pd.DataFrame(_mk_events()), GAME_EVENT_SCHEMA)
+    df = spark.createDataFrame(pd.DataFrame(rows), GAME_EVENT_SCHEMA)
     df.coalesce(1).write.mode("overwrite").parquet(str(in_dir / "batch0"))
 
     stream = spark.readStream.schema(GAME_EVENT_SCHEMA).parquet(str(in_dir / "batch*"))
@@ -45,22 +47,26 @@ def test_timer_service_emits_orphan_explodes(spark, tmp_path):
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
-        .queryName("timer_out")
+        .queryName(query_name)
         .trigger(processingTime="500 milliseconds")
         .start()
     )
     try:
         # wait for the timers to fire (needs a trigger AFTER expiry)
         deadline = time.time() + 60
-        rows = []
+        got = []
         while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM timer_out").collect()
-            if len(rows) >= 2:
+            got = spark.sql(f"SELECT * FROM {query_name}").collect()
+            if len(got) >= n_rows:
                 break
             time.sleep(0.5)
     finally:
         q.stop()
+    return got
 
+
+def test_timer_service_emits_orphan_explodes(spark, tmp_path):
+    rows = _timer_output(spark, _mk_events(), tmp_path, "timer_out", 2)
     got = {(r.room, r.name): (r.x, r.y) for r in rows}
     # orphaned bombs got synthesized explodes at their set position
     assert got.get(("A", "p1-b0002")) == (2, 2)
@@ -68,6 +74,23 @@ def test_timer_service_emits_orphan_explodes(spark, tmp_path):
     # the client-exploded bomb must NOT be re-exploded
     assert ("A", "p1-b0001") not in got
     assert all(r.type == "ExplodeEvent" for r in rows)
+
+
+def test_timer_service_reads_a_null_coordinate_as_zero(spark, tmp_path):
+    """GAME_EVENT_SCHEMA declares x/y nullable and both folds read a
+    null as 0 (Go's zero value). One null makes the worker's x column
+    float64 with NaN; the timer still schedules the bomb, and its
+    explode lands at x = 0."""
+    base = datetime(2024, 3, 1)
+    rows = [
+        dict(offset=0, room="C", ts=base, type="UserJoinEvent", name="p3",
+             avatar="f", comment="", x=1, y=1, alive=True, list=None),
+        dict(offset=1, room="C", ts=base, type="SetBombEvent", name="p3-b0004",
+             avatar="f", comment="", x=None, y=7, alive=True, list=None),
+    ]
+    got = _timer_output(spark, rows, tmp_path, "timer_null_out", 1)
+    assert {(r.room, r.name): (r.x, r.y) for r in got} == {("C", "p3-b0004"): (0, 7)}
+
 
 def test_timer_service_fires_while_room_active(spark, tmp_path):
     """A room with a steady event flow re-arms its timeout on every
