@@ -22,11 +22,15 @@ from __future__ import annotations
 
 import math
 import os
-from collections.abc import Callable
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .operators import compaction, pii, replay, scoreboard
 from .operators.textops import oracle_html_extract_sql, oracle_html_main_content_sql
@@ -83,6 +87,36 @@ def _prep(spark: SparkSession) -> None:
     from .session import ensure_workers_have_package
 
     ensure_workers_have_package(spark)
+
+
+@contextmanager
+def _scratch(spark: SparkSession, tag: str) -> Iterator[str]:
+    """One scratch dir (``pwp_<tag>_…``) for a query that runs an
+    incremental operator for real: ``_prep`` the session, yield the
+    dir, remove it on the way out, raised or not. Whatever the query
+    returns must not read the dir — ``_held`` materializes it."""
+    _prep(spark)
+    d = tempfile.mkdtemp(prefix=f"pwp_{tag}_")
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _thirds(op, frame: DataFrame, key: str = "doc_id"):
+    """Feed ``frame`` to ``op`` as three micro-batches, ``key % 3 == k``
+    for k = 0, 1, 2 in order (batch id k), and return ``op``."""
+    for k in range(3):
+        op.process_batch(frame.filter(F.col(key) % 3 == k), k)
+    return op
+
+
+def _held(spark: SparkSession, df: DataFrame, schema: str) -> DataFrame:
+    """``df``'s ``schema`` columns collected to the driver (a small
+    result) and served back as ``schema``: the frame outlives the
+    scratch dir ``df`` reads."""
+    names = StructType.fromDDL(schema).names
+    return spark.createDataFrame(df.select(*names).collect(), schema)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -705,7 +739,6 @@ def stream_s6_tableview(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink; the final compacted table hash-matches the same oracle as
     the batch form (pulsar.go:160-167's live subscription semantics,
     driver-verified streaming == batch)."""
-    from .streaming.pipeline import streaming_latest_per_key
 
     def compacted(stream: DataFrame) -> DataFrame:
         chg = stream.select(
@@ -714,7 +747,7 @@ def stream_s6_tableview(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("bigint").alias("score"),
             F.col("offset").alias("last_offset"),
         )
-        return streaming_latest_per_key(
+        return compaction.latest_per_key(
             chg, key_cols=["room", "player"], order_cols=["last_offset"],
             payload_cols=None,
         )
@@ -874,22 +907,15 @@ def _run_streamed_fixture(spark, fixture_path, schema, transform, tag):
     DataFrame reads the memory sink, not the files). The memory-sink
     table itself lives until the session ends — it holds the result
     the driver collects."""
-    import os
-    import shutil
-    import tempfile
     import uuid
 
     from .streaming.pipeline import run_to_completion
 
-    _prep(spark)
-    d = tempfile.mkdtemp(prefix=f"pwp_{tag}_")
-    try:
+    with _scratch(spark, tag) as d:
         os.symlink(fixture_path, os.path.join(d, os.path.basename(fixture_path)))
         stream = spark.readStream.schema(schema).parquet(d)
         name = f"{tag}_{uuid.uuid4().hex[:8]}"
         return run_to_completion(transform(stream), name, "complete")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -1234,15 +1260,10 @@ def fold_snapshot_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-python golden as ``fold_time_travel`` — the stream-maintained
     table and the from-scratch replay are indistinguishable, under the
     driver's hash gate."""
-    import os
-    import shutil
-    import tempfile
-
-    from .streaming.pipeline import streaming_snapshots
+    from .streaming.pipeline import start_pinned, streaming_snapshots
 
     log = _game_log(spark)
-    base = tempfile.mkdtemp(prefix="pwp_snapview_")
-    try:
+    with _scratch(spark, "snapview") as base:
         src, sink = os.path.join(base, "src"), os.path.join(base, "snaps")
         for k, (lo, hi) in enumerate([(0, 799), (800, 1399), (1400, 10**9)]):
             # one file per slice, so one slice per micro-batch
@@ -1254,38 +1275,18 @@ def fold_snapshot_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/f*")
         )
-        # The stateful stage runs one task and one state-store commit
-        # per shuffle partition every micro-batch: at a plain session's
-        # 200 a batch took 22-30 s on a 4-core VM, at one per core
-        # under a second. A query fixes the count when it starts, so
-        # the session's own setting is restored right after.
-        conf = "spark.sql.shuffle.partitions"
-        prev = spark.conf.get(conf)
-        spark.conf.set(conf, str(spark.sparkContext.defaultParallelism))
-        try:
-            q = (
-                streaming_snapshots(stream, every_k=500)
-                .writeStream.format("parquet")
-                .option("checkpointLocation", os.path.join(base, "ckpt"))
-                .trigger(availableNow=True)
-                .start(sink)
-            )
-        finally:
-            spark.conf.set(conf, prev)
-        q.awaitTermination()
-        # materialize (small: one row per live player) before the sink
-        # is deleted — a lazy frame over it would dangle
-        rows = [
-            (r.room, r.name, r.x, r.y, r.alive)
-            for r in replay.players_state(
-                replay.state_at(log, spark.read.parquet(sink), 1500)
-            ).collect()
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "room string, name string, x int, y int, alive boolean"
-    )
+        writer = (
+            streaming_snapshots(stream, every_k=500)
+            .writeStream.format("parquet")
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+        )
+        start_pinned(writer, spark, sink).awaitTermination()
+        return _held(
+            spark,
+            replay.players_state(replay.state_at(log, spark.read.parquet(sink), 1500)),
+            "room string, name string, x int, y int, alive boolean",
+        )
 
 
 # fold_scale_replay workload size — bench.py imports these to derive
@@ -6807,37 +6808,21 @@ def pipeline_incremental_substr_dedup_q(
     batches: planted copies land in a different residue than their
     originals, so excisions exercise the stored index, not just the
     within-batch rule."""
-    import shutil
-    import tempfile
-
     from .streaming.substr_dedup import IncrementalSubstrDeduper
 
-    _prep(spark)
-    docs = _substr_plant(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="pwp_substrdedup_q_")
-    try:
+    with _scratch(spark, "substrdedup_q") as base:
+        docs = _substr_plant(spark, sf_dir)
         d = IncrementalSubstrDeduper(spark, base, n=5, w=8)
         for k in range(3):
             d.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
             if k == 1:
                 d.compact()
-        rows = [
-            (
-                r.doc_id,
-                r.n_tokens,
-                r.clean_text,
-                r.n_tokens_kept,
-                r.n_tokens_dropped,
-            )
-            for r in d.deduped().collect()
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, n_tokens bigint, clean_text string, "
-        "n_tokens_kept bigint, n_tokens_dropped bigint",
-    )
+        return _held(
+            spark,
+            d.deduped(),
+            "doc_id long, n_tokens bigint, clean_text string, "
+            "n_tokens_kept bigint, n_tokens_dropped bigint",
+        )
 
 
 @register(
@@ -6872,24 +6857,16 @@ def pipeline_streaming_substr_q(
     within-batch rule. The never-indexed pre-screen contract and the
     frozen (substr_n, winnow_w) policy record are pinned in
     ``tests/test_curator_substr.py``."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
-    docs = _substr_plant(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="pwp_cursubstr_q_")
-    try:
+    with _scratch(spark, "cursubstr_q") as base:
+        docs = _substr_plant(spark, sf_dir)
         cur = StreamingCorpusCurator(spark, base, screen="substr")
         for k in range(3):
             cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
             if k == 1:
                 cur.compact()
-        rows = [(r.doc_id, r.text) for r in cur.accepted().collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "doc_id long, text string")
+        return _held(spark, cur.accepted(), "doc_id long, text string")
 
 
 @register(
@@ -7010,29 +6987,17 @@ def pipeline_incremental_line_dedup_q(spark: SparkSession, sf_dir: str) -> DataF
     the stored index, not just the within-batch rule. Spark-vs-DuckDB
     parity additionally witnesses that no xxhash64 index-key collision
     occurred (the oracle dedups on raw lines)."""
-    import shutil
-    import tempfile
-
     from .streaming.line_dedup import IncrementalLineDeduper
 
-    _prep(spark)
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="pwp_linededup_q_")
-    try:
-        d = IncrementalLineDeduper(spark, base, segment_tokens=10)
-        for k in range(3):
-            d.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
-        rows = [
-            (r.doc_id, r.text_dedup, r.n_lines, r.n_kept, r.n_removed)
-            for r in d.deduped().collect()
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, text_dedup string, n_lines bigint, "
-        "n_kept bigint, n_removed bigint",
-    )
+    with _scratch(spark, "linededup_q") as base:
+        docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+        d = _thirds(IncrementalLineDeduper(spark, base, segment_tokens=10), docs)
+        return _held(
+            spark,
+            d.deduped(),
+            "doc_id long, text_dedup string, n_lines bigint, "
+            "n_kept bigint, n_removed bigint",
+        )
 
 
 def _greedy_curation_stages(source: str = "documents") -> str:
@@ -7202,19 +7167,14 @@ def pipeline_streaming_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streaming twin of ``dedup_survivors_best`` (``dedup.py``); the
     reference anchor is the compacted topic's keep-one-per-key
     retention (pulsar.go:160-167) with a value-aware keep rule."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = (
         _t(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .withColumn("score", (F.col("doc_id") % 7).cast("double"))
     )
-    base = tempfile.mkdtemp(prefix="pwp_retention_q_")
-    try:
+    with _scratch(spark, "retention_q") as base:
         cur = StreamingCorpusCurator(
             spark,
             base,
@@ -7223,12 +7183,8 @@ def pipeline_streaming_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             retention="best",
             score_col="score",
         )
-        for k in range(3):
-            cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, docs)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 @register(
@@ -7260,18 +7216,13 @@ def pipeline_streaming_url_screen(spark: SparkSession, sf_dir: str) -> DataFrame
     verdict rule fires on the planted fixture, so the accepted set
     measurably differs from plain curation's (non-vacuity pinned in
     test_oracle_parity)."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = (
         _t(spark, sf_dir, "documents")
         .select("doc_id", "text", _url_plant_col().alias("url"))
     )
-    base = tempfile.mkdtemp(prefix="pwp_urlscreen_q_")
-    try:
+    with _scratch(spark, "urlscreen_q") as base:
         cur = StreamingCorpusCurator(
             spark,
             base,
@@ -7280,12 +7231,8 @@ def pipeline_streaming_url_screen(spark: SparkSession, sf_dir: str) -> DataFrame
             url_col="url",
             url_blocked_domains=_URL_BLOCKED_DOMAINS,
         )
-        for k in range(3):
-            cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, docs)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 def _pipeline_repetition_oracle() -> str:
@@ -7353,17 +7300,12 @@ def pipeline_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unrolled greedy fold's cumulative accepted sets. The tier is
     deliberately outside the compaction fold — it is history, and
     history is its value."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _gopher_rep_pages(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.col("page").alias("text")
     )
-    base = tempfile.mkdtemp(prefix="pwp_funnelq_")
-    try:
+    with _scratch(spark, "funnelq") as base:
         cur = StreamingCorpusCurator(
             spark,
             base,
@@ -7372,12 +7314,8 @@ def pipeline_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             repetition_rules=True,
             track_funnel=True,
         )
-        for k in range(3):
-            cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
-        rows = [(r.batch_id, r.stage, r.n) for r in cur.funnel().collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, "batch_id int, stage string, n long")
+        _thirds(cur, docs)
+        return _held(spark, cur.funnel(), "batch_id int, stage string, n long")
 
 
 @register("pipeline_streaming_repetition", oracle=_pipeline_repetition_oracle())
@@ -7391,17 +7329,12 @@ def pipeline_streaming_repetition(spark: SparkSession, sf_dir: str) -> DataFrame
     plant), so every rule class fires and the accepted set measurably
     differs from plain curation's. The oracle chains the eleven-
     signal SQL verdict into the unrolled greedy fold."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _gopher_rep_pages(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.col("page").alias("text")
     )
-    base = tempfile.mkdtemp(prefix="pwp_repscreen_q_")
-    try:
+    with _scratch(spark, "repscreen_q") as base:
         cur = StreamingCorpusCurator(
             spark,
             base,
@@ -7409,12 +7342,8 @@ def pipeline_streaming_repetition(spark: SparkSession, sf_dir: str) -> DataFrame
             max_shingle_freq=_NGRAM_MAX_DF,
             repetition_rules=True,
         )
-        for k in range(3):
-            cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, docs)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 # FineWeb-recipe plant: sentence-per-line pages (every line ends in
@@ -7655,17 +7584,12 @@ def pipeline_streaming_fineweb(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit gate under the hash). Non-vacuous per stage:
     the plant fails documents through every rung (asserted in
     ``test_streaming_fineweb.py``)."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     pages = _fineweb_pages(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.col("page").alias("text")
     )
-    base = tempfile.mkdtemp(prefix="pwp_finewebq_")
-    try:
+    with _scratch(spark, "finewebq") as base:
         cur = StreamingCorpusCurator(
             spark,
             base,
@@ -7673,26 +7597,13 @@ def pipeline_streaming_fineweb(spark: SparkSession, sf_dir: str) -> DataFrame:
             fineweb_recipe=True,
             compact_after=1,
         )
-        for k in range(3):
-            cur.process_batch(pages.filter(F.col("doc_id") % 3 == k), k)
-        rows = [
-            (
-                r.doc_id,
-                r.c4_kept,
-                r.quality_kept,
-                r.rep_kept,
-                r.is_canonical,
-                r.final_keep,
-            )
-            for r in cur.fineweb_funnel().collect()
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, c4_kept boolean, quality_kept boolean,"
-        " rep_kept boolean, is_canonical boolean, final_keep boolean",
-    )
+        _thirds(cur, pages)
+        return _held(
+            spark,
+            cur.fineweb_funnel(),
+            "doc_id long, c4_kept boolean, quality_kept boolean,"
+            " rep_kept boolean, is_canonical boolean, final_keep boolean",
+        )
 
 
 def _fineweb_full_oracle(out: str = "batch") -> str:
@@ -7958,17 +7869,12 @@ def pipeline_streaming_fineweb_full_q(
     record (the two modes store different verdict schemas); the tier
     deliberately stores NO text — redaction is a stateless codegen
     projection over the accepted corpus."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     planted = _fineweb_full_plant(spark, sf_dir).withColumnRenamed(
         "page", "text"
     )
-    base = tempfile.mkdtemp(prefix="pwp_fwfull_q_")
-    try:
+    with _scratch(spark, "fwfull_q") as base:
         cur = StreamingCorpusCurator(
             spark,
             base,
@@ -7977,25 +7883,15 @@ def pipeline_streaming_fineweb_full_q(
             url_blocked_domains=_URL_BLOCKED_DOMAINS,
             compact_after=1,
         )
-        for k in range(3):
-            cur.process_batch(planted.filter(F.col("doc_id") % 3 == k), k)
-        rows = [
-            (
-                r.doc_id, r.url_kept, r.lang_pred, r.lang_kept, r.c4_kept,
-                r.quality_kept, r.rep_kept, r.n_pii, r.is_canonical,
-                r.final_keep,
-            )
-            for r in cur.fineweb_funnel().collect()
-        ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, url_kept boolean, lang_pred string,"
-        " lang_kept boolean, c4_kept boolean, quality_kept boolean,"
-        " rep_kept boolean, n_pii bigint, is_canonical boolean,"
-        " final_keep boolean",
-    )
+        _thirds(cur, planted)
+        return _held(
+            spark,
+            cur.fineweb_funnel(),
+            "doc_id long, url_kept boolean, lang_pred string,"
+            " lang_kept boolean, c4_kept boolean, quality_kept boolean,"
+            " rep_kept boolean, n_pii bigint, is_canonical boolean,"
+            " final_keep boolean",
+        )
 
 
 @register(
@@ -8073,27 +7969,15 @@ def pipeline_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive statement of the same greedy fold. This puts the whole
     operational loop (not just its operators) under the driver's
     hash gate."""
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    import shutil
-
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="pwp_curation_q_")
-    try:
+    with _scratch(spark, "curation_q") as base:
         cur = StreamingCorpusCurator(
             spark, base, threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF
         )
-        for k in range(3):
-            cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
-        # materialize the (small) accepted id set so the state dir can
-        # be deleted — a lazy frame over it would dangle
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, docs)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 @register(
@@ -8123,33 +8007,24 @@ def pipeline_streaming_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy curation fold over kept docs only. A quality-rejected doc
     is never indexed, so it also never rejects a later near-dup —
     the composition, not just the stages, is what the hash checks."""
-    import shutil
-    import tempfile
-
     from .operators import classifier
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     feats_raw = classifier.quality_features(docs, label=F.length("text") >= 400)
     stats = classifier.feature_stats(feats_raw)
     feats = classifier.standardize(feats_raw, stats=stats).persist()
     w = classifier.logreg_fit(feats, iters=6, lr=2.0)
     feats.unpersist()
-    base = tempfile.mkdtemp(prefix="pwp_curation_qual_")
-    try:
+    with _scratch(spark, "curation_qual") as base:
         model_path = f"{base}/quality_model.json"
         classifier.save_model(model_path, w, stats)
         cur = StreamingCorpusCurator(
             spark, base, threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF,
             quality_model_path=model_path, quality_threshold=0.5,
         )
-        for k in range(3):
-            cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, docs)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 @register(
@@ -8203,18 +8078,13 @@ def pipeline_streaming_decontamination(spark: SparkSession, sf_dir: str) -> Data
     bit-for-bit — false positives included — so the hash pins the
     production composition: a contaminated doc never enters the
     corpus AND never rejects a later near-dup."""
-    import shutil
-    import tempfile
-
     from .operators import sketch, textops
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 83 == 0)
     corpus = docs.filter(F.col("doc_id") % 83 != 0)
-    base = tempfile.mkdtemp(prefix="pwp_curation_decon_")
-    try:
+    with _scratch(spark, "curation_decon") as base:
         bloom_path = f"{base}/bench_bloom"
         sketch.write_bloom(
             textops.exploded_ngrams(bench, n=3).select("g").distinct(),
@@ -8225,12 +8095,8 @@ def pipeline_streaming_decontamination(spark: SparkSession, sf_dir: str) -> Data
             contamination_bloom_path=bloom_path,
             contamination_max_fraction=0.1,
         )
-        for k in range(3):
-            cur.process_batch(corpus.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, corpus)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 @register("pipeline_curation_compacted", oracle=_greedy_curation_oracle())
@@ -8245,39 +8111,29 @@ def pipeline_curation_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     puts the compaction machinery itself — fold, atomic flip, covered-
     partition exclusion, directory cleanup — under the driver's hash
     gate, not just under pytest."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="pwp_curation_cq_")
-    # constructor does no filesystem work — hoisted above the try so
-    # the finally block's `cur` reference can never be unbound (an
-    # unbound NameError there would mask the real failure)
-    cur = StreamingCorpusCurator(
-        spark,
-        base,
-        threshold=0.8,
-        max_shingle_freq=_NGRAM_MAX_DF,
-        compact_after=0,
-        n_buckets=8,
-    )
-    try:
-        for k in range(3):
-            cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
-        man = cur._manifest()
-        assert man is not None and man["covered_upto"] == 2  # it really ran
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        for v in range(4):  # external-table catalog entries are per-run
-            for sfx in ("grams_by_g", "df_by_g"):
-                spark.sql(
-                    f"DROP TABLE IF EXISTS {cur.catalog_prefix}_v{v}_{sfx}"
-                )
-    return spark.createDataFrame(ids, "doc_id long")
+    with _scratch(spark, "curation_cq") as base:
+        cur = StreamingCorpusCurator(
+            spark,
+            base,
+            threshold=0.8,
+            max_shingle_freq=_NGRAM_MAX_DF,
+            compact_after=0,
+            n_buckets=8,
+        )
+        try:
+            _thirds(cur, docs)
+            man = cur._manifest()
+            assert man is not None and man["covered_upto"] == 2  # it really ran
+            return _held(spark, cur.accepted(), "doc_id long")
+        finally:
+            for v in range(4):  # external-table catalog entries are per-run
+                for sfx in ("grams_by_g", "df_by_g"):
+                    spark.sql(
+                        f"DROP TABLE IF EXISTS {cur.catalog_prefix}_v{v}_{sfx}"
+                    )
 
 
 @register(
@@ -8852,15 +8708,10 @@ def pipeline_embedding_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuity — this oracle's cosines are over the raw vectors); the
     round-8 int8 state tier has its own end-to-end hash gate,
     ``pipeline_embedding_curation_int8``."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     v = _clustered_embeddings(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="pwp_embcur_q_")
-    try:
+    with _scratch(spark, "embcur_q") as base:
         cur = StreamingCorpusCurator(
             spark,
             base,
@@ -8872,12 +8723,8 @@ def pipeline_embedding_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             num_tables=16,
             vec_format="float64",
         )
-        for k in range(3):
-            cur.process_batch(v.filter(F.col("vec_id") % 3 == k), k)
-        ids = [(r.vec_id,) for r in cur.accepted().select("vec_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "vec_id long")
+        _thirds(cur, v, "vec_id")
+        return _held(spark, cur.accepted(), "vec_id long")
 
 
 def _retention_embedding_oracle(threshold: float = 0.9975) -> str:
@@ -8958,17 +8805,12 @@ def pipeline_embedding_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold over exact cosines on the clustered fixture (LSH candidate
     coverage provable at the 4×16 geometry, the
     ``dedup_embedding_lsh_clustered`` argument)."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     v = _clustered_embeddings(spark, sf_dir).withColumn(
         "score", (F.col("vec_id") % 7).cast("double")
     )
-    base = tempfile.mkdtemp(prefix="pwp_embret_q_")
-    try:
+    with _scratch(spark, "embret_q") as base:
         cur = StreamingCorpusCurator(
             spark,
             base,
@@ -8982,12 +8824,8 @@ def pipeline_embedding_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             retention="best",
             score_col="score",
         )
-        for k in range(3):
-            cur.process_batch(v.filter(F.col("vec_id") % 3 == k), k)
-        ids = [(r.vec_id,) for r in cur.accepted().select("vec_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "vec_id long")
+        _thirds(cur, v, "vec_id")
+        return _held(spark, cur.accepted(), "vec_id long")
 
 
 def _greedy_embedding_curation_oracle_int8(threshold: float = 0.9975) -> str:
@@ -9066,15 +8904,10 @@ def pipeline_embedding_curation_int8(spark: SparkSession, sf_dir: str) -> DataFr
     dequantized v̂, and the oracle replays the identical quantize →
     dequantize → cosine → greedy-fold arithmetic — so the hash gate
     covers the approximation boundary itself, not just the fold."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     v = _clustered_embeddings(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="pwp_embcur8_q_")
-    try:
+    with _scratch(spark, "embcur8_q") as base:
         cur = StreamingCorpusCurator(
             spark,
             base,
@@ -9086,12 +8919,8 @@ def pipeline_embedding_curation_int8(spark: SparkSession, sf_dir: str) -> DataFr
             num_tables=16,
             vec_format="int8",
         )
-        for k in range(3):
-            cur.process_batch(v.filter(F.col("vec_id") % 3 == k), k)
-        ids = [(r.vec_id,) for r in cur.accepted().select("vec_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "vec_id long")
+        _thirds(cur, v, "vec_id")
+        return _held(spark, cur.accepted(), "vec_id long")
 
 
 # =====================================================================
@@ -9579,26 +9408,19 @@ def text_kn3_stored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's SQL. The OOV branches (unseen trigram/context/word) are
     pinned by property tests and exercised end-to-end by
     ``pipeline_perplexity_kn3``'s planted gibberish."""
-    import shutil
-    import tempfile
-
     from .operators import textops
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
-    lmdir = tempfile.mkdtemp(prefix="pwp_kn3_lm_")
-    try:
+    with _scratch(spark, "kn3_lm") as lmdir:
         tc, meta = textops.fit_trigram_lm(docs)
         textops.write_trigram_lm(lmdir, tc, meta)
         tc2, meta2 = textops.read_trigram_lm(spark, lmdir)
-        rows = textops.score_with_trigram_lm(docs, tc2, meta2).collect()
-    finally:
-        shutil.rmtree(lmdir, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "doc_id long, n_tokens bigint, n_trigrams bigint, "
-        "xent double, ppl double",
-    )
+        return _held(
+            spark,
+            textops.score_with_trigram_lm(docs, tc2, meta2),
+            "doc_id long, n_tokens bigint, n_trigrams bigint, "
+            "xent double, ppl double",
+        )
 
 
 def _sql_zinterleave(a: str, b: str, bits: int) -> str:
@@ -10228,15 +10050,10 @@ def pipeline_embedding_curation_pq(spark: SparkSession, sf_dir: str) -> DataFram
     approximation itself. Reference anchor: the compacted-topic
     keep-one-per-key retention (pulsar.go:160-167) with the stored
     value PQ-compressed."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     v = _clustered_embeddings(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="pwp_embcurpq_q_")
-    try:
+    with _scratch(spark, "embcurpq_q") as base:
         cur = StreamingCorpusCurator(
             spark,
             base,
@@ -10248,12 +10065,8 @@ def pipeline_embedding_curation_pq(spark: SparkSession, sf_dir: str) -> DataFram
             num_tables=16,
             vec_format="pq",
         )
-        for k in range(3):
-            cur.process_batch(v.filter(F.col("vec_id") % 3 == k), k)
-        ids = [(r.vec_id,) for r in cur.accepted().select("vec_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "vec_id long")
+        _thirds(cur, v, "vec_id")
+        return _held(spark, cur.accepted(), "vec_id long")
 
 
 
@@ -10427,25 +10240,17 @@ def sim_ivf_pq_stored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebalance laws (FAISS `add` under frozen quantizers; codebook-
     version cutover with late-append carry-over) are pinned in
     test_pq.py."""
-    import shutil
-    import tempfile
-
     from .operators import pq
 
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
-    base = tempfile.mkdtemp(prefix="pwp_pqidx_q_")
-    try:
+    with _scratch(spark, "pqidx_q") as base:
         pq.pq_write_index(spark, base, emb, n_cells=8, m=8, k_sub=16)
         out = pq.pq_query_index(
             spark, base, emb.filter(F.col("vec_id") < 5), k=10, nprobe=2
         )
-        rows = [tuple(r) for r in out.collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "query_id long, neighbor_id long, adc_dist double, rn int"
-    )
+        return _held(
+            spark, out, "query_id long, neighbor_id long, adc_dist double, rn int"
+        )
 
 
 def _pq_rerank_oracle(
@@ -10612,27 +10417,19 @@ def sim_opq_stored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_ivf_pq_oracle`` chain over the bitwise-identical rotated
     corpus CTE). Rotation-frozen append and rebalance carry-over are
     pinned in test_pq.py."""
-    import shutil
-    import tempfile
-
     from .operators import pq
 
-    _prep(spark)
     emb = _t(spark, sf_dir, "embeddings")
-    base = tempfile.mkdtemp(prefix="pwp_opqidx_q_")
-    try:
+    with _scratch(spark, "opqidx_q") as base:
         pq.pq_write_index(
             spark, base, emb, n_cells=8, m=8, k_sub=16, rotation="fwht"
         )
         out = pq.pq_query_index(
             spark, base, emb.filter(F.col("vec_id") < 5), k=10, nprobe=2
         )
-        rows = [tuple(r) for r in out.collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "query_id long, neighbor_id long, adc_dist double, rn int"
-    )
+        return _held(
+            spark, out, "query_id long, neighbor_id long, adc_dist double, rn int"
+        )
 
 
 @register(
@@ -10974,36 +10771,27 @@ def pipeline_streaming_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus. Per-prefix equality, eviction deltas and compaction
     healing are pinned in ``test_streaming_curator.py``; replay
     idempotence rides the per-batch-dir overwrite discipline."""
-    import shutil
-    import tempfile
-
     from .operators import textops
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
     uc, ctx, bc, meta = textops.fit_bigram_lm(docs)
-    base = tempfile.mkdtemp(prefix="pwp_doremi_q_")
-    lmdir = tempfile.mkdtemp(prefix="pwp_doremi_lm_")
-    try:
+    with _scratch(spark, "doremi_q") as base:
+        lmdir = f"{base}/lm"
         textops.write_bigram_lm(lmdir, uc, ctx, bc, meta)
         cur = StreamingCorpusCurator(
             spark, f"{base}/cur",
             threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF,
             doremi_lm_path=lmdir,
         )
-        for k in range(3):
-            cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
+        _thirds(cur, docs)
         rows = [
             (r.source, float(r.excess), float(r.weight))
             for r in cur.doremi_weights(iters=3, eta=1.0, smoothing=0.2).collect()
         ]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(lmdir, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "source string, excess double, weight double"
-    )
+        return spark.createDataFrame(
+            rows, "source string, excess double, weight double"
+        )
 
 
 @register("mix_doremi_weights", oracle=_doremi_oracle())
@@ -11228,13 +11016,9 @@ def pipeline_streaming_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame
     scoring, the keep set, the 3-stage greedy fold — so the hash
     pins the composition: a gibberish doc is never indexed and never
     rejects a later near-dup."""
-    import shutil
-    import tempfile
-
     from .operators import textops
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     mut = docs.select(
         "doc_id",
@@ -11247,22 +11031,16 @@ def pipeline_streaming_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    base = tempfile.mkdtemp(prefix="pwp_curation_ppl_")
-    lmdir = tempfile.mkdtemp(prefix="pwp_lm_art_")
-    try:
+    with _scratch(spark, "curation_ppl") as base:
+        lmdir = f"{base}/lm"
         uc, ctx, bc, meta = textops.fit_bigram_lm(docs)
         textops.write_bigram_lm(lmdir, uc, ctx, bc, meta)
         cur = StreamingCorpusCurator(
-            spark, base, threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF,
+            spark, f"{base}/cur", threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF,
             perplexity_lm_path=lmdir, perplexity_max_xent=5.0,
         )
-        for k in range(3):
-            cur.process_batch(mut.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(lmdir, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, mut)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 def _kn3_curation_oracle(max_xent: float = 5.0) -> str:
@@ -11359,13 +11137,9 @@ def pipeline_perplexity_kn3(spark: SparkSession, sf_dir: str) -> DataFrame:
     the planted docs — before the incremental dedup and the greedy
     fold. Non-vacuity (the screen rejects, and rejects ONLY, above
     the cut) is pinned in test_streaming_curator.py."""
-    import shutil
-    import tempfile
-
     from .operators import textops
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     mut = docs.select(
         "doc_id",
@@ -11378,22 +11152,16 @@ def pipeline_perplexity_kn3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    base = tempfile.mkdtemp(prefix="pwp_curation_kn3_")
-    lmdir = tempfile.mkdtemp(prefix="pwp_lm3_art_")
-    try:
+    with _scratch(spark, "curation_kn3") as base:
+        lmdir = f"{base}/lm"
         tc, meta = textops.fit_trigram_lm(docs)
         textops.write_trigram_lm(lmdir, tc, meta)
         cur = StreamingCorpusCurator(
-            spark, base, threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF,
+            spark, f"{base}/cur", threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF,
             perplexity_lm_path=lmdir, perplexity_max_xent=5.0,
         )
-        for k in range(3):
-            cur.process_batch(mut.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(lmdir, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, mut)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 def _length_band_curation_oracle(min_docs: int = 30) -> str:
@@ -11694,13 +11462,9 @@ def pipeline_streaming_full_stack(spark: SparkSession, sf_dir: str) -> DataFrame
     bit-for-bit by the oracle, false positives included); the quality
     model and the bigram LM are fitted on the corpus and persisted as
     sidecars, the CCNet/GPT-3 recipe."""
-    import shutil
-    import tempfile
-
     from .operators import classifier, sketch, textops
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 83 == 0)
     corpus = docs.filter(F.col("doc_id") % 83 != 0)
@@ -11710,9 +11474,8 @@ def pipeline_streaming_full_stack(spark: SparkSession, sf_dir: str) -> DataFrame
     w = classifier.logreg_fit(feats, iters=6, lr=2.0)
     feats.unpersist()
     uc, ctx, bc, meta = textops.fit_bigram_lm(docs)
-    base = tempfile.mkdtemp(prefix="pwp_curation_full_")
-    lmdir = tempfile.mkdtemp(prefix="pwp_lm_full_")
-    try:
+    with _scratch(spark, "curation_full") as base:
+        lmdir = f"{base}/lm"
         model_path = f"{base}/quality_model.json"
         classifier.save_model(model_path, w, stats)
         textops.write_bigram_lm(lmdir, uc, ctx, bc, meta)
@@ -11730,13 +11493,8 @@ def pipeline_streaming_full_stack(spark: SparkSession, sf_dir: str) -> DataFrame
             contamination_max_fraction=0.1,
             length_band=(0.05, 0.95), length_band_min_docs=30,
         )
-        for k in range(3):
-            cur.process_batch(corpus.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(lmdir, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, corpus)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 @register(
@@ -11759,13 +11517,9 @@ def pipeline_full_stack_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality model / bigram LM / Bloom artifact stay corpus-fitted
     sidecars (fitted BEFORE the curator sees any batch — the CCNet
     recipe), exactly as in the non-URL entry."""
-    import shutil
-    import tempfile
-
     from .operators import classifier, sketch, textops
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text", _url_plant_col().alias("url")
     )
@@ -11777,9 +11531,8 @@ def pipeline_full_stack_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = classifier.logreg_fit(feats, iters=6, lr=2.0)
     feats.unpersist()
     uc, ctx, bc, meta = textops.fit_bigram_lm(docs)
-    base = tempfile.mkdtemp(prefix="pwp_curation_fsu_")
-    lmdir = tempfile.mkdtemp(prefix="pwp_lm_fsu_")
-    try:
+    with _scratch(spark, "curation_fsu") as base:
+        lmdir = f"{base}/lm"
         model_path = f"{base}/quality_model.json"
         classifier.save_model(model_path, w, stats)
         textops.write_bigram_lm(lmdir, uc, ctx, bc, meta)
@@ -11798,13 +11551,8 @@ def pipeline_full_stack_url(spark: SparkSession, sf_dir: str) -> DataFrame:
             contamination_max_fraction=0.1,
             length_band=(0.05, 0.95), length_band_min_docs=30,
         )
-        for k in range(3):
-            cur.process_batch(corpus.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        shutil.rmtree(lmdir, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, corpus)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 def _simhash_curation_oracle(radius: int = 3) -> str:
@@ -11879,24 +11627,15 @@ def pipeline_streaming_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     function of the text, so acceptance history affects only pair
     MEMBERSHIP — the structural reason this screen is the cheap
     one."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="pwp_curation_sh_")
-    try:
+    with _scratch(spark, "curation_sh") as base:
         cur = StreamingCorpusCurator(
             spark, base, screen="simhash", max_hamming=3, sh_hash_fn="md5_60"
         )
-        for k in range(3):
-            cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, docs)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 @register(
@@ -11920,13 +11659,9 @@ def pipeline_html_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap itself would be doing the extractor's job); with it, the fold
     runs on clean prose and its decisions equal the oracle's unrolled
     extract-then-fold statement."""
-    import shutil
-    import tempfile
-
     from .operators import textops
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents")
     extracted = docs.select(
         "doc_id",
@@ -11934,17 +11669,12 @@ def pipeline_html_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             _html_page_col(), min_stopword_ratio=0.04
         ).alias("text"),
     )
-    base = tempfile.mkdtemp(prefix="pwp_htmlcur_q_")
-    try:
+    with _scratch(spark, "htmlcur_q") as base:
         cur = StreamingCorpusCurator(
             spark, base, threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF
         )
-        for k in range(3):
-            cur.process_batch(extracted.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, extracted)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 @register("pipeline_streaming_length_band", oracle=_length_band_curation_oracle())
@@ -11960,25 +11690,16 @@ def pipeline_streaming_length_band(spark: SparkSession, sf_dir: str) -> DataFram
     quantiles, warmup OR-branch, per-stage screen, greedy fold — so
     the hash pins the feedback path: what stage k accepts moves stage
     k+1's cutoffs."""
-    import shutil
-    import tempfile
-
     from .streaming.curator import StreamingCorpusCurator
 
-    _prep(spark)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="pwp_curation_len_")
-    try:
+    with _scratch(spark, "curation_len") as base:
         cur = StreamingCorpusCurator(
             spark, base, threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF,
             length_band=(0.05, 0.95), length_band_min_docs=30,
         )
-        for k in range(3):
-            cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
-        ids = [(r.doc_id,) for r in cur.accepted().select("doc_id").collect()]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(ids, "doc_id long")
+        _thirds(cur, docs)
+        return _held(spark, cur.accepted(), "doc_id long")
 
 
 def _pagerank_oracle(iters: int = 3, damping: float = 0.85) -> str:
@@ -12314,69 +12035,16 @@ BENCH_QUERIES = [
 # code). Every query passes the identical local DuckDB comparison
 # (tests/test_oracle_parity.py) regardless of rotation position.
 _DRIVER_PRIORITY = [
-    # round-13 pins first (changed operators needing driver-side
-    # verification), then never-driver-sampled names, then every
-    # previously-sampled name stalest-first by last
-    # CORRECTNESS_r0N appearance (gen_driver_priority.py)
-    "sim_opq_adc_topk",  # pinned
-    "sim_opq_stored",  # pinned
-    "dedup_survivors_quality",  # pinned
-    "audit_dup_rate_by_source",  # pinned
-    "split_leakage_safe",  # pinned
-    "dedup_simhash_rotated",  # pinned
-    "dedup_simhash_checked",  # pinned
-    "dedup_incremental_simhash",  # pinned
-    "dedup_exact_substring",  # pinned
-    "dedup_ngram_jaccard",  # pinned
-    "graph_pagerank_copurchase",  # pinned
-    "sim_ivf_pq_topk",  # pinned
-    "text_bpe_merges",  # pinned
-    "text_unigram_logprob",  # pinned
-    "text_gopher_repetition",  # pinned
-    "pipeline_fineweb_full",  # pinned
-    "pipeline_fineweb_recipe",  # pinned
-    "text_html_main_content",  # pinned
-    "text_excise_winnowed",  # pinned
-    # round-13 session-2 pins: operators/oracles touched by the
-    # second optimization pass (CC probe fusion, window context
-    # totals, exchange unification, sketch spreads, centroid F.expr,
-    # fully-excised-doc oracle coalesce)
-    "text_line_dedup",  # pinned (exchange unification + oracle guard)
-    "text_excise_duplicate_spans",  # pinned (oracle coalesce)
-    "text_excise_min_span",  # pinned (oracle coalesce)
-    "dsir_hashed_topk",  # pinned (token-boundary exchange + window totals)
-    "dsir_importance_topk",  # pinned (shared tail)
-    "text_kn3_perplexity",  # pinned (window context totals)
-    "text_kn_perplexity",  # pinned (window context totals)
-    "text_bigram_perplexity",  # pinned (window context totals)
-    "quality_perplexity_band",  # pinned (kn consumer)
-    "quality_classifier_scores",  # pinned (single-tokenization persist)
-    "pipeline_quality_dedup",  # pinned (classifier consumer)
-    "mix_doremi_weights",  # pinned (unigram-total + bigram-ctx windows)
-    "mix_doremi_sample",  # pinned (same)
-    "text_unigram_pieces",  # pinned (seed-count persist)
-    "text_unigram_encode",  # pinned (seed-count persist)
-    "text_unigram_encode_bytes",  # pinned (seed-count persist)
-    "text_wordpiece_merges",  # pinned (lazy init checkpoint)
-    "text_bpe_encode",  # pinned (lazy init checkpoint)
-    "cluster_kcenter_seeds",  # pinned (centroid F.expr literals)
-    "cluster_kmeans_assign",  # pinned (centroid F.expr literals)
-    "sketch_topk_ngrams",  # pinned (candidate persist)
-    "text_bloom_contamination",  # pinned (input spread)
-    "sketch_hll_distinct",  # pinned (input spread)
-    "sketch_cms_heavy_hitters",  # pinned (input spread)
-    "dedup_ngram_containment",  # pinned (window sizes + guard)
-    "dedup_clusters_exact",  # pinned (CC probe fusion)
-    "dedup_survivors",  # pinned (CC probe fusion)
-    "approx_stats",  # r8
-    "count_distinct_parts_per_supplier",  # r8
-    "crawl_triage_csv",  # r8
-    "crawl_triage_jsonl",  # r8
+    # pins first (changed code needing driver-side verification),
+    # then never-driver-sampled names, then every previously-sampled
+    # name stalest-first by last CORRECTNESS_r0N appearance; no
+    # rows-only name in the first 50 (gen_driver_priority.py)
+    "fold_snapshot_maintained",  # pinned
+    "stream_a1_scoreboard",  # pinned
+    "pipeline_streaming_curation",  # pinned
     "cube_event_stats",  # r8
     "date_parts_orders",  # r8
-    "dedup_clusters",  # r8
     "dedup_embedding_cosine",  # r8
-    "dedup_embedding_lsh",  # r8
     "dedup_embedding_lsh_auto_clustered",  # r8
     "game_kd_ratio",  # r8
     "game_movement_heatmap",  # r8
@@ -12404,7 +12072,6 @@ _DRIVER_PRIORITY = [
     "semi_customers_with_orders",  # r8
     "sessionize_events",  # r8
     "sim_ivf_pq_stored",  # r8
-    "sim_ivf_topk",  # r8
     "text_html_extract",  # r8
     "text_token_counts",  # r8
     "theta_price_band_join",  # r8
@@ -12422,6 +12089,9 @@ _DRIVER_PRIORITY = [
     "dedup_semantic",  # r9
     "export_shuffle_shards",  # r9
     "game_a1_room_scoreboard",  # r9
+    "dedup_clusters",  # r8
+    "dedup_embedding_lsh",  # r8
+    "sim_ivf_topk",  # r8
     "game_a4a5_global_rank",  # r9
     "game_bomb_effectiveness",  # r9
     "game_p4_position_history",  # r9
@@ -12437,7 +12107,6 @@ _DRIVER_PRIORITY = [
     "pipeline_curation_compacted",  # r9
     "pipeline_embedding_curation",  # r9
     "pipeline_embedding_curation_pq",  # r9
-    "pipeline_streaming_curation",  # r9
     "pipeline_streaming_url_screen",  # r9
     "q11ish_important_parts",  # r9
     "q12ish_priority_shipping",  # r9
@@ -12484,7 +12153,6 @@ _DRIVER_PRIORITY = [
     "quota_token_budget",  # r10
     "sim_ivf_topk_clustered",  # r10
     "sim_lsh_topk_clustered",  # r10
-    "stream_a1_scoreboard",  # r10
     "text_kn3_stored",  # r10
     "text_vocab_coverage",  # r10
     "x16_json_extract",  # r10
@@ -12493,7 +12161,6 @@ _DRIVER_PRIORITY = [
     "crawl_url_screen",  # r11
     "dedup_embedding_lsh_auto",  # r11
     "export_curriculum_shards",  # r11
-    "fold_snapshot_maintained",  # r11
     "pipeline_streaming_fineweb",  # r11
     "pipeline_streaming_repetition",  # r11
     "profile_lineitem_stats",  # r11
@@ -12553,6 +12220,56 @@ _DRIVER_PRIORITY = [
     "text_pmi_collocations",  # r12
     "text_rolling_fingerprints",  # r12
     "w3_order_rank_per_customer",  # r12
+    "approx_stats",  # r13
+    "audit_dup_rate_by_source",  # r13
+    "cluster_kcenter_seeds",  # r13
+    "cluster_kmeans_assign",  # r13
+    "count_distinct_parts_per_supplier",  # r13
+    "crawl_triage_csv",  # r13
+    "crawl_triage_jsonl",  # r13
+    "dedup_clusters_exact",  # r13
+    "dedup_exact_substring",  # r13
+    "dedup_incremental_simhash",  # r13
+    "dedup_ngram_containment",  # r13
+    "dedup_ngram_jaccard",  # r13
+    "dedup_simhash_checked",  # r13
+    "dedup_simhash_rotated",  # r13
+    "dedup_survivors",  # r13
+    "dedup_survivors_quality",  # r13
+    "dsir_hashed_topk",  # r13
+    "dsir_importance_topk",  # r13
+    "graph_pagerank_copurchase",  # r13
+    "mix_doremi_sample",  # r13
+    "mix_doremi_weights",  # r13
+    "pipeline_fineweb_full",  # r13
+    "pipeline_fineweb_recipe",  # r13
+    "pipeline_quality_dedup",  # r13
+    "quality_classifier_scores",  # r13
+    "quality_perplexity_band",  # r13
+    "sim_ivf_pq_topk",  # r13
+    "sim_opq_adc_topk",  # r13
+    "sim_opq_stored",  # r13
+    "sketch_cms_heavy_hitters",  # r13
+    "sketch_hll_distinct",  # r13
+    "sketch_topk_ngrams",  # r13
+    "split_leakage_safe",  # r13
+    "text_bigram_perplexity",  # r13
+    "text_bloom_contamination",  # r13
+    "text_bpe_encode",  # r13
+    "text_bpe_merges",  # r13
+    "text_excise_duplicate_spans",  # r13
+    "text_excise_min_span",  # r13
+    "text_excise_winnowed",  # r13
+    "text_gopher_repetition",  # r13
+    "text_html_main_content",  # r13
+    "text_kn3_perplexity",  # r13
+    "text_kn_perplexity",  # r13
+    "text_line_dedup",  # r13
+    "text_unigram_encode",  # r13
+    "text_unigram_encode_bytes",  # r13
+    "text_unigram_logprob",  # r13
+    "text_unigram_pieces",  # r13
+    "text_wordpiece_merges",  # r13
 ]
 
 

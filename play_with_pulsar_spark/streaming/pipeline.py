@@ -13,7 +13,8 @@ Spark mapping used here:
 - the stateful counter ≈ a streaming grouped count in ``update``
   output mode — Spark's state store replaces ``context.incrCounter``
   (A1/A2); running totals per trigger ARE the changelog;
-- TableView ≈ ``complete``-mode ``max_by`` latest-per-key (S6);
+- TableView ≈ ``compaction.latest_per_key`` over the stream in
+  ``complete`` mode (S6);
 - effectively-once (T4) ≈ checkpointing + ``dropDuplicatesWithinWatermark``;
 - the fold (F1-F9) ≈ ``applyInPandasWithState``: per-room GameState
   carried across micro-batches, events applied in offset order. The
@@ -33,6 +34,7 @@ import pickle
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BinaryType,
@@ -96,13 +98,6 @@ def streaming_windowed_type_counts(
     )
 
 
-def streaming_latest_per_key(events: DataFrame, key_cols, order_cols, payload_cols) -> DataFrame:
-    """S6 TableView as a streaming agg (complete/update mode)."""
-    from ..operators.compaction import latest_per_key
-
-    return latest_per_key(events, key_cols, order_cols, payload_cols)
-
-
 def deduped_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """T4 effectively-once: drop redelivered events within the
     watermark by (room, offset) — state is bounded by the watermark."""
@@ -113,7 +108,8 @@ def deduped_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFram
 
 # --- the streaming fold: GameState carried across micro-batches ---
 
-_FOLD_STATE_SCHEMA = StructType([StructField("blob", BinaryType(), True)])
+# the state every stateful kernel here keeps per room: one opaque blob
+_BLOB_STATE_SCHEMA = StructType([StructField("blob", BinaryType(), True)])
 
 
 def _fold_step(pdf_iter, state: GroupState, every_k: int = 0):
@@ -157,7 +153,7 @@ def streaming_fold(events: DataFrame) -> DataFrame:
     return events.groupBy("room").applyInPandasWithState(
         _fold_with_state,
         outputStructType=STATE_SCHEMA,
-        stateStructType=_FOLD_STATE_SCHEMA,
+        stateStructType=_BLOB_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -195,15 +191,13 @@ def streaming_snapshots(events: DataFrame, every_k: int = 1000) -> DataFrame:
     return _project_fold_columns(events).groupBy("room").applyInPandasWithState(
         kernel,
         outputStructType=SNAPSHOT_SCHEMA,
-        stateStructType=_FOLD_STATE_SCHEMA,
+        stateStructType=_BLOB_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
 # --- T1 timer service: the clients' timer role as an operator ---
-
-_TIMER_STATE_SCHEMA = StructType([StructField("blob", BinaryType(), True)])
 
 TIMER_OUT_SCHEMA = StructType(
     [
@@ -265,7 +259,7 @@ def timer_service(events: DataFrame, explode_after_ms: int = 2000) -> DataFrame:
     return events.groupBy("room").applyInPandasWithState(
         kernel,
         outputStructType=TIMER_OUT_SCHEMA,
-        stateStructType=_TIMER_STATE_SCHEMA,
+        stateStructType=_BLOB_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
@@ -354,16 +348,36 @@ def periodic_events(
     raise ValueError(f"unsupported periodic kind: {kind!r}")
 
 
+def start_pinned(
+    writer: DataStreamWriter, spark: SparkSession, path: str | None = None
+) -> StreamingQuery:
+    """Start ``writer`` (into ``path`` when given) with one shuffle
+    partition per core, then restore the session's own
+    ``spark.sql.shuffle.partitions``.
+
+    A stateful stage runs one task and one state-store commit per
+    shuffle partition every micro-batch, and a query fixes that count
+    when it starts. At a plain session's 200, one small micro-batch
+    took 8-30 s on a 4-core VM; at one per core, under a second."""
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, str(spark.sparkContext.defaultParallelism))
+    try:
+        return writer.start(path)
+    finally:
+        spark.conf.set(conf, prev)
+
+
 def run_to_completion(stream_df: DataFrame, query_name: str, output_mode: str) -> DataFrame:
     """Drive a streaming DataFrame over all currently-available input
     (availableNow) into a memory sink and return the sink contents —
-    the local test/dev harness."""
-    q = (
+    the local test/dev harness. Stateful stages start at one shuffle
+    partition per core (``start_pinned``)."""
+    writer = (
         stream_df.writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(query_name)
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    start_pinned(writer, stream_df.sparkSession).awaitTermination()
     return stream_df.sparkSession.sql(f"SELECT * FROM {query_name}")

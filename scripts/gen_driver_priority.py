@@ -4,9 +4,10 @@ The external driver records CORRECTNESS rows for the FIRST 50
 ``queries()`` entries only, so the list must rotate: names never yet
 sampled first (the current round's additions), then every
 previously-sampled name STALEST-FIRST by its last CORRECTNESS_r0N
-appearance. Run at round end, paste the output block over the list in
-``queries.py`` (the sync test in test_oracle_parity pins membership,
-not order).
+appearance. Names without an oracle (rows-only) are kept out of the
+first 50: the driver cannot hash-check them, so a slot spent on one
+is a sample lost. Run at round end, paste the output block over the
+list in ``queries.py``.
 
 Usage: python scripts/gen_driver_priority.py
 """
@@ -19,33 +20,20 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
+# The driver records CORRECTNESS rows for this many leading names.
+SAMPLE = 50
 
-# Names FORCED into the top of the sample this round regardless of
-# staleness — queries whose operators changed with thin driver-side
-# coverage (round 13: the r12 post-bench trio's consumers, per the
-# r12 verdict item 3, plus this round's heaviest-touched entries).
+# Names FORCED into the top of the sample regardless of staleness —
+# queries whose stream start or scratch-dir harness changed with thin
+# driver-side coverage: the stream-maintained snapshot table, the
+# streaming scoreboard and one streaming curator tier.
 PINNED = [
-    "sim_opq_adc_topk",
-    "sim_opq_stored",
-    "dedup_survivors_quality",
-    "audit_dup_rate_by_source",
-    "split_leakage_safe",
-    "dedup_simhash_rotated",
-    "dedup_simhash_checked",
-    "dedup_incremental_simhash",
-    "dedup_exact_substring",
-    "dedup_ngram_jaccard",
-    "graph_pagerank_copurchase",
-    "sim_ivf_pq_topk",
-    "text_bpe_merges",
-    "text_unigram_logprob",
-    "text_gopher_repetition",
-    "pipeline_fineweb_full",
-    "pipeline_fineweb_recipe",
-    "text_html_main_content",
-    "text_excise_winnowed",
+    "fold_snapshot_maintained",
+    "stream_a1_scoreboard",
+    "pipeline_streaming_curation",
 ]
 
 
@@ -54,7 +42,7 @@ def main() -> None:
 
     names = list(q.queries().keys())
     last: dict[str, int] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         m = re.search(r"r(\d+)", os.path.basename(path))
         rnd = int(m.group(1)) if m else 0
         with open(path) as f:
@@ -64,18 +52,18 @@ def main() -> None:
     rest = [n for n in names if n not in pinned]
     never = [n for n in rest if n not in last]
     stale = sorted((n for n in rest if n in last), key=lambda n: (last[n], n))
+    order = pinned + never + stale
+    head = [n for n in order if q.REGISTRY[n].oracle is not None][:SAMPLE]
+    order = head + [n for n in order if n not in head]
     print(f"# pinned: {len(pinned)}; never sampled: {len(never)}; sampled: {len(stale)}")
     print("_DRIVER_PRIORITY = [")
-    print("    # round-13 pins first (changed operators needing driver-side")
-    print("    # verification), then never-driver-sampled names, then every")
-    print("    # previously-sampled name stalest-first by last")
-    print("    # CORRECTNESS_r0N appearance (gen_driver_priority.py)")
-    for n in pinned:
-        print(f'    "{n}",  # pinned')
-    for n in never:
-        print(f'    "{n}",')
-    for n in stale:
-        print(f'    "{n}",  # r{last[n]}')
+    print("    # pins first (changed code needing driver-side verification),")
+    print("    # then never-driver-sampled names, then every previously-sampled")
+    print("    # name stalest-first by last CORRECTNESS_r0N appearance; no")
+    print(f"    # rows-only name in the first {SAMPLE} (gen_driver_priority.py)")
+    for n in order:
+        note = "pinned" if n in pinned else f"r{last[n]}" if n in last else ""
+        print(f'    "{n}",' + (f"  # {note}" if note else ""))
     print("]")
 
 

@@ -176,3 +176,26 @@ def test_full_stack_url_ordering_nonvacuous(spark, sf_dir):
         "URL screen only subtracted its own rejects — no downstream "
         "cutoff moved; the ordering composition is vacuous"
     )
+
+
+def test_scratch_dir_is_removed_on_exit_and_on_error(spark):
+    """The scratch harness of the registry's incremental queries: the
+    dir exists inside the block and is gone after it, also when the
+    block raises, and the exception reaches the caller unchanged."""
+    import os
+
+    from play_with_pulsar_spark.queries import _scratch
+
+    with _scratch(spark, "probe") as d:
+        assert os.path.isdir(d)
+        assert os.path.basename(d).startswith("pwp_probe_")
+        open(os.path.join(d, "f"), "w").close()
+    assert not os.path.exists(d)
+
+    boom = RuntimeError("boom")
+    with pytest.raises(RuntimeError) as info:
+        with _scratch(spark, "probe") as d:
+            os.makedirs(os.path.join(d, "sub"))
+            raise boom
+    assert info.value is boom
+    assert not os.path.exists(d)

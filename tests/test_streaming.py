@@ -88,6 +88,43 @@ def test_stream_static_enrichment_join_matches_batch(spark, log_dir):
     assert got == want
 
 
+def test_run_to_completion_pins_state_partitions_to_cores(spark, log_dir):
+    """A stateful query started through ``run_to_completion`` keeps its
+    state store at one partition per core, whatever the session's
+    ``spark.sql.shuffle.partitions`` says (at a plain session's 200,
+    every micro-batch pays 200 tasks and 200 state-store commits); the
+    session keeps its own setting."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    parts, terminated = [], threading.Event()
+
+    class Probe(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            parts.extend(op.numShufflePartitions for op in event.progress.stateOperators)
+
+        def onQueryTerminated(self, event):
+            terminated.set()
+
+    probe, conf = Probe(), "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "200")
+    spark.streams.addListener(probe)
+    try:
+        stream = sp.stream_game_events(spark, _glob(log_dir["dir"]), max_files_per_trigger=8)
+        sp.run_to_completion(sp.streaming_kill_counts(stream), "stream_pinned", "complete")
+        assert spark.conf.get(conf) == "200"
+        assert terminated.wait(60)
+    finally:
+        spark.streams.removeListener(probe)
+        spark.conf.set(conf, prev)
+    assert parts and set(parts) == {spark.sparkContext.defaultParallelism}
+
+
 def test_streaming_fold_matches_batch_replay(spark, log_dir):
     stream = sp.stream_game_events(spark, _glob(log_dir["dir"]))
     out = sp.run_to_completion(sp.streaming_fold(stream), "stream_fold", "update")
