@@ -111,12 +111,12 @@ def _thirds(op, frame: DataFrame, key: str = "doc_id"):
     return op
 
 
-def _held(spark: SparkSession, df: DataFrame, schema: str) -> DataFrame:
+def _held(df: DataFrame, schema: str) -> DataFrame:
     """``df``'s ``schema`` columns collected to the driver (a small
     result) and served back as ``schema``: the frame outlives the
     scratch dir ``df`` reads."""
     names = StructType.fromDDL(schema).names
-    return spark.createDataFrame(df.select(*names).collect(), schema)
+    return df.sparkSession.createDataFrame(df.select(*names).collect(), schema)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1283,7 +1283,6 @@ def fold_snapshot_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         start_pinned(writer, spark, sink).awaitTermination()
         return _held(
-            spark,
             replay.players_state(replay.state_at(log, spark.read.parquet(sink), 1500)),
             "room string, name string, x int, y int, alive boolean",
         )
@@ -6818,7 +6817,6 @@ def pipeline_incremental_substr_dedup_q(
             if k == 1:
                 d.compact()
         return _held(
-            spark,
             d.deduped(),
             "doc_id long, n_tokens bigint, clean_text string, "
             "n_tokens_kept bigint, n_tokens_dropped bigint",
@@ -6866,7 +6864,7 @@ def pipeline_streaming_substr_q(
             cur.process_batch(docs.filter(F.col("doc_id") % 3 == k), k)
             if k == 1:
                 cur.compact()
-        return _held(spark, cur.accepted(), "doc_id long, text string")
+        return _held(cur.accepted(), "doc_id long, text string")
 
 
 @register(
@@ -6993,7 +6991,6 @@ def pipeline_incremental_line_dedup_q(spark: SparkSession, sf_dir: str) -> DataF
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
         d = _thirds(IncrementalLineDeduper(spark, base, segment_tokens=10), docs)
         return _held(
-            spark,
             d.deduped(),
             "doc_id long, text_dedup string, n_lines bigint, "
             "n_kept bigint, n_removed bigint",
@@ -7184,7 +7181,7 @@ def pipeline_streaming_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             score_col="score",
         )
         _thirds(cur, docs)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 @register(
@@ -7232,7 +7229,7 @@ def pipeline_streaming_url_screen(spark: SparkSession, sf_dir: str) -> DataFrame
             url_blocked_domains=_URL_BLOCKED_DOMAINS,
         )
         _thirds(cur, docs)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 def _pipeline_repetition_oracle() -> str:
@@ -7315,7 +7312,7 @@ def pipeline_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             track_funnel=True,
         )
         _thirds(cur, docs)
-        return _held(spark, cur.funnel(), "batch_id int, stage string, n long")
+        return _held(cur.funnel(), "batch_id int, stage string, n long")
 
 
 @register("pipeline_streaming_repetition", oracle=_pipeline_repetition_oracle())
@@ -7343,7 +7340,7 @@ def pipeline_streaming_repetition(spark: SparkSession, sf_dir: str) -> DataFrame
             repetition_rules=True,
         )
         _thirds(cur, docs)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 # FineWeb-recipe plant: sentence-per-line pages (every line ends in
@@ -7599,7 +7596,6 @@ def pipeline_streaming_fineweb(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _thirds(cur, pages)
         return _held(
-            spark,
             cur.fineweb_funnel(),
             "doc_id long, c4_kept boolean, quality_kept boolean,"
             " rep_kept boolean, is_canonical boolean, final_keep boolean",
@@ -7885,7 +7881,6 @@ def pipeline_streaming_fineweb_full_q(
         )
         _thirds(cur, planted)
         return _held(
-            spark,
             cur.fineweb_funnel(),
             "doc_id long, url_kept boolean, lang_pred string,"
             " lang_kept boolean, c4_kept boolean, quality_kept boolean,"
@@ -7977,7 +7972,7 @@ def pipeline_streaming_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF
         )
         _thirds(cur, docs)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 @register(
@@ -8024,7 +8019,7 @@ def pipeline_streaming_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             quality_model_path=model_path, quality_threshold=0.5,
         )
         _thirds(cur, docs)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 @register(
@@ -8096,7 +8091,7 @@ def pipeline_streaming_decontamination(spark: SparkSession, sf_dir: str) -> Data
             contamination_max_fraction=0.1,
         )
         _thirds(cur, corpus)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 @register("pipeline_curation_compacted", oracle=_greedy_curation_oracle())
@@ -8127,7 +8122,7 @@ def pipeline_curation_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
             _thirds(cur, docs)
             man = cur._manifest()
             assert man is not None and man["covered_upto"] == 2  # it really ran
-            return _held(spark, cur.accepted(), "doc_id long")
+            return _held(cur.accepted(), "doc_id long")
         finally:
             for v in range(4):  # external-table catalog entries are per-run
                 for sfx in ("grams_by_g", "df_by_g"):
@@ -8724,7 +8719,7 @@ def pipeline_embedding_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec_format="float64",
         )
         _thirds(cur, v, "vec_id")
-        return _held(spark, cur.accepted(), "vec_id long")
+        return _held(cur.accepted(), "vec_id long")
 
 
 def _retention_embedding_oracle(threshold: float = 0.9975) -> str:
@@ -8825,7 +8820,7 @@ def pipeline_embedding_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
             score_col="score",
         )
         _thirds(cur, v, "vec_id")
-        return _held(spark, cur.accepted(), "vec_id long")
+        return _held(cur.accepted(), "vec_id long")
 
 
 def _greedy_embedding_curation_oracle_int8(threshold: float = 0.9975) -> str:
@@ -8920,7 +8915,7 @@ def pipeline_embedding_curation_int8(spark: SparkSession, sf_dir: str) -> DataFr
             vec_format="int8",
         )
         _thirds(cur, v, "vec_id")
-        return _held(spark, cur.accepted(), "vec_id long")
+        return _held(cur.accepted(), "vec_id long")
 
 
 # =====================================================================
@@ -9416,7 +9411,6 @@ def text_kn3_stored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         textops.write_trigram_lm(lmdir, tc, meta)
         tc2, meta2 = textops.read_trigram_lm(spark, lmdir)
         return _held(
-            spark,
             textops.score_with_trigram_lm(docs, tc2, meta2),
             "doc_id long, n_tokens bigint, n_trigrams bigint, "
             "xent double, ppl double",
@@ -10066,7 +10060,7 @@ def pipeline_embedding_curation_pq(spark: SparkSession, sf_dir: str) -> DataFram
             vec_format="pq",
         )
         _thirds(cur, v, "vec_id")
-        return _held(spark, cur.accepted(), "vec_id long")
+        return _held(cur.accepted(), "vec_id long")
 
 
 
@@ -10248,9 +10242,7 @@ def sim_ivf_pq_stored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = pq.pq_query_index(
             spark, base, emb.filter(F.col("vec_id") < 5), k=10, nprobe=2
         )
-        return _held(
-            spark, out, "query_id long, neighbor_id long, adc_dist double, rn int"
-        )
+        return _held(out, "query_id long, neighbor_id long, adc_dist double, rn int")
 
 
 def _pq_rerank_oracle(
@@ -10427,9 +10419,7 @@ def sim_opq_stored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = pq.pq_query_index(
             spark, base, emb.filter(F.col("vec_id") < 5), k=10, nprobe=2
         )
-        return _held(
-            spark, out, "query_id long, neighbor_id long, adc_dist double, rn int"
-        )
+        return _held(out, "query_id long, neighbor_id long, adc_dist double, rn int")
 
 
 @register(
@@ -11040,7 +11030,7 @@ def pipeline_streaming_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame
             perplexity_lm_path=lmdir, perplexity_max_xent=5.0,
         )
         _thirds(cur, mut)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 def _kn3_curation_oracle(max_xent: float = 5.0) -> str:
@@ -11161,7 +11151,7 @@ def pipeline_perplexity_kn3(spark: SparkSession, sf_dir: str) -> DataFrame:
             perplexity_lm_path=lmdir, perplexity_max_xent=5.0,
         )
         _thirds(cur, mut)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 def _length_band_curation_oracle(min_docs: int = 30) -> str:
@@ -11494,7 +11484,7 @@ def pipeline_streaming_full_stack(spark: SparkSession, sf_dir: str) -> DataFrame
             length_band=(0.05, 0.95), length_band_min_docs=30,
         )
         _thirds(cur, corpus)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 @register(
@@ -11552,7 +11542,7 @@ def pipeline_full_stack_url(spark: SparkSession, sf_dir: str) -> DataFrame:
             length_band=(0.05, 0.95), length_band_min_docs=30,
         )
         _thirds(cur, corpus)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 def _simhash_curation_oracle(radius: int = 3) -> str:
@@ -11635,7 +11625,7 @@ def pipeline_streaming_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, screen="simhash", max_hamming=3, sh_hash_fn="md5_60"
         )
         _thirds(cur, docs)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 @register(
@@ -11674,7 +11664,7 @@ def pipeline_html_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, base, threshold=0.8, max_shingle_freq=_NGRAM_MAX_DF
         )
         _thirds(cur, extracted)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 @register("pipeline_streaming_length_band", oracle=_length_band_curation_oracle())
@@ -11699,7 +11689,7 @@ def pipeline_streaming_length_band(spark: SparkSession, sf_dir: str) -> DataFram
             length_band=(0.05, 0.95), length_band_min_docs=30,
         )
         _thirds(cur, docs)
-        return _held(spark, cur.accepted(), "doc_id long")
+        return _held(cur.accepted(), "doc_id long")
 
 
 def _pagerank_oracle(iters: int = 3, damping: float = 0.85) -> str:
