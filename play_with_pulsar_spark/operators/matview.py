@@ -15,14 +15,13 @@ to history. (With a transactional table format — Delta/Iceberg, not
 in this image — the overwrite becomes MERGE INTO; the logic is
 unchanged.)
 
-Atomicity: each update writes a NEW versioned directory
-(``{path}.v{n}``) and then flips a pointer file via ``os.replace``
-(atomic on POSIX). Readers resolve the pointer, so they always see a
-complete version — a crash mid-write leaves the previous version
-live, and the partial ``.v{n+1}`` directory is overwritten by the
-next update. The previous version directory is deleted only after
-the flip. This is the filesystem analog of a table-format commit log;
-swap for Delta/Iceberg MERGE where available.
+Atomicity and retention: the view is a ``batch_dirs.VersionedStore``
+under ``path`` — each update writes a NEW version directory and then
+flips the ``current`` pointer, so readers always see a complete
+version, and a crash mid-write leaves the previous version live (the
+next update clears the partial one). This is the filesystem analog
+of a table-format commit log; swap for Delta/Iceberg MERGE where
+available.
 
 Reader grace: ``read()`` returns a LAZY DataFrame that resolves its
 backing files at execution time, so retention keeps each version that
@@ -34,13 +33,11 @@ it before a second update, after which its directory may be pruned.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..streaming.batch_dirs import write_text_atomic
+from ..streaming.batch_dirs import VersionedStore
 from .compaction import latest_per_key
 
 
@@ -61,81 +58,38 @@ class LatestStateView:
         after a commit (0 = current only, history off; N≥1 enables
         ``read(version=...)`` time travel over the last N superseded
         versions — the filesystem analog of a Delta/Iceberg snapshot
-        list)."""
+        list). Every version stores the order columns, also when
+        ``payload_cols`` leaves them out: the next update orders by
+        them."""
         self.spark = spark
         self.path = path
         self.key_cols = list(key_cols)
         self.order_cols = list(order_cols)
+        if payload_cols is not None:
+            payload_cols = list(payload_cols)
+            payload_cols += [c for c in self.order_cols if c not in payload_cols]
         self.payload_cols = payload_cols
         self.keep_versions = max(0, int(keep_versions))
-
-    @property
-    def _pointer(self) -> str:
-        return self.path + ".current"
-
-    def _resolve(self) -> str | None:
-        """Directory holding the live version, or None if empty view.
-
-        Falls back to ``self.path`` itself when no pointer exists but
-        data does — a view committed by the pre-pointer layout (which
-        wrote parquet directly at the path). The next ``update`` folds
-        that legacy data in and migrates to the versioned layout."""
-        if os.path.exists(self._pointer):
-            with open(self._pointer) as f:
-                target = f.read().strip()
-            if target and os.path.exists(target):
-                return target
-        if os.path.isdir(self.path):
-            return self.path
-        return None
-
-    def _exists(self) -> bool:
-        return self._resolve() is not None
+        self.store = VersionedStore(spark, path)
 
     def versions(self) -> list[int]:
         """Committed versions still on disk, ascending. The live one
         is the pointer's target; older ones are readable history."""
-        base = os.path.basename(self.path) + ".v"
-        parent = os.path.dirname(self.path) or "."
-        if not os.path.isdir(parent):
-            return []
-        out = []
-        for d in os.listdir(parent):
-            if d.startswith(base):
-                try:
-                    out.append(int(d[len(base):]))
-                except ValueError:
-                    continue
-        live = self._resolve()
-        live_v = self._version_of(live)
-        return sorted(v for v in out if v <= live_v)
-
-    @staticmethod
-    def _version_of(target: str | None) -> int:
-        """Version number of a resolved directory; -1 for None or a
-        legacy (pre-pointer) directory."""
-        if target is None or ".v" not in os.path.basename(target):
-            return -1
-        try:
-            return int(target.rsplit(".v", 1)[1])
-        except ValueError:
-            return -1
+        return self.store.versions()
 
     def read(self, version: int | None = None) -> DataFrame:
         """Read the live view, or time-travel to a retained
         ``version`` (must be within the last ``keep_versions``)."""
-        if version is not None:
-            target = f"{self.path}.v{version}"
-            if version not in self.versions() or not os.path.exists(target):
-                raise FileNotFoundError(
-                    f"view {self.path} has no retained version {version} "
-                    f"(available: {self.versions()})"
-                )
-            return self.spark.read.parquet(target)
-        target = self._resolve()
-        if target is None:
-            raise FileNotFoundError(f"view {self.path} has no committed version")
-        return self.spark.read.parquet(target)
+        if version is None:
+            version = self.store.live()
+            if version is None:
+                raise FileNotFoundError(f"view {self.path} has no committed version")
+        elif version not in self.versions():
+            raise FileNotFoundError(
+                f"view {self.path} has no retained version {version} "
+                f"(available: {self.versions()})"
+            )
+        return self.spark.read.parquet(self.store.path(version))
 
     def update(self, batch: DataFrame) -> None:
         """Fold one batch into the view: compact the batch, union with
@@ -147,36 +101,17 @@ class LatestStateView:
         compacted = latest_per_key(
             batch, self.key_cols, self.order_cols, self.payload_cols
         )
-        old = self._resolve()
-        if old is not None:
-            current = self.spark.read.parquet(old)
+        merged, live = compacted, self.store.live()
+        if live is not None:
             merged = latest_per_key(
-                current.unionByName(compacted),
+                self.spark.read.parquet(self.store.path(live)).unionByName(compacted),
                 self.key_cols,
                 self.order_cols,
                 [c for c in compacted.columns if c not in self.key_cols],
             )
-            version = self._version_of(old) + 1  # legacy dir → v0
-        else:
-            merged = compacted
-            version = 0
-        new_dir = f"{self.path}.v{version}"
-        merged.write.mode("overwrite").parquet(new_dir)
-        # commit: write-temp + fsync + os.replace = atomic, durable
-        # pointer flip (POSIX)
-        write_text_atomic(self._pointer, new_dir)
-        if old == self.path:
-            # legacy layout migrated: its data is folded into v0
-            shutil.rmtree(old, ignore_errors=True)
-        # retention: drop versions older than the newest keep_versions
-        # superseded ones (the new live version never counts). The
-        # FIRST version past the window is kept one extra commit as
-        # reader grace — a lazy DataFrame from read() taken before this
-        # update still resolves its files until the NEXT update.
-        cutoff = version - self.keep_versions - 2
-        for v in self.versions():
-            if v <= cutoff:
-                shutil.rmtree(f"{self.path}.v{v}", ignore_errors=True)
+        version = 0 if live is None else live + 1
+        merged.write.mode("overwrite").parquet(self.store.stage(version))
+        self.store.flip(version, self.keep_versions)
 
     def foreach_batch(self):
         """Adapter for ``writeStream.foreachBatch`` — the S7 connector

@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..streaming.batch_dirs import VersionedStore
 from .clustering import Centroids, _dist_matrix, kmeans_fit, nearest_centroid
 
 Codebooks = list[Centroids]  # one Centroids list per subspace
@@ -736,36 +737,23 @@ def ivf_pq_topk(
 # centroids and codebooks in ONE atomic cutover (the mixed-reader
 # hazard the curator's geometry rollover solves for LSH signatures).
 #
-# Layout under <path>/:
-#   current                    -> "v<N>" (atomic pointer, os.replace)
-#   v<N>/meta.json             -- m, k_sub, n_cells, dim, dist_round,
+# The same ``batch_dirs.VersionedStore`` as the IVF-Flat index (pointer,
+# versions, retention and the append record are described there).
+# Each version holds:
+#   meta.json                  -- m, k_sub, n_cells, dim, dist_round,
 #                                 version (the codebook version)
-#   v<N>/centroids/            -- (cell, centroid) coarse quantizer
-#   v<N>/codebooks/            -- (sub, cl, vals) PQ codebooks
-#   v<N>/codes/cell=*/         -- (vec_id, codes) — m bytes of info
+#   centroids/                 -- (cell, centroid) coarse quantizer
+#   codebooks/                 -- (sub, cl, vals) PQ codebooks
+#   codes/cell=*/              -- (vec_id, codes) — m bytes of info
 #                                 per vector, partition-pruned probes
-#   v<N>/batches/<id>/cell=*/  -- appended batches: (vec_id, codes,
-#                                 vec) — the delta tier KEEPS the raw
+#   batches/<id>/cell=*/       -- appended batches: (vec_id, vec,
+#                                 codes) — the delta tier KEEPS the raw
 #                                 vector so a later rebalance can
 #                                 re-encode it under new quantizers
 #                                 without touching the canonical
 #                                 corpus; bounded by append volume
 #                                 since the last rebalance
-#   v<N>/appends.json          -- committed batch ids (atomic flip)
 # =====================================================================
-
-
-def _pq_resolve(path: str) -> str:
-    import os
-
-    ptr = os.path.join(path, "current")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            target = f.read().strip()
-        vdir = os.path.join(path, target)
-        if target and os.path.isdir(vdir):
-            return vdir
-    raise FileNotFoundError(f"no committed IVF-PQ index at {path}")
 
 
 def _pq_meta(vdir: str) -> dict:
@@ -796,6 +784,34 @@ def _pq_load(spark, vdir: str) -> tuple[Centroids, Codebooks, dict]:
     ], meta
 
 
+def _pq_cells(
+    corpus: DataFrame, cents: Centroids, books: Codebooks, dist_round: int,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """(id, codes, cell) rows of ``corpus`` under the quantizer
+    (coarse centroids, codebooks)."""
+    from .clustering import kmeans_assign
+
+    codes = pq_encode(
+        corpus, books, id_col=id_col, vec_col=vec_col, dist_round=dist_round
+    )
+    cells = kmeans_assign(corpus, cents, id_col=id_col, vec_col=vec_col).select(
+        F.col(id_col), F.col("cluster").alias("cell")
+    )
+    return codes.join(cells, id_col)
+
+
+def _pq_delta(
+    batch: DataFrame, cents: Centroids, books: Codebooks, dist_round: int,
+    id_col: str, vec_col: str,
+) -> DataFrame:
+    """(id, vec, codes, cell) rows of an appended batch: its codes
+    plus the raw vector a rebalance re-encodes."""
+    return batch.select(F.col(id_col), F.col(vec_col).alias("vec")).join(
+        _pq_cells(batch, cents, books, dist_round, id_col, vec_col), id_col
+    )
+
+
 def _pq_write_version(
     spark,
     vdir: str,
@@ -809,9 +825,6 @@ def _pq_write_version(
     import json
     import os
 
-    from .clustering import kmeans_assign
-
-    os.makedirs(vdir, exist_ok=True)
     spark.createDataFrame(
         [(int(cl), [float(x) for x in cv]) for cl, cv in cents],
         "cell long, centroid array<double>",
@@ -824,19 +837,9 @@ def _pq_write_version(
         ],
         "sub int, cl int, vals array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "codebooks"))
-    codes = pq_encode(
-        corpus, books, id_col=id_col, vec_col=vec_col,
-        dist_round=int(meta["dist_round"]),
-    )
-    cells = kmeans_assign(corpus, cents, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col), F.col("cluster").alias("cell")
-    )
-    codes.join(cells, id_col).write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(vdir, "codes")
-    )
-    from .similarity import _ivf_flip_manifest
-
-    _ivf_flip_manifest(vdir, [])
+    _pq_cells(
+        corpus, cents, books, int(meta["dist_round"]), id_col, vec_col
+    ).write.mode("overwrite").partitionBy("cell").parquet(os.path.join(vdir, "codes"))
     with open(os.path.join(vdir, "meta.json"), "w") as f:
         json.dump(meta, f)
 
@@ -922,15 +925,11 @@ def pq_write_index(
     if rotation:
         meta["rotation"] = rotation
         meta["rot_salt"] = rot_salt
-    import os
-
-    from .similarity import _ivf_flip_pointer
-
+    store = VersionedStore(spark, path)
     _pq_write_version(
-        spark, os.path.join(path, "v0"), corpus, cents, books, meta,
-        id_col, vec_col,
+        spark, store.stage(0), corpus, cents, books, meta, id_col, vec_col
     )
-    _ivf_flip_pointer(path, 0)
+    store.flip(0)
     return 0
 
 
@@ -954,61 +953,22 @@ def pq_append_index(
     replaces the old mode('append') ``_legacy`` dir (round 9 — r8
     advice: a crashed/retried anonymous append duplicated every
     vector, and the duplicates took multiple row_number ranks in
-    ``pq_query_index``, displacing genuine neighbors); pre-existing
-    ``_legacy`` dirs are still read."""
-    import os
+    ``pq_query_index``, displacing genuine neighbors)."""
+    from .similarity import _ivf_live, _resolve_auto_batch_id
 
-    from .clustering import kmeans_assign
-    from .similarity import (
-        _ivf_flip_manifest,
-        _ivf_manifest,
-        _resolve_auto_batch_id,
-    )
-
-    vdir = _pq_resolve(path)
+    store, v = _ivf_live(spark, path)
+    committed = store.appends(v)
     if batch_id is None:
-        batch_id, done = _resolve_auto_batch_id(
-            batch, _ivf_manifest(vdir), id_col, vec_col
-        )
+        batch_id, done = _resolve_auto_batch_id(batch, committed, id_col, vec_col)
         if done:
             return False
-    if batch_id in _ivf_manifest(vdir):
+    if batch_id in committed:
         return False
-    cents, books, meta = _pq_load(spark, vdir)
+    cents, books, meta = _pq_load(spark, store.path(v))
     batch = _maybe_rotate(batch, meta, id_col, vec_col)
-    codes = pq_encode(
-        batch, books, id_col=id_col, vec_col=vec_col,
-        dist_round=int(meta["dist_round"]),
-    )
-    cells = kmeans_assign(batch, cents, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col), F.col("cluster").alias("cell")
-    )
-    rows = (
-        batch.select(F.col(id_col), F.col(vec_col).alias("vec"))
-        .join(codes, id_col)
-        .join(cells, id_col)
-    )
-    rows.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(vdir, "batches", batch_id)
-    )
-    _ivf_flip_manifest(vdir, _ivf_manifest(vdir) + [batch_id])
+    rows = _pq_delta(batch, cents, books, int(meta["dist_round"]), id_col, vec_col)
+    store.append(v, batch_id, rows)
     return True
-
-
-def _pq_codes(spark, vdir: str) -> DataFrame:
-    """(vec_id, codes, cell) across base + committed batches, each
-    root its own partition-pruned scan."""
-    import os
-
-    from .similarity import _ivf_manifest
-
-    df = spark.read.parquet(os.path.join(vdir, "codes"))
-    cols = df.columns
-    for bid in _ivf_manifest(vdir):
-        df = df.unionByName(
-            spark.read.parquet(os.path.join(vdir, "batches", bid)).select(*cols)
-        )
-    return df
 
 
 def pq_query_index(
@@ -1035,8 +995,10 @@ def pq_query_index(
     kernel restricted to each query's probed cells — same doubles,
     kernel parity tested; measured 1.9× faster at sf0.1/50 queries,
     and the gap is per-candidate work, so it widens with scale)."""
-    vdir = _pq_resolve(path)
-    cents, books, meta = _pq_load(spark, vdir)
+    from .similarity import _ivf_live
+
+    store, v = _ivf_live(spark, path)
+    cents, books, meta = _pq_load(spark, store.path(v))
     dist_round = int(meta["dist_round"])
     queries = _maybe_rotate(queries, meta, id_col, vec_col)
     q = queries.select(
@@ -1079,7 +1041,7 @@ def pq_query_index(
     )
     probed_rows = probed.select("query_id", "cell").collect()
     probe_cells = sorted({int(r.cell) for r in probed_rows})
-    corpus = _pq_codes(spark, vdir).filter(F.col("cell").isin(probe_cells))
+    corpus = store.read(v, "codes").filter(F.col("cell").isin(probe_cells))
     if kernel == "numpy":
         # the textbook ADC probe (pq_adc_topk's throughput kernel,
         # restricted to each query's probed cells): per-query m×k LUT
@@ -1214,22 +1176,15 @@ def pq_rebalance_index(
     quantizers before the flip (the reason the batch dirs keep
     vectors). One superseded version is retained as reader grace;
     older ones are pruned. Single-writer, like the append path."""
-    import os
-    import shutil
+    from .similarity import _ivf_live
 
-    from .similarity import (
-        _ivf_flip_manifest,
-        _ivf_flip_pointer,
-        _ivf_manifest,
-    )
-
-    vdir = _pq_resolve(path)
-    old_meta = _pq_meta(vdir)
+    store, v = _ivf_live(spark, path)
+    old_meta = _pq_meta(store.path(v))
     # the rotation is part of the index contract: the refit corpus
     # enters rotated space exactly like every other vector, and the
     # new meta (dict(old_meta, ...)) carries the rotation forward
     corpus = _maybe_rotate(corpus, old_meta, id_col, vec_col)
-    pre_set = set(_ivf_manifest(vdir))
+    seen = store.appends(v)
     n_cells = int(old_meta["n_cells"]) if n_cells is None else n_cells
     m = int(old_meta["m"]) if m is None else m
     k_sub = int(old_meta["k_sub"]) if k_sub is None else k_sub
@@ -1242,42 +1197,20 @@ def pq_rebalance_index(
         corpus, m=m, k_sub=k_sub, iters=iters, id_col=id_col, vec_col=vec_col,
         dist_round=dist_round,
     )
-    old_v = int(old_meta["version"])
-    new_v = old_v + 1
-    new_dir = os.path.join(path, f"v{new_v}")
-    shutil.rmtree(new_dir, ignore_errors=True)  # crashed attempt
-    meta = dict(old_meta, version=new_v, n_cells=n_cells, m=m, k_sub=k_sub)
+    meta = dict(old_meta, version=v + 1, n_cells=n_cells, m=m, k_sub=k_sub)
     _pq_write_version(
-        spark, new_dir, corpus, cents, books, meta, id_col, vec_col
+        spark, store.stage(v + 1), corpus, cents, books, meta, id_col, vec_col
     )
+
     # carry over appends committed while the refit/rewrite ran: their
     # dirs hold raw vectors, so they re-encode under the new books
-    for bid in sorted(set(_ivf_manifest(vdir)) - pre_set):
-        late = spark.read.parquet(os.path.join(vdir, "batches", bid)).select(
-            F.col(id_col), F.col("vec").alias(vec_col)
-        )
-        codes = pq_encode(
-            late, books, id_col=id_col, vec_col=vec_col, dist_round=dist_round
-        )
-        from .clustering import kmeans_assign
+    def delta(rows: DataFrame) -> DataFrame:
+        late = rows.select(F.col(id_col), F.col("vec").alias(vec_col))
+        return _pq_delta(late, cents, books, dist_round, id_col, vec_col)
 
-        cells = kmeans_assign(late, cents, id_col=id_col, vec_col=vec_col).select(
-            F.col(id_col), F.col("cluster").alias("cell")
-        )
-        (
-            late.select(F.col(id_col), F.col(vec_col).alias("vec"))
-            .join(codes, id_col)
-            .join(cells, id_col)
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(os.path.join(new_dir, "batches", bid))
-        )
-        _ivf_flip_manifest(new_dir, _ivf_manifest(new_dir) + [bid])
-    _ivf_flip_pointer(path, new_v)
-    for d in os.listdir(path):
-        if d.startswith("v") and d[1:].isdigit() and int(d[1:]) < old_v:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    return new_v
+    store.carry_over(v, v + 1, seen, delta)
+    store.flip(v + 1)
+    return v + 1
 
 
 # ---------------------------------------------------------------------------

@@ -22,12 +22,15 @@ oracle's sequential sum agree bitwise after rounding.
 from __future__ import annotations
 
 import math
+import os
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..streaming.batch_dirs import VersionedStore
 
 
 def _topk_schema() -> str:
@@ -462,87 +465,42 @@ def ivf_topk(
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
-# --- materialized IVF index: versioned layout (round 6) -------------
+# --- materialized IVF index ----------------------------------------
 #
-#   path/
-#     current             pointer file → live version dir (os.replace
-#                         flip — the matview.py commit protocol)
-#     v0/
-#       centroids/        tiny (cell, centroid) table
-#       cells/            base corpus, partitionBy(cell)
-#       batches/<bid>/    committed appends, each partitionBy(cell)
-#       appends.json      ordered list of committed batch ids
+# A ``batch_dirs.VersionedStore`` under ``path`` (pointer, versions,
+# retention and the append record are described there). Each version:
 #
-# Readers resolve the pointer once, then read cells/ plus the
-# manifest-listed batch dirs — never a staged or half-written one.
-# Appends with a batch_id are exactly-once: data is written to its own
-# batch dir with mode=overwrite (a replay rewrites the same dir), and
-# the id enters appends.json only after the data job commits, via an
-# atomic manifest flip. A rebalance writes a whole NEW version dir and
-# flips the pointer, so a probe never sees a mixed quantizer.
+#   centroids/        tiny (cell, centroid) table: the frozen quantizer
+#   cells/            base corpus (id, vec), partitionBy(cell)
+#   batches/<bid>/    appended batches in the same shape
 #
-# Legacy layout (centroids/ + cells/ directly at ``path``, no pointer)
-# remains readable and appendable; ``ivf_rebalance_index`` migrates it
-# to the versioned layout on its first cutover.
+# A rebalance writes a whole NEW version, so a probe never sees a
+# mixed quantizer.
 
 
-def _ivf_resolve(path: str) -> str:
-    """Live version dir of an IVF index (pointer target, or ``path``
-    itself for the legacy layout)."""
-    import os
-
-    ptr = os.path.join(path, "current")
-    if os.path.exists(ptr):
-        with open(ptr) as f:
-            target = f.read().strip()
-        vdir = os.path.join(path, target)
-        if target and os.path.isdir(vdir):
-            return vdir
-    if os.path.isdir(os.path.join(path, "centroids")):
-        return path
-    raise FileNotFoundError(f"no committed IVF index at {path}")
-
-
-def _ivf_manifest(vdir: str) -> list[str]:
-    import json
-    import os
-
-    mf = os.path.join(vdir, "appends.json")
-    if not os.path.exists(mf):
-        return []
-    with open(mf) as f:
-        return json.load(f)
-
-
-def _ivf_flip_manifest(vdir: str, batch_ids: list[str]) -> None:
-    import os
-
-    from ..streaming.batch_dirs import write_json_atomic
-
-    write_json_atomic(os.path.join(vdir, "appends.json"), batch_ids)
-
-
-def _ivf_data(spark: SparkSession, vdir: str) -> DataFrame:
-    """(id, vec, cell) rows of a version: base cells plus committed
-    batch dirs, each root read separately (partition pruning on
-    ``cell`` applies per scan) and unioned."""
-    import os
-
-    df = spark.read.parquet(os.path.join(vdir, "cells"))
-    for bid in _ivf_manifest(vdir):
-        df = df.unionByName(
-            spark.read.parquet(os.path.join(vdir, "batches", bid))
-        )
-    return df
+def _ivf_live(spark: SparkSession, path: str) -> tuple[VersionedStore, int]:
+    """The index store at ``path`` and its live version (shared by
+    the IVF-PQ index, which uses the same store)."""
+    store = VersionedStore(spark, path)
+    k = store.live()
+    if k is None:
+        raise FileNotFoundError(f"no committed index at {path}")
+    return store, k
 
 
 def _ivf_centroids(spark: SparkSession, vdir: str) -> np.ndarray:
-    import os
-
     cent_pdf = (
         spark.read.parquet(os.path.join(vdir, "centroids")).orderBy("cell").toPandas()
     )
     return np.stack(cent_pdf["centroid"].to_numpy()).astype(np.float64)
+
+
+def _ivf_cells(batch: DataFrame, cents: np.ndarray, id_col: str, vec_col: str) -> DataFrame:
+    """(id, vec, cell) rows of ``batch`` under the quantizer ``cents``."""
+    assigned = ivf_assign(batch, cents, nprobe=1, id_col=id_col, vec_col=vec_col)
+    return batch.join(assigned, batch[id_col] == assigned.vec_id).select(
+        batch[id_col].alias(id_col), batch[vec_col].alias(vec_col), "cell"
+    )
 
 
 def _ivf_write_version(
@@ -552,29 +510,12 @@ def _ivf_write_version(
     id_col: str,
     vec_col: str,
 ) -> None:
-    import os
-
     spark = corpus.sparkSession
     cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)]
     spark.createDataFrame(cent_rows, "cell long, centroid array<double>") \
         .coalesce(1).write.mode("overwrite").parquet(os.path.join(vdir, "centroids"))
-    assigned = ivf_assign(corpus, cents, nprobe=1, id_col=id_col, vec_col=vec_col)
-    (
-        corpus.join(assigned, corpus[id_col] == assigned.vec_id)
-        .select(corpus[id_col].alias(id_col), corpus[vec_col].alias(vec_col), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(os.path.join(vdir, "cells"))
-    )
-    _ivf_flip_manifest(vdir, [])
-
-
-def _ivf_flip_pointer(path: str, version: int) -> None:
-    import os
-
-    from ..streaming.batch_dirs import write_text_atomic
-
-    write_text_atomic(os.path.join(path, "current"), f"v{version}")
+    _ivf_cells(corpus, cents, id_col, vec_col).write.mode("overwrite") \
+        .partitionBy("cell").parquet(os.path.join(vdir, "cells"))
 
 
 def ivf_build_index(
@@ -595,15 +536,13 @@ def ivf_build_index(
     (PartitionFilters at the parquet scan, asserted in tests),
     nprobe/n_cells of the data. Pass ``cents`` to build with a
     pre-trained quantizer instead of fitting here."""
-    import os
-
     if cents is None:
         cents = ivf_fit_centroids(corpus, n_cells=n_cells, seed=seed,
                                   id_col=id_col, vec_col=vec_col,
                                   strategy=fit_strategy)
-    os.makedirs(path, exist_ok=True)
-    _ivf_write_version(corpus, os.path.join(path, "v0"), cents, id_col, vec_col)
-    _ivf_flip_pointer(path, 0)
+    store = VersionedStore(corpus.sparkSession, path)
+    _ivf_write_version(corpus, store.stage(0), cents, id_col, vec_col)
+    store.flip(0)
 
 
 def _content_batch_id(batch: DataFrame, id_col: str, vec_col: str) -> str:
@@ -692,56 +631,40 @@ def ivf_append_index(
     (tested) — probes cannot tell the difference.
 
     ``batch_id`` makes the append IDEMPOTENT (use it in the crawl
-    loop): the batch lands in its own ``batches/<batch_id>`` dir with
-    mode=overwrite — a replay of a half-written attempt rewrites the
-    same dir — and the id is committed into ``appends.json`` (atomic
-    ``os.replace`` flip) only after the data job succeeds. Readers
-    only see manifest-listed dirs, so every crash window resolves to
-    exactly-once. Returns False (no work) when ``batch_id`` is
+    loop): the batch commits through the store's append record
+    (``batch_dirs`` module docstring), so every crash window resolves
+    to exactly-once. Returns False (no work) when ``batch_id`` is
     already committed. Without ``batch_id`` a content-derived id is
     computed from the batch's (vec-id, vector) content
     (``_content_batch_id`` — round 9 r8 advice; vector digest added
     round 10, r9 advice), so a retried anonymous append is ALSO a
     no-op instead of duplicating rows, while a DIFFERENT batch
     reusing committed vec-ids (re-encoded embeddings) raises loudly
-    instead of silently vanishing; the old straight-into-``cells/``
-    mode('append') legacy protocol is gone (its dirs are still
-    read).
+    instead of silently vanishing.
 
-    SINGLE WRITER: the ``appends.json`` update is a read-modify-write
+    SINGLE WRITER: the append record update is a read-modify-write
     (atomic against readers and against crash/retry of the SAME
     batch, which is the exactly-once claim), not against a CONCURRENT
     append of a different batch — two simultaneous appenders can drop
-    one another's manifest entry. Run one appender per index
+    one another's record entry. Run one appender per index
     directory (the crawl-loop curator already serializes batches);
-    ``ivf_rebalance_index`` re-checks the manifest before cutover so
+    ``ivf_rebalance_index`` re-checks the record before cutover so
     an append racing a REBALANCE is carried over, not lost.
 
     Drift caveat: a frozen quantizer slowly unbalances as the data
     distribution moves; watch ``ivf_imbalance`` and cut over with
     ``ivf_rebalance_index`` when it crosses your threshold — the
     rebalance is the compaction event, appends are the steady state."""
-    import os
-
-    vdir = _ivf_resolve(path)
+    store, v = _ivf_live(spark, path)
+    committed = store.appends(v)
     if batch_id is None:
-        batch_id, done = _resolve_auto_batch_id(
-            batch, _ivf_manifest(vdir), id_col, vec_col
-        )
+        batch_id, done = _resolve_auto_batch_id(batch, committed, id_col, vec_col)
         if done:
             return False
-    if batch_id in _ivf_manifest(vdir):
+    if batch_id in committed:
         return False
-    cents = _ivf_centroids(spark, vdir)
-    assigned = ivf_assign(batch, cents, nprobe=1, id_col=id_col, vec_col=vec_col)
-    rows = (
-        batch.join(assigned, batch[id_col] == assigned.vec_id)
-        .select(batch[id_col].alias(id_col), batch[vec_col].alias(vec_col), "cell")
-    )
-    rows.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(vdir, "batches", batch_id)
-    )
-    _ivf_flip_manifest(vdir, _ivf_manifest(vdir) + [batch_id])
+    cents = _ivf_centroids(spark, store.path(v))
+    store.append(v, batch_id, _ivf_cells(batch, cents, id_col, vec_col))
     return True
 
 
@@ -752,8 +675,8 @@ def ivf_cell_stats(spark: SparkSession, path: str) -> DataFrame:
     cost tracks the LARGEST probed cell. One partition-column
     aggregation — reads footer metadata plus the cell column, never
     the vectors."""
-    vdir = _ivf_resolve(path)
-    return _ivf_data(spark, vdir).groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
+    store, v = _ivf_live(spark, path)
+    return store.read(v, "cells").groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
 
 
 def ivf_imbalance(spark: SparkSession, path: str) -> float:
@@ -761,10 +684,10 @@ def ivf_imbalance(spark: SparkSession, path: str) -> float:
     index — 1.0 is perfectly balanced; probe latency tracks this
     ratio, so it is the rebalance trigger. Empty trained cells count
     in the mean (they are capacity the quantizer wastes)."""
-    vdir = _ivf_resolve(path)
-    n_cells = spark.read.parquet(f"{vdir}/centroids").count()
+    store, v = _ivf_live(spark, path)
+    n_cells = spark.read.parquet(os.path.join(store.path(v), "centroids")).count()
     row = (
-        _ivf_data(spark, vdir)
+        store.read(v, "cells")
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
         .agg(F.max("n").alias("mx"), F.sum("n").alias("total"))
@@ -787,7 +710,7 @@ def ivf_rebalance_index(
     """Retrain-and-cutover for a drifted IVF index: refit spherical
     centroids on the FULL live corpus (base + committed appends) with
     the distributed k-means, write a complete NEW version dir (fresh
-    cells layout, empty append manifest), then atomically flip the
+    cells layout, empty append record), then atomically flip the
     ``current`` pointer — readers resolve the pointer per query, so
     they see either the old quantizer or the new one, never a mix.
     The superseded version dir is retained for one cutover as reader
@@ -795,7 +718,7 @@ def ivf_rebalance_index(
     pruned on the NEXT rebalance. Returns the new version number.
 
     An append committing DURING the rebalance (the fit + rewrite is
-    the long window) is not lost: the old version's manifest is
+    the long window) is not lost: the old version's append record is
     re-read after the new version's data is written, and any batch
     committed since the snapshot is re-assigned under the NEW
     quantizer and folded in before the pointer flips. The remaining
@@ -805,62 +728,28 @@ def ivf_rebalance_index(
     Cost: one full read of the index (the compaction event the append
     path amortizes toward), the k-means fit, one partitioned rewrite.
     """
-    import os
-    import shutil
-
-    vdir = _ivf_resolve(path)
-    # snapshot the manifest ONCE and build the data view from exactly
-    # that snapshot (not via _ivf_data, whose own manifest read could
-    # see a batch this function later also carries over — double-fold)
-    pre_manifest = sorted(_ivf_manifest(vdir))
-    data = spark.read.parquet(os.path.join(vdir, "cells"))
-    for bid in pre_manifest:
-        data = data.unionByName(
-            spark.read.parquet(os.path.join(vdir, "batches", bid))
-        )
-    pre_set = set(pre_manifest)
+    store, v = _ivf_live(spark, path)
+    # snapshot the append record ONCE and read exactly that snapshot:
+    # a batch committed after it is carried over below, never folded
+    # in twice
+    seen = sorted(store.appends(v))
+    data = store.read(v, "cells", seen)
     if n_cells is None:
-        n_cells = spark.read.parquet(os.path.join(vdir, "centroids")).count()
+        n_cells = spark.read.parquet(os.path.join(store.path(v), "centroids")).count()
     cents = ivf_fit_centroids(
         data, n_cells=n_cells, iters=iters, seed=seed,
         id_col=id_col, vec_col=vec_col, strategy="distributed",
     )
-    old_v = -1
-    base = os.path.basename(vdir)
-    if base.startswith("v"):
-        try:
-            old_v = int(base[1:])
-        except ValueError:
-            old_v = -1
-    new_v = old_v + 1
-    new_dir = os.path.join(path, f"v{new_v}")
-    # the rewrite must not lazily re-list dirs mid-flip: data is fully
-    # written before the pointer moves
+
+    def cells(rows: DataFrame) -> DataFrame:
+        return _ivf_cells(rows.select(F.col(id_col), F.col(vec_col)), cents, id_col, vec_col)
+
     _ivf_write_version(
-        data.select(F.col(id_col), F.col(vec_col)), new_dir, cents, id_col, vec_col
+        data.select(F.col(id_col), F.col(vec_col)), store.stage(v + 1), cents, id_col, vec_col
     )
-    # carry over appends committed while the fit/rewrite ran: re-read
-    # the OLD manifest and fold every batch the snapshot missed into
-    # the new version under the NEW quantizer, before the cutover
-    for bid in sorted(set(_ivf_manifest(vdir)) - pre_set):
-        late = spark.read.parquet(os.path.join(vdir, "batches", bid)).select(
-            F.col(id_col), F.col(vec_col)
-        )
-        assigned = ivf_assign(late, cents, nprobe=1, id_col=id_col, vec_col=vec_col)
-        (
-            late.join(assigned, late[id_col] == assigned.vec_id)
-            .select(late[id_col].alias(id_col), late[vec_col].alias(vec_col), "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(os.path.join(new_dir, "batches", bid))
-        )
-        _ivf_flip_manifest(new_dir, _ivf_manifest(new_dir) + [bid])
-    _ivf_flip_pointer(path, new_v)
-    # prune versions older than the one just superseded (reader grace)
-    for d in os.listdir(path):
-        if d.startswith("v") and d[1:].isdigit() and int(d[1:]) < old_v:
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-    return new_v
+    store.carry_over(v, v + 1, seen, cells)
+    store.flip(v + 1)
+    return v + 1
 
 
 def ivf_query_index(
@@ -880,11 +769,11 @@ def ivf_query_index(
     pruned scan). The version pointer is resolved ONCE per call, so a
     concurrent rebalance cutover never yields a mixed quantizer.
     Candidate re-scoring is identical to ``ivf_topk``."""
-    vdir = _ivf_resolve(path)
-    cents = _ivf_centroids(spark, vdir)
+    store, v = _ivf_live(spark, path)
+    cents = _ivf_centroids(spark, store.path(v))
     q_cells = ivf_assign(queries, cents, nprobe=nprobe, id_col=id_col, vec_col=vec_col)
     probe = sorted({int(r.cell) for r in q_cells.select("cell").distinct().collect()})
-    corpus = _ivf_data(spark, vdir).filter(F.col("cell").isin(probe))
+    corpus = store.read(v, "cells").filter(F.col("cell").isin(probe))
 
     cand = (
         q_cells.select(F.col("vec_id").alias("query_id"), "cell")

@@ -694,6 +694,18 @@ def game_s4_latest_event_per_room(spark: SparkSession, sf_dir: str) -> DataFrame
 SCORE_CHANGELOG_PATH = GAME_EVENTS_PATH.replace("game_events", "score_changelog")
 
 
+def _scores(chg: DataFrame) -> DataFrame:
+    """The score changelog as (room, player, score, last_offset): the
+    record ``key`` is the player, and the string ``value`` is cast
+    back to a number (the reference's Redis ``tonumber``)."""
+    return chg.select(
+        "room",
+        F.col("key").alias("player"),
+        F.col("value").cast("bigint").alias("score"),
+        F.col("offset").alias("last_offset"),
+    )
+
+
 @register(
     "chg_s6_tableview",
     oracle=f"""
@@ -711,12 +723,7 @@ def chg_s6_tableview(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (room, player), cast back to a number (the reference's Redis
     ``tonumber``, docs/en/game7-connector.md:76-80)."""
     _prep(spark)
-    chg = read_parquet_cached(spark, SCORE_CHANGELOG_PATH).select(
-        "room",
-        F.col("key").alias("player"),
-        F.col("value").cast("bigint").alias("score"),
-        F.col("offset").alias("last_offset"),
-    )
+    chg = _scores(read_parquet_cached(spark, SCORE_CHANGELOG_PATH))
     return compaction.latest_per_key(
         chg, key_cols=["room", "player"], order_cols=["last_offset"]
     )
@@ -741,15 +748,8 @@ def stream_s6_tableview(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-verified streaming == batch)."""
 
     def compacted(stream: DataFrame) -> DataFrame:
-        chg = stream.select(
-            "room",
-            F.col("key").alias("player"),
-            F.col("value").cast("bigint").alias("score"),
-            F.col("offset").alias("last_offset"),
-        )
         return compaction.latest_per_key(
-            chg, key_cols=["room", "player"], order_cols=["last_offset"],
-            payload_cols=None,
+            _scores(stream), key_cols=["room", "player"], order_cols=["last_offset"]
         )
 
     chg_schema = "offset bigint, room string, ts timestamp, key string, value string"
@@ -777,12 +777,7 @@ def chg_a4_global_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest-per-(room,player), then sum across rooms — the two-level
     aggregation that replaces the Redis key-scan + Lua sum."""
     _prep(spark)
-    chg = read_parquet_cached(spark, SCORE_CHANGELOG_PATH).select(
-        "room",
-        F.col("key").alias("player"),
-        F.col("value").cast("bigint").alias("score"),
-        F.col("offset").alias("last_offset"),
-    )
+    chg = _scores(read_parquet_cached(spark, SCORE_CHANGELOG_PATH))
     latest = compaction.latest_per_key(
         chg, key_cols=["room", "player"], order_cols=["last_offset"], payload_cols=["score"]
     )
@@ -813,12 +808,7 @@ def chg_w2_lru_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     recently UPDATED players (recency top-k, not score top-k;
     game.go:57,300-312)."""
     _prep(spark)
-    chg = read_parquet_cached(spark, SCORE_CHANGELOG_PATH).select(
-        "room",
-        F.col("key").alias("player"),
-        F.col("value").cast("bigint").alias("score"),
-        F.col("offset").alias("last_offset"),
-    )
+    chg = _scores(read_parquet_cached(spark, SCORE_CHANGELOG_PATH))
     latest = compaction.latest_per_key(
         chg, key_cols=["room", "player"], order_cols=["last_offset"],
         payload_cols=["score", "last_offset"],
@@ -1315,11 +1305,17 @@ def fold_scale_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same workload as rounds 1-3 (32×3000, seed 7); the speedup is
     plan shape, not a smaller problem. Parity with the shuffled
     ``replay_state`` is pinned by test_replay_fold.py."""
+    return _fold_scale(spark, FOLD_SCALE_ROOMS, FOLD_SCALE_EVENTS_PER_ROOM)
+
+
+def _fold_scale(spark: SparkSession, n_rooms: int, events_per_room: int) -> DataFrame:
+    """Generate an ``n_rooms`` × ``events_per_room`` log (seed 7),
+    fold it with the shuffle-free grouped fold, count state rows per
+    (room, entity)."""
     from .sources.fixtures import game_event_log
 
     _prep(spark)
-    log = game_event_log(spark, n_rooms=FOLD_SCALE_ROOMS,
-                         events_per_room=FOLD_SCALE_EVENTS_PER_ROOM, seed=7)
+    log = game_event_log(spark, n_rooms=n_rooms, events_per_room=events_per_room, seed=7)
     state = replay.replay_state_grouped(log)
     return state.groupBy("room", "entity").agg(F.count(F.lit(1)).alias("n"))
 
@@ -1344,13 +1340,7 @@ def fold_scale_replay_xl(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped fold + tiny final agg, one stage before the agg exchange.
     Exists so the tracked events/s number measures the fold kernel
     rather than the fixed per-stage floor (see constant note)."""
-    from .sources.fixtures import game_event_log
-
-    _prep(spark)
-    log = game_event_log(spark, n_rooms=FOLD_XL_ROOMS,
-                         events_per_room=FOLD_XL_EVENTS_PER_ROOM, seed=7)
-    state = replay.replay_state_grouped(log)
-    return state.groupBy("room", "entity").agg(F.count(F.lit(1)).alias("n"))
+    return _fold_scale(spark, FOLD_XL_ROOMS, FOLD_XL_EVENTS_PER_ROOM)
 
 
 FOLD_SUMMARY_GOLDEN = os.path.join(_FIXDIR, "fold_state_summary_golden.parquet")
@@ -12029,9 +12019,14 @@ _DRIVER_PRIORITY = [
     # then never-driver-sampled names, then every previously-sampled
     # name stalest-first by last CORRECTNESS_r0N appearance; no
     # rows-only name in the first 50 (gen_driver_priority.py)
-    "fold_snapshot_maintained",  # pinned
-    "stream_a1_scoreboard",  # pinned
-    "pipeline_streaming_curation",  # pinned
+    "sim_ivf_pq_stored",  # pinned
+    "sim_opq_stored",  # pinned
+    "chg_s6_tableview",  # pinned
+    "stream_s6_tableview",  # pinned
+    "chg_a4_global_sum",  # pinned
+    "chg_w2_lru_top5",  # pinned
+    "fold_scale_replay",  # pinned
+    "fold_scale_replay_xl",  # pinned
     "cube_event_stats",  # r8
     "date_parts_orders",  # r8
     "dedup_embedding_cosine",  # r8
@@ -12061,7 +12056,6 @@ _DRIVER_PRIORITY = [
     "rollup_order_stats",  # r8
     "semi_customers_with_orders",  # r8
     "sessionize_events",  # r8
-    "sim_ivf_pq_stored",  # r8
     "text_html_extract",  # r8
     "text_token_counts",  # r8
     "theta_price_band_join",  # r8
@@ -12069,19 +12063,16 @@ _DRIVER_PRIORITY = [
     "x_map_functions",  # r8
     "approx_stats_bounded",  # r9
     "audit_corpus_datacard",  # r9
-    "chg_a4_global_sum",  # r9
-    "chg_s6_tableview",  # r9
-    "chg_w2_lru_top5",  # r9
     "cluster_representatives",  # r9
     "dedup_embedding_lsh_clustered",  # r9
     "dedup_incremental_embedding",  # r9
     "dedup_minhash_identical",  # r9
     "dedup_semantic",  # r9
     "export_shuffle_shards",  # r9
-    "game_a1_room_scoreboard",  # r9
     "dedup_clusters",  # r8
     "dedup_embedding_lsh",  # r8
     "sim_ivf_topk",  # r8
+    "game_a1_room_scoreboard",  # r9
     "game_a4a5_global_rank",  # r9
     "game_bomb_effectiveness",  # r9
     "game_p4_position_history",  # r9
@@ -12097,6 +12088,7 @@ _DRIVER_PRIORITY = [
     "pipeline_curation_compacted",  # r9
     "pipeline_embedding_curation",  # r9
     "pipeline_embedding_curation_pq",  # r9
+    "pipeline_streaming_curation",  # r9
     "pipeline_streaming_url_screen",  # r9
     "q11ish_important_parts",  # r9
     "q12ish_priority_shipping",  # r9
@@ -12126,8 +12118,6 @@ _DRIVER_PRIORITY = [
     "domain_topk_docs",  # r10
     "fold_players_state",  # r10
     "fold_pos_players",  # r10
-    "fold_scale_replay",  # r10
-    "fold_scale_replay_xl",  # r10
     "fold_state_summary",  # r10
     "fold_time_travel",  # r10
     "mix_domain_weighted_sample",  # r10
@@ -12143,6 +12133,7 @@ _DRIVER_PRIORITY = [
     "quota_token_budget",  # r10
     "sim_ivf_topk_clustered",  # r10
     "sim_lsh_topk_clustered",  # r10
+    "stream_a1_scoreboard",  # r10
     "text_kn3_stored",  # r10
     "text_vocab_coverage",  # r10
     "x16_json_extract",  # r10
@@ -12151,6 +12142,7 @@ _DRIVER_PRIORITY = [
     "crawl_url_screen",  # r11
     "dedup_embedding_lsh_auto",  # r11
     "export_curriculum_shards",  # r11
+    "fold_snapshot_maintained",  # r11
     "pipeline_streaming_fineweb",  # r11
     "pipeline_streaming_repetition",  # r11
     "profile_lineitem_stats",  # r11
@@ -12204,7 +12196,6 @@ _DRIVER_PRIORITY = [
     "sketch_hdr_quantiles",  # r12
     "sketch_hdr_token_mass",  # r12
     "sketch_hll_overlap",  # r12
-    "stream_s6_tableview",  # r12
     "t8_tumbling_window",  # r12
     "text_c4_line_filters",  # r12
     "text_pmi_collocations",  # r12
@@ -12238,7 +12229,6 @@ _DRIVER_PRIORITY = [
     "quality_perplexity_band",  # r13
     "sim_ivf_pq_topk",  # r13
     "sim_opq_adc_topk",  # r13
-    "sim_opq_stored",  # r13
     "sketch_cms_heavy_hitters",  # r13
     "sketch_hll_distinct",  # r13
     "sketch_topk_ngrams",  # r13

@@ -34,6 +34,28 @@ file system when the JVM is not reachable.
 ``IndexedBatchDirs`` adds the dedupers' shape on top: one index table
 with a single compacted tier (``<index>_compacted/data_v<k>`` plus
 ``COMPACTED.json``) and an output table that is never compacted.
+
+``VersionedStore`` is the commit of a table that swaps WHOLE versions
+instead of batch dirs: ``LatestStateView`` (operators/matview.py) and
+the stored IVF and IVF-PQ indexes (operators/similarity.py, pq.py).
+Its layout under ``<root>/``:
+
+- ``current`` names the live version (``v<k>``); ``write_text_atomic``
+  flips it, so a reader that resolves it sees one complete version.
+- ``v<k>/`` holds one version. A new one is staged in ``v<k+1>/``
+  (whatever a crashed attempt left there is cleared first), written
+  in full, then committed by the flip.
+- Retention: after a flip, the newest ``keep`` superseded versions
+  stay readable, and one more is kept as reader grace (a lazy
+  DataFrame resolved before the flip still executes); older ones are
+  deleted.
+- The append record: ``v<k>/batches/<id>/`` holds one appended batch,
+  partitioned by ``cell`` (the indexes' probe-pruning column) and
+  written with ``mode=overwrite`` (a retry rewrites the same dir),
+  and ``v<k>/appends.json`` lists the committed ids, flipped after
+  the data job commits. Readers read the version's base table plus
+  the listed dirs only, so a crashed append stays invisible until its
+  retry commits it.
 """
 
 from __future__ import annotations
@@ -369,3 +391,102 @@ class IndexedBatchDirs(BatchDirs):
             if name.startswith("data_v") and name != f"data_v{version}":
                 self._delete_dir(os.path.join(self.compacted_dir, name))
         return True
+
+
+class VersionedStore:
+    """A table under ``root`` that swaps whole versions (layout in the
+    module docstring). Single writer: one process stages and flips."""
+
+    def __init__(self, spark: SparkSession, root: str) -> None:
+        self.spark, self.root = spark, root
+
+    def path(self, k: int) -> str:
+        return os.path.join(self.root, f"v{k}")
+
+    def live(self) -> int | None:
+        """The version ``current`` names; None before the first flip."""
+        try:
+            with open(os.path.join(self.root, "current")) as f:
+                target = f.read().strip()
+        except FileNotFoundError:
+            return None
+        if not target or not os.path.isdir(os.path.join(self.root, target)):
+            return None
+        return int(target[1:])
+
+    def versions(self) -> list[int]:
+        """Committed versions still on disk, ascending: the live one
+        and the superseded ones retention kept. A staged version above
+        the live one is not committed and is left out."""
+        live = self.live()
+        if live is None:
+            return []
+        return sorted(
+            int(d[1:])
+            for d in os.listdir(self.root)
+            if d[:1] == "v" and d[1:].isdigit() and int(d[1:]) <= live
+        )
+
+    def stage(self, k: int) -> str:
+        """An empty ``v<k>/`` to write a new version into, cleared of
+        whatever a crashed attempt left there (stray batch dirs
+        included)."""
+        shutil.rmtree(self.path(k), ignore_errors=True)
+        os.makedirs(self.path(k))
+        return self.path(k)
+
+    def flip(self, k: int, keep: int = 0) -> None:
+        """Commit ``v<k>``: point ``current`` at it, then delete every
+        version older than the ``keep`` newest superseded ones and the
+        one after them kept as reader grace."""
+        write_text_atomic(os.path.join(self.root, "current"), f"v{k}")
+        for v in self.versions():
+            if v < k - keep - 1:
+                shutil.rmtree(self.path(v), ignore_errors=True)
+
+    # ------------------------------------------------------------------
+    # the append record of one version
+
+    def _batch(self, k: int, batch_id: str) -> str:
+        return os.path.join(self.path(k), "batches", batch_id)
+
+    def appends(self, k: int) -> list[str]:
+        """Ids of the batches committed to ``v<k>``, in commit order."""
+        try:
+            with open(os.path.join(self.path(k), "appends.json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return []
+
+    def append(self, k: int, batch_id: str, rows: DataFrame) -> None:
+        """Commit ``rows`` as batch ``batch_id`` of ``v<k>``: write its
+        dir, then add the id to the record. Single writer: the record
+        update is a read-modify-write."""
+        rows.write.mode("overwrite").partitionBy("cell").parquet(
+            self._batch(k, batch_id)
+        )
+        write_json_atomic(
+            os.path.join(self.path(k), "appends.json"), self.appends(k) + [batch_id]
+        )
+
+    def read(self, k: int, base: str, batch_ids: list[str] | None = None) -> DataFrame:
+        """``v<k>/<base>`` ∪ the committed batches (``batch_ids``, by
+        default the record as it stands), in the base table's columns.
+        Each root is its own scan, so partition pruning applies per
+        scan."""
+        df = self.spark.read.parquet(os.path.join(self.path(k), base))
+        for bid in self.appends(k) if batch_ids is None else batch_ids:
+            df = df.unionByName(
+                self.spark.read.parquet(self._batch(k, bid)).select(*df.columns)
+            )
+        return df
+
+    def carry_over(self, old: int, new: int, seen: list[str], rows_of) -> None:
+        """Commit to ``v<new>`` every batch committed to ``v<old>``
+        since the snapshot ``seen``, each dir's rows passed through
+        ``rows_of`` (the new version's quantizer). A rebalance calls
+        it before its flip, so an append that committed while the new
+        version was written is not lost."""
+        for bid in sorted(set(self.appends(old)) - set(seen)):
+            rows = rows_of(self.spark.read.parquet(self._batch(old, bid)))
+            self.append(new, bid, rows)

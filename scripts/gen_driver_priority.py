@@ -27,13 +27,19 @@ sys.path.insert(0, ROOT)
 SAMPLE = 50
 
 # Names FORCED into the top of the sample regardless of staleness —
-# queries whose stream start or scratch-dir harness changed with thin
-# driver-side coverage: the stream-maintained snapshot table, the
-# streaming scoreboard and one streaming curator tier.
+# queries whose code changed with thin driver-side coverage: the two
+# stored IVF-PQ probes (the versioned store under them), the score
+# changelog views (one shared projection) and the fold-scale replays
+# (one shared body).
 PINNED = [
-    "fold_snapshot_maintained",
-    "stream_a1_scoreboard",
-    "pipeline_streaming_curation",
+    "sim_ivf_pq_stored",
+    "sim_opq_stored",
+    "chg_s6_tableview",
+    "stream_s6_tableview",
+    "chg_a4_global_sum",
+    "chg_w2_lru_top5",
+    "fold_scale_replay",
+    "fold_scale_replay_xl",
 ]
 
 

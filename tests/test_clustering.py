@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from play_with_pulsar_spark.operators import clustering, curation, similarity
 from play_with_pulsar_spark.plans import count_shuffles
 from play_with_pulsar_spark.sources.tables import load_table
+from play_with_pulsar_spark.streaming.batch_dirs import VersionedStore
 
 
 def _emb(spark, sf_dir):
@@ -281,8 +282,8 @@ def test_ivf_append_idempotent_batch_protocol(spark, sf_dir, tmp_path):
 
     # crash window: data dir exists but the id never reached the
     # manifest — readers must not see it; the retry commits once
-    vdir = similarity._ivf_resolve(path)
-    mf = os.path.join(vdir, "appends.json")
+    store = VersionedStore(spark, path)
+    mf = os.path.join(store.path(store.live()), "appends.json")
     with open(mf, "w") as f:
         json.dump([], f)
     assert sum(r.n for r in similarity.ivf_cell_stats(spark, path).collect()) == base_n
@@ -333,9 +334,9 @@ def test_ivf_rebalance_cutover(spark, sf_dir, tmp_path):
     # the refit must spread the 8 planted clusters near-evenly
     assert before_imb > 2.0, before_imb
     assert after_imb < 1.5, after_imb
-    vdir = similarity._ivf_resolve(path)
-    assert vdir.endswith("v1")
-    assert similarity._ivf_manifest(vdir) == []
+    store = VersionedStore(spark, path)
+    assert store.live() == 1
+    assert store.appends(1) == []
     # row count preserved across the cutover (appends folded in)
     assert sum(r.n for r in similarity.ivf_cell_stats(spark, path).collect()) == v.count()
 
@@ -371,16 +372,15 @@ def test_ivf_rebalance_carries_over_mid_rebalance_append(
     new_v = similarity.ivf_rebalance_index(spark, path, iters=2)
     monkeypatch.setattr(similarity, "ivf_fit_centroids", real_fit)
 
-    vdir = similarity._ivf_resolve(path)
-    assert vdir.endswith(f"v{new_v}")
-    # the late batch rode over: manifest lists it, rows all present
-    assert similarity._ivf_manifest(vdir) == ["late-1"]
+    store = VersionedStore(spark, path)
+    assert store.live() == new_v
+    # the late batch rode over: the append record lists it, rows all present
+    assert store.appends(new_v) == ["late-1"]
     total = sum(r.n for r in similarity.ivf_cell_stats(spark, path).collect())
     assert total == v.count()
     # and a further (non-racing) rebalance folds it into the base cells
     new_v2 = similarity.ivf_rebalance_index(spark, path, iters=2)
-    vdir2 = similarity._ivf_resolve(path)
-    assert vdir2.endswith(f"v{new_v2}") and similarity._ivf_manifest(vdir2) == []
+    assert store.live() == new_v2 and store.appends(new_v2) == []
     assert (
         sum(r.n for r in similarity.ivf_cell_stats(spark, path).collect())
         == v.count()
@@ -401,9 +401,8 @@ def test_ivf_append_without_batch_id_is_idempotent(spark, sf_dir, tmp_path):
                                cents=similarity.ivf_fit_centroids(corpus, n_cells=8, seed=42))
     assert similarity.ivf_append_index(spark, p, batch)
     assert not similarity.ivf_append_index(spark, p, batch)
-    from play_with_pulsar_spark.operators.similarity import _ivf_data, _ivf_resolve
-
-    data = _ivf_data(spark, _ivf_resolve(p))
+    store = VersionedStore(spark, p)
+    data = store.read(store.live(), "cells")
     assert data.count() == data.select("vec_id").distinct().count()
 
 
@@ -414,14 +413,12 @@ def test_ivf_anon_append_reencoded_batch_raises(spark, sf_dir, tmp_path):
     now folds in a vector digest: a true retry still no-ops, the
     re-encoded batch raises, and a round-9-era legacy 2-part id is
     still recognized as committed."""
+    import json
+    import os
+
     import pytest
 
     from play_with_pulsar_spark.operators import similarity
-    from play_with_pulsar_spark.operators.similarity import (
-        _ivf_flip_manifest,
-        _ivf_manifest,
-        _ivf_resolve,
-    )
 
     v = _clustered(spark, sf_dir)
     corpus = v.filter(F.col("vec_id") >= 100)
@@ -439,14 +436,12 @@ def test_ivf_anon_append_reencoded_batch_raises(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="DIFFERENT vector content"):
         similarity.ivf_append_index(spark, p, reenc)
     # legacy 2-part content id (r9 format) committed -> retry no-ops
-    vdir = _ivf_resolve(p)
-    full = [
-        b for b in _ivf_manifest(vdir) if b.startswith("auto_")
-    ][0]
+    store = VersionedStore(spark, p)
+    committed = store.appends(store.live())
+    full = [b for b in committed if b.startswith("auto_")][0]
     legacy = full.rsplit("_", 1)[0]
-    _ivf_flip_manifest(
-        vdir, [legacy if b == full else b for b in _ivf_manifest(vdir)]
-    )
+    with open(os.path.join(store.path(store.live()), "appends.json"), "w") as f:
+        json.dump([legacy if b == full else b for b in committed], f)
     assert not similarity.ivf_append_index(spark, p, batch)
 
 

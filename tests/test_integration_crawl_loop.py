@@ -17,6 +17,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from play_with_pulsar_spark.operators import classifier, curation, layout, similarity
+from play_with_pulsar_spark.streaming.batch_dirs import VersionedStore
 from play_with_pulsar_spark.streaming.curator import StreamingCorpusCurator
 
 DIM = 8
@@ -167,7 +168,8 @@ def test_crawl_loop_composes(spark, tmp_path):
         spark, ivf_path, iters=2, id_col="doc_id", vec_col="embedding"
     )
     assert probe() == before
-    assert similarity._ivf_manifest(similarity._ivf_resolve(ivf_path)) == []
+    store = VersionedStore(spark, ivf_path)
+    assert store.appends(store.live()) == []
     assert sum(r.n for r in similarity.ivf_cell_stats(spark, ivf_path).collect()) == total
     # imbalance IMPROVEMENT under drift is proven by
     # test_ivf_rebalance_cutover; this corpus is near-uniform, so only

@@ -74,6 +74,8 @@ def test_view_version_time_travel(spark, tmp_path):
     """keep_versions > 1 retains superseded versions for time-travel
     reads; retention prunes beyond the window; the pointer always
     serves the newest commit."""
+    import os
+
     import pandas as pd
 
     from play_with_pulsar_spark.operators.matview import LatestStateView
@@ -90,6 +92,9 @@ def test_view_version_time_travel(spark, tmp_path):
     view.update(batch([{"k": "a", "o": 2, "v": 20}]))                 # v1
     view.update(batch([{"k": "b", "o": 3, "v": 30}]))                 # v2
     assert view.versions() == [0, 1, 2]
+    assert sorted(os.listdir(path)) == ["current", "v0", "v1", "v2"]
+    with open(os.path.join(path, "current")) as f:
+        assert f.read() == "v2"
     assert {(r.k, r.v) for r in view.read().collect()} == {("a", 20), ("b", 30)}
     # time travel: v1 had only the updated 'a'
     assert {(r.k, r.v) for r in view.read(version=1).collect()} == {("a", 20)}
@@ -101,6 +106,7 @@ def test_view_version_time_travel(spark, tmp_path):
     # the fifth commit finally prunes v0
     view.update(batch([{"k": "a", "o": 5, "v": 50}]))                 # v4
     assert view.versions() == [1, 2, 3, 4]
+    assert not os.path.exists(os.path.join(path, "v0"))
     import pytest as _pytest
     with _pytest.raises(FileNotFoundError):
         view.read(version=0)
@@ -129,32 +135,24 @@ def test_view_reader_grace_survives_one_update(spark, tmp_path):
     assert {(r.k, r.v) for r in view.read().collect()} == {("a", 20)}
     # the next commit prunes v0 — the documented limit of the grace
     view.update(batch([{"k": "a", "o": 3, "v": 30}]))                 # v2; v0 pruned
-    assert not os.path.exists(path + ".v0")
-    assert os.path.exists(path + ".v1")  # v1 now in ITS grace window
+    assert not os.path.exists(os.path.join(path, "v0"))
+    assert os.path.exists(os.path.join(path, "v1"))  # v1 now in ITS grace window
 
 
-def test_view_reads_and_migrates_legacy_layout(spark, tmp_path):
-    """A view committed by the pre-pointer layout (parquet directly at
-    the path) stays readable, and the next update folds it into the
-    versioned layout instead of silently restarting from empty."""
+def test_view_keeps_order_columns_left_out_of_the_payload(spark, tmp_path):
+    """A payload that leaves out the order column still stores it:
+    the second update re-compacts the stored version by it (it used
+    to fail with UNRESOLVED_COLUMN on ``o``)."""
     import pandas as pd
 
-    from play_with_pulsar_spark.operators.matview import LatestStateView
-
-    path = str(tmp_path / "legacy_view")
-    spark.createDataFrame(
-        pd.DataFrame([{"k": "a", "o": 1, "v": 10}]), "k string, o long, v long"
-    ).write.parquet(path)
-
-    view = LatestStateView(spark, path, key_cols=["k"], order_cols=["o"])
-    assert {(r.k, r.v) for r in view.read().collect()} == {("a", 10)}
-    view.update(
-        spark.createDataFrame(
-            pd.DataFrame([{"k": "b", "o": 2, "v": 20}]), "k string, o long, v long"
-        )
+    view = LatestStateView(
+        spark, str(tmp_path / "payload_view"), ["k"], ["o"], payload_cols=["v"]
     )
-    # legacy rows survived the migration; layout is now versioned
-    assert {(r.k, r.v) for r in view.read().collect()} == {("a", 10), ("b", 20)}
-    import os
-    assert not os.path.exists(path)  # legacy dir cleaned after commit
-    assert os.path.exists(path + ".current")
+
+    def batch(rows):
+        return spark.createDataFrame(pd.DataFrame(rows), "k string, o long, v long")
+
+    view.update(batch([{"k": "a", "o": 2, "v": 20}, {"k": "b", "o": 1, "v": 10}]))
+    view.update(batch([{"k": "a", "o": 1, "v": 99}, {"k": "b", "o": 3, "v": 30}]))
+    assert sorted(view.read().columns) == ["k", "o", "v"]
+    assert {(r.k, r.v) for r in view.read().collect()} == {("a", 20), ("b", 30)}

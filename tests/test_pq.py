@@ -270,10 +270,10 @@ def test_pq_append_without_batch_id_is_idempotent(spark, emb, tmp_path):
     x2 = sorted(map(tuple, pq.pq_query_index(spark, ref_root, q, k=10, nprobe=2).collect()))
     assert x1 == x2 and len(x1) == 50
     # no duplicate (vec_id) rows anywhere in the stored codes
-    from play_with_pulsar_spark.operators.pq import _pq_codes
-    from play_with_pulsar_spark.operators.similarity import _ivf_resolve
+    from play_with_pulsar_spark.streaming.batch_dirs import VersionedStore
 
-    codes = _pq_codes(spark, _ivf_resolve(root))
+    store = VersionedStore(spark, root)
+    codes = store.read(store.live(), "codes")
     assert codes.count() == codes.select("vec_id").distinct().count()
 
 
@@ -401,7 +401,7 @@ def test_opq_stored_rotation_frozen_through_lifecycle(spark, emb, tmp_path):
     )
     import json, os
 
-    meta = json.load(open(os.path.join(pq._pq_resolve(root), "meta.json")))
+    meta = json.load(open(os.path.join(root, "v0", "meta.json")))
     assert meta["rotation"] == "fwht" and meta["rot_salt"] == "opq-sign"
 
     rot = pq.fwht_rotate(emb, dim=64).localCheckpoint()
@@ -439,6 +439,6 @@ def test_opq_stored_rotation_frozen_through_lifecycle(spark, emb, tmp_path):
     assert got2 == want2
     # (c) rebalance keeps the rotation contract in the new version
     pq.pq_rebalance_index(spark, root, emb.filter(F.col("vec_id") < 220))
-    meta2 = json.load(open(os.path.join(pq._pq_resolve(root), "meta.json")))
+    meta2 = json.load(open(os.path.join(root, "v1", "meta.json")))
     assert meta2["rotation"] == "fwht" and meta2["version"] == 1
     assert pq.pq_query_index(spark, root, queries, k=5, nprobe=2).count() == 15
